@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * assert can be EXECUTED one decade up from the driver's largest scale
   * (the r10 verdict's "one measured decade" ask). Usage:
   *
-  *   sbt "runMain graft.ScaleRehearsal /root/testdata/sf0.1 target/sf1 10"
+  *   sbt "runMain graft.Harness rehearse <sf0.1 dir> target/sf1 10"
   *   SPARK_GRAFT_SF_DIR=$PWD/target/sf1 sbt "runMain graft.Bench"
   *
   * The copies are NOT verbatim: verbatim replication would multiply
@@ -47,23 +47,13 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
 
-  def main(args: Array[String]): Unit = {
-    val src    = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val out    = args.lift(1).getOrElse("target/sf1")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Writes `factor` perturbed copies of the fixture at `src` to `out`,
+    * unless `out` is already marked ready. */
+  def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val ready = new java.io.File(out, "_READY")
     if (ready.exists()) {
       println(s"[scale] $out already built")
-      spark.stop()
       return
     }
     new java.io.File(out).mkdirs()
@@ -165,6 +155,5 @@ object ScaleRehearsal {
 
     java.nio.file.Files.createFile(ready.toPath)
     println(s"[scale] $out ready (factor $factor of $src)")
-    spark.stop()
   }
 }

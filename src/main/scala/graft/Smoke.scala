@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local smoke check mirroring the driver's gate: SparkEntry.entry must
   * return rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)
     println(s"[smoke] entry rows = ${df.count()}")

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Harness.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,17 +31,10 @@ object Verify {
     val outDir = args(1)
     val only   = args.drop(2).toSet
     val runT0  = System.nanoTime()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Annotated int64 micros (not INT96) so the driver-side DuckDB
-      // reader sees the same logical type Spark computed with.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Annotated int64 micros (not INT96) so the driver-side DuckDB
+    // reader sees the same logical type Spark computed with.
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     // Fixture-schema preamble: one stderr line per table, so a driver-side
     // fixture regeneration (r9: events.ts nanos→timestamp_ntz broke 64
     // queries) shows up as an obvious type diff at the top of the log
@@ -70,29 +63,10 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Drop any blocks an operator checkpointed for its own self-joins so
-      // a 56-query run doesn't accumulate every query's materializations,
-      // and drop consumed memory-sink tables (their buffers hold the full
-      // streaming result in driver memory; clearCache doesn't touch them).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      graft.operators.Streaming.dropConsumedSinks(spark)
+      GraftSession.cleanup(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Run manifest: a deterministic all-green correctness sweep produces a
     // byte-identical comparison artifact round over round, which is
@@ -108,11 +82,11 @@ object Verify {
           if (p.waitFor() == 0) out else "unknown"
         } catch { case _: Throwable => "unknown" }
       val manifest =
-        s"""{"completed_at":${q(java.time.Instant.now.toString)},""" +
-          s""""git_commit":${q(commit)},""" +
+        s"""{"completed_at":${jstr(java.time.Instant.now.toString)},""" +
+          s""""git_commit":${jstr(commit)},""" +
           s""""wall_sec":${"%.1f".formatLocal(java.util.Locale.ROOT,
             (System.nanoTime() - runT0) / 1e9)},""" +
-          s""""sf_dir":${q(sfDir)},"queries_dumped":${
+          s""""sf_dir":${jstr(sfDir)},"queries_dumped":${
             SparkEntry.queries.count { case (n, _) =>
               only.isEmpty || only(n) }}}"""
       Files.writeString(Paths.get(s"$outDir/run_manifest.json"),

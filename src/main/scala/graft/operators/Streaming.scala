@@ -232,16 +232,15 @@ object Streaming {
     * state (measured on the stream-stream join at sf0.1: 3.9 s at 8
     * partitions, 10.8 s at 32, 23 s at 64 — pure store overhead,
     * identical results; r17 re-measured the 16→8 step across the pack:
-    * q36 4.41→2.74 s, q56 5.28→3.87 s, q37 2.29→1.85 s, TimeQuery
-    * adjacent pairs). The source's READ parallelism is per-shard
-    * regardless (16 shard files = 16 read tasks), so shrinking the
+    * q36 4.41→2.74 s, q56 5.28→3.87 s, q37 2.29→1.85 s, isolated
+    * warm+billed adjacent pairs). The source's READ parallelism is
+    * per-shard regardless (16 shard files = 16 read tasks), so shrinking the
     * state exchange never serializes the scan — the two parallelisms
     * are independent, which is exactly why this knob follows state
     * VOLUME (keys × stateful operators; KBs on these proofs) while a
     * deployment with millions of keys raises it. Results are
-    * partition-count-invariant (PartitionInvariance census). */
-  private val StateParts =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(8)
+    * partition-count-invariant (`graft.Harness invariance`). */
+  private val StateParts = 8
 
   /** State partitions for the stream-STREAM join family (q36/q61/q82/
     * q84) — [[StateParts]] sized to the join's own state geometry: a
@@ -250,8 +249,8 @@ object Streaming {
     * a windowed aggregate's per-batch store overhead, and the family
     * replays in admission-capped slabs whose PER-BATCH state volume is
     * bounded by design ([[joinStep]]) — the corpus growing means MORE
-    * slabs, not bigger ones. Measured r20 (TimeQuery pairs, both orders,
-    * sf0.1 AND the sf1 decade): 4 parts beats 8 at both scales (q36
+    * slabs, not bigger ones. Measured r20 (isolated warm+billed pairs,
+    * both orders, sf0.1 AND the sf1 decade): 4 parts beats 8 at both scales (q36
     * 3.9→3.3 s, q82 4.8→3.6 s at sf0.1; q82 27.5→12.6 s, q36 14.9→8.6 s
     * at sf1), 16/32 lose 2-3× (reconfirming r17's two-scale probe), and
     * 2 is flat-to-worse than 4. The formula keeps the measured floor
@@ -259,8 +258,8 @@ object Streaming {
     * amortizes the ~0.2 s/partition/batch commit overhead against the
     * probe CPU), capped at the session's cores — a production backfill
     * that raises its per-slab state budget gets more partitions with
-    * it. Results are partition-count-invariant (PartitionInvariance
-    * census; the oracle re-proves every family member). */
+    * it. Results are partition-count-invariant (`graft.Harness
+    * invariance`; the oracle re-proves every family member). */
   private def joinStateParts(s: SparkSession, d: String): Int = {
     val perSlab = joinStep(s, d)
     math.min(
@@ -537,15 +536,11 @@ object Streaming {
     * volume. Rule: size a production backfill at
     * slabs = corpus-state / per-executor-state-budget — the SMALLEST
     * count whose per-slab state fits the budget, and no finer. The
-    * default 6 sits within 20% of this box's minimum while carrying 2×
+    * 6 here sits within 20% of this box's minimum while carrying 2×
     * the state headroom of the optimum — the safety margin is worth
-    * more than the seconds. `GRAFT_JOIN_SLABS` overrides the divisor —
-    * the probe hook the curve was measured through. */
-  private def joinStep(s: SparkSession, d: String): Long = {
-    val slabs =
-      sys.env.get("GRAFT_JOIN_SLABS").map(_.toLong).getOrElse(6L)
-    math.max(50000L, eventCount(s, d) / slabs)
-  }
+    * more than the seconds. */
+  private def joinStep(s: SparkSession, d: String): Long =
+    math.max(50000L, eventCount(s, d) / 6L)
 
   /** Stream-stream interval join: purchases ⋈ clicks per user, the click
     * at most one hour before the purchase — both sides watermarked, equi

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Shuffle-partition-count safety census: no query's RESULT may depend
   * on `spark.sql.shuffle.partitions` — the knob a real deployment sizes
-  * to its cluster, which the bench pins to the core count. This main
+  * to its cluster, which the bench pins to the core count. [[run]]
   * sweeps every registered query at each requested setting (default the
   * extremes 1 and 64 around the repo's 8/16/32 operating points) and
   * diffs an order-invariant fingerprint of every result set: sorted-
@@ -20,25 +20,15 @@ import org.apache.spark.sql.functions._
   * this knob), so this sweep exercises their surrounding batch plans
   * like everything else's.
   *
-  * Usage: sbt "runMain graft.tools.PartitionInvariance
-  *   [/root/testdata/sf0.001] [1,64]"
+  * Usage: sbt "runMain graft.Harness invariance
+  *   [sfDir] [1,64]"
   * Result is recorded in BASELINE.md ("partition-count invariance").
   */
 object PartitionInvariance {
 
-  def main(args: Array[String]): Unit = {
-    val sf = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val settings = args.lift(1).getOrElse("1,64")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", settings.head)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Sweeps `settings` (shuffle-partition counts) at `sf`, prints every
+    * divergence and a one-line JSON summary; true when the run is clean. */
+  def run(spark: SparkSession, sf: String, settings: Seq[String]): Boolean = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     def sweep(parts: String): Map[String, (Long, Long)] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
@@ -61,12 +51,7 @@ object PartitionInvariance {
               failures += s"$name@parts=$parts"
               (-1L, -1L)
           }
-        // The Verify reclaim pair: drop checkpointed subtrees and
-        // consumed memory-sink buffers between queries.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-        graft.operators.Streaming.dropConsumedSinks(spark)
+        graft.GraftSession.cleanup(spark)
         name -> out
       }
     }
@@ -88,7 +73,6 @@ object PartitionInvariance {
       divergent.size},"failed":${failures.size},"divergent_names":[${
       divergent.sorted.map(n => s""""$n"""").mkString(",")}],"failed_names":[${
       failures.sorted.map(n => s""""$n"""").mkString(",")}]}""")
-    spark.stop()
-    if (divergent.nonEmpty || failures.nonEmpty || base.isEmpty) sys.exit(1)
+    divergent.isEmpty && failures.isEmpty && base.nonEmpty
   }
 }

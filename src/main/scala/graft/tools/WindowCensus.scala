@@ -6,29 +6,37 @@ import org.apache.spark.sql.SparkSession
   * physical plan contains a Window node, with the partition specs.
   * [[enumerate]] is THE single source of truth — PlanAuditSpec's
   * window-frame census test consumes it directly (so the documented
-  * frame-bound map and this tool cannot drift), and [[main]] prints it
-  * for census maintenance. Streaming queries are excluded here and
-  * audited via their own specs.
+  * frame-bound map and this tool cannot drift), and `graft.Harness
+  * census` prints it for census maintenance. Streaming queries are
+  * excluded here and audited via their own specs.
   */
 object WindowCensus {
 
-  /** (query name, Window partition-spec strings) for every non-streaming
-    * registered query that plans at least one Window node at `sf`.
-    * Unpersists between queries so the enumeration doesn't pin the
-    * dedup pack's checkpointed subtrees into the shared session. */
-  def enumerate(spark: SparkSession, sf: String): Seq[(String, List[String])] =
+  /** (query name, findings) for every non-streaming registered query
+    * whose physical plan (`executed` = after AQE and codegen insertion,
+    * else the pre-AQE sparkPlan) `find` reports on. Unpersists between
+    * queries so the enumeration doesn't pin the dedup pack's
+    * checkpointed subtrees into the shared session. */
+  private def sweep(spark: SparkSession, sf: String, executed: Boolean)(
+      find: String => Option[List[String]]): Seq[(String, List[String])] =
     graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.contains("stream"))
       .flatMap { name =>
-        val p = graft.SparkEntry.queries(name)(spark, sf)
-          .queryExecution.sparkPlan.toString
+        val qe = graft.SparkEntry.queries(name)(spark, sf).queryExecution
+        val p = (if (executed) qe.executedPlan else qe.sparkPlan).toString
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        val specs = "Window \\[[^\\n]*?\\], \\[([^\\]]*)\\]".r
-          .findAllMatchIn(p).map(_.group(1)).toList
-        val hasWindow = "Window \\[".r.findFirstIn(p).isDefined
-        if (hasWindow) Some(name -> specs) else None
+        find(p).map(name -> _)
       }
+
+  /** (query name, Window partition-spec strings) for every non-streaming
+    * registered query that plans at least one Window node at `sf`. */
+  def enumerate(spark: SparkSession, sf: String): Seq[(String, List[String])] =
+    sweep(spark, sf, executed = false) { p =>
+      val specs = "Window \\[[^\\n]*?\\], \\[([^\\]]*)\\]".r
+        .findAllMatchIn(p).map(_.group(1)).toList
+      if ("Window \\[".r.findFirstIn(p).isDefined) Some(specs) else None
+    }
 
   /** (query name, broadcast-node digests) for every non-streaming
     * registered query whose physical plan broadcasts anything at `sf` —
@@ -40,19 +48,11 @@ object WindowCensus {
     * PlanAuditSpec's broadcast census consumes this enumeration
     * directly and pins every entry to a documented bound class. */
   def broadcasts(spark: SparkSession, sf: String): Seq[(String, List[String])] =
-    graft.SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.contains("stream"))
-      .flatMap { name =>
-        val p = graft.SparkEntry.queries(name)(spark, sf)
-          .queryExecution.sparkPlan.toString
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        val nodes =
-          "(BroadcastHashJoin|BroadcastNestedLoopJoin) [^\\n]*?(BuildLeft|BuildRight)"
-            .r.findAllMatchIn(p)
-            .map(m => s"${m.group(1)}:${m.group(2)}").toList
-        if (nodes.nonEmpty) Some(name -> nodes) else None
-      }
+    sweep(spark, sf, executed = false) { p =>
+      Some("(BroadcastHashJoin|BroadcastNestedLoopJoin) [^\\n]*?(BuildLeft|BuildRight)"
+        .r.findAllMatchIn(p).map(m => s"${m.group(1)}:${m.group(2)}").toList)
+        .filter(_.nonEmpty)
+    }
 
   /** (query name, offending exchange lines): hash-partitioned exchanges
     * whose OUTPUT row carries the corpus text payload — at 100 TB a
@@ -69,39 +69,10 @@ object WindowCensus {
     * (e.g. "embedding#", "payload#") for ad-hoc at-scale audits. */
   def payloadExchanges(
       spark: SparkSession, sf: String, token: String): Seq[(String, List[String])] =
-    graft.SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.contains("stream"))
-      .flatMap { name =>
-        val p = graft.SparkEntry.queries(name)(spark, sf)
-          .queryExecution.executedPlan.toString
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        val bad = p.linesIterator
-          .filter(l => l.contains("Exchange hashpartitioning"))
-          .filter(l => l.contains(token))
-          .map(_.trim.take(200)).toList
-        if (bad.nonEmpty) Some(name -> bad) else None
-      }
-
-  def main(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val mode = args.lift(1).getOrElse("windows")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val rows = mode match {
-      case "broadcasts"                 => broadcasts(spark, sf)
-      case "text"                       => textExchanges(spark, sf)
-      case m if m.startsWith("col:")    => payloadExchanges(spark, sf, m.drop(4))
-      case _                            => enumerate(spark, sf)
+    sweep(spark, sf, executed = true) { p =>
+      Some(p.linesIterator
+        .filter(l => l.contains("Exchange hashpartitioning"))
+        .filter(l => l.contains(token))
+        .map(_.trim.take(200)).toList).filter(_.nonEmpty)
     }
-    rows.foreach { case (name, specs) =>
-      println(s"CENSUS $name :: ${specs.mkString(" || ")}")
-    }
-    spark.stop()
-  }
 }

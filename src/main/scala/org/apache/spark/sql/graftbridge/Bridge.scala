@@ -32,4 +32,11 @@ object Bridge {
         org.apache.spark.sql.catalyst.expressions.Expression,
       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     classic.ExpressionUtils.column(f(expr(spark, c)))
+
+  /** Block until every listener event posted so far has been delivered —
+    * SparkListener and StreamingQueryListener callbacks run on the
+    * asynchronous listener bus, so a profiler that reads what its
+    * listeners collected right after an action can miss the tail. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -11,19 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // local[4,2]: allow one task retry, like a real cluster — the fault-
-    // injection test needs a task failure to be retryable.
-    // GraftSession.tuned: the specs exercise the same session tuning the
-    // runtime entry points (Bench/Verify) run with.
-    val s = GraftSession.tuned(SparkSession.builder()
-      .master("local[4,2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // The runtime entry points' session (GraftSession.local) at 4 cores, on
+  // local[4,2]: allow one task retry, like a real cluster — the fault-
+  // injection test needs a task failure to be retryable.
+  lazy val session: SparkSession = GraftSession.local(4,
+    "spark.master"   -> "local[4,2]",
+    "spark.app.name" -> "graft-tests")
 }

@@ -304,7 +304,8 @@ object OperatorInvariantProps extends Properties("OperatorInvariants") {
     * are EXACTLY the block (a corpus-wide exact-dup group, d01's worst
     * case); odd docs append globally-unique filler. The property proves
     * the partial-agg + join-back rewrites stay CORRECT under total key
-    * skew (the measured counterpart is ScaleRehearsal's skew mode). */
+    * skew (the measured counterpart is BASELINE.md's adversarial-skew
+    * rehearsal section). */
   property("planted viral boilerplate in EVERY doc: d01/d14/d15/d18/t21 " +
     "report the exact closed-form/reference answers under total skew") =
     Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>

@@ -130,4 +130,29 @@ class CheckpointCensusSpec extends AnyFunSuite {
       s"driver-side .collect() inventory drifted — a query operator " +
         s"must never collect; expected $documented, got $observed")
   }
+
+  test("the runtime entry points are Bench, Verify, Smoke and Harness, " +
+    "and GraftSession.local is the only SparkSession builder in src/main") {
+    // One engine, measured through one code path: a new dev main belongs
+    // in a Harness subcommand, and a hand-built session would measure an
+    // engine other than the one Bench bills (untuned, another clock or
+    // shuffle-partition count).
+    val root = Paths.get("src/main/scala")
+    val code = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map { p =>
+        root.relativize(p).toString -> Files.readAllLines(p).asScala
+          .map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("//"))
+      }
+      .toMap
+    def sites(token: String): Map[String, Int] =
+      code.map { case (f, lines) => f -> lines.count(_.contains(token)) }
+        .filter(_._2 > 0)
+    assert(sites("def main(").keySet == Set("graft/Bench.scala",
+      "graft/Verify.scala", "graft/Smoke.scala", "graft/Harness.scala"),
+      "entry points drifted — fold a new main into a graft.Harness subcommand")
+    assert(sites("SparkSession.builder()") == Map("graft/GraftSession.scala" -> 1),
+      "build sessions through GraftSession.local, not SparkSession.builder()")
+  }
 }
