@@ -129,17 +129,21 @@ object Streaming {
     * — headers + CRCs — instead of bare length-prefixed payloads; v4 =
     * record payloads are the reference's Records JSON envelope —
     * ContinuationSequenceNumber + base64 Data — with multi-record
-    * events and per-event cursor advance); part of every fixture dir
-    * name. */
-  private val LayoutVersion = 4
+    * events and per-event cursor advance; v5 = every variant is written
+    * straight to event-stream frames, with no text `.log` dir beside
+    * it); part of every fixture dir name. */
+  private val LayoutVersion = 5
 
-  /** Build (once per sf dir + copies) the TEXT-encoded shard log.
-    * Lives under java.io.tmpdir; idempotent via the log's ready marker.
-    * Queries replay the framed twin ([[ensureLog]]); this text tier
-    * remains the canonical fixture the variants derive from, and the
-    * q130 twin row replays it directly to keep the text decode path
-    * under the oracle gate. */
-  private def ensureTextLog(
+  /** The shard log the streaming pack replays, built once per sf dir +
+    * variant under java.io.tmpdir (idempotent via each log's ready
+    * marker): `.elog` files of full AWS-event-stream messages — header
+    * vocabulary, CRC32s, initial-response open
+    * ([[graft.sources.kinesislike.EventStreamFraming]]) — that the reader
+    * reassembles from 16 KB chunks, so the S9 frame state machine and
+    * the S10 header demux sit under the oracle gate on the whole sweep.
+    * The base (`copies` = 1, no sentinel) is written from the events
+    * table; every other variant derives from it without a Spark job. */
+  private def ensureLog(
       s: SparkSession,
       d: String,
       copies: Int,
@@ -147,18 +151,15 @@ object Streaming {
     val base = new java.io.File(d).getName
     val root = new java.io.File(
       sys.props("java.io.tmpdir"), "graft_kinesislike")
-    // Shard count is part of the dir name so a layout change can never
-    // silently reuse a stale fixture via its ready marker; fixtures of
-    // the same sf dir with an OLD layout are deleted rather than left to
-    // pile up a full event-log copy per obsolete shard count. Matched
-    // layouts: the current `_s<digits>_...` naming plus the pre-shard-
-    // count `_c<digits>[_sent]` naming — both exact patterns, never a raw
-    // string prefix, so a sibling dataset named "<base>_something" can't
-    // have its live fixtures swept.
-    // v2: payload timestamps carry MICROSECOND precision (the lossless
-    // format q92's session arithmetic needs; v1 logs truncated to ms via
-    // to_json's default formatter). The version is part of the dir name
-    // so a format change can never silently reuse a stale fixture.
+    // Shard count and layout version are part of the dir name so a
+    // format change can never silently reuse a stale fixture via its
+    // ready marker; fixtures of the same sf dir with an OLD layout are
+    // deleted rather than left to pile up a full event-log copy per
+    // obsolete layout. Matched layouts: the current `_v<n>_s<digits>_...`
+    // naming plus the older `_s<digits>_...` and `_c<digits>[_sent]`
+    // namings — exact patterns, never a raw string prefix, so a sibling
+    // dataset named "<base>_something" can't have its live fixtures
+    // swept.
     val quoted = java.util.regex.Pattern.quote(base)
     val staleLayouts = Seq(
       (quoted + "_v\\d+_s\\d+_.*").r,
@@ -170,53 +171,41 @@ object Streaming {
           !f.getName.startsWith(s"${base}_v${LayoutVersion}_s${NumShards}_")
       }
       .foreach(graft.Fs.deleteRecursively)
-    val baseDir = new java.io.File(
-      root, s"${base}_v${LayoutVersion}_s${NumShards}_c1").getAbsolutePath
+    def dir(variant: String): String = new java.io.File(
+      root, s"${base}_v${LayoutVersion}_s${NumShards}_${variant}_framed")
+      .getAbsolutePath
+    val baseDir = dir("c1")
     KinesisLikeLog.writeFromEvents(s, d, baseDir, numShards = NumShards)
     if (copies == 1 && !sentinel) baseDir
     else {
       // Variants derive from the base by line transformation — the Spark
       // read of events.parquet happens once per sf dir, not per variant.
-      val suffix = if (sentinel) "_sent" else ""
-      val dir = new java.io.File(
-        root,
-        s"${base}_v${LayoutVersion}_s${NumShards}_c$copies$suffix").getAbsolutePath
-      KinesisLikeLog.derive(baseDir, dir, copies, sentinel)
-      dir
+      val target = dir(s"c$copies${if (sentinel) "_sent" else ""}")
+      KinesisLikeLog.derive(baseDir, target, copies, sentinel)
+      target
     }
   }
 
-  /** The shard log the streaming pack replays: the byte-framed twin of
-    * the text fixture (full AWS-event-stream messages — header
-    * vocabulary, CRC32s, initial-response open;
-    * [[graft.sources.kinesislike.EventStreamFraming]]), `.elog` files
-    * the reader reassembles from 16 KB chunks. Since r18 this is the
-    * DEFAULT wire for every streaming oracle row, so the S9 frame state
-    * machine and the S10 header demux sit under the gate on the whole
-    * sweep; q130 replays the text twin to keep the `.log` dispatch path
-    * gated too. */
-  private def ensureLog(
-      s: SparkSession,
-      d: String,
-      copies: Int,
-      sentinel: Boolean = false): String = {
-    val base = ensureTextLog(s, d, copies, sentinel)
-    val dir  = base + "_framed"
-    graft.sources.kinesislike.EventStreamFraming.deriveFramed(base, dir)
+  /** q130's log: the sentinel log re-encoded at one record per event —
+    * the same records as q28's, in another byte layout. */
+  private def oneRecordPerEventLog(s: SparkSession, d: String): String = {
+    val sent = ensureLog(s, d, copies = 1, sentinel = true)
+    val dir  = sent + "_rpe1"
+    KinesisLikeLog.derive(sent, dir, copies = 1, sentinel = false,
+      recordsPerEvent = 1)
     dir
   }
 
-  /** Build every log variant the streaming queries replay (framed base,
-    * doubled, sentinel — plus the text base q130 rides) ahead of time —
-    * Bench calls this during warmup so the one-time fixture construction
-    * (a driver-side scan of the events table) isn't attributed to
-    * whichever streaming query runs first. Idempotent: each variant is
-    * guarded by its ready marker. */
+  /** Build every log variant the streaming queries replay (base,
+    * doubled, sentinel, q130's one-record-per-event sentinel log) ahead
+    * of time — Bench calls this during warmup so the one-time fixture
+    * construction (a driver-side scan of the events table) isn't
+    * attributed to whichever streaming query runs first. Idempotent:
+    * each variant is guarded by its ready marker. */
   def prewarmLogs(s: SparkSession, d: String): Unit = {
     val base = ensureLog(s, d, copies = 1)
     ensureLog(s, d, copies = 2)
-    ensureLog(s, d, copies = 1, sentinel = true)
-    ensureTextLog(s, d, copies = 1, sentinel = true)
+    oneRecordPerEventLog(s, d)
     // q127's split pair: the one derived variant whose CONSUMPTION is
     // per-run (the log mutates mid-query) — prewarm the cached pair so
     // per-run work is byte copy/append only.
@@ -324,12 +313,12 @@ object Streaming {
     * identical to the q23 batch formulation, whose oracle doubles as this
     * query's check.
     *
-    * Like the whole streaming pack since r18, this replays the
-    * BYTE-FRAMED log encoding (AWS-event-stream messages with the header
-    * vocabulary and CRCs, reassembled from 16 KB chunks — the S9 byte
-    * tier, [[graft.sources.kinesislike.EventStreamFraming]]); its text
-    * twin q130 runs the same plan over the `.log` encoding, keeping both
-    * decode paths green. */
+    * Like the whole streaming pack, this replays the event-stream log
+    * (AWS-event-stream messages with the header vocabulary and CRCs,
+    * reassembled from 16 KB chunks — the S9 byte tier,
+    * [[graft.sources.kinesislike.EventStreamFraming]]) at three records
+    * per event; its twin q130 runs the same plan over the same records
+    * at one record per event. */
   private val q28 = Q(
     "q28_stream_window",
     (s, d) => {
@@ -2246,17 +2235,16 @@ object Streaming {
     }
   }
 
-  /** q28's TEXT twin: the identical windowed-aggregate plan replayed
-    * over the `.log` line encoding. Since r18 every other streaming row
-    * rides the byte-framed `.elog` wire, so this row is what keeps the
-    * text decode path — and the extension-dispatch seam itself
-    * ([[graft.sources.kinesislike.KinesisLikeLog.openLines]]) — under
-    * the DuckDB oracle gate: both encodings must hash to the same
-    * result or one of the two decoders is wrong. */
+  /** q28's one-record-per-event twin: the identical windowed-aggregate
+    * plan replayed over the sentinel log re-encoded at one record per
+    * event ([[oneRecordPerEventLog]]), where every event's continuation
+    * is its own record's sequence number. Both byte layouts of the same
+    * records must hash to the same result, or the per-event cursor or
+    * the envelope decode depends on the grouping. */
   private val q130 = Q(
     "q130_stream_window_textlog",
     (s, d) => {
-      val log = ensureTextLog(s, d, copies = 1, sentinel = true)
+      val log = oneRecordPerEventLog(s, d)
       val stream = s.readStream
         .format("kinesislike")
         .option("path", log)
@@ -2278,7 +2266,7 @@ object Streaming {
           col("total_value"))
         .orderBy(col("window_start"), col("event_type"))
     },
-    // q28's oracle: same plan, different wire encoding, same hash.
+    // q28's oracle: same plan, different event grouping, same hash.
     Some("""
       SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
              event_type, count(*) AS n, round(sum(value), 2) AS total_value

@@ -4,11 +4,12 @@ import java.io.{File, FileInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
-/** Byte-level AWS event-stream encoding for the shard log — the fidelity
-  * tier for the reference's largest state machine (the frame parser of
-  * subscribe_to_shard.ex:273-327) plus its header demux
+/** Byte-level AWS event-stream encoding, the shard log's only on-disk
+  * format. It mirrors the reference's largest state machine (the frame
+  * parser of subscribe_to_shard.ex:273-327) plus its header demux
   * (subscribe_to_shard.ex:320-341) and its payload decode
   * (subscribe_to_shard.ex:343-366). The wire format is the public AWS
   * event-stream encoding (docs.aws.amazon.com/transcribe/latest/dg/
@@ -281,16 +282,13 @@ object EventStreamFraming {
     (headers.result(), java.util.Arrays.copyOfRange(msg, end, total - 4))
   }
 
-  /** Demux one decoded message to the event vocabulary — the literal
-    * mirror of handle_message/handle_event/decode_message
-    * (subscribe_to_shard.ex:329-366): asserts the content type, skips
-    * initial-response (None), parses a SubscribeToShardEvent's JSON
-    * envelope (S12: the `Records` list, base64 `Data` intact, exact-µs
-    * arrival), maps a null continuation to [[KinesisLikeLog.Closed]]
-    * and an exception message to its typed class + raise budget. */
-  def decodeToEvent(
-      headers: Map[String, String],
-      payload: Array[Byte]): Option[KinesisLikeLog.ShardEvent] = {
+  /** The header demux — the literal mirror of handle_message/
+    * handle_event (subscribe_to_shard.ex:320-341): asserts the content
+    * type, skips initial-response (None), hands a SubscribeToShardEvent's
+    * payload to `onRecords` and an exception message to `onException`;
+    * any other message or event type fails fast. */
+  private def demux[A](headers: Map[String, String], payload: Array[Byte])(
+      onRecords: Array[Byte] => A, onException: => Option[A]): Option[A] = {
     // @content_type assertion, subscribe_to_shard.ex:320-322.
     require(headers.get(ContentTypeHeader).contains(ContentTypeValue),
       s"unexpected $ContentTypeHeader: ${headers.get(ContentTypeHeader)}")
@@ -300,37 +298,52 @@ object EventStreamFraming {
         headers.getOrElse(EventTypeHeader,
           throw new IllegalArgumentException(s"missing $EventTypeHeader")) match {
           case InitialResponseType => None // subscribe_to_shard.ex:341
-          case SubscribeEventType =>
-            val root = mapper.readTree(payload)
-            val cont = root.path("ContinuationSequenceNumber")
-            if (cont.isNull || cont.isMissingNode)
-              Some(KinesisLikeLog.Closed) // subscribe_to_shard.ex:356-363
-            else {
-              val recs = Seq.newBuilder[KinesisLikeLog.Record]
-              root.path("Records").forEach { r =>
-                recs += KinesisLikeLog.Record(
-                  seq = r.path("SequenceNumber").asText().toLong,
-                  arrivalMicros =
-                    arrivalMicros(r.path("ApproximateArrivalTimestamp")),
-                  partitionKey = r.path("PartitionKey").asText(),
-                  dataB64 = r.path("Data").asText())
-              }
-              Some(KinesisLikeLog.RecordsEvent(
-                cont.asText().toLong, recs.result()))
-            }
+          case SubscribeEventType  => Some(onRecords(payload))
           case other =>
             throw new IllegalArgumentException(s"unknown event type $other")
         }
-      case ExceptionMessageType =>
+      case ExceptionMessageType => onException
+      case other =>
+        throw new IllegalArgumentException(s"unknown message type $other")
+    }
+  }
+
+  /** Demux one decoded message to the event vocabulary
+    * (handle_message/handle_event/decode_message,
+    * subscribe_to_shard.ex:329-366): parses a SubscribeToShardEvent's
+    * JSON envelope (S12: the `Records` list, base64 `Data` intact,
+    * exact-µs arrival), maps a null continuation to
+    * [[KinesisLikeLog.Closed]] and an exception message to its typed
+    * class + raise budget. */
+  def decodeToEvent(
+      headers: Map[String, String],
+      payload: Array[Byte]): Option[KinesisLikeLog.ShardEvent] =
+    demux[KinesisLikeLog.ShardEvent](headers, payload)(
+      { p =>
+        val root = mapper.readTree(p)
+        val cont = root.path("ContinuationSequenceNumber")
+        if (cont.isNull || cont.isMissingNode)
+          KinesisLikeLog.Closed // subscribe_to_shard.ex:356-363
+        else {
+          val recs = Seq.newBuilder[KinesisLikeLog.Record]
+          root.path("Records").forEach { r =>
+            recs += KinesisLikeLog.Record(
+              seq = r.path("SequenceNumber").asText().toLong,
+              arrivalMicros =
+                arrivalMicros(r.path("ApproximateArrivalTimestamp")),
+              partitionKey = r.path("PartitionKey").asText(),
+              dataB64 = r.path("Data").asText())
+          }
+          KinesisLikeLog.RecordsEvent(cont.asText().toLong, recs.result())
+        }
+      },
+      {
         val spec = headers.getOrElse(ExceptionTypeHeader, "transport_closed")
         val times = TimesRe
           .findFirstMatchIn(new String(payload, UTF_8))
           .map(_.group(1).toInt).getOrElse(1)
         Some(KinesisLikeLog.ErrorEvent(spec, times))
-      case other =>
-        throw new IllegalArgumentException(s"unknown message type $other")
-    }
-  }
+      })
 
   private val TimesRe = """"times"\s*:\s*(\d+)""".r
 
@@ -343,71 +356,48 @@ object EventStreamFraming {
     * continuation as the LAST record's sequence number and per-shard
     * sequence is ascending, max(record seq) == max(continuation) — so
     * the scan can stop at the envelope's first field via a streaming
-    * parse and skip the Records array entirely. Header demux and the
-    * content-type assertion are identical to [[decodeToEvent]]
-    * (unknown types still fail fast); CRC verification happens in
-    * [[decodeMessage]] as before.
+    * parse and skip the Records array entirely. The header demux is
+    * [[decodeToEvent]]'s (unknown types still fail fast); CRC
+    * verification happens in [[decodeMessage]] as before.
     *
     * Returns: Some(Right(cont)) for a records event, Some(Left(()))
     * for the closed signal, None for everything the fold skips
     * (initial-response, exception messages). */
   def decodeToMeta(
       headers: Map[String, String],
-      payload: Array[Byte]): Option[Either[Unit, Long]] = {
-    require(headers.get(ContentTypeHeader).contains(ContentTypeValue),
-      s"unexpected $ContentTypeHeader: ${headers.get(ContentTypeHeader)}")
-    headers.getOrElse(MessageTypeHeader,
-      throw new IllegalArgumentException(s"missing $MessageTypeHeader")) match {
-      case EventMessageType =>
-        headers.getOrElse(EventTypeHeader,
-          throw new IllegalArgumentException(s"missing $EventTypeHeader")) match {
-          case InitialResponseType => None
-          case SubscribeEventType =>
-            val p = mapper.getFactory.createParser(payload)
-            try {
-              require(p.nextToken() ==
-                com.fasterxml.jackson.core.JsonToken.START_OBJECT,
-                "records envelope is not a JSON object")
-              var tok = p.nextToken()
-              while (tok == com.fasterxml.jackson.core.JsonToken.FIELD_NAME) {
-                val name = p.currentName()
-                tok = p.nextToken()
-                if (name == "ContinuationSequenceNumber") {
-                  return Some(
-                    if (tok == com.fasterxml.jackson.core.JsonToken.VALUE_NULL)
-                      Left(())
-                    else Right(p.getText.toLong))
-                }
-                p.skipChildren()
-                tok = p.nextToken()
-              }
-              // Field absent ⇒ missing node ⇒ the closed signal, exactly
-              // as decodeToEvent's isMissingNode branch.
-              Some(Left(()))
-            } finally p.close()
-          case other =>
-            throw new IllegalArgumentException(s"unknown event type $other")
-        }
-      case ExceptionMessageType => None
-      case other =>
-        throw new IllegalArgumentException(s"unknown message type $other")
-    }
-  }
+      payload: Array[Byte]): Option[Either[Unit, Long]] =
+    demux[Either[Unit, Long]](headers, payload)(
+      { bytes =>
+        val p = mapper.getFactory.createParser(bytes)
+        try {
+          require(p.nextToken() == JsonToken.START_OBJECT,
+            "records envelope is not a JSON object")
+          var cont: Option[Either[Unit, Long]] = None
+          var tok = p.nextToken()
+          while (cont.isEmpty && tok == JsonToken.FIELD_NAME) {
+            val name = p.currentName()
+            tok = p.nextToken()
+            if (name == "ContinuationSequenceNumber")
+              cont = Some(
+                if (tok == JsonToken.VALUE_NULL) Left(())
+                else Right(p.getText.toLong))
+            else {
+              p.skipChildren()
+              tok = p.nextToken()
+            }
+          }
+          // Field absent ⇒ missing node ⇒ the closed signal, exactly
+          // as decodeToEvent's isMissingNode branch.
+          cont.getOrElse(Left(()))
+        } finally p.close()
+      },
+      None)
 
-  /** [[decodeToEvent]] rendered back to line-space — the flatten the
-    * driver-side metadata folds and fixture derivations consume (the
-    * reader itself consumes events, [[FramedEventSource]]). */
+  /** [[decodeToEvent]] rendered to its line view
+    * ([[KinesisLikeLog.eventLines]]). */
   def decodeToLines(
       headers: Map[String, String], payload: Array[Byte]): Seq[String] =
-    decodeToEvent(headers, payload) match {
-      case None                          => Seq.empty
-      case Some(KinesisLikeLog.Closed)   => Seq(KinesisLikeLog.ClosedMarker)
-      case Some(KinesisLikeLog.ErrorEvent(spec, times)) =>
-        Seq(s"${KinesisLikeLog.ErrorMarker}\t$spec\t$times")
-      case Some(KinesisLikeLog.RecordsEvent(_, recs)) =>
-        recs.map(r =>
-          s"${r.seq}\t${r.arrivalMicros}\t${r.partitionKey}\t${r.dataB64}")
-    }
+    decodeToEvent(headers, payload).toSeq.flatMap(KinesisLikeLog.eventLines)
 
   /** Incremental frame reassembler — the `{buffer, msg_bytes_left}`
     * state machine of subscribe_to_shard.ex:277-327: feed arbitrary-size
@@ -491,31 +481,6 @@ object EventStreamFraming {
     override def close(): Unit = in.close()
   }
 
-  /** Derive the framed twin of a line-log directory: every
-    * `shard-NNNNN.log` becomes `shard-NNNNN.elog` — an initial-response
-    * message, then Records-envelope events of up to `recordsPerEvent`
-    * records, control markers demuxed into headers. Pure line
-    * transformation, idempotent via the ready marker (the
-    * [[KinesisLikeLog.derive]] convention). */
-  def deriveFramed(
-      baseDir: String,
-      targetDir: String,
-      recordsPerEvent: Int = DefaultRecordsPerEvent): Unit =
-    synchronized {
-      val ready = Paths.get(targetDir, KinesisLikeLog.ReadyMarker)
-      if (Files.exists(ready)) return
-      Files.createDirectories(Paths.get(targetDir))
-      KinesisLikeLog.shardFiles(baseDir).foreach { f =>
-        val sink = KinesisLikeLog.openLineSink(
-          new File(targetDir,
-            KinesisLikeLog.shardId(f) + KinesisLikeLog.FramedExtension),
-          append = false, recordsPerEvent = recordsPerEvent)
-        try KinesisLikeLog.eachLine(f)(sink.writeLine)
-        finally sink.close()
-      }
-      Files.createFile(ready)
-    }
-
   /** Derive a CORRUPTED twin of a framed log directory: every shard is
     * copied byte-for-byte, then one byte of the `messageIndex`-th
     * message of shard 0 (first payload byte) is flipped — the message
@@ -526,10 +491,7 @@ object EventStreamFraming {
     * marker. */
   def deriveCorrupted(
       baseDir: String, targetDir: String, messageIndex: Int): Unit =
-    synchronized {
-      val ready = Paths.get(targetDir, KinesisLikeLog.ReadyMarker)
-      if (Files.exists(ready)) return
-      Files.createDirectories(Paths.get(targetDir))
+    KinesisLikeLog.buildOnce(targetDir) {
       KinesisLikeLog.shardFiles(baseDir).zipWithIndex.foreach {
         case (f, idx) =>
           val bytes = Files.readAllBytes(f.toPath)
@@ -553,9 +515,7 @@ object EventStreamFraming {
               s"deriveCorrupted: message $messageIndex has no payload")
             bytes(payloadOff) = (bytes(payloadOff) ^ 0x01).toByte
           }
-          Files.write(
-            Paths.get(targetDir, f.getName), bytes)
+          Files.write(Paths.get(targetDir, f.getName), bytes)
       }
-      Files.createFile(ready)
     }
 }

@@ -1,6 +1,6 @@
 package graft.sources.kinesislike
 
-import java.io.{BufferedReader, File, FileInputStream, InputStreamReader}
+import java.io.{File, FileInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
 
 /** The local ordered event log the KinesisLike source replays. The image
   * has no network, so the "stream" is a directory of per-shard append-only
-  * text files — the semantic stand-in for a Kinesis shard's ordered record
-  * stream (SURVEY.md §7 Slice 2).
+  * files — the semantic stand-in for a Kinesis shard's ordered record
+  * stream (SURVEY.md §7 Slice 2). Each `shard-NNNNN.elog` file carries
+  * AWS event-stream frames holding the reference's Records JSON envelope
+  * ([[EventStreamFraming]]); there is no other on-disk encoding.
   *
-  * Line format (one record per line — the analog of one decoded
-  * event-stream frame, subscribe_to_shard.ex:313-327):
+  * The tab-separated LINE view of a framed shard (one record per line —
+  * what [[openLines]] yields and [[openLineSink]] takes) is what the
+  * driver-side metadata folds and fixture derivations work in:
   *
   *   <sequenceNumber>\t<arrivalMicros>\t<partitionKey>\t<base64 data>
   *
@@ -22,7 +25,7 @@ import org.apache.spark.sql.functions._
   *   subscribe_to_shard.ex:343-354);
   * - `data` is base64, mirroring the base64 "Data" field of a Kinesis
   *   record that decode_records un-wraps (subscribe_to_shard.ex:365-366);
-  * - a literal `#CLOSED` final line is the nil-continuation shard-closed
+  * - a literal `#CLOSED` line is the nil-continuation shard-closed
   *   marker (subscribe_to_shard.ex:356-363).
   *
   * Duplicate lines (same sequence number twice) are legal — Kinesis is
@@ -34,10 +37,8 @@ object KinesisLikeLog {
   val ClosedMarker = "#CLOSED"
   val ReadyMarker  = "_LOG_READY"
 
-  /** Extension of the byte-framed shard encoding (one AWS-event-stream
-    * frame per record, [[EventStreamFraming]]); `.log` stays the plain
-    * one-record-per-line text encoding. Both decode to the same line
-    * stream, so everything above this module is encoding-agnostic. */
+  /** Extension of every shard file: AWS event-stream frames
+    * ([[EventStreamFraming]]), the log's only on-disk encoding. */
   val FramedExtension = ".elog"
 
   /** One decoded stream EVENT — the unit handle_event advances the
@@ -60,44 +61,23 @@ object KinesisLikeLog {
     def close(): Unit
   }
 
-  /** A sequential line reader over one shard file, closing over whichever
-    * byte encoding the file carries. */
+  /** A sequential reader over one shard file's line view. */
   trait LineSource {
     /** Next line, or null at end of shard. */
     def readLine(): String
     def close(): Unit
   }
 
-  private final class TextLineSource(f: File) extends LineSource {
-    private val in = new BufferedReader(
-      new InputStreamReader(new FileInputStream(f), UTF_8))
-    override def readLine(): String = in.readLine()
-    override def close(): Unit = in.close()
-  }
-
-  /** The text log's event view: each record line is a one-record event
-    * whose continuation is its own sequence number (the text encoding
-    * predates the Records envelope and has no grouping). */
-  private final class TextEventSource(f: File) extends EventSource {
-    private val in = new TextLineSource(f)
-    override def readEvent(): ShardEvent = {
-      var line = in.readLine()
-      while (line != null) {
-        if (line == ClosedMarker) return Closed
-        else if (line.startsWith(ErrorMarker)) {
-          val parts = line.split('\t')
-          return ErrorEvent(
-            parts.lift(1).getOrElse("transport_closed"),
-            parts.lift(2).map(_.toInt).getOrElse(1))
-        } else parseLine(line) match {
-          case Some(r) => return RecordsEvent(r.seq, Seq(r))
-          case None    => // skip non-record comment lines
-        }
-        line = in.readLine()
-      }
-      null
-    }
-    override def close(): Unit = in.close()
+  /** The line view of one event — the one renderer from events to lines:
+    * a records event flattens to one line per record (grouping is
+    * invisible), the closed signal to [[ClosedMarker]], an in-stream
+    * exception to its `#ERROR` line. */
+  private[kinesislike] def eventLines(e: ShardEvent): Seq[String] = e match {
+    case Closed                  => Seq(ClosedMarker)
+    case ErrorEvent(spec, times) => Seq(s"$ErrorMarker\t$spec\t$times")
+    case RecordsEvent(_, recs) =>
+      recs.map(r =>
+        s"${r.seq}\t${r.arrivalMicros}\t${r.partitionKey}\t${r.dataB64}")
   }
 
   /** [[EventSource]] rendered back to lines — the flatten every
@@ -107,56 +87,30 @@ object KinesisLikeLog {
     private val queue = scala.collection.mutable.Queue.empty[String]
     override def readLine(): String = {
       while (queue.isEmpty) {
-        in.readEvent() match {
-          case null   => return null
-          case Closed => queue.enqueue(ClosedMarker)
-          case ErrorEvent(spec, times) =>
-            queue.enqueue(s"$ErrorMarker\t$spec\t$times")
-          case RecordsEvent(_, recs) =>
-            recs.foreach(r => queue.enqueue(
-              s"${r.seq}\t${r.arrivalMicros}\t${r.partitionKey}\t${r.dataB64}"))
-        }
+        val e = in.readEvent()
+        if (e == null) return null
+        queue ++= eventLines(e)
       }
       queue.dequeue()
     }
     override def close(): Unit = in.close()
   }
 
-  /** Open a shard file with the EVENT decoder its extension names — the
-    * dispatch point the executor reader uses (per-event cursor
-    * semantics, S12 envelope decode inside the framed tier). */
+  /** Open a shard file as EVENTS — what the executor reader uses
+    * (per-event cursor semantics, S12 envelope decode). */
   def openEvents(f: File): EventSource =
-    if (f.getName.endsWith(FramedExtension))
-      new EventStreamFraming.FramedEventSource(f)
-    else new TextEventSource(f)
+    new EventStreamFraming.FramedEventSource(f)
 
-  /** Open a shard file as LINES — the ONE dispatch point between the
-    * text and event-stream-framed encodings for every driver-side
-    * metadata fold and line-level fixture derivation. */
-  def openLines(f: File): LineSource =
-    if (f.getName.endsWith(FramedExtension))
-      new EventLineSource(new EventStreamFraming.FramedEventSource(f))
-    else new TextLineSource(f)
+  /** Open a shard file as LINES — the view every driver-side metadata
+    * fold and line-level fixture derivation reads. */
+  def openLines(f: File): LineSource = new EventLineSource(openEvents(f))
 
-  /** The writer dual of [[LineSource]]: one line in, whichever byte
-    * encoding the target file's extension names out. Lets every fixture
-    * derivation (variants, splits, tails, fault plants) be
-    * ENCODING-PRESERVING — a framed base derives framed targets, so the
-    * whole streaming pack can ride the byte tier. */
+  /** The writer dual of [[LineSource]]: one line in, event-stream frames
+    * out. Every fixture derivation (variants, splits, tails, fault
+    * plants) writes through it. */
   trait LineSink {
     def writeLine(l: String): Unit
     def close(): Unit
-  }
-
-  private final class TextLineSink(f: File, append: Boolean)
-      extends LineSink {
-    private val w = Files.newBufferedWriter(
-      f.toPath, UTF_8,
-      java.nio.file.StandardOpenOption.CREATE,
-      if (append) java.nio.file.StandardOpenOption.APPEND
-      else java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    override def writeLine(l: String): Unit = { w.write(l); w.write('\n') }
-    override def close(): Unit = w.close()
   }
 
   private final class FramedLineSink(
@@ -195,31 +149,30 @@ object KinesisLikeLog {
     override def close(): Unit = { flush(); out.close() }
   }
 
-  /** Open a shard file for writing with the encoder its extension
-    * names — the write-side twin of [[openLines]]. Framed sinks group
-    * up to `recordsPerEvent` records per SubscribeToShardEvent message
-    * (the wire's multi-record cardinality). */
+  /** Open a shard file for writing as event-stream frames — the
+    * write-side twin of [[openLines]]. Records are grouped up to
+    * `recordsPerEvent` per SubscribeToShardEvent message (the wire's
+    * multi-record cardinality). */
   def openLineSink(
       f: File,
       append: Boolean = false,
       recordsPerEvent: Int = EventStreamFraming.DefaultRecordsPerEvent,
       continuation: Boolean = false,
-  ): LineSink =
-    if (f.getName.endsWith(FramedExtension))
-      new FramedLineSink(f, append, recordsPerEvent, continuation)
-    else new TextLineSink(f, append)
+  ): LineSink = new FramedLineSink(f, append, recordsPerEvent, continuation)
 
-  /** The extension a derived target keeps when preserving `f`'s
-    * encoding. */
-  def extensionOf(f: File): String =
-    if (f.getName.endsWith(FramedExtension)) FramedExtension else ".log"
-
-  /** Run `op` over every line of a shard file (either encoding). */
-  def eachLine(f: File)(op: String => Unit): Unit = {
+  /** Fold over every line of a shard file's line view without
+    * materializing it; a missing file folds to `zero`. */
+  def foldLines[A](f: File, zero: A)(op: (A, String) => A): A = {
+    if (!f.exists()) return zero
     val in = openLines(f)
     try {
+      var acc  = zero
       var line = in.readLine()
-      while (line != null) { op(line); line = in.readLine() }
+      while (line != null) {
+        acc = op(acc, line)
+        line = in.readLine()
+      }
+      acc
     } finally in.close()
   }
 
@@ -249,31 +202,22 @@ object KinesisLikeLog {
   def shardFiles(dir: String): Seq[File] = {
     val d = new File(dir)
     val fs = Option(d.listFiles()).getOrElse(Array.empty)
-    fs.filter(_.getName.matches("shard-\\d+\\.(log|elog)"))
-      .sortBy(_.getName).toSeq
+    fs.filter(_.getName.matches("shard-\\d+\\.elog")).sortBy(_.getName).toSeq
   }
 
-  def shardId(f: File): String =
-    f.getName.stripSuffix(FramedExtension).stripSuffix(".log")
+  /** [[shardFiles]] for a read that needs at least one shard: a batch
+    * scan or a stream start over a directory without any fails here
+    * rather than reading nothing. */
+  def requireShardFiles(dir: String): Seq[File] = {
+    val fs = shardFiles(dir)
+    require(fs.nonEmpty, s"kinesislike: no shard-*$FramedExtension files in $dir")
+    fs
+  }
+
+  def shardId(f: File): String = f.getName.stripSuffix(FramedExtension)
 
   def shardFile(dir: String, shardId: String): File =
-    new File(dir, s"$shardId.log")
-
-  /** Driver-side metadata scan (the analog of Kafka's listOffsets): fold
-    * over a shard file (either encoding) without materializing it. */
-  private def foldLines[A](f: File, zero: A)(op: (A, String) => A): A = {
-    if (!f.exists()) return zero
-    val in = openLines(f)
-    try {
-      var acc  = zero
-      var line = in.readLine()
-      while (line != null) {
-        acc = op(acc, line)
-        line = in.readLine()
-      }
-      acc
-    } finally in.close()
-  }
+    new File(dir, shardId + FramedExtension)
 
   /** Driver-side shard metadata, cached by (mtime, length) so an
     * unchanged shard file costs O(1) per microbatch — the analog of
@@ -313,53 +257,34 @@ object KinesisLikeLog {
     * to every streaming lifecycle. The wire writes each envelope's
     * continuation as its LAST record's sequence number and per-shard
     * sequence is ascending, so max(record seq) == max(continuation):
-    * the framed branch parses only the envelope's continuation field
-    * ([[EventStreamFraming.decodeToMeta]]; CRCs still verified), the
-    * text branch reads only the seq prefix of each line. Equality with
-    * the full-decode fold is pinned by KinesisLikeSourceSpec. */
-  private def metaScan(f: File): (Long, Boolean) =
-    if (f.getName.endsWith(FramedExtension)) {
-      val in      = new FileInputStream(f)
-      val decoder = new EventStreamFraming.FrameDecoder
-      val chunk   = new Array[Byte](EventStreamFraming.ChunkBytes)
-      var mx      = -1L
-      var cl      = false
-      try {
-        var n = in.read(chunk)
-        while (n >= 0) {
-          decoder.feed(chunk, 0, n).foreach { msg =>
-            val (headers, payload) = EventStreamFraming.decodeMessage(msg)
-            EventStreamFraming.decodeToMeta(headers, payload) match {
-              case Some(Right(cont)) => if (cont > mx) mx = cont
-              case Some(Left(_))     => cl = true
-              case None              =>
-            }
+    * the scan parses only the envelope's continuation field
+    * ([[EventStreamFraming.decodeToMeta]]; CRCs still verified).
+    * Equality with the full-decode fold is pinned by
+    * KinesisLikeSourceSpec. */
+  private def metaScan(f: File): (Long, Boolean) = {
+    val in      = new FileInputStream(f)
+    val decoder = new EventStreamFraming.FrameDecoder
+    val chunk   = new Array[Byte](EventStreamFraming.ChunkBytes)
+    var mx      = -1L
+    var cl      = false
+    try {
+      var n = in.read(chunk)
+      while (n >= 0) {
+        decoder.feed(chunk, 0, n).foreach { msg =>
+          val (headers, payload) = EventStreamFraming.decodeMessage(msg)
+          EventStreamFraming.decodeToMeta(headers, payload) match {
+            case Some(Right(cont)) => if (cont > mx) mx = cont
+            case Some(Left(_))     => cl = true
+            case None              =>
           }
-          n = in.read(chunk)
         }
-        require(!decoder.isMidFrame,
-          s"truncated event-stream frame at EOF in $f")
-      } finally in.close()
-      (mx, cl)
-    } else {
-      val in = new BufferedReader(
-        new InputStreamReader(new FileInputStream(f), UTF_8))
-      var mx = -1L
-      var cl = false
-      try {
-        var line = in.readLine()
-        while (line != null) {
-          if (line == ClosedMarker) cl = true
-          else if (line.nonEmpty && line.charAt(0) != '#') {
-            val tab = line.indexOf('\t')
-            val seq = (if (tab < 0) line else line.substring(0, tab)).toLong
-            if (seq > mx) mx = seq
-          }
-          line = in.readLine()
-        }
-      } finally in.close()
-      (mx, cl)
-    }
+        n = in.read(chunk)
+      }
+      require(!decoder.isMidFrame,
+        s"truncated event-stream frame at EOF in $f")
+    } finally in.close()
+    (mx, cl)
+  }
 
   /** Drop cached shard metadata for every file under `logDir`. The
     * (mtime, length) cache key cannot see a shard file replaced with
@@ -467,33 +392,34 @@ object KinesisLikeLog {
       if (lo == idx.arrivals.length) maxSeq(f) else idx.seqs(lo) - 1
   }
 
+  /** Run `build` into `dir` once: a directory holding the ready marker
+    * is already built and is left alone; otherwise the directory is
+    * created, built, and then marked ready. Every fixture derivation
+    * goes through here, serialized on this object. */
+  private[kinesislike] def buildOnce(dir: String)(build: => Unit): Unit =
+    synchronized {
+      val ready = Paths.get(dir, ReadyMarker)
+      if (Files.exists(ready)) return
+      Files.createDirectories(Paths.get(dir))
+      build
+      Files.createFile(ready)
+    }
+
   /** Build a shard log directory from the driver-generated events table —
     * the test-fixture generator standing in for the producer side of
-    * Kinesis (no network in the image). Idempotent via a ready marker.
-    *
-    * `copies` > 1 writes each record that many times (adjacent, same
-    * sequence number) to simulate at-least-once redelivery.
+    * Kinesis (no network in the image). Idempotent via a ready marker;
+    * variants of it are built by [[derive]].
     *
     * Fixture-scale only: streams rows through toLocalIterator (never a
     * full collect); the engine's scale path READS this log, it does not
     * write it.
     */
-  /** With `sentinel = true`, one extra record (user_id -1, event_type
-    * "sentinel", 30 days past the last event) is appended to shard 0 —
-    * it exists to advance the event-time watermark past every real
-    * session so append-mode session windows all emit (the streaming
-    * analog of "the stream kept running after the data of interest"). */
   def writeFromEvents(
       spark: SparkSession,
       sfDir: String,
       logDir: String,
       numShards: Int = 4,
-      copies: Int = 1,
-      sentinel: Boolean = false,
-  ): Unit = synchronized {
-    val ready = Paths.get(logDir, ReadyMarker)
-    if (Files.exists(ready)) return
-    Files.createDirectories(Paths.get(logDir))
+  ): Unit = buildOnce(logDir) {
     val ev = graft.Tables
       .events(spark, sfDir)
       .select(
@@ -513,12 +439,9 @@ object KinesisLikeLog {
           .as("payload"))
       .orderBy(col("event_id"))
     val writers = (0 until numShards).map { i =>
-      Files.newBufferedWriter(
-        Paths.get(logDir, f"shard-$i%05d.log"), UTF_8)
+      openLineSink(new File(logDir, f"shard-$i%05d$FramedExtension"))
     }
     try {
-      var lastSeq    = -1L
-      var lastMicros = 0L
       // Seam invariant the point-in-time replay (q126) depends on:
       // per-shard arrival must be MONOTONE in sequence number, or a
       // record after the at_timestamp cursor with ts < T would be
@@ -548,27 +471,10 @@ object KinesisLikeLog {
             s"before shard $shard's previous arrival " +
             s"${lastShardMicros(shard)} µs")
         lastShardMicros(shard) = micros
-        val w = writers(shard)
-        var c = 0
-        while (c < copies) {
-          w.write(s"$seq\t$micros\t$user\t$b64\n")
-          c += 1
-        }
-        lastSeq = math.max(lastSeq, seq)
-        lastMicros = math.max(lastMicros, micros)
+        writers(shard).writeLine(s"$seq\t$micros\t$user\t$b64")
       }
-      if (sentinel) {
-        val us = lastMicros + 30L * 24 * 3600 * 1000000L
-        val ts = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
-        val payload =
-          s"""{"event_id":${lastSeq + 1},"ts":"$ts","user_id":-1,""" +
-            """"event_type":"sentinel","value":0.0,"props":"{}"}"""
-        val b64 = java.util.Base64.getEncoder.encodeToString(payload.getBytes(UTF_8))
-        writers(0).write(s"${lastSeq + 1}\t$us\t-1\t$b64\n")
-      }
-      writers.foreach { w => w.write(ClosedMarker + "\n") }
+      writers.foreach(_.writeLine(ClosedMarker))
     } finally writers.foreach(_.close())
-    Files.createFile(ready)
   }
 
   /** Split-replay pair for the `latest` starting-position seam (S13's
@@ -588,22 +494,18 @@ object KinesisLikeLog {
     * would replay the tail twice), and [[appendCachedTail]] appends the
     * tail bytes. The ENCODE cost — at sf1 the dominant cost of the q127
     * proof (r18 verdict: 20.3 s, all derivation) — is paid once per
-    * corpus snapshot instead of twice per run. Encoding-preserving:
-    * a framed base derives framed fragments. */
+    * corpus snapshot instead of twice per run. */
   def deriveSplitPair(baseDir: String, pairDir: String, cut: Long): Unit =
-    synchronized {
-      val ready = Paths.get(pairDir, ReadyMarker)
-      if (Files.exists(ready)) return
+    buildOnce(pairDir) {
       Files.createDirectories(Paths.get(pairDir, "split"))
       Files.createDirectories(Paths.get(pairDir, "tail"))
       shardFiles(baseDir).foreach { f =>
-        val name = shardId(f) + extensionOf(f)
-        val w = openLineSink(new File(new File(pairDir, "split"), name))
+        val w = openLineSink(new File(new File(pairDir, "split"), f.getName))
         try foldLines(f, ()) { (_, l) =>
           parseLine(l).foreach(r => if (r.seq <= cut) w.writeLine(l))
         } finally w.close()
         val t = openLineSink(
-          new File(new File(pairDir, "tail"), name), continuation = true)
+          new File(new File(pairDir, "tail"), f.getName), continuation = true)
         try {
           foldLines(f, ()) { (_, l) =>
             parseLine(l).foreach(r => if (r.seq > cut) t.writeLine(l))
@@ -611,7 +513,6 @@ object KinesisLikeLog {
           t.writeLine(ClosedMarker)
         } finally t.close()
       }
-      Files.createFile(ready)
     }
 
   /** Copy a [[deriveSplitPair]] prefix into a fresh mutable target —
@@ -648,9 +549,11 @@ object KinesisLikeLog {
     * base log, inserting `#ERROR\t<spec>` into shard 0 immediately before
     * its first record with seq > afterSeq — "the event stream delivered
     * an exception frame mid-subscription" (subscribe_to_shard.ex:329-341).
-    * The reader raises the typed class ONCE per (dir, faultRunId) budget,
-    * so a producer's retry from the committed cursor passes the marker
-    * and drains the tail (producer.ex:159-168's partial-events-kept
+    * The planted line is written as a real exception message
+    * (`:exception-type` header), so the S10 demux runs on it. The reader
+    * raises the typed class ONCE per (dir, faultRunId) budget, so a
+    * producer's retry from the committed cursor passes the marker and
+    * drains the tail (producer.ex:159-168's partial-events-kept
     * semantics, exercised end-to-end by q129). Pure line transformation,
     * idempotent via the ready marker. */
   def deriveWithError(
@@ -659,17 +562,10 @@ object KinesisLikeLog {
       afterSeq: Long,
       spec: String,
       times: Int = 1,
-  ): Unit = synchronized {
-    val ready = Paths.get(targetDir, ReadyMarker)
-    if (Files.exists(ready)) return
-    Files.createDirectories(Paths.get(targetDir))
+  ): Unit = buildOnce(targetDir) {
     var injected = false
     shardFiles(baseDir).zipWithIndex.foreach { case (f, idx) =>
-      // Encoding-preserving: on a framed base the planted marker line
-      // becomes a REAL exception message (`:exception-type` header) —
-      // the S10 demux exercised at the byte tier.
-      val w = openLineSink(
-        new File(targetDir, shardId(f) + extensionOf(f)))
+      val w = openLineSink(new File(targetDir, f.getName))
       try {
         foldLines(f, ()) { (_, l) =>
           if (idx == 0 && !injected &&
@@ -686,44 +582,45 @@ object KinesisLikeLog {
     require(injected,
       s"deriveWithError: no shard-0 record with seq > $afterSeq in " +
         s"$baseDir — the exception record was never planted")
-    Files.createFile(ready)
   }
 
-  /** Derive a log variant (duplicated records and/or a sentinel) from an
-    * already-built base log by pure line transformation — no Spark job,
-    * so query packs that need several variants of the same sf dir pay the
-    * Spark read once. Idempotent via the ready marker. */
+  /** Derive a log variant from an already-built base log by pure line
+    * transformation — no Spark job, so query packs that need several
+    * variants of the same sf dir pay the Spark read once. Idempotent via
+    * the ready marker.
+    *
+    * - `copies` > 1 writes each record that many times (adjacent, same
+    *   sequence number) to simulate at-least-once redelivery.
+    * - `sentinel` appends one record to shard 0: user_id -1, event_type
+    *   "sentinel", the next sequence number, arriving 30 days after the
+    *   last event. It advances the event-time watermark past every real
+    *   session so append-mode session windows all emit (the streaming
+    *   analog of "the stream kept running after the data of interest").
+    * - `recordsPerEvent` sets the re-encoded event grouping. */
   def derive(
       baseDir: String,
       targetDir: String,
       copies: Int,
       sentinel: Boolean,
-  ): Unit = synchronized {
-    val ready = Paths.get(targetDir, ReadyMarker)
-    if (Files.exists(ready)) return
-    Files.createDirectories(Paths.get(targetDir))
-    val shards = shardFiles(baseDir)
+      recordsPerEvent: Int = EventStreamFraming.DefaultRecordsPerEvent,
+  ): Unit = buildOnce(targetDir) {
     var lastSeq    = -1L
     var lastMicros = 0L
-    shards.foreach { f =>
-      foldLines(f, ()) { (_, l) =>
-        parseLine(l).foreach { r =>
-          lastSeq = math.max(lastSeq, r.seq)
-          lastMicros = math.max(lastMicros, r.arrivalMicros)
-        }
-      }
-    }
-    shards.zipWithIndex.foreach { case (f, idx) =>
-      val w = Files.newBufferedWriter(
-        Paths.get(targetDir, shardId(f) + ".log"), UTF_8)
+    // Shard 0 goes last, so the sentinel written at its end follows the
+    // highest sequence number and arrival of every shard.
+    val (first, rest) = shardFiles(baseDir).splitAt(1)
+    (rest ++ first).foreach { f =>
+      val w = openLineSink(new File(targetDir, f.getName),
+        recordsPerEvent = recordsPerEvent)
       try {
         foldLines(f, ()) { (_, l) =>
-          if (parseLine(l).isDefined) {
-            var c = 0
-            while (c < copies) { w.write(l + "\n"); c += 1 }
+          parseLine(l).foreach { r =>
+            (0 until copies).foreach(_ => w.writeLine(l))
+            lastSeq = math.max(lastSeq, r.seq)
+            lastMicros = math.max(lastMicros, r.arrivalMicros)
           }
         }
-        if (sentinel && idx == 0) {
+        if (sentinel && first.contains(f)) {
           val us = lastMicros + 30L * 24 * 3600 * 1000000L
           val ts = java.time.Instant.EPOCH
             .plus(us, java.time.temporal.ChronoUnit.MICROS)
@@ -732,11 +629,10 @@ object KinesisLikeLog {
               """"event_type":"sentinel","value":0.0,"props":"{}"}"""
           val b64 = java.util.Base64.getEncoder
             .encodeToString(payload.getBytes(UTF_8))
-          w.write(s"${lastSeq + 1}\t$us\t-1\t$b64\n")
+          w.writeLine(s"${lastSeq + 1}\t$us\t-1\t$b64")
         }
-        w.write(ClosedMarker + "\n")
+        w.writeLine(ClosedMarker)
       } finally w.close()
     }
-    Files.createFile(ready)
   }
 }

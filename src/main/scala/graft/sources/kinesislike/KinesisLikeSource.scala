@@ -269,7 +269,7 @@ class KinesisLikeScan(cfg: KinesisLikeConfig) extends Scan {
   * scan"). */
 class KinesisLikeBatch(cfg: KinesisLikeConfig) extends Batch {
   override def planInputPartitions(): Array[InputPartition] =
-    KinesisLikeLog.shardFiles(cfg.logDir).map { f =>
+    KinesisLikeLog.requireShardFiles(cfg.logDir).map { f =>
       // Fault-injection options apply to batch reads too — an option the
       // config layer accepted must not be silently inert on this path.
       KinesisLikePartition(
@@ -330,13 +330,8 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
   // single-DescribeStream shard discovery (producer.ex:171-188); shard
   // splits/merges surface as closed shards, never as new partitions
   // (explicit reference non-goal, subscribe_to_shard.ex:8).
-  private lazy val shards: Seq[File] = {
-    val fs = KinesisLikeLog.shardFiles(cfg.logDir)
-    if (fs.isEmpty)
-      throw new IllegalArgumentException(
-        s"kinesislike: no shard-*.log / shard-*.elog files in ${cfg.logDir}")
-    fs
-  }
+  private lazy val shards: Seq[File] =
+    KinesisLikeLog.requireShardFiles(cfg.logDir)
 
   // Trigger.AvailableNow bound: offsets snapshotted at query start so the
   // run drains exactly what existed then (and microbatching — hence
@@ -484,10 +479,9 @@ class KinesisLikeReader(p: KinesisLikePartition)
       p.failAtOpenTimes))
     throw KinesisLikeErrors.make(p.failAtOpen)
 
-  // Extension-dispatched: a `.elog` shard streams through the event-
-  // stream frame reassembler (16 KB chunks, partial frames buffered —
-  // the S9 byte tier) and the Records-envelope decode (S12); a `.log`
-  // shard reads line-per-event; both yield the same event vocabulary.
+  // The shard streams through the event-stream frame reassembler (16 KB
+  // chunks, partial frames buffered — the S9 byte tier) and the
+  // Records-envelope decode (S12).
   private val in = KinesisLikeLog.openEvents(new File(p.path))
   private var row: InternalRow = _
   private var delivered        = 0L

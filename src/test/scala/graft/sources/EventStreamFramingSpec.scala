@@ -14,8 +14,8 @@ import graft.sources.kinesislike.{EventStreamFraming, KinesisLikeLog}
   * (message-type/event-type/exception-type, initial-response skip), the
   * 1 MB-record / 16 KB-chunk round-trip of
   * subscribe_to_shard_test.exs:220-245 through the REAL source read
-  * path, and the framed/text twin equivalence the `.elog` encoding
-  * promises. */
+  * path, and the row-for-row equivalence of one log written at
+  * different records-per-event groupings. */
 class EventStreamFramingSpec extends SparkSpec {
   import EventStreamFraming._
 
@@ -95,6 +95,23 @@ class EventStreamFramingSpec extends SparkSpec {
           EventTypeHeader -> SubscribeEventType),
         "x".getBytes(UTF_8))
     }
+    // The metadata-only scan behind maxSeq shares the demux: a wrong
+    // content type, an unknown :event-type and an unknown :message-type
+    // each fail the scan too.
+    Seq(
+      Seq(ContentTypeHeader -> "text/plain",
+        MessageTypeHeader -> EventMessageType,
+        EventTypeHeader -> SubscribeEventType),
+      Seq(ContentTypeHeader -> ContentTypeValue,
+        MessageTypeHeader -> EventMessageType,
+        EventTypeHeader -> "MysteryEvent"),
+      Seq(ContentTypeHeader -> ContentTypeValue,
+        MessageTypeHeader -> "mystery")).foreach { headers =>
+      val f = tmpDir("graft_framing_demux").resolve("shard-00000.elog")
+      Files.write(f, initialResponseMessage ++ encodeMessage(headers,
+        """{"ContinuationSequenceNumber":"1","Records":[]}""".getBytes(UTF_8)))
+      intercept[IllegalArgumentException](KinesisLikeLog.maxSeq(f.toFile))
+    }
   }
 
   test("a multi-record SubscribeToShardEvent round-trips through the " +
@@ -148,8 +165,7 @@ class EventStreamFramingSpec extends SparkSpec {
       (3L, Seq(1L, 2L, 3L)), (6L, Seq(4L, 5L, 6L)), (7L, Seq(7L)),
       (-1L, Seq.empty[Long])))
     // Flattened back to lines, grouping is invisible.
-    val flat = scala.collection.mutable.ArrayBuffer.empty[String]
-    KinesisLikeLog.eachLine(f.toFile)(flat += _)
+    val flat = KinesisLikeLog.foldLines(f.toFile, Vector.empty[String])(_ :+ _)
     assert(flat.toSeq === lines)
     assert(KinesisLikeLog.maxSeq(f.toFile) === 7L)
     assert(KinesisLikeLog.isClosed(f.toFile))
@@ -227,16 +243,16 @@ class EventStreamFramingSpec extends SparkSpec {
     assert(new String(rows(3L), UTF_8) === "small-after")
   }
 
-  test("deriveFramed builds a header-framed twin that the source reads " +
-    "row-for-row identically to the text original — markers, metadata " +
-    "(maxSeq/closed) and offsets included, initial-response skipped") {
+  test("a log re-encoded at one record per event is read row-for-row " +
+    "identically to its three-record-per-event original — metadata " +
+    "(maxSeq/closed) included, initial-response skipped") {
     val dir = tmpDir("graft_framing_twin")
     val lines = (1L to 40L).map(i => record(i, s"payload-$i")) :+
       KinesisLikeLog.ClosedMarker
-    Files.write(dir.resolve("shard-00000.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
-    val framedDir = tmpDir("graft_framing_twin_out")
-    EventStreamFraming.deriveFramed(dir.toString, framedDir.toString)
+    writeFramedShard(dir, lines)
+    val twinDir = tmpDir("graft_framing_twin_out")
+    KinesisLikeLog.derive(dir.toString, twinDir.toString, copies = 1,
+      sentinel = false, recordsPerEvent = 1)
 
     def rows(d: Path) = spark.read.format("kinesislike")
       .option("path", d.toString).load()
@@ -244,9 +260,18 @@ class EventStreamFramingSpec extends SparkSpec {
         col("approximateArrivalTimestamp").cast("long").as("us"),
         col("partitionKey"), col("data").cast("string"))
       .collect().map(_.toSeq).toSeq
-    assert(rows(framedDir) === rows(dir))
+    assert(rows(twinDir) === rows(dir))
 
-    val f = framedDir.resolve("shard-00000.elog").toFile
+    def eventSizes(d: Path): Seq[Int] = {
+      val src = KinesisLikeLog.openEvents(d.resolve("shard-00000.elog").toFile)
+      try Iterator.continually(src.readEvent()).takeWhile(_ != null)
+        .collect { case KinesisLikeLog.RecordsEvent(_, rs) => rs.size }.toList
+      finally src.close()
+    }
+    assert(eventSizes(dir) === Seq.fill(13)(3) :+ 1)
+    assert(eventSizes(twinDir) === Seq.fill(40)(1))
+
+    val f = twinDir.resolve("shard-00000.elog").toFile
     assert(KinesisLikeLog.maxSeq(f) === 40L)
     assert(KinesisLikeLog.isClosed(f))
   }

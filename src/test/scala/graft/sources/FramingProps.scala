@@ -127,8 +127,8 @@ object FramingProps extends Properties("EventStreamFraming") {
       }
       val expected = lines.map(_.split('\t')(0).toLong).grouped(per)
         .map(g => (g.last, g.toSeq)).toList
-      val flat = scala.collection.mutable.ArrayBuffer.empty[String]
-      graft.sources.kinesislike.KinesisLikeLog.eachLine(f)(flat += _)
+      val flat = graft.sources.kinesislike.KinesisLikeLog
+        .foldLines(f, Vector.empty[String])(_ :+ _)
       conts == expected && flat.toSeq == lines
     }
 }

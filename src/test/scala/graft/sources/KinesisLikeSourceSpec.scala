@@ -1,14 +1,14 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
-import graft.sources.kinesislike.{EventStreamFraming, KinesisLikeLog, KinesisLikeOffset, StartingPosition}
+import graft.{ShardLogs, SparkSpec}
+import graft.sources.kinesislike.{KinesisLikeLog, KinesisLikeOffset, StartingPosition}
 
 /** Source behavior matrix, mirroring the reference's SubscribeToShard
   * integration tests (subscribe_to_shard_test.exs):
@@ -43,9 +43,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
       val b64 = java.util.Base64.getEncoder.encodeToString(payload.getBytes(UTF_8))
       s"$seq\t$us\t$k\t$b64"
     } ++ (if (closed) Seq(KinesisLikeLog.ClosedMarker) else Nil)
-    Files.write(
-      dir.resolve(f"shard-$shard%05d.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    ShardLogs.write(dir, lines, shard)
   }
 
   private def appendShard(
@@ -56,10 +54,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
       val b64 = java.util.Base64.getEncoder.encodeToString(payload.getBytes(UTF_8))
       s"$seq\t$us\t$k\t$b64"
     }
-    Files.write(
-      dir.resolve(f"shard-$shard%05d.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8),
-      StandardOpenOption.APPEND)
+    ShardLogs.write(dir, lines, shard, append = true)
   }
 
   private def readBatch(dir: Path): DataFrame =
@@ -447,11 +442,9 @@ class KinesisLikeSourceSpec extends SparkSpec {
           val b64 = java.util.Base64.getEncoder.encodeToString(payload)
           s"$seq\t${rnd.nextInt(1000000)}\tk${rnd.nextInt(3)}\t$b64"
         }
-        Files.write(
-          dir.resolve(f"shard-$sh%05d.log"),
-          (recs.mkString("\n") + "\n" +
-            (if (rnd.nextBoolean()) KinesisLikeLog.ClosedMarker + "\n" else ""))
-            .getBytes(UTF_8))
+        ShardLogs.write(dir,
+          recs ++ (if (rnd.nextBoolean()) Seq(KinesisLikeLog.ClosedMarker) else Nil),
+          sh)
       }
       val got = readBatch(dir)
         .select(col("sequenceNumber").cast("long"), col("data"))
@@ -526,9 +519,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
         Seq(KinesisLikeLog.ErrorMarker + "\thttp_error:500") ++
         (4L until 6L).map(i => s"$i\t$i\tk\t${b64(s"p$i")}") ++
         Seq(KinesisLikeLog.ClosedMarker)
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    ShardLogs.write(dir, lines)
     val got = runStream(dir, "trim_horizon", tmpDir("kl_instream_ck"), "sink_instream")
     // Raised exactly once (task retry skips it), everything delivered.
     assert(Files.exists(dir.resolve("_INSTREAM_RAISED_shard-00000")))
@@ -576,6 +567,20 @@ class KinesisLikeSourceSpec extends SparkSpec {
     assert(!Files.exists(dir.resolve("_FAILED_OPEN_shard-00000_r2")))
   }
 
+  test("a directory holding only a text shard-00000.log has no shards: a " +
+    "batch read and a stream start both fail naming the .elog format") {
+    val dir = tmpDir("kl_stale_text")
+    Files.write(dir.resolve("shard-00000.log"),
+      s"0\t1\tk\tYQ==\n${KinesisLikeLog.ClosedMarker}\n".getBytes(UTF_8))
+    def messages(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val batch  = intercept[Exception](readBatch(dir).collect())
+    val stream = intercept[Exception](runStream(
+      dir, "trim_horizon", tmpDir("kl_stale_text_ck"), "sink_stale_text"))
+    for (e <- Seq(batch, stream))
+      assert(messages(e).contains(s"no shard-*.elog files in $dir"), messages(e))
+  }
+
   // ------------------------------------ shard-closed as a visible signal
 
   test("a drained CLOSED stream is observable distinctly from an idle " +
@@ -602,7 +607,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
     runStream(dir, "trim_horizon", tmpDir("kl_recycle_ck1"), "sink_recycle_1")
     assert(KinesisLikeStatus.of(dir.toString) == KinesisLikeStatus.Closed)
     // Recycle the path: replace with a fresh OPEN log.
-    Files.delete(dir.resolve("shard-00000.log"))
+    Files.delete(dir.resolve("shard-00000.elog"))
     writeShard(dir, 0, Seq((1L, 2L, "k", "b")), closed = false)
     // Constructing a stream over the recycled path starts a new lifetime.
     new KinesisLikeMicroBatchStream(
@@ -726,42 +731,38 @@ class KinesisLikeSourceSpec extends SparkSpec {
 
   test("the metadata-only scan (maxSeq/isClosed) equals the full event " +
     "decode on framed logs: multi-record envelopes, error events, open " +
-    "and closed shards, text and byte tiers") {
+    "and closed shards") {
     val dir = tmpDir("kl_meta_fast")
     // Shard 0: closed, with an in-stream error marker mid-log; shard 1:
-    // open (no closed marker) with a trailing record; both derive a
-    // framed twin with 3-record envelopes so maxSeq must come from a
-    // MULTI-record event's continuation, not a one-record line.
-    writeShard(dir, 0,
-      (0L until 7L).map(i => (i, i * 1000L, "k", s"p$i")), closed = true)
+    // open (no closed marker) with a trailing record; both use 3-record
+    // envelopes so maxSeq must come from a MULTI-record event's
+    // continuation, not a one-record event.
+    def rec(i: Long): String = {
+      val b64 = java.util.Base64.getEncoder.encodeToString(s"p$i".getBytes(UTF_8))
+      s"$i\t${i * 1000L}\tk\t$b64"
+    }
+    val shard0 = (0L until 7L).map(rec) :+ KinesisLikeLog.ClosedMarker
+    ShardLogs.write(dir, shard0.take(3) ++
+      Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t1") ++ shard0.drop(3))
     writeShard(dir, 1,
       (10L until 15L).map(i => (i, i * 1000L, "k", s"p$i")), closed = false)
-    val err = dir.resolve("shard-00000.log")
-    val lines = new String(Files.readAllBytes(err), UTF_8).linesIterator.toSeq
-    Files.write(err, (lines.take(3) ++ Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t1") ++
-      lines.drop(3)).mkString("", "\n", "\n").getBytes(UTF_8))
-    val framed = dir.resolveSibling(dir.getFileName.toString + "_framed")
-    EventStreamFraming.deriveFramed(dir.toString, framed.toString)
     // Full-decode reference fold (the pre-optimization spelling).
-    def fullFold(f: java.io.File): (Long, Boolean) = {
-      var mx = -1L; var cl = false
-      KinesisLikeLog.eachLine(f) { l =>
-        if (l == KinesisLikeLog.ClosedMarker) cl = true
-        else KinesisLikeLog.parseLine(l).foreach(r => mx = math.max(mx, r.seq))
+    def fullFold(f: java.io.File): (Long, Boolean) =
+      KinesisLikeLog.foldLines(f, (-1L, false)) { case ((mx, cl), l) =>
+        if (l == KinesisLikeLog.ClosedMarker) (mx, true)
+        else (KinesisLikeLog.parseLine(l).fold(mx)(r => math.max(mx, r.seq)), cl)
       }
-      (mx, cl)
-    }
-    for (d <- Seq(dir, framed); f <- KinesisLikeLog.shardFiles(d.toString)) {
-      KinesisLikeLog.invalidateMeta(d.toString)
+    for (f <- KinesisLikeLog.shardFiles(dir.toString)) {
+      KinesisLikeLog.invalidateMeta(dir.toString)
       val (mx, cl) = fullFold(f)
       assert(KinesisLikeLog.maxSeq(f) == mx, s"maxSeq diverged on $f")
       assert(KinesisLikeLog.isClosed(f) == cl, s"isClosed diverged on $f")
     }
     // The parallel prefetch populates the same cache the serial walk reads.
-    KinesisLikeLog.invalidateMeta(framed.toString)
-    KinesisLikeLog.prefetchMeta(framed.toString)
+    KinesisLikeLog.invalidateMeta(dir.toString)
+    KinesisLikeLog.prefetchMeta(dir.toString)
     val scans = KinesisLikeLog.metaScans.get()
-    assert(KinesisLikeLog.shardFiles(framed.toString)
+    assert(KinesisLikeLog.shardFiles(dir.toString)
       .map(KinesisLikeLog.maxSeq).max == 14L)
     assert(KinesisLikeLog.metaScans.get() == scans,
       "the sequential walk after prefetch must be all cache hits")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.SparkSpec
+import graft.{ShardLogs, SparkSpec}
 import graft.sources.kinesislike.KinesisLikeLog
 
 /** SURVEY §5.2 property: splitting the event log arbitrarily across
@@ -33,9 +33,7 @@ object MicrobatchInvarianceProps extends Properties("KinesisLikeMicrobatch") {
         java.util.Base64.getEncoder.encodeToString(s"payload-$i".getBytes(UTF_8))
       s"$i\t${i * 1000}\tk${i % 5}\t$b64"
     } :+ KinesisLikeLog.ClosedMarker
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    ShardLogs.write(dir, lines)
     dir.toString
   }
 

@@ -49,7 +49,7 @@ class BackfillSeamSpec extends SparkSpec {
       sys.props("java.io.tmpdir"), "graft_kinesislike")
     val log = logRoot.listFiles()
       .filter(f => f.getName.startsWith("sf0.001_v")
-        && f.getName.endsWith("_c1_sent"))
+        && f.getName.endsWith("_c1_sent_framed"))
       // Numeric version max, not lexicographic: "_v10_" < "_v2_" as a
       // string, so a raw name compare would pick a stale layout dir if
       // one survived ensureLog's sweep at LayoutVersion 10+.

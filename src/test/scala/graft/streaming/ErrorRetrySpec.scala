@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{ShardLogs, SparkSpec}
 import graft.sources.kinesislike.KinesisLikeLog
 
 /** The producer's error/retry loop end-to-end (q129's mechanism at the
@@ -43,8 +43,7 @@ class ErrorRetrySpec extends SparkSpec {
     val lines = (1L to 20L).map(rec) ++
       Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t2") ++
       (21L to 30L).map(rec) :+ KinesisLikeLog.ClosedMarker
-    Files.write(dir.resolve("shard-00000.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    ShardLogs.write(dir, lines)
 
     val ckpt  = tmpDir("graft_retry_ckpt")
     val store = tmpDir("graft_retry_store")
@@ -113,8 +112,7 @@ class ErrorRetrySpec extends SparkSpec {
     val lines = (1L to 20L).map(rec) ++
       Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t2") ++
       (21L to 30L).map(rec) :+ KinesisLikeLog.ClosedMarker
-    Files.write(dir.resolve("shard-00000.log"),
-      (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    ShardLogs.write(dir, lines)
 
     val ckpt     = tmpDir("graft_monitor_ckpt")
     val store    = tmpDir("graft_monitor_store")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{ShardLogs, SparkEntry, SparkSpec}
 
 /** End-to-end equivalence of the streaming operators with their batch
   * analogs (SURVEY.md §5.2: "streaming query produces byte-identical
@@ -211,13 +211,8 @@ class StreamingOpsSpec extends SparkSpec {
     val dir  = Files.createTempDirectory("kl_tws_resume")
     val ckpt = Files.createTempDirectory("kl_tws_resume_ck")
     val out  = Files.createTempDirectory("kl_tws_resume_out")
-    def writeLines(lines: Seq[String], append: Boolean): Unit = {
-      val p     = dir.resolve("shard-00000.log")
-      val bytes = (lines.mkString("\n") + "\n").getBytes("UTF-8")
-      if (append)
-        Files.write(p, bytes, java.nio.file.StandardOpenOption.APPEND)
-      else Files.write(p, bytes)
-    }
+    def writeLines(lines: Seq[String], append: Boolean): Unit =
+      ShardLogs.write(dir, lines, append = append)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev    = spark.conf.getOption(provKey)
     def runOnce(): Unit = {
@@ -287,9 +282,7 @@ class StreamingOpsSpec extends SparkSpec {
     val recs = (0L until 20L).map(i =>
       stateRec(i, (i + 1) * 1000000L, i % 3, i * 1.5))
     val sentinel = stateRec(99, 40L * 24 * 3600 * 1000000L, -1, 0.0)
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      ((recs :+ sentinel).mkString("\n") + "\n#CLOSED\n").getBytes("UTF-8"))
+    ShardLogs.write(dir, recs :+ sentinel :+ "#CLOSED")
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev    = spark.conf.getOption(provKey)
     def run(cap: String, tag: String): Seq[(Long, Long, Double)] = {
@@ -344,13 +337,8 @@ class StreamingOpsSpec extends SparkSpec {
     val dir  = Files.createTempDirectory("kl_state_resume")
     val ckpt = Files.createTempDirectory("kl_state_resume_ck")
     val out  = Files.createTempDirectory("kl_state_resume_out")
-    def writeLines(lines: Seq[String], append: Boolean): Unit = {
-      val p = dir.resolve("shard-00000.log")
-      val bytes = (lines.mkString("\n") + "\n").getBytes("UTF-8")
-      if (append)
-        Files.write(p, bytes, java.nio.file.StandardOpenOption.APPEND)
-      else Files.write(p, bytes)
-    }
+    def writeLines(lines: Seq[String], append: Boolean): Unit =
+      ShardLogs.write(dir, lines, append = append)
     def runOnce(): Unit = {
       val q = userStateAgg(dir.toString, Map.empty)
         .writeStream
@@ -402,9 +390,7 @@ class StreamingOpsSpec extends SparkSpec {
     val recs = (0L until 20L).map(i =>
       stateRec(i, (i + 1) * 1000000L, i % 3, i * 1.5))
     val sentinel = stateRec(99, 40L * 24 * 3600 * 1000000L, -1, 0.0)
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      ((recs :+ sentinel).mkString("\n") + "\n#CLOSED\n").getBytes("UTF-8"))
+    ShardLogs.write(dir, recs :+ sentinel :+ "#CLOSED")
     def run(cap: String, tag: String): Seq[(Long, Long, Double)] = {
       val ckpt = Files.createTempDirectory(s"kl_state_inv_ck_$tag")
       val sink = s"state_inv_sink_$tag"
@@ -438,9 +424,7 @@ class StreamingOpsSpec extends SparkSpec {
     val recs = (0L until 20L).map(i =>
       stateRec(i, (i + 1) * 1000000L, i % 3, i * 1.5))
     val sentinel = stateRec(99, 40L * 24 * 3600 * 1000000L, -1, 0.0)
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      ((recs :+ sentinel).mkString("\n") + "\n#CLOSED\n").getBytes("UTF-8"))
+    ShardLogs.write(dir, recs :+ sentinel :+ "#CLOSED")
     def run(tag: String): Seq[(Long, Long, Double)] = {
       val ckpt = Files.createTempDirectory(s"kl_rocksdb_ck_$tag")
       val sink = s"rocksdb_sink_$tag"
@@ -482,10 +466,8 @@ class StreamingOpsSpec extends SparkSpec {
     val dir   = Files.createTempDirectory("kl_sink")
     val ckpt  = Files.createTempDirectory("kl_sink_ck")
     val store = Files.createTempDirectory("kl_sink_store")
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      ((0L until 10L).map(i => stateRec(i, (i + 1) * 1000L, i % 2, i * 1.0))
-        .mkString("\n") + "\n").getBytes("UTF-8"))
+    ShardLogs.write(dir,
+      (0L until 10L).map(i => stateRec(i, (i + 1) * 1000L, i % 2, i * 1.0)))
     val sink = new IdempotentSink(store.toString)
     def runOnce(): Unit = {
       val q = spark.readStream
@@ -540,9 +522,7 @@ class StreamingOpsSpec extends SparkSpec {
     try {
       val dir  = java.nio.file.Files.createTempDirectory("kl_listener")
       val ckpt = java.nio.file.Files.createTempDirectory("kl_listener_ck")
-      java.nio.file.Files.write(
-        dir.resolve("shard-00000.log"),
-        "0\t1\tk\tYQ==\n#CLOSED\n".getBytes("UTF-8"))
+      ShardLogs.write(dir, Seq("0\t1\tk\tYQ==", "#CLOSED"))
       val q = spark.readStream
         .format("kinesislike")
         .option("path", dir.toString)
@@ -571,9 +551,7 @@ class StreamingOpsSpec extends SparkSpec {
     try {
       val dir  = java.nio.file.Files.createTempDirectory("kl_listener_err")
       val ckpt = java.nio.file.Files.createTempDirectory("kl_listener_err_ck")
-      java.nio.file.Files.write(
-        dir.resolve("shard-00000.log"),
-        "0\t1\tk\tYQ==\n#CLOSED\n".getBytes("UTF-8"))
+      ShardLogs.write(dir, Seq("0\t1\tk\tYQ==", "#CLOSED"))
       val q = spark.readStream
         .format("kinesislike")
         .option("path", dir.toString)
@@ -639,9 +617,7 @@ class StreamingOpsSpec extends SparkSpec {
       typedRec(7, 230 * MIN, 2, "click"),
       typedRec(8, 40L * 24 * 60 * MIN, 99, "view")) // watermark sentinel
     val dir = Files.createTempDirectory("kl_dyn_sess")
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      (recs.mkString("\n") + "\n#CLOSED\n").getBytes("UTF-8"))
+    ShardLogs.write(dir, recs :+ "#CLOSED")
     def run(cap: String, tag: String): Seq[(Long, String, Long)] = {
       val ckpt = Files.createTempDirectory(s"kl_dyn_sess_ck_$tag")
       val sink = s"dyn_sess_sink_$tag"
@@ -734,10 +710,8 @@ class StreamingOpsSpec extends SparkSpec {
     val ckpt  = Files.createTempDirectory("kl_rollup_ck")
     val store = Files.createTempDirectory("kl_rollup_store")
     val n     = 24L
-    Files.write(
-      dir.resolve("shard-00000.log"),
-      ((0L until n).map(i => rec(i, if (i % 2 == 0) "a" else "b",
-        (i + 1) * 0.25)).mkString("\n") + "\n").getBytes("UTF-8"))
+    ShardLogs.write(dir,
+      (0L until n).map(i => rec(i, if (i % 2 == 0) "a" else "b", (i + 1) * 0.25)))
     val sink = new IdempotentSink(store.toString)
     val q = spark.readStream
       .format("kinesislike")
