@@ -51,6 +51,34 @@ object GraftSession {
     s
   }
 
+  /** Run `body` with the session confs `kv` set, then restore each key
+    * exactly: its previous value if it had one (`getOption`), `unset` if
+    * not — also when `body` throws.
+    *
+    * The flip is SESSION-GLOBAL for the duration of `body` (SQL confs
+    * have no narrower scope), so any other query planned on the same
+    * session during that window would silently see the flipped values.
+    * One JVM-wide lock makes the single-planner-at-a-time assumption
+    * enforced rather than implicit: concurrent callers serialize here,
+    * and a caller that wants concurrency must isolate with
+    * `s.newSession()` (own conf, shared catalog/state). The lock is
+    * reentrant, so scopes nest (q73's RocksDB provider around a drain
+    * that sets shuffle partitions) and restore innermost first. A
+    * `foreachBatch` body runs on the stream's own thread and must not
+    * call this: the calling thread holds the lock until the drain ends. */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T =
+    confScope.synchronized {
+      val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+      try {
+        kv.foreach { case (k, v) => s.conf.set(k, v) }
+        body
+      } finally prev.reverse.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None)    => s.conf.unset(k)
+      }
+    }
+  private val confScope = new Object
+
   /** Between-query cleanup. Operators that localCheckpoint shared
     * subtrees (the dedup pack) would otherwise leave their materialized
     * blocks pinned until a driver GC lets ContextCleaner find them,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables => T}
+import graft.{GraftSession, Q, Tables => T}
 
 /** Batch relational operator surface (SURVEY.md §2.2): scans, projection,
   * filters, joins (broadcast / sort-merge / semi / anti / range / as-of),
@@ -1464,6 +1464,11 @@ object Relational {
       ORDER BY event_type"""),
   )
 
+  /** The annotated int64 parquet timestamp type: unlike INT96 it
+    * carries min/max footer statistics. */
+  private val MicrosTimestamps =
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+
   /** Write (once) the sort-clustered events copy q54 scans: rows
     * range-partitioned then sorted by (event_type, ts), split into small
     * files — so every parquet file covers a narrow (event_type, ts)
@@ -1483,19 +1488,15 @@ object Relational {
       // INT96 (the legacy default outside Verify's session) carries NO
       // min/max statistics — this copy exists for footer-stat pruning on
       // ts, so pin the annotated int64 micros type for the write (same
-      // save/set/restore as prewarmZOrderedEvents; without it a
-      // Bench-first session would cache a stat-less copy forever via the
-      // _SUCCESS key).
-      val tsKey  = "spark.sql.parquet.outputTimestampType"
-      val tsPrev = s.conf.get(tsKey)
-      s.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try T.events(s, d)
+      // conf scope as prewarmZOrderedEvents; without it a Bench-first
+      // session would cache a stat-less copy forever via the _SUCCESS
+      // key).
+      GraftSession.withConf(s, MicrosTimestamps)(T.events(s, d)
         .repartitionByRange(8, col("event_type"), col("ts"))
         .sortWithinPartitions(col("event_type"), col("ts"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2000)
-        .parquet(path.getAbsolutePath)
-      finally s.conf.set(tsKey, tsPrev)
+        .parquet(path.getAbsolutePath))
     }
     path.getAbsolutePath
   }
@@ -1718,8 +1719,6 @@ object Relational {
       .orderBy(col("o_orderpriority"))
   }
 
-  private val bloomLock = new Object
-
   /** Runtime bloom-filter semi-join reduction — the shuffle-join killer
     * feature at 100 TB: when a fact-fact join's build side carries a
     * selective filter, Catalyst's InjectRuntimeFilter plants a bloom
@@ -1733,20 +1732,16 @@ object Relational {
     * exact configuration a warehouse-scale deployment hits naturally —
     * and materializes inside the conf scope (runtime confs bind at
     * action time, not DataFrame construction, so the snapshot is what
-    * the oracle compares). The conf flip is lock-scoped and restored,
-    * mirroring Streaming's confLock discipline. PlanAuditSpec asserts
-    * might_contain lands on the probe scan. */
+    * the oracle compares). The flip runs inside
+    * [[graft.GraftSession.withConf]], which serializes it and restores
+    * both keys. PlanAuditSpec asserts might_contain lands on the probe
+    * scan. */
   private val q59 = Q(
     "q59_bloom_semijoin",
-    (s, d) => bloomLock.synchronized {
-      val flips = Seq(
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-      val saved = flips.map { case (k, _) => k -> s.conf.get(k) }
-      flips.foreach { case (k, v) => s.conf.set(k, v) }
-      try q59Inner(s, d).localCheckpoint(true)
-      finally saved.foreach { case (k, v) => s.conf.set(k, v) }
-    },
+    (s, d) => GraftSession.withConf(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0"
+    )(q59Inner(s, d).localCheckpoint(true)),
     Some("""
       SELECT o_orderpriority,
              count(*) AS n_lines,
@@ -1793,10 +1788,8 @@ object Relational {
       // INT96 (the legacy default outside Verify's session) carries NO
       // min/max statistics — the whole point of this copy is footer
       // stats, so pin the annotated int64 micros type for the write.
-      val tsKey  = "spark.sql.parquet.outputTimestampType"
-      val tsPrev = s.conf.get(tsKey)
-      s.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try ev.withColumn("u8c", expr(u8))
+      GraftSession.withConf(s, MicrosTimestamps)(ev
+        .withColumn("u8c", expr(u8))
         .withColumn("t8c", expr(t8))
         .withColumn("zval", expr(z))
         .drop("u8c", "t8c")
@@ -1804,8 +1797,7 @@ object Relational {
         .sortWithinPartitions(col("zval"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2000)
-        .parquet(path.getAbsolutePath)
-      finally s.conf.set(tsKey, tsPrev)
+        .parquet(path.getAbsolutePath))
     }
     path.getAbsolutePath
   }
@@ -2483,35 +2475,25 @@ object Relational {
     * Map-only + one k-row rollup. */
   private val q77 = Q(
     "q77_json_malformed",
-    (s, d) => {
-      val prKey = "spark.sql.json.enablePartialResults"
-      val prev  = s.conf.getOption(prKey)
-      val plan =
-        try {
-          s.conf.set(prKey, "false")
-          T.events(s, d)
-            .withColumn(
-              "raw",
-              expr("""CASE WHEN event_id % 10 = 0
-                           THEN substring(props, 1, length(props) - 1)
-                           ELSE props END"""))
-            .withColumn("parsed", expr("from_json(raw, 'k INT')"))
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n"),
-              // Count rejects on the FIELD, not the struct: PERMISSIVE
-              // from_json may surface corrupt input as either a null struct
-              // or a struct of nulls depending on version — k is null under
-              // both (and never null in well-formed fixture payloads).
-              sum(when(col("parsed.k").isNull, 1L).otherwise(0L)).as("n_bad"),
-              sum(col("parsed.k")).cast("long").as("sum_k"))
-            .orderBy(col("event_type"))
-            .localCheckpoint(eager = true)
-        } finally prev match {
-          case Some(v) => s.conf.set(prKey, v)
-          case None    => s.conf.unset(prKey)
-        }
-      plan
+    (s, d) => GraftSession.withConf(s, "spark.sql.json.enablePartialResults" -> "false") {
+      T.events(s, d)
+        .withColumn(
+          "raw",
+          expr("""CASE WHEN event_id % 10 = 0
+                       THEN substring(props, 1, length(props) - 1)
+                       ELSE props END"""))
+        .withColumn("parsed", expr("from_json(raw, 'k INT')"))
+        .groupBy(col("event_type"))
+        .agg(
+          count(lit(1)).as("n"),
+          // Count rejects on the FIELD, not the struct: PERMISSIVE
+          // from_json may surface corrupt input as either a null struct
+          // or a struct of nulls depending on version — k is null under
+          // both (and never null in well-formed fixture payloads).
+          sum(when(col("parsed.k").isNull, 1L).otherwise(0L)).as("n_bad"),
+          sum(col("parsed.k")).cast("long").as("sum_k"))
+        .orderBy(col("event_type"))
+        .localCheckpoint(eager = true)
     },
     Some("""
       WITH mangled AS (

@@ -3,22 +3,26 @@ package graft.operators
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.{Q, Tables => T}
+import graft.{GraftSession, Q, Tables => T}
 import graft.sources.kinesislike.KinesisLikeLog
 
 /** Real Structured Streaming operators running on the KinesisLike source
   * (SURVEY.md §2.2 streaming row): event-time tumbling-window aggregation
   * with a watermark, and at-least-once dedup via dropDuplicates.
   *
-  * Each query replays the event log through
-  * `readStream.format("kinesislike")` with Trigger.AvailableNow into a
-  * memory sink, then returns the sink contents — formulated
+  * Every query reads through the one reader, [[replay]] (the
+  * `kinesislike` source over a shard log, parsed into event columns), and
+  * runs through the one drain, [[drain]] (Trigger.AvailableNow over a
+  * checkpoint, under the state-partition conf scope), into a memory sink
+  * ([[runToMemory]]) or a `foreachBatch` sink; the retry proofs hand the
+  * same query start ([[startDrain]]) to a supervised
+  * [[graft.streaming.ProducerRunner]]. Each result is formulated
   * batch-equivalently so the DuckDB oracle over the `events` table checks
   * the streaming result byte-for-byte (SURVEY.md §5.2).
   *
@@ -256,44 +260,61 @@ object Streaming {
       s.sparkContext.defaultParallelism.toLong).toInt
   }
 
-  /** Run a streaming DataFrame to completion (AvailableNow) into a memory
-    * sink; returns the sink table.
-    *
-    * State partitioning per [[StateParts]] (or the caller's `parts` —
-    * the join family passes [[joinStateParts]]); the batch queries keep
-    * the session default, restored after the stream drains.
-    *
-    * The conf flip is SESSION-GLOBAL for the duration of the stream (SQL
-    * confs have no narrower scope), so any batch query planned on the
-    * same session during that window would silently get `StateParts`
-    * shuffle partitions. `confLock` makes the single-planner-at-a-time
-    * assumption enforced rather than implicit: concurrent callers
-    * serialize here, and a caller that wants concurrency must isolate
-    * with `s.newSession()` (own conf, shared catalog/state). */
-  private val confLock = new Object
-  private def runToMemory(
+  /** Run `body` with state partitioning per [[StateParts]] (or the
+    * caller's `parts` — the join family passes [[joinStateParts]]); the
+    * batch queries keep the session default, restored afterwards by
+    * [[GraftSession.withConf]], which also serializes the flip. */
+  private def stateScope[T](s: SparkSession, parts: Int = StateParts)(
+      body: => T): T =
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(body)
+
+  /** The pack's one query start: the sink `into` configures, run
+    * AvailableNow over checkpoint `ckpt`. [[drain]] awaits it; the
+    * [[ErrorRetryFixture]] producer restarts it on failure. */
+  private def startDrain(df: DataFrame, ckpt: String)(
+      into: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
+    into(df.writeStream)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Run a streaming DataFrame to completion (AvailableNow) into the sink
+    * `into` configures, inside [[stateScope]]. The checkpoint defaults to
+    * a fresh scratch dir; the restart proofs pass the one they share
+    * across lifecycles. foreachBatch sinks — unlike memory ones — support
+    * RESTART from an existing checkpoint, which is what q56 exercises. */
+  private def drain(
       s: SparkSession,
       df: DataFrame,
-      outputMode: String,
-      checkpoint: Option[String] = None,
-      parts: Int = StateParts): DataFrame = confLock.synchronized {
+      ckpt: String = scratchDir("graft_ckpt"),
+      parts: Int = StateParts)(
+      into: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    stateScope(s, parts)(startDrain(df, ckpt)(into).awaitTermination())
+
+  /** [[drain]] into a memory sink; returns the sink table. */
+  private def runToMemory(
+      s: SparkSession, df: DataFrame, parts: Int = StateParts): DataFrame = {
     val name = s"$SinkPrefix${sinkCounter.incrementAndGet()}"
-    val ckpt = checkpoint.getOrElse(scratchDir("graft_ckpt"))
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(partsKey)
-    s.conf.set(partsKey, parts.toString)
-    try {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set(partsKey, prev)
+    drain(s, df, parts = parts)(
+      _.format("memory").queryName(name).outputMode("append"))
     s.table(name)
   }
+
+  /** The pack's one reader: the kinesislike source over `log` from
+    * `start`, parsed into typed event columns. `maxRecordsPerBatch` caps
+    * per-shard sequence advance per microbatch; `faultRunId` keys an
+    * error fixture's raise budget to one run. */
+  private def replay(
+      s: SparkSession,
+      log: String,
+      start: String = "trim_horizon",
+      maxRecordsPerBatch: Option[Long] = None,
+      faultRunId: Option[String] = None): DataFrame =
+    parsed(s.readStream.format("kinesislike")
+      .options(Map("path" -> log, "startingPosition" -> start) ++
+        maxRecordsPerBatch.map("maxRecordsPerBatch" -> _.toString) ++
+        faultRunId.map("faultRunId" -> _))
+      .load())
 
   /** Parse the Kinesis-record envelope back into typed event columns. */
   private def parsed(stream: DataFrame): DataFrame =
@@ -323,18 +344,13 @@ object Streaming {
     "q28_stream_window",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val agg = parsed(stream)
+      val agg = replay(s, log)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg, "append")
+      runToMemory(s, agg)
         .filter(col("event_type") =!= "sentinel")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -365,15 +381,10 @@ object Streaming {
     "q29_stream_dedup",
     (s, d) => {
       val log = ensureLog(s, d, copies = 2)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val deduped = parsed(stream)
+      val deduped = replay(s, log)
         .withWatermark("ts", "1 hour")
         .dropDuplicates("event_id")
-      runToMemory(s, deduped, "append")
+      runToMemory(s, deduped)
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
@@ -408,18 +419,13 @@ object Streaming {
     "q30_stream_session",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val sessions = parsed(stream)
+      val sessions = replay(s, log)
         .withWatermark("ts", "1 second")
         .groupBy(
           session_window(col("ts"), "1800000001 microseconds"),
           col("user_id"))
         .agg(count(lit(1)).as("sess_len"))
-      runToMemory(s, sessions, "append")
+      runToMemory(s, sessions)
         .filter(col("user_id") =!= SentinelUserId)
         .groupBy(col("user_id"))
         .agg(
@@ -455,7 +461,24 @@ object Streaming {
       ORDER BY user_id"""),
   )
 
-  /** Rate-limited reader for the stream-join family (q36/q61/q82/q84).
+  /** (row count, max event_id) of the events table per sf dir, computed
+    * once in one job and cached: the sizing inputs of the streaming pack
+    * (join-family slabs, restart seqSteps) and the seam cut of the
+    * position and error-retry proofs repeat the same scalars per query
+    * otherwise — a Spark job at query-BUILD time apiece. They are
+    * fixture properties of the immutable sf dir, so a plain concurrent
+    * map is safe. */
+  private val eventStatsCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  private def eventStats(s: SparkSession, d: String): (Long, Long) =
+    eventStatsCache.computeIfAbsent(new java.io.File(d).getAbsolutePath, _ => {
+      val r = T.events(s, d).agg(count(lit(1)), max(col("event_id"))).head()
+      (r.getLong(0), r.getLong(1))
+    })
+  private def eventCount(s: SparkSession, d: String): Long = eventStats(s, d)._1
+  private def maxEventId(s: SparkSession, d: String): Long = eventStats(s, d)._2
+
+  /** Admission step of the stream-join family's reader (q36/q61/q82/q84).
     * Without admission control, Trigger.AvailableNow drains the whole
     * log in ONE microbatch, so the join holds BOTH ENTIRE SIDES in the
     * state store before the first watermark advance — state grows with
@@ -468,39 +491,10 @@ object Streaming {
     * while later slabs are still unread — peak state becomes
     * corpus/batches + the watermark window, the live-stream shape.
     * Results are slicing-invariant (the microbatch-invariance family;
-    * the oracle gate re-proves it per query). */
-  private def joinSide(s: SparkSession, log: String, step: Long): DataFrame =
-    s.readStream
-      .format("kinesislike")
-      .option("path", log)
-      .option("startingPosition", "trim_horizon")
-      .option("maxRecordsPerBatch", step.toString)
-      .load()
-
-  /** Events-table row count per sf dir, computed once and cached: the
-    * sizing inputs of the streaming pack (join-family slabs, restart
-    * seqSteps) repeat the same count per query otherwise — a Spark job
-    * at query-BUILD time apiece. The count is a fixture property of the
-    * immutable sf dir, so a plain concurrent map is safe. */
-  private val eventCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def eventCount(s: SparkSession, d: String): Long =
-    eventCountCache.computeIfAbsent(
-      new java.io.File(d).getAbsolutePath,
-      _ => T.events(s, d).count()).longValue()
-
-  /** Max event_id per sf dir — the seam-cut input of the position and
-    * error-retry proofs, cached like [[eventCount]]. */
-  private val maxEventIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def maxEventId(s: SparkSession, d: String): Long =
-    maxEventIdCache.computeIfAbsent(
-      new java.io.File(d).getAbsolutePath,
-      _ => T.events(s, d).agg(max(col("event_id"))).head().getLong(0))
-      .longValue()
-
-  /** The join family's admission step: ~6 contiguous event-time slabs
-    * (the q66 sizing convention), floored at 50 k records so SMALL
+    * the oracle gate re-proves it per query).
+    *
+    * The step: ~6 contiguous event-time slabs (the q66 sizing
+    * convention), floored at 50 k records so SMALL
     * corpora don't pay per-batch state-store commits for slabs the
     * state never needed slicing into (measured at sf0.1: ÷6 with no
     * floor ran 7 batches and tripled the family's basis lines; the
@@ -541,16 +535,16 @@ object Streaming {
     "q36_stream_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      val step = joinStep(s, d)
-      def side(): DataFrame = joinSide(s, log, step)
-      val purchases = parsed(side())
+      def side(): DataFrame =
+        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
+      val purchases = side()
         .filter(col("event_type") === "purchase")
         .select(
           col("user_id").as("p_user"),
           col("event_id").as("purchase_id"),
           col("ts").as("p_ts"))
         .withWatermark("p_ts", "1 hour")
-      val clicks = parsed(side())
+      val clicks = side()
         .filter(col("event_type") === "click")
         .select(
           col("user_id").as("c_user"),
@@ -562,7 +556,7 @@ object Streaming {
         col("p_user") === col("c_user") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"))
-      runToMemory(s, joined, "append", parts = joinStateParts(s, d))
+      runToMemory(s, joined, parts = joinStateParts(s, d))
         .select(col("purchase_id"), col("click_id"))
         .orderBy(col("purchase_id"), col("click_id"))
     },
@@ -592,9 +586,9 @@ object Streaming {
     "q61_stream_outer_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val step = joinStep(s, d)
-      def side(): DataFrame = joinSide(s, log, step)
-      val purchases = parsed(side())
+      def side(): DataFrame =
+        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
+      val purchases = side()
         .filter(col("event_type").isin("purchase", "sentinel"))
         .select(
           col("user_id").as("p_user"),
@@ -602,7 +596,7 @@ object Streaming {
           col("ts").as("p_ts"),
           col("event_type").as("p_type"))
         .withWatermark("p_ts", "1 hour")
-      val clicks = parsed(side())
+      val clicks = side()
         .filter(col("event_type").isin("click", "sentinel"))
         .select(
           col("user_id").as("c_user"),
@@ -615,7 +609,7 @@ object Streaming {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"),
         "leftOuter")
-      runToMemory(s, joined, "append", parts = joinStateParts(s, d))
+      runToMemory(s, joined, parts = joinStateParts(s, d))
         .filter(col("p_type") === "purchase")
         .select(
           col("purchase_id"),
@@ -645,18 +639,13 @@ object Streaming {
     "q37_stream_sliding",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val agg = parsed(stream)
+      val agg = replay(s, log)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg, "append")
+      runToMemory(s, agg)
         .filter(col("event_type") =!= "sentinel")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -692,17 +681,12 @@ object Streaming {
     "q38_stream_static_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
       val cust = T.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val enriched = parsed(stream)
+      val enriched = replay(s, log)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("value"), col("c_mktsegment"))
-      runToMemory(s, enriched, "append")
+      runToMemory(s, enriched)
         .groupBy(col("c_mktsegment"))
         .agg(
           count(lit(1)).as("n"),
@@ -739,12 +723,7 @@ object Streaming {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val ev = parsed(stream)
+      val ev = replay(s, log)
         .withWatermark("ts", "1 second")
         .select(col("user_id"), col("ts"), col("value"))
         .as[(Long, java.sql.Timestamp, Double)]
@@ -775,7 +754,7 @@ object Streaming {
             }
         }
         .toDF("user_id", "n_events", "max_value")
-      runToMemory(s, out, "append")
+      runToMemory(s, out)
         .filter(col("user_id") =!= SentinelUserId)
         .orderBy(col("user_id"))
     },
@@ -802,15 +781,10 @@ object Streaming {
     "q45_stream_dedup_bounded",
     (s, d) => {
       val log = ensureLog(s, d, copies = 2)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val deduped = parsed(stream)
+      val deduped = replay(s, log)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-      runToMemory(s, deduped, "append")
+      runToMemory(s, deduped)
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
@@ -844,20 +818,9 @@ object Streaming {
       val log   = ensureLog(s, d, copies = 1)
       val store = scratchDir("graft_store")
       val sink  = new graft.streaming.IdempotentSink(store)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val rows = parsed(stream)
+      val rows = replay(s, log)
         .select(col("event_id"), col("event_type"), col("value"))
-      val ckpt = scratchDir("graft_ckpt")
-      val q = rows.writeStream
-        .foreachBatch((b: DataFrame, id: Long) => sink(b, id))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(s, rows)(_.foreachBatch(sink(_, _)))
       // `batch=<id>` reads back as a partition column; drop it — the
       // store's content, not its batch layout, is the delivered data.
       s.read.parquet(store)
@@ -898,18 +861,11 @@ object Streaming {
     (s, d) => {
       val log   = ensureLog(s, d, copies = 1)
       val store = scratchDir("graft_store_compact")
-      val ckpt  = scratchDir("graft_ckpt_compact")
       val sink  = new graft.streaming.IdempotentSink(store)
       val limit = math.max(1L, eventCount(s, d) / 6L)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", limit.toString)
-        .load()
-      val rows = parsed(stream)
+      val rows = replay(s, log, maxRecordsPerBatch = Some(limit))
         .select(col("event_id"), col("event_type"), col("value"))
-      runForeachBatch(s, rows, ckpt, sink(_, _))
+      drain(s, rows)(_.foreachBatch(sink(_, _)))
       val before = sink.committedBatchIds
       require(before.size > 2, s"need >2 microbatches to compact: $before")
       sink.compact(s, keepLast = 2)
@@ -961,18 +917,11 @@ object Streaming {
     (s, d) => {
       val log   = ensureLog(s, d, copies = 1)
       val store = scratchDir("graft_store_liverollup")
-      val ckpt  = scratchDir("graft_ckpt_liverollup")
       val sink  = new graft.streaming.IdempotentSink(store)
       val limit = math.max(1L, eventCount(s, d) / 4L)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", limit.toString)
-        .load()
-      val rows = parsed(stream)
+      val rows = replay(s, log, maxRecordsPerBatch = Some(limit))
         .select(col("event_id"), col("event_type"), col("value"))
-      runForeachBatch(s, rows, ckpt, (b: DataFrame, id: Long) =>
+      drain(s, rows)(_.foreachBatch((b: DataFrame, id: Long) =>
         sink(
           b.groupBy(col("event_type"))
             .agg(
@@ -981,7 +930,7 @@ object Streaming {
                 .as("sum_cents"),
               min(col("event_id")).as("min_event"),
               max(col("event_id")).as("max_event")),
-          id))
+          id)))
       require(sink.committedBatchIds.size > 2,
         s"need >2 microbatches so state MERGING is exercised: " +
           s"${sink.committedBatchIds}")
@@ -1011,30 +960,6 @@ object Streaming {
       GROUP BY event_type
       ORDER BY event_type"""),
   )
-
-  /** Run a streaming DataFrame to completion (AvailableNow) through a
-    * foreachBatch handler under the same state-partitioning and
-    * serialization contract as [[runToMemory]] (see that scaladoc for
-    * why the conf flip is lock-guarded). foreachBatch queries — unlike
-    * memory-sink ones — support RESTART from an existing checkpoint,
-    * which is exactly what q56 exercises. */
-  private def runForeachBatch(
-      s: SparkSession,
-      df: DataFrame,
-      ckpt: String,
-      sink: (DataFrame, Long) => Unit): Unit = confLock.synchronized {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev     = s.conf.get(partsKey)
-    s.conf.set(partsKey, StateParts.toString)
-    try {
-      val q = df.writeStream
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set(partsKey, prev)
-  }
 
   /** Checkpoint resume under the oracle gate: the q28 windowed aggregate
     * executed across TWO query starts sharing ONE checkpoint and ONE
@@ -1079,21 +1004,15 @@ object Streaming {
       val sink  = new graft.streaming.IdempotentSink(store)
       val nEvents = eventCount(s, d)
       val seqStep = math.max(1L, nEvents / 2L)
-      def agg(log: String, limit: Option[Long]): DataFrame = {
-        val reader = s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "trim_horizon")
-        limit.foreach(n => reader.option("maxRecordsPerBatch", n.toString))
-        parsed(reader.load())
+      def agg(log: String, limit: Option[Long]): DataFrame =
+        replay(s, log, maxRecordsPerBatch = limit)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(
             count(lit(1)).as("n"),
             round(sum(col("value")), 2).as("total_value"))
-      }
-      runForeachBatch(s, agg(base, Some(seqStep)), ckpt, sink(_, _))
-      runForeachBatch(s, agg(full, None), ckpt, sink(_, _))
+      drain(s, agg(base, Some(seqStep)), ckpt)(_.foreachBatch(sink(_, _)))
+      drain(s, agg(full, None), ckpt)(_.foreachBatch(sink(_, _)))
       // The proof's shape, enforced IN the gated query: run 1's cursor
       // committed across ≥2 microbatches and run 2 added its own — a
       // single-batch drain would not prove multi-batch resume. The
@@ -1125,6 +1044,11 @@ object Streaming {
       GROUP BY 1, 2
       ORDER BY window_start, event_type"""),
   )
+
+  /** The RocksDB state store — the only provider that serves
+    * transformWithState (q73, q80). */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Per-user per-type stats processor for q73 — the Spark 4
     * transformWithState API (the arbitrary-state tier ABOVE q39's
@@ -1212,31 +1136,18 @@ object Streaming {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      val out =
-        try {
-          s.conf.set(provKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          val stream = s.readStream
-            .format("kinesislike")
-            .option("path", log)
-            .option("startingPosition", "trim_horizon")
-            .load()
-          val ev = parsed(stream)
-            .withWatermark("ts", "1 second")
-            .select(col("user_id"), col("event_type"), col("ts"), col("value"))
-            .as[(Long, String, java.sql.Timestamp, Double)]
-          val flushed = ev
-            .groupByKey(_._1)
-            .transformWithState(
-              new UserTypeStatsProcessor, TimeMode.EventTime(), OutputMode.Append())
-            .toDF("user_id", "event_type", "n", "sum_value")
-          runToMemory(s, flushed, "append")
-        } finally prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
-        }
+      val out = GraftSession.withConf(s, RocksDbState) {
+        val ev = replay(s, log)
+          .withWatermark("ts", "1 second")
+          .select(col("user_id"), col("event_type"), col("ts"), col("value"))
+          .as[(Long, String, java.sql.Timestamp, Double)]
+        val flushed = ev
+          .groupByKey(_._1)
+          .transformWithState(
+            new UserTypeStatsProcessor, TimeMode.EventTime(), OutputMode.Append())
+          .toDF("user_id", "event_type", "n", "sum_value")
+        runToMemory(s, flushed)
+      }
       // Sum-merge on key: a >1h event-time gap (or >1h-late arrival) can
       // legitimately flush a key twice (state cleared then reopened); the
       // rollup folds any such split back together, so the append output
@@ -1357,32 +1268,19 @@ object Streaming {
         .as[(Long, Long)]
         .groupByKey(_._1)
         .mapValues(_._2)
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      val streamed =
-        try {
-          s.conf.set(provKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          val stream = s.readStream
-            .format("kinesislike")
-            .option("path", log)
-            .option("startingPosition", "trim_horizon")
-            .load()
-          val ev = parsed(stream)
-            .withWatermark("ts", "1 second")
-            .select(col("user_id"), col("ts"))
-            .as[(Long, java.sql.Timestamp)]
-          val flushed = ev
-            .groupByKey(_._1)
-            .transformWithState(
-              new BootstrappedCountProcessor,
-              TimeMode.EventTime(), OutputMode.Append(), initKV)
-            .toDF("user_id", "n_orders", "n_events")
-          runToMemory(s, flushed, "append")
-        } finally prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
-        }
+      val streamed = GraftSession.withConf(s, RocksDbState) {
+        val ev = replay(s, log)
+          .withWatermark("ts", "1 second")
+          .select(col("user_id"), col("ts"))
+          .as[(Long, java.sql.Timestamp)]
+        val flushed = ev
+          .groupByKey(_._1)
+          .transformWithState(
+            new BootstrappedCountProcessor,
+            TimeMode.EventTime(), OutputMode.Append(), initKV)
+          .toDF("user_id", "n_orders", "n_events")
+        runToMemory(s, flushed)
+      }
       // Sum-merge on key (the q73 convention): a multi-flush key emits
       // (boot, n1) then (0, n2) — boot clears on first flush — so the
       // rollup reconstructs (boot, n1+n2) exactly.
@@ -1434,9 +1332,9 @@ object Streaming {
     "q82_stream_full_outer_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val step = joinStep(s, d)
-      def side(): DataFrame = joinSide(s, log, step)
-      val purchases = parsed(side())
+      def side(): DataFrame =
+        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
+      val purchases = side()
         .filter(col("event_type").isin("purchase", "sentinel"))
         .select(
           col("user_id").as("p_user"),
@@ -1444,7 +1342,7 @@ object Streaming {
           col("ts").as("p_ts"),
           col("event_type").as("p_type"))
         .withWatermark("p_ts", "1 hour")
-      val clicks = parsed(side())
+      val clicks = side()
         .filter(col("event_type").isin("click", "sentinel"))
         .select(
           col("user_id").as("c_user"),
@@ -1458,7 +1356,7 @@ object Streaming {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"),
         "fullOuter")
-      runToMemory(s, joined, "append", parts = joinStateParts(s, d))
+      runToMemory(s, joined, parts = joinStateParts(s, d))
         .filter(
           col("p_type") === "purchase" ||
             (col("p_type").isNull && col("c_type") === "click"))
@@ -1508,16 +1406,16 @@ object Streaming {
     "q84_stream_semi_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      val step = joinStep(s, d)
-      def side(): DataFrame = joinSide(s, log, step)
-      val purchases = parsed(side())
+      def side(): DataFrame =
+        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
+      val purchases = side()
         .filter(col("event_type") === "purchase")
         .select(
           col("user_id").as("p_user"),
           col("event_id").as("purchase_id"),
           col("ts").as("p_ts"))
         .withWatermark("p_ts", "1 hour")
-      val clicks = parsed(side())
+      val clicks = side()
         .filter(col("event_type") === "click")
         .select(
           col("user_id").as("c_user"),
@@ -1530,7 +1428,7 @@ object Streaming {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"),
         "leftSemi")
-      runToMemory(s, joined, "append", parts = joinStateParts(s, d))
+      runToMemory(s, joined, parts = joinStateParts(s, d))
         .select(col("purchase_id"), col("p_user").as("user_id"))
         .orderBy(col("purchase_id"))
     },
@@ -1566,12 +1464,7 @@ object Streaming {
     "q92_stream_session_dynamic",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val sessions = parsed(stream)
+      val sessions = replay(s, log)
         .withWatermark("ts", "1 second")
         .groupBy(
           session_window(
@@ -1580,7 +1473,7 @@ object Streaming {
               .otherwise("1 hour")),
           col("user_id"))
         .agg(count(lit(1)).as("sess_len"))
-      runToMemory(s, sessions, "append")
+      runToMemory(s, sessions)
         .filter(col("user_id") =!= SentinelUserId)
         .groupBy(col("user_id"))
         .agg(
@@ -1651,16 +1544,8 @@ object Streaming {
       val dlq  = scratchDir("graft_store_dlq")
       val mainSink = new graft.streaming.IdempotentSink(main)
       val dlqSink  = new graft.streaming.IdempotentSink(dlq)
-      val prKey = "spark.sql.json.enablePartialResults"
-      val prev  = s.conf.getOption(prKey)
-      try {
-        s.conf.set(prKey, "false")
-        val stream = s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "trim_horizon")
-          .load()
-        val rows = parsed(stream)
+      GraftSession.withConf(s, "spark.sql.json.enablePartialResults" -> "false") {
+        val rows = replay(s, log)
           .withColumn(
             "raw",
             expr("""CASE WHEN event_id % 10 = 0
@@ -1668,24 +1553,15 @@ object Streaming {
                          ELSE props END"""))
           .withColumn("k", expr("from_json(raw, 'k INT').k"))
           .select(col("event_id"), col("event_type"), col("k"))
-        val ckpt = scratchDir("graft_ckpt_dlq")
-        val q = rows.writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            val batch = b.persist()
-            try {
-              mainSink(batch.filter(col("k").isNotNull), id)
-              dlqSink(
-                batch.filter(col("k").isNull)
-                  .select(col("event_id"), col("event_type")), id)
-            } finally { batch.unpersist(); () }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally prev match {
-        case Some(v) => s.conf.set(prKey, v)
-        case None    => s.conf.unset(prKey)
+        drain(s, rows)(_.foreachBatch { (b: DataFrame, id: Long) =>
+          val batch = b.persist()
+          try {
+            mainSink(batch.filter(col("k").isNotNull), id)
+            dlqSink(
+              batch.filter(col("k").isNull)
+                .select(col("event_id"), col("event_type")), id)
+          } finally { batch.unpersist(); () }
+        })
       }
       val good = s.read.parquet(main)
         .groupBy(col("event_type"))
@@ -1748,12 +1624,7 @@ object Streaming {
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
       def leg(region: String): DataFrame = {
-        val stream = s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "trim_horizon")
-          .load()
-        parsed(stream)
+        replay(s, log)
           .withColumn("region", lit(region))
           .withWatermark("ts", "1 hour")
       }
@@ -1762,7 +1633,7 @@ object Streaming {
         .groupBy(
           window(col("ts"), "6 hours"), col("region"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      runToMemory(s, agg, "append")
+      runToMemory(s, agg)
         .filter(col("event_type") =!= "sentinel")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -1798,11 +1669,6 @@ object Streaming {
     "q101_stream_static_anti",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
       // "In good standing" dimension slice: every fixture event user IS
       // a customer, so the live orphan check screens against the ACTIVE
       // subset (non-negative balance) — the realistic shape anyway: the
@@ -1810,10 +1676,10 @@ object Streaming {
       val customers = T.customer(s, d)
         .filter(col("c_acctbal") >= 0)
         .select(col("c_custkey"))
-      val orphans = parsed(stream)
+      val orphans = replay(s, log)
         .join(broadcast(customers),
           col("user_id") === col("c_custkey"), "left_anti")
-      val out = runToMemory(s, orphans, "append")
+      val out = runToMemory(s, orphans)
       out
         .groupBy(col("event_type"))
         .agg(
@@ -1853,11 +1719,6 @@ object Streaming {
     "q114_stream_pit_enrich",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
       val tileW = Window
         .partitionBy(col("user_id"))
         .orderBy(col("tsu"), col("event_id"))
@@ -1869,7 +1730,7 @@ object Streaming {
         .select(
           col("user_id").as("d_user"), col("version"),
           col("tsu").as("from_tsu"), col("to_tsu"))
-      val purchases = parsed(stream)
+      val purchases = replay(s, log)
         .filter(col("event_type") === "purchase")
         .selectExpr("user_id", "value", "unix_micros(ts) AS tsu")
       val enriched = purchases
@@ -1880,7 +1741,7 @@ object Streaming {
             (dim("to_tsu").isNull || purchases("tsu") < dim("to_tsu")),
           "left")
         .select(col("user_id"), col("value"), col("version"))
-      runToMemory(s, enriched, "append")
+      runToMemory(s, enriched)
         .groupBy(coalesce(col("version"), lit(0)).as("version"))
         .agg(
           count(lit(1)).as("n_purchases"),
@@ -1945,16 +1806,11 @@ object Streaming {
         .filter(col("event_id") <= k)
         .groupBy(date_trunc("hour", col("ts")).as("ws"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", s"after_sequence_number:$k")
-        .load()
-      val liveAgg = parsed(stream)
+      val liveAgg = replay(s, log, start = s"after_sequence_number:$k")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val live = runToMemory(s, liveAgg, "append")
+      val live = runToMemory(s, liveAgg)
         .filter(col("event_type") =!= "sentinel")
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents"))
@@ -2013,16 +1869,11 @@ object Streaming {
         .filter(unix_micros(col("ts")) < tu)
         .groupBy(date_trunc("day", col("ts")).as("ws"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", s"at_timestamp:$tIso")
-        .load()
-      val liveAgg = parsed(stream)
+      val liveAgg = replay(s, log, start = s"at_timestamp:$tIso")
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val live = runToMemory(s, liveAgg, "append")
+      val live = runToMemory(s, liveAgg)
         .filter(col("event_type") =!= "sentinel")
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents"))
@@ -2089,22 +1940,12 @@ object Streaming {
       val store = scratchDir("graft_store_latest")
       val sink  = new graft.streaming.IdempotentSink(store)
       KinesisLikeLog.materializeSplit(pair, log)
-      def live(): DataFrame = parsed(
-        s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "latest")
-          .load())
-        .select(col("event_type"), col("value"))
-      runForeachBatch(s, live(), ckpt, sink(_, _))
+      def live(): DataFrame =
+        replay(s, log, start = "latest").select(col("event_type"), col("value"))
+      drain(s, live(), ckpt)(_.foreachBatch(sink(_, _)))
       KinesisLikeLog.appendCachedTail(pair, log)
-      runForeachBatch(s, live(), ckpt, sink(_, _))
-      sink.readAll(s)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .orderBy(col("event_type"))
+      drain(s, live(), ckpt)(_.foreachBatch(sink(_, _)))
+      centsByType(sink.readAll(s))
     },
     // The delivered set must be exactly the appended (post-attach) half.
     // DuckDB `//` floors where Scala `/` truncates; event ids are
@@ -2119,6 +1960,81 @@ object Streaming {
       GROUP BY event_type
       ORDER BY event_type"""),
   )
+
+  /** Per-event-type row count and integer-cent value sum — the
+    * order-invariant rollup (q127's convention) the latest-gap and
+    * error-retry proofs read back from their stores. */
+  private def centsByType(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type"))
+      .agg(
+        count(lit(1)).as("n"),
+        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
+      .orderBy(col("event_type"))
+
+  /** Clean whole-corpus [[centsByType]] rollup: q129's and q131's oracle —
+    * pre-error deliveries kept, nothing double-delivered across the
+    * retries or the monitor hand-off. */
+  private val CleanCentsOracle = Some("""
+      SELECT event_type,
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events
+      GROUP BY event_type
+      ORDER BY event_type""")
+
+  /** q129's and q131's shared fixture: the base log with an in-stream
+    * transport_closed exception frame planted mid-shard-0, a fresh
+    * checkpoint and [[graft.streaming.IdempotentSink]] store (scratch
+    * dirs named after `tag`), and a fresh producer registry. */
+  private final class ErrorRetryFixture(s: SparkSession, d: String, tag: String) {
+    private val base = ensureLog(s, d, copies = 1)
+    // Injection budget = the session's task-attempt budget: every
+    // attempt of query start 1 raises, so the failure reaches the
+    // PRODUCER exactly once regardless of spark.task.maxFailures.
+    private val times = taskMaxFailures(s)
+    val log: String = new java.io.File(
+      new java.io.File(base).getParent,
+      // The budget is baked into the planted line, so it versions the
+      // ready-marker-cached dir: a session with a different task
+      // budget derives its own fixture instead of reusing a stale one.
+      new java.io.File(base).getName + s"_err_t$times").getAbsolutePath
+    KinesisLikeLog.deriveWithError(base, log,
+      afterSeq = maxEventId(s, d) / 2, spec = "transport_closed", times = times)
+    private val ckpt = scratchDir(s"graft_ckpt_$tag")
+    val sink = new graft.streaming.IdempotentSink(scratchDir(s"graft_store_$tag"))
+    // Fresh injection budget per invocation: the fixture dir persists
+    // across rounds, so the budget is keyed by this run's unique id —
+    // and the PREVIOUS runs' spent markers are swept first, so the
+    // ready-marker-guarded dir never accrues them without bound.
+    graft.sources.kinesislike.Faults.clearMarkers(log)
+    val runId: String = new java.io.File(ckpt).getName
+    private val seqStep = math.max(1L, eventCount(s, d) / 3L)
+    val registry = new graft.streaming.ProducerRegistry
+
+    /** The one [[graft.streaming.ProducerRunner]] factory: every start is
+      * a [[startDrain]] of the fixture's rows from the shared checkpoint
+      * into the store, under an admission cap that sizes a run to ~3
+      * microbatches. `sleep` defaults to a no-op, keeping the 70 s
+      * production backoff out of the proof's wall-clock (ErrorRetrySpec
+      * asserts the request); `maxRetries = 4` bounds a misbehaving
+      * fixture instead of hanging the gate. Run it inside [[stateScope]]. */
+    def producer(
+        name: String,
+        monitor: Option[Throwable => Boolean] = None,
+        sleep: Long => Unit = _ => ()): graft.streaming.ProducerRunner =
+      new graft.streaming.ProducerRunner(
+        name,
+        () => startDrain(
+          replay(s, log, maxRecordsPerBatch = Some(seqStep), faultRunId = Some(runId))
+            .select(col("event_type"), col("value")),
+          ckpt)(_.foreachBatch(sink(_, _))),
+        registry = registry,
+        maxRetries = 4,
+        monitor = monitor,
+        sleep = sleep,
+        logDir = Some(log))
+  }
 
   /** The producer's error/retry loop under the oracle gate — the
     * end-to-end proof of P2/P3/P5 (every error class marks the stream
@@ -2149,42 +2065,12 @@ object Streaming {
   private val q129 = Q(
     "q129_stream_error_retry",
     (s, d) => {
-      val base = ensureLog(s, d, copies = 1)
-      val mid  = maxEventId(s, d) / 2
-      // Injection budget = the session's task-attempt budget: every
-      // attempt of query start 1 raises, so the failure reaches the
-      // PRODUCER exactly once regardless of spark.task.maxFailures.
-      val times = taskMaxFailures(s)
-      val log = new java.io.File(
-        new java.io.File(base).getParent,
-        // The budget is baked into the planted line, so it versions the
-        // ready-marker-cached dir: a session with a different task
-        // budget derives its own fixture instead of reusing a stale one.
-        new java.io.File(base).getName + s"_err_t$times").getAbsolutePath
-      KinesisLikeLog.deriveWithError(
-        base, log, afterSeq = mid, spec = "transport_closed", times = times)
-      val ckpt  = scratchDir("graft_ckpt_retry")
-      val store = scratchDir("graft_store_retry")
-      val sink  = new graft.streaming.IdempotentSink(store)
-      // Fresh injection budget per invocation: the fixture dir persists
-      // across rounds, so the budget is keyed by this run's unique id —
-      // and the PREVIOUS runs' spent markers are swept first, so the
-      // ready-marker-guarded dir never accrues them without bound.
-      graft.sources.kinesislike.Faults.clearMarkers(log)
-      val runId = new java.io.File(ckpt).getName
-      val seqStep = math.max(1L, eventCount(s, d) / 3L)
-      val registry = new graft.streaming.ProducerRegistry
-      def rows(): DataFrame = parsed(
-        s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "trim_horizon")
-          .option("maxRecordsPerBatch", seqStep.toString)
-          .option("faultRunId", runId)
-          .load())
-        .select(col("event_type"), col("value"))
-      val runner = runWithProducer(
-        s, s"q129_$runId", () => rows(), ckpt, sink(_, _), log, registry)
+      val fx     = new ErrorRetryFixture(s, d, "retry")
+      val name   = s"q129_${fx.runId}"
+      val runner = fx.producer(name)
+      require(stateScope(s)(runner.run()),
+        s"producer $name did not recover: " +
+          runner.errorLog.map(_._1).mkString(","))
       // The proof's PREMISE, enforced in the gated query: the planted
       // transport error actually fired and was classified — a variant
       // that injected nothing would otherwise pass as a clean drain.
@@ -2192,25 +2078,11 @@ object Streaming {
           runner.errorLog.forall(_._1 == "transport_closed"),
         s"q129: the planted transport error must fire and classify, " +
           s"got ${runner.errorLog.map(_._1)}")
-      require(registry.producersReady,
+      require(fx.registry.producersReady,
         "q129: stream must end healthy after the retry")
-      sink.readAll(s)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .orderBy(col("event_type"))
+      centsByType(fx.sink.readAll(s))
     },
-    // Clean whole-corpus rollup: pre-error deliveries kept, nothing
-    // double-delivered across the retries.
-    Some("""
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events
-      GROUP BY event_type
-      ORDER BY event_type"""),
+    CleanCentsOracle,
   )
 
   /** The session's effective task-attempt budget — what decides whether
@@ -2245,18 +2117,13 @@ object Streaming {
     "q130_stream_window_textlog",
     (s, d) => {
       val log = oneRecordPerEventLog(s, d)
-      val stream = s.readStream
-        .format("kinesislike")
-        .option("path", log)
-        .option("startingPosition", "trim_horizon")
-        .load()
-      val agg = parsed(stream)
+      val agg = replay(s, log)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg, "append")
+      runToMemory(s, agg)
         .filter(col("event_type") =!= "sentinel")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -2293,95 +2160,42 @@ object Streaming {
   private val q131 = Q(
     "q131_stream_monitor_retry",
     (s, d) => {
-      val base  = ensureLog(s, d, copies = 1)
-      val mid   = maxEventId(s, d) / 2
-      val times = taskMaxFailures(s)
-      val log = new java.io.File(
-        new java.io.File(base).getParent,
-        new java.io.File(base).getName + s"_err_t$times").getAbsolutePath
-      KinesisLikeLog.deriveWithError(
-        base, log, afterSeq = mid, spec = "transport_closed", times = times)
-      val ckpt  = scratchDir("graft_ckpt_monitor")
-      val store = scratchDir("graft_store_monitor")
-      val sink  = new graft.streaming.IdempotentSink(store)
-      graft.sources.kinesislike.Faults.clearMarkers(log)
-      val runId    = new java.io.File(ckpt).getName
-      val seqStep  = math.max(1L, eventCount(s, d) / 3L)
-      val registry = new graft.streaming.ProducerRegistry
+      val fx = new ErrorRetryFixture(s, d, "monitor")
       val monitorSeen = new java.util.concurrent.atomic.AtomicInteger
       var backoffSlept = 0L
-      def rows(): DataFrame = parsed(
-        s.readStream
-          .format("kinesislike")
-          .option("path", log)
-          .option("startingPosition", "trim_horizon")
-          .option("maxRecordsPerBatch", seqStep.toString)
-          .option("faultRunId", runId)
-          .load())
-        .select(col("event_type"), col("value"))
       // ONE producer identity across both lifecycles — the monitor
       // reconnects the SAME producer (producer.ex:165-168), so the
       // registry tracks one stream whose health flips across the
       // hand-off, not two.
-      val streamName = s"q131_$runId"
-      def start(decide: Throwable => Boolean) =
-        new graft.streaming.ProducerRunner(
-          streamName,
-          () => rows().writeStream
-            .foreachBatch(sink(_, _))
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          registry = registry,
-          maxRetries = 4,
-          monitor = Some(decide),
-          sleep = ms => backoffSlept += ms,
-          logDir = Some(log))
-      confLock.synchronized {
-        val partsKey = "spark.sql.shuffle.partitions"
-        val prev     = s.conf.get(partsKey)
-        s.conf.set(partsKey, StateParts.toString)
-        try {
-          // Lifecycle 1: the monitor declines — the producer must STOP
-          // (no self-retry, no backoff), leaving recovery to the monitor.
-          val r1 = start { _ => monitorSeen.incrementAndGet(); false }
-          require(!r1.run(), "q131: a declined monitor must stop the producer")
-          require(r1.errorLog.nonEmpty &&
-              r1.errorLog.forall(_._1 == "transport_closed"),
-            s"q131: the planted transport error must fire and classify, " +
-              s"got ${r1.errorLog.map(_._1)}")
-          require(!registry.producersReady,
-            "q131: stream must be marked unhealthy while the monitor holds it")
-          // Lifecycle 2: the monitor's reconnect — same checkpoint, spent
-          // raise budget, accepting monitor (vacuously: no error fires).
-          val r2 = start(_ => true)
-          require(r2.run(), s"q131: monitor-driven reconnect did not drain: " +
-            r2.errorLog.map(_._1).mkString(","))
-        } finally s.conf.set(partsKey, prev)
+      def connect(decide: Throwable => Boolean) = fx.producer(
+        s"q131_${fx.runId}", Some(decide), ms => backoffSlept += ms)
+      stateScope(s) {
+        // Lifecycle 1: the monitor declines — the producer must STOP
+        // (no self-retry, no backoff), leaving recovery to the monitor.
+        val r1 = connect { _ => monitorSeen.incrementAndGet(); false }
+        require(!r1.run(), "q131: a declined monitor must stop the producer")
+        require(r1.errorLog.nonEmpty &&
+            r1.errorLog.forall(_._1 == "transport_closed"),
+          s"q131: the planted transport error must fire and classify, " +
+            s"got ${r1.errorLog.map(_._1)}")
+        require(!fx.registry.producersReady,
+          "q131: stream must be marked unhealthy while the monitor holds it")
+        // Lifecycle 2: the monitor's reconnect — same checkpoint, spent
+        // raise budget, accepting monitor (vacuously: no error fires).
+        val r2 = connect(_ => true)
+        require(r2.run(), s"q131: monitor-driven reconnect did not drain: " +
+          r2.errorLog.map(_._1).mkString(","))
       }
       require(monitorSeen.get() >= 1,
         "q131: the monitor was never consulted")
       require(backoffSlept == 0L,
         s"q131: monitor delegation must REPLACE the fixed backoff " +
           s"(producer.ex:165-168), but ${backoffSlept}ms was slept")
-      require(registry.producersReady,
+      require(fx.registry.producersReady,
         "q131: stream must end healthy after the monitor-driven reconnect")
-      sink.readAll(s)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .orderBy(col("event_type"))
+      centsByType(fx.sink.readAll(s))
     },
-    // q129's oracle: clean whole-corpus rollup across the hand-off.
-    Some("""
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events
-      GROUP BY event_type
-      ORDER BY event_type"""),
+    CleanCentsOracle,
   )
 
   /** The frame-corruption taxonomy under the oracle gate — the
@@ -2451,45 +2265,6 @@ object Streaming {
       GROUP BY event_type
       ORDER BY event_type"""),
   )
-
-  /** [[runForeachBatch]] with the producer's retry loop around the query
-    * start (P3/P5): classification, unhealthy marking, fixed-backoff
-    * request, and restart-from-checkpoint all run through the REAL
-    * [[graft.streaming.ProducerRunner]]. The no-op sleeper keeps the
-    * 70 s production constant out of the proof's wall-clock (the spec
-    * asserts the backoff was requested); `maxRetries = 4` bounds a
-    * misbehaving fixture instead of hanging the gate. */
-  private def runWithProducer(
-      s: SparkSession,
-      name: String,
-      mkDf: () => DataFrame,
-      ckpt: String,
-      sink: (DataFrame, Long) => Unit,
-      logDir: String,
-      registry: graft.streaming.ProducerRegistry,
-      onBackoff: Long => Unit = _ => (),
-  ): graft.streaming.ProducerRunner = confLock.synchronized {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev     = s.conf.get(partsKey)
-    s.conf.set(partsKey, StateParts.toString)
-    try {
-      val runner = new graft.streaming.ProducerRunner(
-        name,
-        () => mkDf().writeStream
-          .foreachBatch(sink)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start(),
-        registry = registry,
-        maxRetries = 4,
-        sleep = onBackoff,
-        logDir = Some(logDir))
-      require(runner.run(),
-        s"producer $name did not recover: " +
-          runner.errorLog.map(_._1).mkString(","))
-      runner
-    } finally s.conf.set(partsKey, prev)
-  }
 
   val all: Seq[Q] = Seq(
     q28, q29, q30, q36, q37, q38, q39, q45, q46, q56, q61, q66, q73, q80,

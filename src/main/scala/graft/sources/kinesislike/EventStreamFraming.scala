@@ -448,37 +448,57 @@ object EventStreamFraming {
     def isMidFrame: Boolean = bytesLeft >= 0 || pending.size > 0
   }
 
-  /** Streaming EVENT source over a framed shard file: reads in
+  /** The one frame-reading loop over a framed shard file: reads in
     * [[ChunkBytes]] chunks (never materializing the file), reassembles
-    * messages, verifies their CRCs, demuxes their headers, decodes each
-    * Records envelope (S12), and yields events in wire order
-    * (initial-response skipped). This is the reader's input — cursor
-    * logic operates per EVENT, mirroring handle_event's one
-    * resume-position advance per message. */
-  final class FramedEventSource(f: File) extends KinesisLikeLog.EventSource {
+    * messages with a [[FrameDecoder]] and yields each one's CRC-verified
+    * (headers, payload) ([[decodeMessage]]) in wire order. Reaching EOF
+    * mid-frame fails: a truncated shard file is refused, never read as
+    * a shorter one. */
+  private[kinesislike] final class MessageReader(f: File)
+      extends Iterator[(Map[String, String], Array[Byte])] with AutoCloseable {
     private val in      = new FileInputStream(f)
     private val decoder = new FrameDecoder
     private val chunk   = new Array[Byte](ChunkBytes)
-    private val queue =
-      scala.collection.mutable.Queue.empty[KinesisLikeLog.ShardEvent]
+    private var ready: Iterator[Array[Byte]] = Iterator.empty
 
-    override def readEvent(): KinesisLikeLog.ShardEvent = {
-      while (queue.isEmpty) {
+    override def hasNext: Boolean = {
+      while (!ready.hasNext) {
         val n = in.read(chunk)
         if (n < 0) {
           require(!decoder.isMidFrame,
             s"truncated event-stream frame at EOF in $f")
-          return null
+          return false
         }
-        decoder.feed(chunk, 0, n).foreach { msg =>
-          val (headers, payload) = decodeMessage(msg)
-          decodeToEvent(headers, payload).foreach(queue.enqueue(_))
-        }
+        ready = decoder.feed(chunk, 0, n).iterator
       }
-      queue.dequeue()
+      true
     }
 
+    override def next(): (Map[String, String], Array[Byte]) =
+      if (hasNext) decodeMessage(ready.next())
+      else throw new NoSuchElementException(s"no message left in $f")
+
     override def close(): Unit = in.close()
+  }
+
+  /** Streaming EVENT source over a framed shard file: demuxes each
+    * [[MessageReader]] message's headers, decodes its Records envelope
+    * (S12), and yields events in wire order (initial-response skipped).
+    * This is the reader's input — cursor logic operates per EVENT,
+    * mirroring handle_event's one resume-position advance per message. */
+  final class FramedEventSource(f: File) extends KinesisLikeLog.EventSource {
+    private val messages = new MessageReader(f)
+
+    override def readEvent(): KinesisLikeLog.ShardEvent = {
+      while (messages.hasNext) {
+        val (headers, payload) = messages.next()
+        val event = decodeToEvent(headers, payload)
+        if (event.isDefined) return event.get
+      }
+      null
+    }
+
+    override def close(): Unit = messages.close()
   }
 
   /** Derive a CORRUPTED twin of a framed log directory: every shard is

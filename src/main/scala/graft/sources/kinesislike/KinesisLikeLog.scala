@@ -1,6 +1,6 @@
 package graft.sources.kinesislike
 
-import java.io.{File, FileInputStream}
+import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
@@ -262,27 +262,16 @@ object KinesisLikeLog {
     * Equality with the full-decode fold is pinned by
     * KinesisLikeSourceSpec. */
   private def metaScan(f: File): (Long, Boolean) = {
-    val in      = new FileInputStream(f)
-    val decoder = new EventStreamFraming.FrameDecoder
-    val chunk   = new Array[Byte](EventStreamFraming.ChunkBytes)
-    var mx      = -1L
-    var cl      = false
-    try {
-      var n = in.read(chunk)
-      while (n >= 0) {
-        decoder.feed(chunk, 0, n).foreach { msg =>
-          val (headers, payload) = EventStreamFraming.decodeMessage(msg)
-          EventStreamFraming.decodeToMeta(headers, payload) match {
-            case Some(Right(cont)) => if (cont > mx) mx = cont
-            case Some(Left(_))     => cl = true
-            case None              =>
-          }
-        }
-        n = in.read(chunk)
+    val messages = new EventStreamFraming.MessageReader(f)
+    var mx       = -1L
+    var cl       = false
+    try messages.foreach { case (headers, payload) =>
+      EventStreamFraming.decodeToMeta(headers, payload) match {
+        case Some(Right(cont)) => if (cont > mx) mx = cont
+        case Some(Left(_))     => cl = true
+        case None              =>
       }
-      require(!decoder.isMidFrame,
-        s"truncated event-stream frame at EOF in $f")
-    } finally in.close()
+    } finally messages.close()
     (mx, cl)
   }
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * partition-index dependency — prints as a DIVERGENCE and fails the
   * run, as does any query that fails to EXECUTE at any setting (a
   * failure is never counted as invariance). Streaming queries pin
-  * their STATE partitioning internally (the StateParts conf flip in
-  * runToMemory/runForeachBatch — sized to state volume, independent of
+  * their STATE partitioning internally (the StateParts conf scope of
+  * Streaming's drain — sized to state volume, independent of
   * this knob), so this sweep exercises their surrounding batch plans
   * like everything else's.
   *

@@ -154,5 +154,17 @@ class CheckpointCensusSpec extends AnyFunSuite {
       "entry points drifted — fold a new main into a graft.Harness subcommand")
     assert(sites("SparkSession.builder()") == Map("graft/GraftSession.scala" -> 1),
       "build sessions through GraftSession.local, not SparkSession.builder()")
+    // One way to run a stream: Streaming's `replay` is the only reader,
+    // its `startDrain` the only AvailableNow start, and every operator's
+    // session-conf flip goes through GraftSession.withConf.
+    assert(sites("readStream") == Map("graft/operators/Streaming.scala" -> 1),
+      "read streams through Streaming.replay, not a hand-written readStream")
+    assert(sites("Trigger.AvailableNow()") ==
+      Map("graft/operators/Streaming.scala" -> 1),
+      "start streams through Streaming.drain, not a hand-written trigger")
+    val flips = (sites(".conf.set(").keySet ++ sites(".conf.unset(").keySet)
+      .filter(_.startsWith("graft/operators/"))
+    assert(flips.isEmpty,
+      s"flip session confs through GraftSession.withConf, not by hand: $flips")
   }
 }

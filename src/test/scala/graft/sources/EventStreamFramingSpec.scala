@@ -208,6 +208,8 @@ class EventStreamFramingSpec extends SparkSpec {
       var l = src.readLine()
       while (l != null) l = src.readLine()
     } finally src.close()
+    // The metadata scan behind maxSeq reads through the same frame loop.
+    intercept[IllegalArgumentException](KinesisLikeLog.maxSeq(f.toFile))
   }
 
   test("a 1 MB record framed into a shard file streams through the " +
