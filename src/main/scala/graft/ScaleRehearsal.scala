@@ -48,15 +48,15 @@ import org.apache.spark.sql.functions._
 object ScaleRehearsal {
 
   /** Writes `factor` perturbed copies of the fixture at `src` to `out`,
-    * unless `out` is already marked ready. */
+    * unless `out` is already marked ready ([[Fixtures.once]]). */
   def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val ready = new java.io.File(out, "_READY")
-    if (ready.exists()) {
-      println(s"[scale] $out already built")
-      return
-    }
-    new java.io.File(out).mkdirs()
+    Fixtures.once(out)(writeCopies(spark, src, out, factor))
+    println(s"[scale] $out ready (factor $factor of $src)")
+  }
+
+  private def writeCopies(
+      spark: SparkSession, src: String, out: String, factor: Int): Unit = {
 
     def table(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def copies(df: DataFrame): DataFrame =
@@ -152,8 +152,5 @@ object ScaleRehearsal {
         (col("s_suppkey") + col("c") * sShift).as("s_suppkey"),
         col("s_name"), col("s_nationkey"), col("s_acctbal")), "supplier")
     }
-
-    java.nio.file.Files.createFile(ready.toPath)
-    println(s"[scale] $out ready (factor $factor of $src)")
   }
 }

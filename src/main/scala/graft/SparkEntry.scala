@@ -44,6 +44,12 @@ object SparkEntry {
     qs.map(q => q.name -> q.fn).toMap
   }
 
+  /** Every pack's write-once fixture builds, concatenated like
+    * [[queries]]; Bench walks this list before it bills anything. */
+  val fixtures: Seq[Prewarm] =
+    Relational.fixtures ++ Dedup.fixtures ++ Multimodal.fixtures ++
+      Streaming.fixtures ++ Pipeline.fixtures
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (driver records a weaker rows-only check). */

@@ -14,11 +14,19 @@ final case class Q(
     oracle: Option[String],
 )
 
+/** A write-once [[Fixtures]] build a pack declares next to its queries;
+  * Bench runs each unbilled, as `prewarm:<name>`. */
+final case class Prewarm(name: String, build: (SparkSession, String) => Any)
+
 /** Parquet table loading for the driver-generated star schema
   * (see TESTDATA.md / FIXTURES.md). Every query receives the sf dir at
   * call time, so nothing is cached across scale factors.
   */
 object Tables {
+  /** The sf dir's fixture tables, one `<name>.parquet` each. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

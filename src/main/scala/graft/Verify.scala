@@ -41,8 +41,7 @@ object Verify {
     // instead of 64 scattered per-query failures. nanosAsLong first so a
     // TIMESTAMP(NANOS) column prints as bigint rather than throwing.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings")) {
+    for (t <- Tables.names) {
       val desc =
         try spark.read.parquet(s"$sfDir/$t.parquet").schema.fields
           .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables => T}
+import graft.{Fixtures, Prewarm, Q, Tables => T}
 
 /** Multimodal-column plumbing: media payloads are opaque `binary` columns
   * with typed metadata alongside. The container has no image/audio codecs,
@@ -809,11 +809,8 @@ object Multimodal {
     * (doc_id, dim, sign) ints shuffle inside the one-time write). */
   def prewarmAlignmentTables(
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    val (tag, wh) = Relational.fixtureLoc(d)
-    val capT = s"graft_caption_tf_$tag"
-    val embT = s"graft_embeddings_b_$tag"
-    Relational.ensureBucketed(
-      s, wh, capT,
+    val capT = Relational.ensureBucketed(
+      s, s"graft_caption_tf_${Fixtures.tag(d)}",
       T.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .select(
@@ -833,8 +830,8 @@ object Multimodal {
                     i -> CAST(coalesce(element_at(m, i), 0L) AS FLOAT))""")
             .as("tf")),
       "doc_id")
-    Relational.ensureBucketed(s, wh, embT, T.embeddings(s, d), "vec_id")
-    (capT, embT)
+    (capT, Relational.ensureBucketed(
+      s, s"graft_embeddings_b_${Fixtures.tag(d)}", T.embeddings(s, d), "vec_id"))
   }
 
   /** CLIP-score alignment filter — the LAION curation gate (Schuhmann
@@ -932,6 +929,9 @@ object Multimodal {
       FROM sc
       ORDER BY doc_id"""),
   )
+
+  val fixtures: Seq[Prewarm] =
+    Seq(Prewarm("alignment", prewarmAlignmentTables))
 
   val all: Seq[Q] =
     Seq(m01, m02, m03, m04, m05, m06, m07, m08, m09, m10, m11, m12)

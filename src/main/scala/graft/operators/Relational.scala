@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{GraftSession, Q, Tables => T}
+import graft.{Fixtures, GraftSession, Prewarm, Q, Tables => T}
 
 /** Batch relational operator surface (SURVEY.md §2.2): scans, projection,
   * filters, joins (broadcast / sort-merge / semi / anti / range / as-of),
@@ -1029,54 +1029,26 @@ object Relational {
       ORDER BY event_type"""),
   )
 
-  /** Fixture tag (sf dir name, dots escaped) and warehouse root shared by
-    * every prewarmed table — one derivation so a layout change can never
-    * leave one prewarm writing to an old location. */
-  /** Shared derived-fixture root. SINGLE-PROCESS ASSUMPTION: every
-    * builder under this root (bucketed tables, partitioned/clustered/
-    * z-ordered lakes, format copies, the pipeline stage frame) is
-    * build-if-missing with an in-session existence check and an
-    * overwrite write — safe for the driver's serial Verify/Bench/test
-    * runs, but two graft JVMs racing a cold warehouse can overwrite a
-    * layout the other is mid-read (observed: FAILED_READ_FILE on the
-    * bucketed orders table when a test suite and a Verify sweep started
-    * concurrently after a bench deleted the root). Run gates serially,
-    * or point SPARK_LOCAL_DIRS-style isolation at distinct tmpdirs. A
-    * production lake solves this with an atomic-publish table format —
-    * out of scope for test fixtures. */
-  private[operators] def fixtureLoc(d: String): (String, String) = (
-    new java.io.File(d).getName.replace('.', '_'),
-    new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_warehouse").getAbsolutePath)
-
   /** Create the bucketed orders/lineitem tables q42 joins (idempotent per
     * session via tableExists). Public so Bench can run it during warmup:
     * the writes are one-time fixture setup (a fresh JVM's catalog is
     * empty, so leaving them inside the timed query would bill the
     * bucketing write — the pattern's amortized-away cost — to every
     * measured run). Returns the two table names. */
-  def prewarmBucketedTables(s: SparkSession, d: String): (String, String) = {
-    val (tag, wh) = fixtureLoc(d)
-    val ordersB   = s"graft_orders_b_$tag"
-    val lineitemB = s"graft_lineitem_b_$tag"
-    ensureBucketed(s, wh, ordersB, T.orders(s, d), "o_orderkey")
-    ensureBucketed(s, wh, lineitemB, T.lineitem(s, d), "l_orderkey")
-    (ordersB, lineitemB)
-  }
+  def prewarmBucketedTables(s: SparkSession, d: String): (String, String) = (
+    ensureBucketed(s, s"graft_orders_b_${Fixtures.tag(d)}", T.orders(s, d),
+      "o_orderkey"),
+    ensureBucketed(s, s"graft_lineitem_b_${Fixtures.tag(d)}", T.lineitem(s, d),
+      "l_orderkey"))
 
   /** The bucketed-fixture write convention (8 buckets, key-sorted,
     * path-backed, idempotent per session via tableExists), shared by
     * every co-bucketed fixture builder (q42's fact tables, m12's
     * alignment tower tables) so the convention has ONE definition. */
   private[operators] def ensureBucketed(
-      s: SparkSession, wh: String, name: String, df: DataFrame,
-      key: String): Unit =
-    if (!s.catalog.tableExists(name))
-      df.write.mode("overwrite")
-        .bucketBy(8, key)
-        .sortBy(key)
-        .option("path", s"$wh/$name")
-        .saveAsTable(name)
+      s: SparkSession, name: String, df: => DataFrame, key: String): String =
+    Fixtures.table(s, name)(
+      df.write.mode("overwrite").bucketBy(8, key).sortBy(key))
 
   /** Bucketed co-located fact-fact join: orders and lineitem written once
     * as bucketed tables on the join key (8 buckets, sorted), then joined
@@ -1218,18 +1190,11 @@ object Relational {
     * directory-per-date layout is the storage shape a 100 TB event lake
     * actually has, and the one-time partitioned write is fixture setup,
     * not operator cost. */
-  def prewarmPartitionedEvents(s: SparkSession, d: String): String = {
-    val (tag, wh) = fixtureLoc(d)
-    val name      = s"graft_events_p_$tag"
-    if (!s.catalog.tableExists(name))
-      T.events(s, d)
-        .withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .option("path", s"$wh/$name")
-        .saveAsTable(name)
-    name
-  }
+  def prewarmPartitionedEvents(s: SparkSession, d: String): String =
+    Fixtures.table(s, s"graft_events_p_${Fixtures.tag(d)}")(T.events(s, d)
+      .withColumn("event_date", to_date(col("ts")))
+      .write.mode("overwrite")
+      .partitionBy("event_date"))
 
   /** Partition pruning: a date-range query over the date-partitioned
     * events lake. The filter binds to the PARTITION column, so the scan
@@ -1464,10 +1429,22 @@ object Relational {
       ORDER BY event_type"""),
   )
 
-  /** The annotated int64 parquet timestamp type: unlike INT96 it
-    * carries min/max footer statistics. */
-  private val MicrosTimestamps =
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+  /** Write (once) a layout copy of `df` at `path`: range-partitioned
+    * into 8 and sorted on `by`, split into small files, so each file's
+    * footer min/max covers a narrow range of `by`. INT96 (the legacy
+    * default outside Verify's session) carries NO min/max statistics and
+    * footer stats are the point of these copies, so the write pins the
+    * annotated int64 micros type (without it a Bench-first session would
+    * store a stat-less copy under the fixture's key). */
+  private def layoutCopy(s: SparkSession, path: String, by: Column*)(
+      df: => DataFrame): String =
+    Fixtures.once(path)(GraftSession.withConf(s,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(df
+      .repartitionByRange(8, by: _*)
+      .sortWithinPartitions(by: _*)
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", 2000)
+      .parquet(path)))
 
   /** Write (once) the sort-clustered events copy q54 scans: rows
     * range-partitioned then sorted by (event_type, ts), split into small
@@ -1481,25 +1458,12 @@ object Relational {
     * of the write shape here. FileStatsClusteringSpec reads the footers
     * back and asserts a selective predicate admits a strict subset of
     * files. */
-  def prewarmClusteredEvents(s: SparkSession, d: String): String = {
-    val (tag, wh) = fixtureLoc(d)
-    val path = new java.io.File(wh, s"graft_events_clustered_$tag")
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      // INT96 (the legacy default outside Verify's session) carries NO
-      // min/max statistics — this copy exists for footer-stat pruning on
-      // ts, so pin the annotated int64 micros type for the write (same
-      // conf scope as prewarmZOrderedEvents; without it a Bench-first
-      // session would cache a stat-less copy forever via the _SUCCESS
-      // key).
-      GraftSession.withConf(s, MicrosTimestamps)(T.events(s, d)
-        .repartitionByRange(8, col("event_type"), col("ts"))
-        .sortWithinPartitions(col("event_type"), col("ts"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 2000)
-        .parquet(path.getAbsolutePath))
-    }
-    path.getAbsolutePath
-  }
+  def prewarmClusteredEvents(s: SparkSession, d: String): String =
+    layoutCopy(s, clusteredEventsPath(d), col("event_type"), col("ts"))(
+      T.events(s, d))
+
+  private[graft] def clusteredEventsPath(d: String): String =
+    Fixtures.warehouse("graft_events_clustered", 1, d)
 
   /** Selective scan over the sort-clustered lake copy: the predicate
     * binds to the clustering columns, so parquet row-group stats (and at
@@ -1766,10 +1730,8 @@ object Relational {
     * events) gates. ZOrderClusteringSpec reads the footers back and
     * asserts BOTH single-dimension predicates admit strict file
     * subsets. */
-  def prewarmZOrderedEvents(s: SparkSession, d: String): String = {
-    val (tag, wh) = fixtureLoc(d)
-    val path = new java.io.File(wh, s"graft_events_zorder_$tag")
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  def prewarmZOrderedEvents(s: SparkSession, d: String): String =
+    layoutCopy(s, zOrderedEventsPath(d), col("zval")) {
       val ev = T.events(s, d)
       val b = ev.agg(
         min(col("user_id")), max(col("user_id")),
@@ -1785,22 +1747,14 @@ object Relational {
         s"shiftleft(shiftright(u8c, $i) & 1, ${2 * i + 1}) + " +
           s"shiftleft(shiftright(t8c, $i) & 1, ${2 * i})")
         .mkString(" + ")
-      // INT96 (the legacy default outside Verify's session) carries NO
-      // min/max statistics — the whole point of this copy is footer
-      // stats, so pin the annotated int64 micros type for the write.
-      GraftSession.withConf(s, MicrosTimestamps)(ev
-        .withColumn("u8c", expr(u8))
+      ev.withColumn("u8c", expr(u8))
         .withColumn("t8c", expr(t8))
         .withColumn("zval", expr(z))
         .drop("u8c", "t8c")
-        .repartitionByRange(8, col("zval"))
-        .sortWithinPartitions(col("zval"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 2000)
-        .parquet(path.getAbsolutePath))
     }
-    path.getAbsolutePath
-  }
+
+  private[graft] def zOrderedEventsPath(d: String): String =
+    Fixtures.warehouse("graft_events_zorder", 1, d)
 
   /** Selective two-dimension scan over the z-ordered copy: the user band
     * and the time window each bind to an interleaved dimension, so file
@@ -2356,23 +2310,21 @@ object Relational {
   )
 
   /** One-time json/csv/orc copies of the 3-column documents projection
-    * for q75 (idempotent per fixture via the _SUCCESS key, same lifecycle
-    * as the q54/q62 layout copies). Public so Bench prewarms the writes
-    * and the query times the SCANS. */
+    * for q75 (one store fixture, same lifecycle as the q54/q62 layout
+    * copies). Public so Bench prewarms the writes and the query times
+    * the SCANS. */
   def prewarmFormatCopies(s: SparkSession, d: String): String = {
-    val (tag, wh) = fixtureLoc(d)
-    val base = new java.io.File(wh, s"graft_docs_formats_$tag")
-    lazy val proj =
-      T.documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
-    def ensure(fmt: String)(write: String => Unit): Unit = {
-      val p = new java.io.File(base, fmt)
-      if (!new java.io.File(p, "_SUCCESS").exists()) write(p.getAbsolutePath)
+    val base = formatCopiesPath(d)
+    Fixtures.once(base) {
+      val proj = T.documents(s, d).select("doc_id", "lang", "n_chars")
+      proj.write.mode("overwrite").json(s"$base/json")
+      proj.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
+      proj.write.mode("overwrite").orc(s"$base/orc")
     }
-    ensure("json")(p => proj.write.mode("overwrite").json(p))
-    ensure("csv")(p => proj.write.mode("overwrite").option("header", "true").csv(p))
-    ensure("orc")(p => proj.write.mode("overwrite").orc(p))
-    base.getAbsolutePath
   }
+
+  private[graft] def formatCopiesPath(d: String): String =
+    Fixtures.warehouse("graft_docs_formats", 1, d)
 
   /** Source-format breadth: the same relation read back through the
     * json-lines, csv, and orc readers, each summarized to an identical
@@ -5066,6 +5018,16 @@ object Relational {
       ORDER BY round(dist, 6) + CAST(0.0 AS DOUBLE), user_id, event_id
       LIMIT 10"""),
   )
+
+  /** The pack's write-once fixtures (catalog tables, layout and format
+    * copies): one-time writes, so the queries measure the SCAN of a
+    * maintained layout, not its build. */
+  val fixtures: Seq[Prewarm] = Seq(
+    Prewarm("bucketed", prewarmBucketedTables),
+    Prewarm("partitioned", prewarmPartitionedEvents),
+    Prewarm("clustered", prewarmClusteredEvents),
+    Prewarm("zorder", prewarmZOrderedEvents),
+    Prewarm("formats", prewarmFormatCopies))
 
   val all: Seq[Q] = Seq(
     q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11, q12, q13,

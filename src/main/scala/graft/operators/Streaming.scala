@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, Q, Tables => T}
+import graft.{Fixtures, GraftSession, Prewarm, Q, Tables => T}
 import graft.sources.kinesislike.KinesisLikeLog
 
 /** Real Structured Streaming operators running on the KinesisLike source
@@ -138,66 +138,52 @@ object Streaming {
     * it); part of every fixture dir name. */
   private val LayoutVersion = 5
 
-  /** The shard log the streaming pack replays, built once per sf dir +
-    * variant under java.io.tmpdir (idempotent via each log's ready
-    * marker): `.elog` files of full AWS-event-stream messages — header
-    * vocabulary, CRC32s, initial-response open
+  /** Where the `copies`/`sentinel` variant of sf dir `d`'s shard log
+    * lives in the store: `.elog` files of full AWS-event-stream messages
+    * — header vocabulary, CRC32s, initial-response open
     * ([[graft.sources.kinesislike.EventStreamFraming]]) — that the reader
     * reassembles from 16 KB chunks, so the S9 frame state machine and
     * the S10 header demux sit under the oracle gate on the whole sweep.
-    * The base (`copies` = 1, no sentinel) is written from the events
-    * table; every other variant derives from it without a Spark job. */
+    * Shard count and layout version are part of the key. */
+  private[graft] def logPath(
+      d: String, copies: Int = 1, sentinel: Boolean = false): String =
+    Fixtures.shardLog(
+      s"s${NumShards}_c$copies${if (sentinel) "_sent" else ""}_framed",
+      LayoutVersion, d)
+
+  /** Build (once) and return the [[logPath]] log. The base (`copies` =
+    * 1, no sentinel) is written from the events table; every other
+    * variant derives from it by line transformation, so the Spark read
+    * of events.parquet happens once per sf dir, not per variant. */
   private def ensureLog(
       s: SparkSession,
       d: String,
       copies: Int,
       sentinel: Boolean = false): String = {
-    val base = new java.io.File(d).getName
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_kinesislike")
-    // Shard count and layout version are part of the dir name so a
-    // format change can never silently reuse a stale fixture via its
-    // ready marker; fixtures of the same sf dir with an OLD layout are
-    // deleted rather than left to pile up a full event-log copy per
-    // obsolete layout. Matched layouts: the current `_v<n>_s<digits>_...`
-    // naming plus the older `_s<digits>_...` and `_c<digits>[_sent]`
-    // namings — exact patterns, never a raw string prefix, so a sibling
-    // dataset named "<base>_something" can't have its live fixtures
-    // swept.
-    val quoted = java.util.regex.Pattern.quote(base)
-    val staleLayouts = Seq(
-      (quoted + "_v\\d+_s\\d+_.*").r,
-      (quoted + "_s\\d+_.*").r,
-      (quoted + "_c\\d+(_sent)?").r)
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        staleLayouts.exists(_.matches(f.getName)) &&
-          !f.getName.startsWith(s"${base}_v${LayoutVersion}_s${NumShards}_")
-      }
-      .foreach(graft.Fs.deleteRecursively)
-    def dir(variant: String): String = new java.io.File(
-      root, s"${base}_v${LayoutVersion}_s${NumShards}_${variant}_framed")
-      .getAbsolutePath
-    val baseDir = dir("c1")
-    KinesisLikeLog.writeFromEvents(s, d, baseDir, numShards = NumShards)
-    if (copies == 1 && !sentinel) baseDir
-    else {
-      // Variants derive from the base by line transformation — the Spark
-      // read of events.parquet happens once per sf dir, not per variant.
-      val target = dir(s"c$copies${if (sentinel) "_sent" else ""}")
-      KinesisLikeLog.derive(baseDir, target, copies, sentinel)
-      target
-    }
+    val base =
+      KinesisLikeLog.writeFromEvents(s, d, logPath(d), numShards = NumShards)
+    if (copies == 1 && !sentinel) base
+    else
+      KinesisLikeLog.derive(base, logPath(d, copies, sentinel), copies, sentinel)
   }
 
   /** q130's log: the sentinel log re-encoded at one record per event —
     * the same records as q28's, in another byte layout. */
   private def oneRecordPerEventLog(s: SparkSession, d: String): String = {
     val sent = ensureLog(s, d, copies = 1, sentinel = true)
-    val dir  = sent + "_rpe1"
-    KinesisLikeLog.derive(sent, dir, copies = 1, sentinel = false,
+    KinesisLikeLog.derive(sent, sent + "_rpe1", copies = 1, sentinel = false,
       recordsPerEvent = 1)
-    dir
+  }
+
+  /** q127's split pair (open prefix + continuation tail fragments of the
+    * base log, cut at half the max event id — a bounded driver-side
+    * scalar, q125's posture), derived ONCE per (corpus, cut); the
+    * per-run mutable log is then assembled by pure byte copy/append, so
+    * the encode cost no longer bills per run (r18 verdict item 4). */
+  private def splitPair(s: SparkSession, d: String): String = {
+    val base = ensureLog(s, d, copies = 1)
+    val k    = maxEventId(s, d) / 2
+    KinesisLikeLog.deriveSplitPair(base, base + s"_split_$k", cut = k)
   }
 
   /** Build every log variant the streaming queries replay (base,
@@ -205,16 +191,11 @@ object Streaming {
     * of time — Bench calls this during warmup so the one-time fixture
     * construction (a driver-side scan of the events table) isn't
     * attributed to whichever streaming query runs first. Idempotent:
-    * each variant is guarded by its ready marker. */
+    * each variant is a [[Fixtures.once]] build. */
   def prewarmLogs(s: SparkSession, d: String): Unit = {
-    val base = ensureLog(s, d, copies = 1)
     ensureLog(s, d, copies = 2)
     oneRecordPerEventLog(s, d)
-    // q127's split pair: the one derived variant whose CONSUMPTION is
-    // per-run (the log mutates mid-query) — prewarm the cached pair so
-    // per-run work is byte copy/append only.
-    val k = maxEventId(s, d) / 2
-    KinesisLikeLog.deriveSplitPair(base, base + s"_split_$k", cut = k)
+    splitPair(s, d)
   }
 
   /** State-store partition count for every streaming proof, sized to
@@ -465,16 +446,18 @@ object Streaming {
     * once in one job and cached: the sizing inputs of the streaming pack
     * (join-family slabs, restart seqSteps) and the seam cut of the
     * position and error-retry proofs repeat the same scalars per query
-    * otherwise — a Spark job at query-BUILD time apiece. They are
-    * fixture properties of the immutable sf dir, so a plain concurrent
-    * map is safe. */
+    * otherwise — a Spark job at query-BUILD time apiece. Keyed like a
+    * store fixture (dir and [[Fixtures.fingerprint]]), so an sf dir
+    * regenerated in place is measured again. */
   private val eventStatsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
   private def eventStats(s: SparkSession, d: String): (Long, Long) =
-    eventStatsCache.computeIfAbsent(new java.io.File(d).getAbsolutePath, _ => {
-      val r = T.events(s, d).agg(count(lit(1)), max(col("event_id"))).head()
-      (r.getLong(0), r.getLong(1))
-    })
+    eventStatsCache.computeIfAbsent(
+      new java.io.File(d).getAbsolutePath + ":" + Fixtures.fingerprint(d),
+      _ => {
+        val r = T.events(s, d).agg(count(lit(1)), max(col("event_id"))).head()
+        (r.getLong(0), r.getLong(1))
+      })
   private def eventCount(s: SparkSession, d: String): Long = eventStats(s, d)._1
   private def maxEventId(s: SparkSession, d: String): Long = eventStats(s, d)._2
 
@@ -1926,15 +1909,7 @@ object Streaming {
   private val q127 = Q(
     "q127_stream_latest_gap",
     (s, d) => {
-      val base = ensureLog(s, d, copies = 1)
-      // The cut: a bounded driver-side scalar (q125's posture).
-      val k = maxEventId(s, d) / 2
-      // The split pair (open prefix + continuation tail fragments) is
-      // derived ONCE per (corpus, cut) and ready-marker cached; the
-      // per-run mutable log is then assembled by pure byte copy/append
-      // — the encode cost no longer bills per run (r18 verdict item 4).
-      val pair = base + s"_split_$k"
-      KinesisLikeLog.deriveSplitPair(base, pair, cut = k)
+      val pair  = splitPair(s, d)
       val log   = scratchDir("graft_latest_log")
       val ckpt  = scratchDir("graft_ckpt_latest")
       val store = scratchDir("graft_store_latest")
@@ -1993,14 +1968,12 @@ object Streaming {
     // attempt of query start 1 raises, so the failure reaches the
     // PRODUCER exactly once regardless of spark.task.maxFailures.
     private val times = taskMaxFailures(s)
-    val log: String = new java.io.File(
-      new java.io.File(base).getParent,
-      // The budget is baked into the planted line, so it versions the
-      // ready-marker-cached dir: a session with a different task
-      // budget derives its own fixture instead of reusing a stale one.
-      new java.io.File(base).getName + s"_err_t$times").getAbsolutePath
-    KinesisLikeLog.deriveWithError(base, log,
-      afterSeq = maxEventId(s, d) / 2, spec = "transport_closed", times = times)
+    // The budget is baked into the planted line, so it versions the
+    // ready-marker-cached dir: a session with a different task budget
+    // derives its own fixture instead of reusing a stale one.
+    val log: String = KinesisLikeLog.deriveWithError(
+      base, base + s"_err_t$times", afterSeq = maxEventId(s, d) / 2,
+      spec = "transport_closed", times = times)
     private val ckpt = scratchDir(s"graft_ckpt_$tag")
     val sink = new graft.streaming.IdempotentSink(scratchDir(s"graft_store_$tag"))
     // Fresh injection budget per invocation: the fixture dir persists
@@ -2222,9 +2195,8 @@ object Streaming {
     "q132_stream_corrupt_frame",
     (s, d) => {
       val base = ensureLog(s, d, copies = 1)
-      val bad  = base + "_corrupt"
-      graft.sources.kinesislike.EventStreamFraming
-        .deriveCorrupted(base, bad, messageIndex = 2)
+      val bad  = graft.sources.kinesislike.EventStreamFraming
+        .deriveCorrupted(base, base + "_corrupt", messageIndex = 2)
       val failure =
         try {
           s.read.format("kinesislike").option("path", bad).load().count()
@@ -2265,6 +2237,8 @@ object Streaming {
       GROUP BY event_type
       ORDER BY event_type"""),
   )
+
+  val fixtures: Seq[Prewarm] = Seq(Prewarm("logs", prewarmLogs))
 
   val all: Seq[Q] = Seq(
     q28, q29, q30, q36, q37, q38, q39, q45, q46, q56, q61, q66, q73, q80,

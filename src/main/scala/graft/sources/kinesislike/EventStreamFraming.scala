@@ -510,8 +510,8 @@ object EventStreamFraming {
     * EventStreamFramingSpec at the unit tier). Idempotent via the ready
     * marker. */
   def deriveCorrupted(
-      baseDir: String, targetDir: String, messageIndex: Int): Unit =
-    KinesisLikeLog.buildOnce(targetDir) {
+      baseDir: String, targetDir: String, messageIndex: Int): String =
+    graft.Fixtures.once(targetDir) {
       KinesisLikeLog.shardFiles(baseDir).zipWithIndex.foreach {
         case (f, idx) =>
           val bytes = Files.readAllBytes(f.toPath)

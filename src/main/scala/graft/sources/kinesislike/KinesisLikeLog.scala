@@ -35,7 +35,6 @@ import org.apache.spark.sql.functions._
 object KinesisLikeLog {
 
   val ClosedMarker = "#CLOSED"
-  val ReadyMarker  = "_LOG_READY"
 
   /** Extension of every shard file: AWS event-stream frames
     * ([[EventStreamFraming]]), the log's only on-disk encoding. */
@@ -219,35 +218,44 @@ object KinesisLikeLog {
   def shardFile(dir: String, shardId: String): File =
     new File(dir, shardId + FramedExtension)
 
-  /** Driver-side shard metadata, cached by (mtime, length) so an
-    * unchanged shard file costs O(1) per microbatch — the analog of
-    * Kafka's O(1) listOffsets metadata — instead of a full driver-side
-    * rescan per latestOffset() call. The log is append-only, so any
-    * append changes the length and invalidates the entry. */
-  private final case class ShardMeta(
-      mtime: Long, length: Long, maxSeq: Long, closed: Boolean)
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardMeta]()
-
-  /** Number of full metadata scans performed (test observability: an
+  /** A value derived from one shard file, cached by the file's (mtime,
+    * length) so an unchanged shard costs three file-stat calls per
+    * lookup — the analog of Kafka's O(1) listOffsets metadata — instead
+    * of a full driver-side rescan per latestOffset() call. The log is
+    * append-only, so any append changes the length and invalidates the
+    * entry; `scans` counts the rescans (test observability: an
     * unchanged file must not re-scan). */
+  private final case class Stamped[V](mtime: Long, length: Long, value: V)
+  private final class StampCache[V](
+      scans: java.util.concurrent.atomic.AtomicLong, missing: V)(
+      scan: File => V) {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[String, Stamped[V]]()
+    def apply(f: File): V = {
+      if (!f.exists()) return missing
+      val key    = f.getAbsolutePath
+      val mtime  = f.lastModified()
+      val length = f.length()
+      val cached = entries.get(key)
+      if (cached != null && cached.mtime == mtime && cached.length == length)
+        cached.value
+      else {
+        scans.incrementAndGet()
+        val fresh = scan(f)
+        entries.put(key, Stamped(mtime, length, fresh))
+        fresh
+      }
+    }
+    def invalidate(prefix: String): Unit =
+      entries.keySet().removeIf(k => k.startsWith(prefix))
+  }
+
+  /** Number of full metadata scans performed. */
   private[sources] val metaScans = new java.util.concurrent.atomic.AtomicLong
 
-  private def shardMeta(f: File): ShardMeta = {
-    if (!f.exists()) return ShardMeta(0L, 0L, -1L, closed = false)
-    val key    = f.getAbsolutePath
-    val mtime  = f.lastModified()
-    val length = f.length()
-    val cached = metaCache.get(key)
-    if (cached != null && cached.mtime == mtime && cached.length == length) cached
-    else {
-      metaScans.incrementAndGet()
-      val (mx, cl) = metaScan(f)
-      val fresh = ShardMeta(mtime, length, mx, cl)
-      metaCache.put(key, fresh)
-      fresh
-    }
-  }
+  /** Driver-side (maxSeq, closed) per shard file. */
+  private val shardMeta =
+    new StampCache[(Long, Boolean)](metaScans, (-1L, false))(metaScan)
 
   /** The (maxSeq, closed) fold itself — metadata-ONLY decode, because
     * this scan runs on the DRIVER once per stream start per shard file
@@ -284,8 +292,8 @@ object KinesisLikeLog {
     * re-scans once. */
   def invalidateMeta(logDir: String): Unit = {
     val prefix = new File(logDir).getAbsolutePath + File.separator
-    metaCache.keySet().removeIf(k => k.startsWith(prefix))
-    tsIndexCache.keySet().removeIf(k => k.startsWith(prefix))
+    shardMeta.invalidate(prefix)
+    tsIndex.invalidate(prefix)
   }
 
   /** Warm [[shardMeta]] for every shard of `logDir` with the per-shard
@@ -298,6 +306,9 @@ object KinesisLikeLog {
     import scala.jdk.CollectionConverters._
     shardFiles(logDir).asJava.parallelStream().forEach(f => { maxSeq(f); () })
   }
+
+  /** Number of full at_timestamp index builds. */
+  private[sources] val tsIndexScans = new java.util.concurrent.atomic.AtomicLong
 
   /** Per-shard `at_timestamp` index, cached by (mtime, length) exactly
     * like [[shardMeta]], so repeated timestamp starts cost an O(log n)
@@ -312,48 +323,29 @@ object KinesisLikeLog {
     * smaller sequence — the envelope answers min{seq : arrival ≥ T}
     * exactly, for MONOTONE and non-monotone arrivals alike. Envelope
     * entries are ascending in both coordinates, so the lookup is a
-    * binary search on arrivals. */
-  private final case class TsIndex(
-      mtime: Long, length: Long, arrivals: Array[Long], seqs: Array[Long])
-  private val tsIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TsIndex]()
-
-  /** Number of full at_timestamp index builds (test observability: a
-    * second timestamp start on an unchanged file must not re-scan). */
-  private[sources] val tsIndexScans = new java.util.concurrent.atomic.AtomicLong
-
-  private def tsIndex(f: File): TsIndex = {
-    if (!f.exists()) return TsIndex(0L, 0L, Array.empty, Array.empty)
-    val key    = f.getAbsolutePath
-    val mtime  = f.lastModified()
-    val length = f.length()
-    val cached = tsIndexCache.get(key)
-    if (cached != null && cached.mtime == mtime && cached.length == length) cached
-    else {
-      tsIndexScans.incrementAndGet()
-      val arrivals = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val seqs     = scala.collection.mutable.ArrayBuffer.empty[Long]
-      foldLines(f, Long.MinValue) { (runMax, l) =>
-        parseLine(l) match {
-          case Some(r) if r.arrivalMicros > runMax =>
-            arrivals += r.arrivalMicros
-            seqs += r.seq
-            r.arrivalMicros
-          case _ => runMax
-        }
+    * binary search on arrivals. Yields (arrivals, seqs). */
+  private val tsIndex = new StampCache[(Array[Long], Array[Long])](
+      tsIndexScans, (Array.empty, Array.empty))({ f =>
+    val arrivals = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val seqs     = scala.collection.mutable.ArrayBuffer.empty[Long]
+    foldLines(f, Long.MinValue) { (runMax, l) =>
+      parseLine(l) match {
+        case Some(r) if r.arrivalMicros > runMax =>
+          arrivals += r.arrivalMicros
+          seqs += r.seq
+          r.arrivalMicros
+        case _ => runMax
       }
-      val fresh = TsIndex(mtime, length, arrivals.toArray, seqs.toArray)
-      tsIndexCache.put(key, fresh)
-      fresh
     }
-  }
+    (arrivals.toArray, seqs.toArray)
+  })
 
   /** Highest sequence number present; -1 for an empty shard. */
-  def maxSeq(f: File): Long = shardMeta(f).maxSeq
+  def maxSeq(f: File): Long = shardMeta(f)._1
 
   /** Shard-closed ⇔ the nil-continuation marker has been written
     * (subscribe_to_shard.ex:356-363). */
-  def isClosed(f: File): Boolean = shardMeta(f).closed
+  def isClosed(f: File): Boolean = shardMeta(f)._2
 
   /** Resolve a starting position to the "after" cursor the offset model
     * uses: deliver every record with seq > cursor. Mirrors the wire
@@ -371,28 +363,15 @@ object KinesisLikeLog {
       val micros = ts.getEpochSecond * 1000000L + ts.getNano / 1000L
       // First envelope entry with arrival ≥ the instant (see [[tsIndex]]);
       // past-the-end behaves like latest.
-      val idx = tsIndex(f)
-      var lo  = 0
-      var hi  = idx.arrivals.length
+      val (arrivals, seqs) = tsIndex(f)
+      var lo = 0
+      var hi = arrivals.length
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (idx.arrivals(mid) >= micros) hi = mid else lo = mid + 1
+        if (arrivals(mid) >= micros) hi = mid else lo = mid + 1
       }
-      if (lo == idx.arrivals.length) maxSeq(f) else idx.seqs(lo) - 1
+      if (lo == arrivals.length) maxSeq(f) else seqs(lo) - 1
   }
-
-  /** Run `build` into `dir` once: a directory holding the ready marker
-    * is already built and is left alone; otherwise the directory is
-    * created, built, and then marked ready. Every fixture derivation
-    * goes through here, serialized on this object. */
-  private[kinesislike] def buildOnce(dir: String)(build: => Unit): Unit =
-    synchronized {
-      val ready = Paths.get(dir, ReadyMarker)
-      if (Files.exists(ready)) return
-      Files.createDirectories(Paths.get(dir))
-      build
-      Files.createFile(ready)
-    }
 
   /** Build a shard log directory from the driver-generated events table —
     * the test-fixture generator standing in for the producer side of
@@ -408,7 +387,7 @@ object KinesisLikeLog {
       sfDir: String,
       logDir: String,
       numShards: Int = 4,
-  ): Unit = buildOnce(logDir) {
+  ): String = graft.Fixtures.once(logDir) {
     val ev = graft.Tables
       .events(spark, sfDir)
       .select(
@@ -484,54 +463,42 @@ object KinesisLikeLog {
     * tail bytes. The ENCODE cost — at sf1 the dominant cost of the q127
     * proof (r18 verdict: 20.3 s, all derivation) — is paid once per
     * corpus snapshot instead of twice per run. */
-  def deriveSplitPair(baseDir: String, pairDir: String, cut: Long): Unit =
-    buildOnce(pairDir) {
+  def deriveSplitPair(baseDir: String, pairDir: String, cut: Long): String =
+    graft.Fixtures.once(pairDir) {
       Files.createDirectories(Paths.get(pairDir, "split"))
       Files.createDirectories(Paths.get(pairDir, "tail"))
       shardFiles(baseDir).foreach { f =>
-        val w = openLineSink(new File(new File(pairDir, "split"), f.getName))
-        try foldLines(f, ()) { (_, l) =>
-          parseLine(l).foreach(r => if (r.seq <= cut) w.writeLine(l))
-        } finally w.close()
+        val w = openLineSink(new File(pairDir, s"split/${f.getName}"))
         val t = openLineSink(
-          new File(new File(pairDir, "tail"), f.getName), continuation = true)
+          new File(pairDir, s"tail/${f.getName}"), continuation = true)
         try {
           foldLines(f, ()) { (_, l) =>
-            parseLine(l).foreach(r => if (r.seq > cut) t.writeLine(l))
+            parseLine(l).foreach(r => (if (r.seq <= cut) w else t).writeLine(l))
           }
           t.writeLine(ClosedMarker)
-        } finally t.close()
+        } finally { w.close(); t.close() }
       }
     }
 
   /** Copy a [[deriveSplitPair]] prefix into a fresh mutable target —
     * pure byte copy. */
-  def materializeSplit(pairDir: String, targetDir: String): Unit =
-    synchronized {
-      Files.createDirectories(Paths.get(targetDir))
-      Option(new File(pairDir, "split").listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("shard-"))
-        .foreach { f =>
-          Files.copy(f.toPath, Paths.get(targetDir, f.getName),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
+  def materializeSplit(pairDir: String, targetDir: String): Unit = {
+    Files.createDirectories(Paths.get(targetDir))
+    shardFiles(s"$pairDir/split").foreach { f =>
+      Files.copy(f.toPath, Paths.get(targetDir, f.getName),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+  }
 
   /** Append a [[deriveSplitPair]] tail (suffix records + closed
     * markers) onto a [[materializeSplit]]-built target — pure byte
     * append. */
   def appendCachedTail(pairDir: String, targetDir: String): Unit =
-    synchronized {
-      Option(new File(pairDir, "tail").listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("shard-"))
-        .foreach { f =>
-          Files.write(
-            Paths.get(targetDir, f.getName), Files.readAllBytes(f.toPath),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        }
+    shardFiles(s"$pairDir/tail").foreach { f =>
+      Files.write(
+        Paths.get(targetDir, f.getName), Files.readAllBytes(f.toPath),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
     }
 
   /** Derive a variant carrying an IN-STREAM exception record: copies the
@@ -551,7 +518,7 @@ object KinesisLikeLog {
       afterSeq: Long,
       spec: String,
       times: Int = 1,
-  ): Unit = buildOnce(targetDir) {
+  ): String = graft.Fixtures.once(targetDir) {
     var injected = false
     shardFiles(baseDir).zipWithIndex.foreach { case (f, idx) =>
       val w = openLineSink(new File(targetDir, f.getName))
@@ -592,7 +559,7 @@ object KinesisLikeLog {
       copies: Int,
       sentinel: Boolean,
       recordsPerEvent: Int = EventStreamFraming.DefaultRecordsPerEvent,
-  ): Unit = buildOnce(targetDir) {
+  ): String = graft.Fixtures.once(targetDir) {
     var lastSeq    = -1L
     var lastMicros = 0L
     // Shard 0 goes last, so the sentinel written at its end follows the

@@ -90,21 +90,33 @@ class IncrementalDedupSpec extends SparkSpec {
     "can never serve a stale pair/band table") {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_fp_test").toFile
+    // Every store path derived from the sf dir, by fixture.
+    def paths(d: String): Map[String, String] = Map(
+      "chunk pairs"   -> Dedup.chunkPairsPath(d),
+      "shard log"     -> Streaming.logPath(d),
+      "stage frame"   -> Pipeline.stageFramePath(d),
+      "clustered"     -> Relational.clusteredEventsPath(d),
+      "z-order"       -> Relational.zOrderedEventsPath(d),
+      "format copies" -> Relational.formatCopiesPath(d))
     try {
-      val docs = new java.io.File(tmp, "documents.parquet")
-      java.nio.file.Files.write(docs.toPath, "v1".getBytes)
-      val before = Dedup.chunkPairsPath(tmp.getAbsolutePath)
-      // Regenerate in place: same path on disk, different bytes/mtime.
-      java.nio.file.Files.write(docs.toPath, "v2-longer".getBytes)
-      val after = Dedup.chunkPairsPath(tmp.getAbsolutePath)
-      assert(before !== after,
-        "fixture path ignored a source regeneration in place")
+      for (table <- Seq("documents", "events")) {
+        val f = new java.io.File(tmp, s"$table.parquet")
+        java.nio.file.Files.write(f.toPath, "v1".getBytes)
+        val before = paths(tmp.getAbsolutePath)
+        // Regenerate in place: same path on disk, different bytes/mtime.
+        java.nio.file.Files.write(f.toPath, "v2-longer".getBytes)
+        val after = paths(tmp.getAbsolutePath)
+        for ((fixture, p) <- before)
+          assert(p !== after(fixture),
+            s"$fixture path ignored a $table regeneration in place")
+      }
       // Distinct corpora sharing the directory basename must not share
       // a fixture path with this one either.
       assert(Dedup.corpusBandIndexPath(tmp.getAbsolutePath) !==
         Dedup.corpusBandIndexPath(sf))
     } finally {
       new java.io.File(tmp, "documents.parquet").delete()
+      new java.io.File(tmp, "events.parquet").delete()
       tmp.delete()
     }
   }

@@ -166,5 +166,15 @@ class CheckpointCensusSpec extends AnyFunSuite {
       .filter(_.startsWith("graft/operators/"))
     assert(flips.isEmpty,
       s"flip session confs through GraftSession.withConf, not by hand: $flips")
+    // One derived-fixture store: its roots and its ready marker are
+    // spelled only in Fixtures.scala, and Bench builds fixtures only
+    // through the packs' declared prewarm lists (SparkEntry.fixtures).
+    for (token <- Seq("\"_SUCCESS\"", "graft_warehouse", "graft_kinesislike"))
+      assert(sites(token).keySet == Set("graft/Fixtures.scala"),
+        s"$token outside the fixture store: ${sites(token)}")
+    val benchPrewarms = code("graft/Bench.scala")
+      .filter(l => "operators\\.[A-Za-z]+\\.prewarm".r.findFirstIn(l).isDefined)
+    assert(benchPrewarms.isEmpty,
+      s"declare a pack Prewarm, not a Bench call: $benchPrewarms")
   }
 }

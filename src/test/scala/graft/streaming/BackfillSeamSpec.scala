@@ -45,17 +45,7 @@ class BackfillSeamSpec extends SparkSpec {
     // Adjacent-variant identity: at_sequence_number:(K+1) delivers the
     // same records as after_sequence_number:K (modulo the sentinel,
     // which this count-only check includes identically in both).
-    val logRoot = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_kinesislike")
-    val log = logRoot.listFiles()
-      .filter(f => f.getName.startsWith("sf0.001_v")
-        && f.getName.endsWith("_c1_sent_framed"))
-      // Numeric version max, not lexicographic: "_v10_" < "_v2_" as a
-      // string, so a raw name compare would pick a stale layout dir if
-      // one survived ensureLog's sweep at LayoutVersion 10+.
-      .maxBy(f => "_v(\\d+)_".r.findFirstMatchIn(f.getName)
-        .map(_.group(1).toInt).getOrElse(0))
-      .getAbsolutePath
+    val log = graft.operators.Streaming.logPath(sf, sentinel = true)
     def countFrom(pos: String): Long = {
       val name = s"seam_probe_${pos.replaceAll("[^a-z0-9]", "_")}"
       val q = spark.readStream
