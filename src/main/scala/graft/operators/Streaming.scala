@@ -153,7 +153,7 @@ object Streaming {
 
   /** Build (once) and return the [[logPath]] log. The base (`copies` =
     * 1, no sentinel) is written from the events table; every other
-    * variant derives from it by line transformation, so the Spark read
+    * variant derives from it by event transformation, so the Spark read
     * of events.parquet happens once per sf dir, not per variant. */
   private def ensureLog(
       s: SparkSession,

@@ -219,31 +219,22 @@ object EventStreamFraming {
     encodeEvent(SubscribeEventType, mapper.writeValueAsBytes(root))
   }
 
-  /** The shard-closed control event: a null ContinuationSequenceNumber
-    * with no records — the nil-continuation signal of
-    * subscribe_to_shard.ex:356-363. */
-  def closedEventMessage: Array[Byte] =
-    encodeEvent(SubscribeEventType,
-      """{"ContinuationSequenceNumber":null,"Records":[]}""".getBytes(UTF_8))
-
-  /** Translate one log line to its wire message — the single-record
-    * convenience of [[encodeRecordsEvent]] (the framed SINK groups
-    * records into multi-record events; this function is the unit the
-    * bijection property pins): a record line becomes a one-record
-    * envelope event, the closed marker the null-continuation control
-    * event, an `#ERROR` marker a typed exception message. */
-  def encodeLine(line: String): Array[Byte] =
-    if (line == KinesisLikeLog.ClosedMarker) closedEventMessage
-    else if (line.startsWith(KinesisLikeLog.ErrorMarker)) {
-      val parts = line.split('\t')
-      val spec  = parts.lift(1).getOrElse("transport_closed")
-      val times = parts.lift(2).getOrElse("1")
+  /** Encode one shard event as its wire message — the inverse of
+    * [[decodeToEvent]]: a records event becomes its envelope event
+    * ([[encodeRecordsEvent]]; the continuation is always the last
+    * record's sequence number), the closed signal the null-continuation
+    * control event with no records (subscribe_to_shard.ex:356-363), an
+    * in-stream exception a typed exception message carrying its raise
+    * budget. */
+  def encodeShardEvent(e: KinesisLikeLog.ShardEvent): Array[Byte] = e match {
+    case KinesisLikeLog.RecordsEvent(_, recs) => encodeRecordsEvent(recs)
+    case KinesisLikeLog.Closed =>
+      encodeEvent(SubscribeEventType,
+        """{"ContinuationSequenceNumber":null,"Records":[]}""".getBytes(UTF_8))
+    case KinesisLikeLog.ErrorEvent(spec, times) =>
       encodeException(spec,
         s"""{"message":"injected","times":$times}""".getBytes(UTF_8))
-    } else
-      encodeRecordsEvent(Seq(KinesisLikeLog.parseLine(line).getOrElse(
-        throw new IllegalArgumentException(
-          s"not a record line: ${line.take(80)}"))))
+  }
 
   /** Decode one complete message: verify BOTH CRCs, parse the headers,
     * return (headers, payload). `msg` includes the prelude — exactly what
@@ -348,7 +339,7 @@ object EventStreamFraming {
   private val TimesRe = """"times"\s*:\s*(\d+)""".r
 
   /** Metadata-only demux of one decoded message — what the driver's
-    * per-stream-start shard scan ([[KinesisLikeLog.maxSeq]]/`isClosed`)
+    * per-stream-start shard scan ([[KinesisLikeLog.shardState]])
     * needs and nothing more: the continuation sequence number (or the
     * null-continuation closed signal). [[decodeToEvent]] builds every
     * Record (Jackson tree, base64 strings, arrival decimals) just so the
@@ -392,12 +383,6 @@ object EventStreamFraming {
         } finally p.close()
       },
       None)
-
-  /** [[decodeToEvent]] rendered to its line view
-    * ([[KinesisLikeLog.eventLines]]). */
-  def decodeToLines(
-      headers: Map[String, String], payload: Array[Byte]): Seq[String] =
-    decodeToEvent(headers, payload).toSeq.flatMap(KinesisLikeLog.eventLines)
 
   /** Incremental frame reassembler — the `{buffer, msg_bytes_left}`
     * state machine of subscribe_to_shard.ex:277-327: feed arbitrary-size
@@ -486,19 +471,15 @@ object EventStreamFraming {
     * (S12), and yields events in wire order (initial-response skipped).
     * This is the reader's input — cursor logic operates per EVENT,
     * mirroring handle_event's one resume-position advance per message. */
-  final class FramedEventSource(f: File) extends KinesisLikeLog.EventSource {
+  final class FramedEventSource(f: File) {
     private val messages = new MessageReader(f)
+    private val events   = messages.flatMap { case (h, p) => decodeToEvent(h, p) }
 
-    override def readEvent(): KinesisLikeLog.ShardEvent = {
-      while (messages.hasNext) {
-        val (headers, payload) = messages.next()
-        val event = decodeToEvent(headers, payload)
-        if (event.isDefined) return event.get
-      }
-      null
-    }
+    /** Next event, or null at end of shard. */
+    def readEvent(): KinesisLikeLog.ShardEvent =
+      if (events.hasNext) events.next() else null
 
-    override def close(): Unit = messages.close()
+    def close(): Unit = messages.close()
   }
 
   /** Derive a CORRUPTED twin of a framed log directory: every shard is

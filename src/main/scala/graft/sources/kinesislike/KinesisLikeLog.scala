@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * files — the semantic stand-in for a Kinesis shard's ordered record
   * stream (SURVEY.md §7 Slice 2). Each `shard-NNNNN.elog` file carries
   * AWS event-stream frames holding the reference's Records JSON envelope
-  * ([[EventStreamFraming]]); there is no other on-disk encoding.
+  * ([[EventStreamFraming]]); there is no other on-disk encoding, and
+  * every reader and derivation works in its decoded [[ShardEvent]]s.
   *
-  * The tab-separated LINE view of a framed shard (one record per line —
-  * what [[openLines]] yields and [[openLineSink]] takes) is what the
-  * driver-side metadata folds and fixture derivations work in:
+  * Hand-made shards (tests, the ingest benchmark) are written as text
+  * lines through [[openLineSink]], whose one parser is [[parseLine]]:
   *
   *   <sequenceNumber>\t<arrivalMicros>\t<partitionKey>\t<base64 data>
   *
@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * - `data` is base64, mirroring the base64 "Data" field of a Kinesis
   *   record that decode_records un-wraps (subscribe_to_shard.ex:365-366);
   * - a literal `#CLOSED` line is the nil-continuation shard-closed
-  *   marker (subscribe_to_shard.ex:356-363).
+  *   marker (subscribe_to_shard.ex:356-363);
+  * - `#ERROR\t<class>\t<times>` is an in-stream exception ([[ErrorEvent]]).
   *
-  * Duplicate lines (same sequence number twice) are legal — Kinesis is
+  * Duplicate records (same sequence number twice) are legal — Kinesis is
   * at-least-once across resubscribes, and the streaming dedup operator
   * exists precisely for that.
   */
@@ -36,9 +37,23 @@ object KinesisLikeLog {
 
   val ClosedMarker = "#CLOSED"
 
+  /** In-stream exception line (S10 event/exception demux):
+    * `#ERROR\t<class>\t<times>` makes the reader raise the corresponding
+    * typed exception the first `times` times it is reached — the
+    * stand-in for a SubscribeToShardEvent stream that carries an
+    * exception frame instead of records (subscribe_to_shard.ex:329-341). */
+  val ErrorMarker = "#ERROR"
+
   /** Extension of every shard file: AWS event-stream frames
     * ([[EventStreamFraming]]), the log's only on-disk encoding. */
   val FramedExtension = ".elog"
+
+  final case class Record(
+      seq: Long,
+      arrivalMicros: Long,
+      partitionKey: String,
+      dataB64: String,
+  )
 
   /** One decoded stream EVENT — the unit handle_event advances the
     * resume position for (subscribe_to_shard.ex:343-363): a
@@ -51,70 +66,69 @@ object KinesisLikeLog {
   case object Closed extends ShardEvent
   final case class ErrorEvent(spec: String, times: Int) extends ShardEvent
 
-  /** A sequential EVENT reader over one shard file — what the executor
-    * reader consumes, so cursor logic runs at the reference's per-event
-    * granularity. */
-  trait EventSource {
-    /** Next event, or null at end of shard. */
-    def readEvent(): ShardEvent
-    def close(): Unit
-  }
-
-  /** A sequential reader over one shard file's line view. */
-  trait LineSource {
-    /** Next line, or null at end of shard. */
-    def readLine(): String
-    def close(): Unit
-  }
-
-  /** The line view of one event — the one renderer from events to lines:
-    * a records event flattens to one line per record (grouping is
-    * invisible), the closed signal to [[ClosedMarker]], an in-stream
-    * exception to its `#ERROR` line. */
-  private[kinesislike] def eventLines(e: ShardEvent): Seq[String] = e match {
-    case Closed                  => Seq(ClosedMarker)
-    case ErrorEvent(spec, times) => Seq(s"$ErrorMarker\t$spec\t$times")
-    case RecordsEvent(_, recs) =>
-      recs.map(r =>
-        s"${r.seq}\t${r.arrivalMicros}\t${r.partitionKey}\t${r.dataB64}")
-  }
-
-  /** [[EventSource]] rendered back to lines — the flatten every
-    * driver-side metadata fold and fixture derivation consumes (those
-    * paths are per-record regardless of how the wire groups them). */
-  private final class EventLineSource(in: EventSource) extends LineSource {
-    private val queue = scala.collection.mutable.Queue.empty[String]
-    override def readLine(): String = {
-      while (queue.isEmpty) {
-        val e = in.readEvent()
-        if (e == null) return null
-        queue ++= eventLines(e)
-      }
-      queue.dequeue()
-    }
-    override def close(): Unit = in.close()
-  }
-
-  /** Open a shard file as EVENTS — what the executor reader uses
-    * (per-event cursor semantics, S12 envelope decode). */
-  def openEvents(f: File): EventSource =
+  /** Open a shard file as EVENTS, in wire order — what the executor
+    * reader and [[foreachEvent]] read (per-event cursor semantics, S12
+    * envelope decode). */
+  def openEvents(f: File): EventStreamFraming.FramedEventSource =
     new EventStreamFraming.FramedEventSource(f)
 
-  /** Open a shard file as LINES — the view every driver-side metadata
-    * fold and line-level fixture derivation reads. */
-  def openLines(f: File): LineSource = new EventLineSource(openEvents(f))
+  /** Visit every event of a shard file in wire order without
+    * materializing it — the one walk behind the at_timestamp index and
+    * every fixture derivation; a missing file has no events. */
+  private def foreachEvent(f: File)(op: ShardEvent => Unit): Unit =
+    if (f.exists()) {
+      val in = openEvents(f)
+      try Iterator.continually(in.readEvent()).takeWhile(_ != null).foreach(op)
+      finally in.close()
+    }
 
-  /** The writer dual of [[LineSource]]: one line in, event-stream frames
-    * out. Every fixture derivation (variants, splits, tails, fault
-    * plants) writes through it. */
-  trait LineSink {
-    def writeLine(l: String): Unit
-    def close(): Unit
+  /** [[foreachEvent]] over the records alone, in order. */
+  private def foreachRecord(f: File)(op: Record => Unit): Unit =
+    foreachEvent(f) {
+      case RecordsEvent(_, recs) => recs.foreach(op)
+      case _                     =>
+    }
+
+  /** The one grammar parser: a shard line (see the object header) to its
+    * event — a record line to a one-record [[RecordsEvent]]. Malformed
+    * lines fail here, naming the line: a record without four fields or
+    * with a non-numeric sequence number or arrival, and an `#ERROR`
+    * whose class [[KinesisLikeErrors.make]] rejects or whose budget is
+    * not a positive integer. A missing or empty `#ERROR` field takes its
+    * default (`transport_closed`, 1). */
+  def parseLine(line: String): ShardEvent = {
+    def bad(why: String): Nothing = throw new IllegalArgumentException(
+      s"kinesislike: $why in shard line '${line.take(120)}'")
+    // limit -1: a record with an EMPTY data field keeps its trailing
+    // tab-separated slot (the default split drops trailing empties).
+    val fields = line.split("\t", -1)
+    def field(i: Int, default: String) =
+      fields.lift(i).filter(_.nonEmpty).getOrElse(default)
+    def number(i: Int, name: String) =
+      fields(i).toLongOption.getOrElse(bad(s"non-numeric $name"))
+    fields(0) match {
+      case ClosedMarker if fields.length == 1 => Closed
+      case ErrorMarker if fields.length <= 3 =>
+        val spec = field(1, "transport_closed")
+        if (scala.util.Try(KinesisLikeErrors.make(spec)).isFailure)
+          bad(s"unknown error class '$spec'")
+        ErrorEvent(spec, field(2, "1").toIntOption.filter(_ > 0)
+          .getOrElse(bad("error budget is not a positive integer")))
+      case _ if fields.length != 4 => bad("a record needs 4 tab-separated fields")
+      case _ =>
+        val seq = number(0, "sequence number")
+        RecordsEvent(seq, Seq(
+          Record(seq, number(1, "arrival time"), fields(2), fields(3))))
+    }
   }
 
-  private final class FramedLineSink(
-      f: File, append: Boolean, recordsPerEvent: Int, continuation: Boolean)
-      extends LineSink {
+  /** The one shard writer: events in, event-stream frames out. Records
+    * are buffered into multi-record SubscribeToShardEvent messages of up
+    * to `recordsPerEvent` (the wire's Records-list cardinality — a
+    * [[RecordsEvent]]'s own grouping is not kept), and a control event
+    * flushes the buffer first, so message order equals write order. */
+  final class ShardSink private[KinesisLikeLog] (
+      f: File, append: Boolean, recordsPerEvent: Int, continuation: Boolean) {
     // A shard's wire stream opens with the initial-response message
     // (fake_kinesis.ex:22; skipped on decode per subscribe_to_shard
     // .ex:341). With append=false the open TRUNCATES, so the message is
@@ -128,75 +142,35 @@ object KinesisLikeLog {
       new java.io.FileOutputStream(f, append))
     if (!continuation && (!append || fresh))
       out.write(EventStreamFraming.initialResponseMessage)
-    // Records buffered into multi-record envelope events (the wire's
-    // Records-list cardinality); a control/error line flushes first so
-    // message order equals line order.
     private val buf = scala.collection.mutable.ArrayBuffer.empty[Record]
     private def flush(): Unit = if (buf.nonEmpty) {
       out.write(EventStreamFraming.encodeRecordsEvent(buf.toSeq))
       buf.clear()
     }
-    override def writeLine(l: String): Unit =
-      parseLine(l) match {
-        case Some(r) =>
-          buf += r
-          if (buf.size >= recordsPerEvent) flush()
-        case None =>
-          flush()
-          out.write(EventStreamFraming.encodeLine(l))
-      }
-    override def close(): Unit = { flush(); out.close() }
+    def write(r: Record): Unit = {
+      buf += r
+      if (buf.size >= recordsPerEvent) flush()
+    }
+    def write(e: ShardEvent): Unit = e match {
+      case RecordsEvent(_, recs) => recs.foreach(write)
+      case control =>
+        flush()
+        out.write(EventStreamFraming.encodeShardEvent(control))
+    }
+    /** Write one line of the shard grammar ([[parseLine]]). */
+    def writeLine(l: String): Unit = write(parseLine(l))
+    def close(): Unit = { flush(); out.close() }
   }
 
-  /** Open a shard file for writing as event-stream frames — the
-    * write-side twin of [[openLines]]. Records are grouped up to
-    * `recordsPerEvent` per SubscribeToShardEvent message (the wire's
-    * multi-record cardinality). */
+  /** Open a shard file for writing as event-stream frames ([[ShardSink]]).
+    * `continuation` writes a mid-stream fragment without the
+    * initial-response open. */
   def openLineSink(
       f: File,
       append: Boolean = false,
       recordsPerEvent: Int = EventStreamFraming.DefaultRecordsPerEvent,
       continuation: Boolean = false,
-  ): LineSink = new FramedLineSink(f, append, recordsPerEvent, continuation)
-
-  /** Fold over every line of a shard file's line view without
-    * materializing it; a missing file folds to `zero`. */
-  def foldLines[A](f: File, zero: A)(op: (A, String) => A): A = {
-    if (!f.exists()) return zero
-    val in = openLines(f)
-    try {
-      var acc  = zero
-      var line = in.readLine()
-      while (line != null) {
-        acc = op(acc, line)
-        line = in.readLine()
-      }
-      acc
-    } finally in.close()
-  }
-
-  /** In-stream exception record (S10 event/exception demux): a log line
-    * `#ERROR\t<class>` makes the reader raise the corresponding typed
-    * exception the first time it is reached — the stand-in for a
-    * SubscribeToShardEvent stream that carries an exception frame instead
-    * of records (subscribe_to_shard.ex:329-341). */
-  val ErrorMarker = "#ERROR"
-
-  final case class Record(
-      seq: Long,
-      arrivalMicros: Long,
-      partitionKey: String,
-      dataB64: String,
-  )
-
-  def parseLine(line: String): Option[Record] =
-    if (line.isEmpty || line.startsWith("#")) None
-    else {
-      // limit -1: a record with an EMPTY data field keeps its trailing
-      // tab-separated slot (the default split drops trailing empties).
-      val parts = line.split("\t", -1)
-      Some(Record(parts(0).toLong, parts(1).toLong, parts(2), parts(3)))
-    }
+  ): ShardSink = new ShardSink(f, append, recordsPerEvent, continuation)
 
   def shardFiles(dir: String): Seq[File] = {
     val d = new File(dir)
@@ -214,9 +188,6 @@ object KinesisLikeLog {
   }
 
   def shardId(f: File): String = f.getName.stripSuffix(FramedExtension)
-
-  def shardFile(dir: String, shardId: String): File =
-    new File(dir, shardId + FramedExtension)
 
   /** A value derived from one shard file, cached by the file's (mtime,
     * length) so an unchanged shard costs three file-stat calls per
@@ -328,24 +299,23 @@ object KinesisLikeLog {
       tsIndexScans, (Array.empty, Array.empty))({ f =>
     val arrivals = scala.collection.mutable.ArrayBuffer.empty[Long]
     val seqs     = scala.collection.mutable.ArrayBuffer.empty[Long]
-    foldLines(f, Long.MinValue) { (runMax, l) =>
-      parseLine(l) match {
-        case Some(r) if r.arrivalMicros > runMax =>
-          arrivals += r.arrivalMicros
-          seqs += r.seq
-          r.arrivalMicros
-        case _ => runMax
+    var runMax   = Long.MinValue
+    foreachRecord(f) { r =>
+      if (r.arrivalMicros > runMax) {
+        arrivals += r.arrivalMicros
+        seqs += r.seq
+        runMax = r.arrivalMicros
       }
     }
     (arrivals.toArray, seqs.toArray)
   })
 
-  /** Highest sequence number present; -1 for an empty shard. */
-  def maxSeq(f: File): Long = shardMeta(f)._1
+  /** (highest sequence number — -1 for an empty shard —, closed) from
+    * one cached metadata read; closed ⇔ the nil-continuation marker has
+    * been written (subscribe_to_shard.ex:356-363). */
+  def shardState(f: File): (Long, Boolean) = shardMeta(f)
 
-  /** Shard-closed ⇔ the nil-continuation marker has been written
-    * (subscribe_to_shard.ex:356-363). */
-  def isClosed(f: File): Boolean = shardMeta(f)._2
+  def maxSeq(f: File): Long = shardState(f)._1
 
   /** Resolve a starting position to the "after" cursor the offset model
     * uses: deliver every record with seq > cursor. Mirrors the wire
@@ -439,9 +409,9 @@ object KinesisLikeLog {
             s"before shard $shard's previous arrival " +
             s"${lastShardMicros(shard)} µs")
         lastShardMicros(shard) = micros
-        writers(shard).writeLine(s"$seq\t$micros\t$user\t$b64")
+        writers(shard).write(Record(seq, micros, user.toString, b64))
       }
-      writers.foreach(_.writeLine(ClosedMarker))
+      writers.foreach(_.write(Closed))
     } finally writers.foreach(_.close())
   }
 
@@ -472,10 +442,8 @@ object KinesisLikeLog {
         val t = openLineSink(
           new File(pairDir, s"tail/${f.getName}"), continuation = true)
         try {
-          foldLines(f, ()) { (_, l) =>
-            parseLine(l).foreach(r => (if (r.seq <= cut) w else t).writeLine(l))
-          }
-          t.writeLine(ClosedMarker)
+          foreachRecord(f)(r => (if (r.seq <= cut) w else t).write(r))
+          t.write(Closed)
         } finally { w.close(); t.close() }
       }
     }
@@ -502,15 +470,16 @@ object KinesisLikeLog {
     }
 
   /** Derive a variant carrying an IN-STREAM exception record: copies the
-    * base log, inserting `#ERROR\t<spec>` into shard 0 immediately before
-    * its first record with seq > afterSeq — "the event stream delivered
-    * an exception frame mid-subscription" (subscribe_to_shard.ex:329-341).
-    * The planted line is written as a real exception message
+    * base log, inserting an [[ErrorEvent]] into shard 0 immediately
+    * before its first record with seq > afterSeq — "the event stream
+    * delivered an exception frame mid-subscription"
+    * (subscribe_to_shard.ex:329-341). The planted event is written as a
+    * real exception message
     * (`:exception-type` header), so the S10 demux runs on it. The reader
     * raises the typed class ONCE per (dir, faultRunId) budget, so a
     * producer's retry from the committed cursor passes the marker and
     * drains the tail (producer.ex:159-168's partial-events-kept
-    * semantics, exercised end-to-end by q129). Pure line transformation,
+    * semantics, exercised end-to-end by q129). Pure event transformation,
     * idempotent via the ready marker. */
   def deriveWithError(
       baseDir: String,
@@ -523,13 +492,15 @@ object KinesisLikeLog {
     shardFiles(baseDir).zipWithIndex.foreach { case (f, idx) =>
       val w = openLineSink(new File(targetDir, f.getName))
       try {
-        foldLines(f, ()) { (_, l) =>
-          if (idx == 0 && !injected &&
-              parseLine(l).exists(_.seq > afterSeq)) {
-            w.writeLine(s"$ErrorMarker\t$spec\t$times")
-            injected = true
+        foreachEvent(f) {
+          case RecordsEvent(_, recs) => recs.foreach { r =>
+            if (idx == 0 && !injected && r.seq > afterSeq) {
+              w.write(ErrorEvent(spec, times))
+              injected = true
+            }
+            w.write(r)
           }
-          w.writeLine(l)
+          case control => w.write(control)
         }
       } finally w.close()
     }
@@ -540,7 +511,7 @@ object KinesisLikeLog {
         s"$baseDir — the exception record was never planted")
   }
 
-  /** Derive a log variant from an already-built base log by pure line
+  /** Derive a log variant from an already-built base log by pure event
     * transformation — no Spark job, so query packs that need several
     * variants of the same sf dir pay the Spark read once. Idempotent via
     * the ready marker.
@@ -569,12 +540,10 @@ object KinesisLikeLog {
       val w = openLineSink(new File(targetDir, f.getName),
         recordsPerEvent = recordsPerEvent)
       try {
-        foldLines(f, ()) { (_, l) =>
-          parseLine(l).foreach { r =>
-            (0 until copies).foreach(_ => w.writeLine(l))
-            lastSeq = math.max(lastSeq, r.seq)
-            lastMicros = math.max(lastMicros, r.arrivalMicros)
-          }
+        foreachRecord(f) { r =>
+          (0 until copies).foreach(_ => w.write(r))
+          lastSeq = math.max(lastSeq, r.seq)
+          lastMicros = math.max(lastMicros, r.arrivalMicros)
         }
         if (sentinel && first.contains(f)) {
           val us = lastMicros + 30L * 24 * 3600 * 1000000L
@@ -585,9 +554,9 @@ object KinesisLikeLog {
               """"event_type":"sentinel","value":0.0,"props":"{}"}"""
           val b64 = java.util.Base64.getEncoder
             .encodeToString(payload.getBytes(UTF_8))
-          w.writeLine(s"${lastSeq + 1}\t$us\t-1\t$b64")
+          w.write(Record(lastSeq + 1, us, "-1", b64))
         }
-        w.writeLine(ClosedMarker)
+        w.write(Closed)
       } finally w.close()
     }
   }

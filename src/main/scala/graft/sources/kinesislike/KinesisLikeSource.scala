@@ -166,7 +166,30 @@ final case class KinesisLikeConfig(
     failAtOpen: Option[String] = None,
     failAtOpenTimes: Int = 1,
     faultRunId: Option[String] = None,
-)
+) {
+  /** Every read partition is made here: shard file `f`, records in (after,
+    * until], carrying the read's fault-injection options. */
+  def partition(f: File, after: Long, until: Long): KinesisLikePartition =
+    KinesisLikePartition(KinesisLikeLog.shardId(f), f.getAbsolutePath,
+      after, until, ReadFaults(logDir, failOnceAfter, failAtOpen,
+        failAtOpenTimes, faultRunId.getOrElse("")))
+}
+
+/** The fault-injection options of one read ([[KinesisLikeConfig]]). */
+final case class ReadFaults(
+    markerDir: String,
+    failOnceAfter: Option[Long] = None,
+    failAtOpen: Option[String] = None,
+    failAtOpenTimes: Int = 1,
+    scope: String = "",
+) {
+  /** Budget marker `name` in `markerDir`, scoped by the faultRunId when
+    * one was given — distinct run ids never share a budget, so
+    * re-running an injection scenario over a persistent fixture dir
+    * actually injects. */
+  def marker(name: String): File =
+    new File(markerDir, if (scope.isEmpty) name else s"${name}_$scope")
+}
 
 object KinesisLikeConfig {
   def from(options: CaseInsensitiveStringMap): KinesisLikeConfig = {
@@ -208,12 +231,6 @@ object KinesisLikeConfig {
 private[graft] object Faults {
   /** Marker-file prefix shared by every injection budget. */
   private val MarkerPrefixes = Seq("_FAILED_", "_INSTREAM_")
-
-  /** Budget marker for `name`, scoped by the config's faultRunId when one
-    * was given — distinct run ids never share a budget, so re-running an
-    * injection scenario over a persistent fixture dir actually injects. */
-  def marker(dir: String, name: String, scope: String): File =
-    new File(dir, if (scope.isEmpty) name else s"${name}_$scope")
 
   /** Delete every injection budget marker in `logDir` — the explicit
     * reset for fixtures that reuse a dir without changing faultRunId. */
@@ -269,18 +286,10 @@ class KinesisLikeScan(cfg: KinesisLikeConfig) extends Scan {
   * scan"). */
 class KinesisLikeBatch(cfg: KinesisLikeConfig) extends Batch {
   override def planInputPartitions(): Array[InputPartition] =
-    KinesisLikeLog.requireShardFiles(cfg.logDir).map { f =>
-      // Fault-injection options apply to batch reads too — an option the
-      // config layer accepted must not be silently inert on this path.
-      KinesisLikePartition(
-        KinesisLikeLog.shardId(f), f.getAbsolutePath,
-        after = -1L, until = Long.MaxValue,
-        failOnceAfter = cfg.failOnceAfter.getOrElse(-1L),
-        markerDir = cfg.logDir,
-        failAtOpen = cfg.failAtOpen.getOrElse(""),
-        failAtOpenTimes = cfg.failAtOpenTimes,
-        faultScope = cfg.faultRunId.getOrElse(""))
-    }.toArray
+    // Fault-injection options apply to batch reads too — an option the
+    // config layer accepted must not be silently inert on this path.
+    KinesisLikeLog.requireShardFiles(cfg.logDir)
+      .map(f => cfg.partition(f, after = -1L, until = Long.MaxValue)).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     KinesisLikeReaderFactory
 }
@@ -338,10 +347,18 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
   // watermark advancement and state flushing — still happens).
   @volatile private var availableNowBound: Option[Map[String, Long]] = None
 
+  /** One cached metadata read per shard — (shardId, maxSeq, closed) —
+    * so everything one poll decides sees one snapshot. */
+  private def shardStates(): Seq[(String, Long, Boolean)] = shards.map { f =>
+    val (maxSeq, closed) = KinesisLikeLog.shardState(f)
+    (KinesisLikeLog.shardId(f), maxSeq, closed)
+  }
+
+  private def maxSeqs(): Map[String, Long] =
+    shardStates().map { case (sh, maxSeq, _) => sh -> maxSeq }.toMap
+
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowBound = Some(shards.map { f =>
-      KinesisLikeLog.shardId(f) -> KinesisLikeLog.maxSeq(f)
-    }.toMap)
+    availableNowBound = Some(maxSeqs())
 
   override def initialOffset(): Offset =
     KinesisLikeOffset(shards.map { f =>
@@ -367,21 +384,17 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
     // engine polls here after the final batch (observed: AvailableNow runs
     // one drained poll before stopping), and the shard-metadata cache
     // makes the check O(1) per poll.
-    val closedAndDrained = shards.forall { f =>
-      KinesisLikeLog.isClosed(f) &&
-        from.getOrElse(KinesisLikeLog.shardId(f), -1L) >= KinesisLikeLog.maxSeq(f)
+    val states = shardStates()
+    val closedAndDrained = states.forall { case (sh, maxSeq, closed) =>
+      closed && from.getOrElse(sh, -1L) >= maxSeq
     }
     if (closedAndDrained) KinesisLikeStatus.markClosed(cfg.logDir)
     val cap = limit match {
       case r: ReadMaxRows => Some(r.maxRows())
       case _              => None
     }
-    KinesisLikeOffset(shards.map { f =>
-      val sh = KinesisLikeLog.shardId(f)
-      val avail = availableNowBound match {
-        case Some(bound) => bound.getOrElse(sh, -1L)
-        case None        => KinesisLikeLog.maxSeq(f)
-      }
+    KinesisLikeOffset(states.map { case (sh, maxSeq, _) =>
+      val avail = availableNowBound.fold(maxSeq)(_.getOrElse(sh, -1L))
       val after = from.getOrElse(sh, -1L)
       val end = cap match {
         case Some(n) => math.min(avail, after + n)
@@ -391,10 +404,7 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
     }.toMap)
   }
 
-  override def reportLatestOffset(): Offset =
-    KinesisLikeOffset(shards.map { f =>
-      KinesisLikeLog.shardId(f) -> KinesisLikeLog.maxSeq(f)
-    }.toMap)
+  override def reportLatestOffset(): Offset = KinesisLikeOffset(maxSeqs())
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
@@ -407,14 +417,7 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
       val sh    = KinesisLikeLog.shardId(f)
       val after = s.getOrElse(sh, -1L)
       val until = e.getOrElse(sh, after)
-      if (until <= after) None
-      else Some(KinesisLikePartition(
-        sh, f.getAbsolutePath, after, until,
-        cfg.failOnceAfter.getOrElse(-1L),
-        cfg.logDir,
-        cfg.failAtOpen.getOrElse(""),
-        cfg.failAtOpenTimes,
-        cfg.faultRunId.getOrElse("")))
+      if (until <= after) None else Some(cfg.partition(f, after, until))
     }.toArray
   }
 
@@ -438,11 +441,7 @@ final case class KinesisLikePartition(
     path: String,
     after: Long,
     until: Long,
-    failOnceAfter: Long,
-    markerDir: String,
-    failAtOpen: String,
-    failAtOpenTimes: Int,
-    faultScope: String = "",
+    faults: ReadFaults,
 ) extends InputPartition
 
 object KinesisLikeReaderFactory extends PartitionReaderFactory {
@@ -474,10 +473,11 @@ class KinesisLikeReader(p: KinesisLikePartition)
   // Initial-response fault injection: raising here is the analog of a
   // 3xx/4xx/5xx on the subscribe call itself, before any event arrives
   // (subscribe_to_shard_test.exs:249-281).
-  if (p.failAtOpen.nonEmpty && Faults.shouldRaise(
-      Faults.marker(p.markerDir, s"_FAILED_OPEN_${p.shardId}", p.faultScope),
-      p.failAtOpenTimes))
-    throw KinesisLikeErrors.make(p.failAtOpen)
+  p.faults.failAtOpen.foreach { spec =>
+    if (Faults.shouldRaise(p.faults.marker(s"_FAILED_OPEN_${p.shardId}"),
+        p.faults.failAtOpenTimes))
+      throw KinesisLikeErrors.make(spec)
+  }
 
   // The shard streams through the event-stream frame reassembler (16 KB
   // chunks, partial frames buffered — the S9 byte tier) and the
@@ -534,12 +534,10 @@ class KinesisLikeReader(p: KinesisLikePartition)
     * task retry then succeeds — exercising partial-delivery-then-error
     * (producer.ex:159-168) without wedging the query. */
   private def maybeFail(): Unit =
-    if (p.failOnceAfter >= 0 && delivered == p.failOnceAfter) {
-      val marker = Faults.marker(p.markerDir, "_FAILED_ONCE", p.faultScope)
-      if (marker.createNewFile())
-        throw new KinesisLikeErrors.TransportClosedException(
-          s"simulated transport close after $delivered records on ${p.shardId}")
-    }
+    if (p.faults.failOnceAfter.contains(delivered) &&
+        Faults.shouldRaise(p.faults.marker("_FAILED_ONCE"), 1))
+      throw new KinesisLikeErrors.TransportClosedException(
+        s"simulated transport close after $delivered records on ${p.shardId}")
 
   /** In-stream exception event: raises the typed class the first time
     * any reader reaches it — the S10 exception-within-the-event-stream
@@ -548,8 +546,7 @@ class KinesisLikeReader(p: KinesisLikePartition)
     * (q129 plants the session's task-attempt budget so the QUERY-level
     * failure survives task retries under any local master). */
   private def maybeRaiseInstream(spec: String, times: Int): Unit =
-    if (Faults.shouldRaise(
-        Faults.marker(p.markerDir, s"_INSTREAM_RAISED_${p.shardId}", p.faultScope), times))
+    if (Faults.shouldRaise(p.faults.marker(s"_INSTREAM_RAISED_${p.shardId}"), times))
       throw KinesisLikeErrors.make(spec)
 
   override def get(): InternalRow = row

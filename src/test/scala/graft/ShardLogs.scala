@@ -4,8 +4,8 @@ import java.nio.file.Path
 
 import graft.sources.kinesislike.KinesisLikeLog
 
-/** Hand-built kinesislike shards for tests: the shard's line view goes
-  * through the engine's framed sink, so a test shard is
+/** Hand-built kinesislike shards for tests: the shard's lines go
+  * through the engine's framed sink (`openLineSink`), so a test shard is
   * `shard-NNNNN.elog` event-stream frames like every engine-built one. */
 object ShardLogs {
 

@@ -176,5 +176,17 @@ class CheckpointCensusSpec extends AnyFunSuite {
       .filter(l => "operators\\.[A-Za-z]+\\.prewarm".r.findFirstIn(l).isDefined)
     assert(benchPrewarms.isEmpty,
       s"declare a pack Prewarm, not a Bench call: $benchPrewarms")
+    // One shard-event model: the kinesislike log is read and derived as
+    // decoded events; its text grammar is only openLineSink's input,
+    // split in one place (KinesisLikeLog.parseLine) and never rendered.
+    for (token <- Seq("LineSource", "openLines", "foldLines", "eventLines",
+        "decodeToLines", "encodeLine"))
+      assert(sites(token).isEmpty, s"$token is back: ${sites(token)}")
+    val tabSplit = """\.split\(\s*["']\\t["']""".r
+    val tabSplits = code
+      .map { case (f, lines) => f -> lines.count(tabSplit.findFirstIn(_).isDefined) }
+      .filter(_._2 > 0)
+    assert(tabSplits == Map("graft/sources/kinesislike/KinesisLikeLog.scala" -> 1),
+      s"parse shard lines with KinesisLikeLog.parseLine only: $tabSplits")
   }
 }

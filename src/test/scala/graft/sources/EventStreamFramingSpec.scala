@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ShardLogs, SparkSpec}
 import graft.sources.kinesislike.{EventStreamFraming, KinesisLikeLog}
 
 /** The byte-level event-stream tier (subscribe_to_shard.ex:273-341 made
@@ -39,6 +39,18 @@ class EventStreamFramingSpec extends SparkSpec {
     try lines.foreach(sink.writeLine)
     finally sink.close()
     f
+  }
+
+  private def recordOf(line: String): KinesisLikeLog.Record =
+    KinesisLikeLog.parseLine(line) match {
+      case KinesisLikeLog.RecordsEvent(_, Seq(r)) => r
+      case other => fail(s"not a record line: $other")
+    }
+
+  private def readEvents(f: java.io.File): List[KinesisLikeLog.ShardEvent] = {
+    val src = KinesisLikeLog.openEvents(f)
+    try Iterator.continually(src.readEvent()).takeWhile(_ != null).toList
+    finally src.close()
   }
 
   test("a message round-trips headers AND payload through encode/decode, " +
@@ -75,21 +87,23 @@ class EventStreamFramingSpec extends SparkSpec {
     "initial-response is SKIPPED, a record event yields its line, the " +
     "null-continuation control event yields the closed marker, an " +
     "exception message yields the typed #ERROR line") {
-    def roundTrip(msg: Array[Byte]): Seq[String] = {
+    def roundTrip(msg: Array[Byte]): Option[KinesisLikeLog.ShardEvent] = {
       val (h, p) = decodeMessage(msg)
-      decodeToLines(h, p)
+      decodeToEvent(h, p)
     }
-    assert(roundTrip(initialResponseMessage) === Seq.empty) // s2s.ex:341
-    val line = record(7, "payload")
-    assert(roundTrip(encodeLine(line)) === Seq(line))
-    assert(roundTrip(encodeLine(KinesisLikeLog.ClosedMarker)) ===
-      Seq(KinesisLikeLog.ClosedMarker)) // s2s.ex:356-363
-    assert(roundTrip(encodeLine(s"${KinesisLikeLog.ErrorMarker}\thttp_error:503\t2")) ===
-      Seq(s"${KinesisLikeLog.ErrorMarker}\thttp_error:503\t2")) // s2s.ex:336-338
+    assert(roundTrip(initialResponseMessage) === None) // s2s.ex:341
+    Seq(
+      record(7, "payload"),
+      KinesisLikeLog.ClosedMarker,                              // s2s.ex:356-363
+      s"${KinesisLikeLog.ErrorMarker}\thttp_error:503\t2",      // s2s.ex:336-338
+    ).foreach { line =>
+      val event = KinesisLikeLog.parseLine(line)
+      assert(roundTrip(encodeShardEvent(event)) === Some(event), line)
+    }
     // A wrong content type is refused (the @content_type assertion,
     // subscribe_to_shard.ex:320-322).
     intercept[IllegalArgumentException] {
-      decodeToLines(
+      decodeToEvent(
         Map(ContentTypeHeader -> "text/plain",
           MessageTypeHeader -> EventMessageType,
           EventTypeHeader -> SubscribeEventType),
@@ -120,7 +134,7 @@ class EventStreamFramingSpec extends SparkSpec {
     "LAST record's sequence number (handle_event advances the cursor " +
     "once per EVENT, subscribe_to_shard.ex:343-354)") {
     val lines = Seq(record(11, "a"), record(12, "b\tc\nd"), record(13, "e"))
-    val recs  = lines.map(KinesisLikeLog.parseLine(_).get)
+    val recs  = lines.map(recordOf)
     val msg   = encodeRecordsEvent(recs)
     val (h, p) = decodeMessage(msg)
     assert(h(EventTypeHeader) === SubscribeEventType)
@@ -136,7 +150,6 @@ class EventStreamFramingSpec extends SparkSpec {
         assert(got === recs)
       case other => fail(s"expected a records event, got $other")
     }
-    assert(decodeToLines(h, p) === lines)
   }
 
   test("the framed sink groups records into multi-record envelope " +
@@ -151,10 +164,7 @@ class EventStreamFramingSpec extends SparkSpec {
     try lines.foreach(sink.writeLine)
     finally sink.close()
 
-    val src = KinesisLikeLog.openEvents(f.toFile)
-    val events = try Iterator.continually(src.readEvent())
-      .takeWhile(_ != null).toList
-    finally src.close()
+    val events = readEvents(f.toFile)
     // 7 records at 3/event = events of 3, 3, 1 — the trailing partial
     // group flushed by the closed marker — then the control event.
     assert(events.map {
@@ -164,11 +174,14 @@ class EventStreamFramingSpec extends SparkSpec {
     } === List(
       (3L, Seq(1L, 2L, 3L)), (6L, Seq(4L, 5L, 6L)), (7L, Seq(7L)),
       (-1L, Seq.empty[Long])))
-    // Flattened back to lines, grouping is invisible.
-    val flat = KinesisLikeLog.foldLines(f.toFile, Vector.empty[String])(_ :+ _)
-    assert(flat.toSeq === lines)
+    // Flattened back to records, grouping is invisible.
+    val flat = events.flatMap {
+      case KinesisLikeLog.RecordsEvent(_, rs) => rs
+      case _                                  => Nil
+    }
+    assert(flat === lines.init.map(recordOf))
     assert(KinesisLikeLog.maxSeq(f.toFile) === 7L)
-    assert(KinesisLikeLog.isClosed(f.toFile))
+    assert(KinesisLikeLog.shardState(f.toFile)._2)
   }
 
   test("CRC verification fails fast: flipping any single byte of a " +
@@ -203,10 +216,9 @@ class EventStreamFramingSpec extends SparkSpec {
     val dir = tmpDir("graft_framing_trunc")
     val f   = dir.resolve("shard-00000.elog")
     Files.write(f, full.dropRight(2))
-    val src = KinesisLikeLog.openLines(f.toFile)
+    val src = KinesisLikeLog.openEvents(f.toFile)
     try intercept[IllegalArgumentException] {
-      var l = src.readLine()
-      while (l != null) l = src.readLine()
+      while (src.readEvent() != null) {}
     } finally src.close()
     // The metadata scan behind maxSeq reads through the same frame loop.
     intercept[IllegalArgumentException](KinesisLikeLog.maxSeq(f.toFile))
@@ -264,17 +276,105 @@ class EventStreamFramingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(rows(twinDir) === rows(dir))
 
-    def eventSizes(d: Path): Seq[Int] = {
-      val src = KinesisLikeLog.openEvents(d.resolve("shard-00000.elog").toFile)
-      try Iterator.continually(src.readEvent()).takeWhile(_ != null)
-        .collect { case KinesisLikeLog.RecordsEvent(_, rs) => rs.size }.toList
-      finally src.close()
-    }
+    def eventSizes(d: Path): Seq[Int] =
+      readEvents(d.resolve("shard-00000.elog").toFile)
+        .collect { case KinesisLikeLog.RecordsEvent(_, rs) => rs.size }
     assert(eventSizes(dir) === Seq.fill(13)(3) :+ 1)
     assert(eventSizes(twinDir) === Seq.fill(40)(1))
 
     val f = twinDir.resolve("shard-00000.elog").toFile
     assert(KinesisLikeLog.maxSeq(f) === 40L)
-    assert(KinesisLikeLog.isClosed(f))
+    assert(KinesisLikeLog.shardState(f)._2)
+  }
+
+  test("the fixture derivations over a two-shard base: derive doubles " +
+    "every record and appends the sentinel, deriveWithError plants one " +
+    "#ERROR event before shard 0's first record past the cut, and a " +
+    "split pair re-joins to the base event for event, byte for byte") {
+    // Three-record events end at seq 3/6/9 in shard 0 and 6/9/12 in
+    // shard 1, so a cut at 6 falls on an event boundary in both.
+    val recs0 = (1L to 9L).map(i => record(i, s"a$i"))
+    val recs1 = (4L to 12L).map(i => record(i, s"b$i"))
+    val base  = tmpDir("graft_derive_base")
+    ShardLogs.write(base, recs0 :+ KinesisLikeLog.ClosedMarker, shard = 0)
+    ShardLogs.write(base, recs1 :+ KinesisLikeLog.ClosedMarker, shard = 1)
+    def shard(d: Path, s: Int) = d.resolve(f"shard-$s%05d.elog")
+    def sameBytes(a: Path, b: Path, s: Int): Boolean = java.util.Arrays.equals(
+      Files.readAllBytes(shard(a, s)), Files.readAllBytes(shard(b, s)))
+
+    // derive: every record twice, then the sentinel — the next sequence
+    // number, 30 days after the last arrival of ANY shard — on shard 0.
+    val doubled = tmpDir("graft_derive_doubled")
+    KinesisLikeLog.derive(base.toString, doubled.toString, copies = 2,
+      sentinel = true)
+    val us = 1000000L + 12L + 30L * 24 * 3600 * 1000000L
+    val ts = java.time.Instant.EPOCH
+      .plus(us, java.time.temporal.ChronoUnit.MICROS)
+    val sentinel = s"13\t$us\t-1\t" + java.util.Base64.getEncoder
+      .encodeToString((s"""{"event_id":13,"ts":"$ts","user_id":-1,""" +
+        """"event_type":"sentinel","value":0.0,"props":"{}"}""")
+        .getBytes(UTF_8))
+    val expected = tmpDir("graft_derive_expected")
+    ShardLogs.write(expected, recs0.flatMap(l => Seq(l, l)) :+ sentinel :+
+      KinesisLikeLog.ClosedMarker, shard = 0)
+    ShardLogs.write(expected, recs1.flatMap(l => Seq(l, l)) :+
+      KinesisLikeLog.ClosedMarker, shard = 1)
+    Seq(0, 1).foreach(s =>
+      assert(sameBytes(doubled, expected, s), s"derive: shard $s bytes"))
+
+    // deriveWithError: the exception event sits right before shard 0's
+    // first record with seq > 4, and nowhere else.
+    val errored = tmpDir("graft_derive_error")
+    KinesisLikeLog.deriveWithError(base.toString, errored.toString,
+      afterSeq = 4L, spec = "http_error:503", times = 2)
+    def flat(d: Path, s: Int): List[Any] = readEvents(shard(d, s).toFile)
+      .flatMap {
+        case KinesisLikeLog.RecordsEvent(_, rs) => rs
+        case e                                  => List(e)
+      }
+    val (upTo4, rest) = flat(base, 0).splitAt(4)
+    assert(flat(errored, 0) ==
+      upTo4 ++ (KinesisLikeLog.ErrorEvent("http_error:503", 2) :: rest))
+    assert(sameBytes(errored, base, 1), "deriveWithError: shard 1 untouched")
+
+    // deriveSplitPair: the open prefix plus the appended tail is the base.
+    val pair   = tmpDir("graft_derive_pair")
+    val joined = tmpDir("graft_derive_joined")
+    KinesisLikeLog.deriveSplitPair(base.toString, pair.toString, cut = 6L)
+    val prefix = pair.resolve("split/shard-00000.elog").toFile
+    assert(KinesisLikeLog.shardState(prefix) == (6L, false))
+    KinesisLikeLog.materializeSplit(pair.toString, joined.toString)
+    KinesisLikeLog.appendCachedTail(pair.toString, joined.toString)
+    Seq(0, 1).foreach { s =>
+      assert(readEvents(shard(joined, s).toFile) ==
+        readEvents(shard(base, s).toFile), s"split pair: shard $s events")
+      assert(sameBytes(joined, base, s), s"split pair: shard $s bytes")
+    }
+  }
+
+  test("openLineSink refuses a malformed line with an " +
+    "IllegalArgumentException naming it, and an #ERROR line's missing " +
+    "fields take their defaults (transport_closed, budget 1)") {
+    val dir = tmpDir("graft_framing_malformed")
+    Seq(
+      "7\t1000007\tk7",                     // three fields, not four
+      "x7\t1000007\tk7\tYQ==",               // non-numeric sequence number
+      "7\tsoon\tk7\tYQ==",                   // non-numeric arrival
+      s"${KinesisLikeLog.ErrorMarker}\tno_such_class\t1", // unknown class
+      s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t0", // budget < 1
+      s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\tmany",
+    ).foreach { line =>
+      val sink = KinesisLikeLog.openLineSink(
+        dir.resolve("shard-00000.elog").toFile)
+      val e = try intercept[IllegalArgumentException](sink.writeLine(line))
+      finally sink.close()
+      assert(e.getMessage.contains(line),
+        s"the error must name the line: ${e.getMessage}")
+    }
+    val f = writeFramedShard(dir, Seq(KinesisLikeLog.ErrorMarker,
+      s"${KinesisLikeLog.ErrorMarker}\tstream_closed"))
+    assert(readEvents(f.toFile) == List(
+      KinesisLikeLog.ErrorEvent("transport_closed", 1),
+      KinesisLikeLog.ErrorEvent("stream_closed", 1)))
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.sources.kinesislike.EventStreamFraming
+import graft.sources.kinesislike.{EventStreamFraming, KinesisLikeLog}
 import graft.sources.kinesislike.EventStreamFraming._
 
 /** Generative invariants for the event-stream message layer: for ANY
@@ -94,8 +94,11 @@ object FramingProps extends Properties("EventStreamFraming") {
         s"${graft.sources.kinesislike.KinesisLikeLog.ErrorMarker}" +
           s"\thttp_error:${400 + (seq % 200)}\t${1 + seq % 3}"
     }) { line =>
-      val (h, p) = decodeMessage(EventStreamFraming.encodeLine(line))
-      decodeToLines(h, p) == Seq(line)
+      // The line parses to its event; the event's message decodes back
+      // to that event.
+      val event  = KinesisLikeLog.parseLine(line)
+      val (h, p) = decodeMessage(EventStreamFraming.encodeShardEvent(event))
+      decodeToEvent(h, p) == Some(event)
     }
 
   property("multi-record envelope events are grouping-invariant: for " +
@@ -127,8 +130,9 @@ object FramingProps extends Properties("EventStreamFraming") {
       }
       val expected = lines.map(_.split('\t')(0).toLong).grouped(per)
         .map(g => (g.last, g.toSeq)).toList
-      val flat = graft.sources.kinesislike.KinesisLikeLog
-        .foldLines(f, Vector.empty[String])(_ :+ _)
-      conts == expected && flat.toSeq == lines
+      def records(es: Seq[KinesisLikeLog.ShardEvent]) =
+        es.collect { case KinesisLikeLog.RecordsEvent(_, rs) => rs }.flatten
+      conts == expected &&
+        records(events) == records(lines.map(KinesisLikeLog.parseLine))
     }
 }

@@ -135,7 +135,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
     val dir = tmpDir("kl_pos")
     // arrival timestamps: seq i arrives at i seconds.
     writeShard(dir, 0, (0L until 10L).map(i => (i, i * 1000000L, "k", s"p$i")))
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
+    val f = dir.resolve("shard-00000.elog").toFile
     import StartingPosition._
     assert(KinesisLikeLog.resolveInitial(f, TrimHorizon) == -1L)
     assert(KinesisLikeLog.resolveInitial(f, Latest) == 9L)
@@ -239,8 +239,8 @@ class KinesisLikeSourceSpec extends SparkSpec {
     "(subscribe_to_shard_test.exs:205-218)") {
     val dir = tmpDir("kl_closed")
     writeShard(dir, 0, Seq((0L, 1L, "k", "a"), (1L, 2L, "k", "b")), closed = true)
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
-    assert(KinesisLikeLog.isClosed(f))
+    val f = dir.resolve("shard-00000.elog").toFile
+    assert(KinesisLikeLog.shardState(f)._2)
     val got = runStream(dir, "trim_horizon", tmpDir("kl_closed_ck"), "sink_closed")
     assert(got.map(_._2).sorted == Seq(0L, 1L))
   }
@@ -290,8 +290,8 @@ class KinesisLikeSourceSpec extends SparkSpec {
     val reader = new graft.sources.kinesislike.KinesisLikeReader(
       graft.sources.kinesislike.KinesisLikePartition(
         "shard-00000", f.getAbsolutePath, after = 5L,
-        until = Long.MaxValue, failOnceAfter = -1L,
-        markerDir = dir.toString, failAtOpen = "", failAtOpenTimes = 1))
+        until = Long.MaxValue,
+        faults = graft.sources.kinesislike.ReadFaults(dir.toString)))
     val tail = scala.collection.mutable.ArrayBuffer.empty[Long]
     try while (reader.next())
       tail += reader.get().getUTF8String(1).toString.toLong
@@ -677,11 +677,11 @@ class KinesisLikeSourceSpec extends SparkSpec {
     "(O(1) per microbatch, like Kafka listOffsets)") {
     val dir = tmpDir("kl_meta")
     writeShard(dir, 0, (0L until 5L).map(i => (i, i, "k", s"p$i")))
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
+    val f = dir.resolve("shard-00000.elog").toFile
     assert(KinesisLikeLog.maxSeq(f) == 4L) // may scan
     val scansAfterFirst = graft.sources.kinesislike.KinesisLikeLog.metaScans.get()
     assert(KinesisLikeLog.maxSeq(f) == 4L)
-    assert(KinesisLikeLog.isClosed(f))
+    assert(KinesisLikeLog.shardState(f)._2)
     assert(KinesisLikeLog.maxSeq(f) == 4L)
     assert(KinesisLikeLog.metaScans.get() == scansAfterFirst,
       "repeated metadata reads of an unchanged shard must hit the cache")
@@ -696,7 +696,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
     val dir = tmpDir("kl_tsindex")
     writeShard(dir, 0, (0L until 10L).map(i => (i, i * 1000000L, "k", s"p$i")),
       closed = false)
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
+    val f = dir.resolve("shard-00000.elog").toFile
     def at(sec: Long): Long = KinesisLikeLog.resolveInitial(
       f, AtTimestamp(java.time.Instant.ofEpochSecond(sec)))
     assert(at(5) == 4L) // may scan (builds the index)
@@ -720,7 +720,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
       (0L, 10000000L, "k", "a"),
       (1L, 5000000L, "k", "b"),
       (2L, 20000000L, "k", "c")), closed = false)
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
+    val f = dir.resolve("shard-00000.elog").toFile
     def at(sec: Long): Long = KinesisLikeLog.resolveInitial(
       f, AtTimestamp(java.time.Instant.ofEpochSecond(sec)))
     assert(at(6) == -1L)  // seq 0 (arrival 10s ≥ 6s) starts the slice
@@ -746,17 +746,23 @@ class KinesisLikeSourceSpec extends SparkSpec {
       Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t1") ++ shard0.drop(3))
     writeShard(dir, 1,
       (10L until 15L).map(i => (i, i * 1000L, "k", s"p$i")), closed = false)
-    // Full-decode reference fold (the pre-optimization spelling).
-    def fullFold(f: java.io.File): (Long, Boolean) =
-      KinesisLikeLog.foldLines(f, (-1L, false)) { case ((mx, cl), l) =>
-        if (l == KinesisLikeLog.ClosedMarker) (mx, true)
-        else (KinesisLikeLog.parseLine(l).fold(mx)(r => math.max(mx, r.seq)), cl)
-      }
+    // Full-decode reference fold (the pre-optimization spelling): every
+    // record of every event is decoded.
+    def fullFold(f: java.io.File): (Long, Boolean) = {
+      val in = KinesisLikeLog.openEvents(f)
+      try Iterator.continually(in.readEvent()).takeWhile(_ != null)
+        .foldLeft((-1L, false)) {
+          case ((mx, _), KinesisLikeLog.Closed) => (mx, true)
+          case ((mx, cl), KinesisLikeLog.RecordsEvent(_, rs)) =>
+            (rs.foldLeft(mx)((m, r) => math.max(m, r.seq)), cl)
+          case (acc, _) => acc
+        }
+      finally in.close()
+    }
     for (f <- KinesisLikeLog.shardFiles(dir.toString)) {
       KinesisLikeLog.invalidateMeta(dir.toString)
-      val (mx, cl) = fullFold(f)
-      assert(KinesisLikeLog.maxSeq(f) == mx, s"maxSeq diverged on $f")
-      assert(KinesisLikeLog.isClosed(f) == cl, s"isClosed diverged on $f")
+      assert(KinesisLikeLog.shardState(f) == fullFold(f),
+        s"(maxSeq, closed) diverged on $f")
     }
     // The parallel prefetch populates the same cache the serial walk reads.
     KinesisLikeLog.invalidateMeta(dir.toString)
@@ -772,7 +778,7 @@ class KinesisLikeSourceSpec extends SparkSpec {
     "path with same-length content within mtime granularity is re-scanned") {
     val dir = tmpDir("kl_meta_recycle")
     writeShard(dir, 0, Seq((3L, 1L, "k", "a")), closed = false)
-    val f = KinesisLikeLog.shardFile(dir.toString, "shard-00000")
+    val f = dir.resolve("shard-00000.elog").toFile
     assert(KinesisLikeLog.maxSeq(f) == 3L)
     val mtime = f.lastModified()
     // Replace with a same-length line holding a different max seq, and
