@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+import graft.plans.{TopKPerGroupStrategy, WindowTopKRewrite}
 
 /** The one engine every runtime entry point measures: session config and
   * billing policy for Bench, Verify, Smoke, Harness and the test suites'
@@ -7,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * src/main (CheckpointCensusSpec pins that), so the bench, the
   * correctness dump and the dev tools cannot drift onto different
   * sessions.
+  *
+  * [[install]] is the one way the engine's extensions reach a session,
+  * and it runs before any query is built: from [[local]], and at the
+  * `SparkEntry.queries` boundary for a session the caller built. A plan
+  * therefore depends only on the query's declaration, never on which
+  * queries ran earlier on the same session.
   *
   * `spark.sql.adaptive.coalescePartitions.minPartitionSize` is 64k here
   * (Spark default 1m). AQE's parallelism-first coalescing targets
@@ -48,7 +57,30 @@ object GraftSession {
     confs.foreach { case (k, v) => b.config(k, v) }
     val s = tuned(b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    install(s)
     s
+  }
+
+  /** Installs the engine on `s`, idempotently: the six graft functions
+    * (`GraftFunctions.builders`), the per-group top-k planner strategy and
+    * the window-top-k rewrite rule, and `nanosAsLong` parquet inference
+    * (an INT64 TIMESTAMP(NANOS) `events.ts` reads as a bigint that
+    * `Tables.events` converts, instead of failing schema inference; micros
+    * files are untouched). A function name the session already resolves
+    * (say a user's own `vec_dot`) is left as it is, so a second install
+    * replaces nothing. `newSession()` starts without any of this, which is
+    * why the query boundary installs again. */
+  def install(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    for ((name, build) <- graft.functions.GraftFunctions.builders
+         if !reg.functionExists(FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    val ex = s.experimental
+    if (!ex.extraStrategies.contains(TopKPerGroupStrategy))
+      ex.extraStrategies = ex.extraStrategies :+ TopKPerGroupStrategy
+    if (!ex.extraOptimizations.contains(WindowTopKRewrite))
+      ex.extraOptimizations = ex.extraOptimizations :+ WindowTopKRewrite
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   /** Run `body` with the session confs `kv` set, then restore each key

@@ -50,8 +50,10 @@ object ScaleRehearsal {
   /** Writes `factor` perturbed copies of the fixture at `src` to `out`,
     * unless `out` is already marked ready ([[Fixtures.once]]). */
   def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    Fixtures.once(out)(writeCopies(spark, src, out, factor))
+    GraftSession.withConf(spark,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      Fixtures.once(out)(writeCopies(spark, src, out, factor))
+    }
     println(s"[scale] $out ready (factor $factor of $src)")
   }
 

@@ -23,6 +23,10 @@ object SparkEntry {
     * the slice-0 end-to-end shape from SURVEY.md §7. */
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
+    installed(purchasesPerHour)(spark, d)
+  }
+
+  private def purchasesPerHour(spark: SparkSession, d: String): DataFrame = {
     val e = Tables.events(spark, d).filter(col("event_type") === "purchase")
     val c = Tables.customer(spark, d)
     e.join(broadcast(c), e("user_id") === c("c_custkey"))
@@ -41,8 +45,16 @@ object SparkEntry {
     require(
       qs.map(_.name).distinct.size == qs.size,
       s"duplicate query names: ${qs.map(_.name).diff(qs.map(_.name).distinct)}")
-    qs.map(q => q.name -> q.fn).toMap
+    qs.map(q => q.name -> installed(q.fn)).toMap
   }
+
+  /** The engine boundary: a query reached through this object is built on
+    * an installed session ([[GraftSession.install]]), also when the caller
+    * built the session itself, so its plan never depends on what ran
+    * before it. */
+  private def installed(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, d) => { GraftSession.install(s); fn(s, d) }
 
   /** Every pack's write-once fixture builds, concatenated like
     * [[queries]]; Bench walks this list before it bills anything. */

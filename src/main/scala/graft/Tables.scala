@@ -44,8 +44,9 @@ object Tables {
     * breaks on the other (round 9 lost 64 queries to exactly that), so
     * branch on the type the scan actually infers and normalize every
     * variant to a micros TimestampType:
-    *   - LongType (nanosAsLong inference of TIMESTAMP(NANOS)): integer-
-    *     divide to micros — fixture values are µs-aligned, lossless.
+    *   - LongType (TIMESTAMP(NANOS) under the `nanosAsLong` inference
+    *     `GraftSession.install` sets on every session): integer-divide
+    *     to micros — fixture values are µs-aligned, lossless.
     *   - TimestampNTZType: cast under the pinned-UTC session timezone, so
     *     the wall-clock values (what DuckDB reads from the same file as
     *     naive TIMESTAMP) become the same instants downstream date
@@ -54,12 +55,6 @@ object Tables {
     *     pass through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // nanosAsLong only affects TIMESTAMP(NANOS) columns (micros files are
-    // untouched), and without it a nanos file throws at schema inference —
-    // so set it before the scan, once per session (idempotent; every
-    // events reader wants the same inference).
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     import org.apache.spark.sql.types._
     raw.schema("ts").dataType match {

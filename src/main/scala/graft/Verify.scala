@@ -38,9 +38,9 @@ object Verify {
     // Fixture-schema preamble: one stderr line per table, so a driver-side
     // fixture regeneration (r9: events.ts nanos→timestamp_ntz broke 64
     // queries) shows up as an obvious type diff at the top of the log
-    // instead of 64 scattered per-query failures. nanosAsLong first so a
-    // TIMESTAMP(NANOS) column prints as bigint rather than throwing.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // instead of 64 scattered per-query failures. The session's
+    // nanosAsLong inference prints a TIMESTAMP(NANOS) column as bigint
+    // rather than throwing.
     for (t <- Tables.names) {
       val desc =
         try spark.read.parquet(s"$sfDir/$t.parquet").schema.fields

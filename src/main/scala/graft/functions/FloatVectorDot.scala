@@ -1,20 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd dot product over two float-array columns — the
   * custom-Expression tier of the operator preference order (SURVEY §4.2:
   * built-ins first, then a Catalyst `Expression` with `doGenCode`, and
   * only then anything slower). Siblings in this package follow the same
   * pattern for the other hot per-row kernels: [[SimHash60]],
-  * [[SignDots16]], [[MinHash8]], [[WordNgrams]]. The built-in HOF
+  * [[SignDots16]], [[MinHash8]], [[WordNgrams]]; [[GraftFunctions]]
+  * lists the SQL names `GraftSession.install` gives them on every
+  * session, and its column helpers call them by name. The built-in HOF
   * formulation
   * (`aggregate(zip_with(a, b, (x, y) -> x*y), 0D, (acc, z) -> acc+z)`)
   * allocates an intermediate product array per row and evaluates two
@@ -71,85 +71,51 @@ case class FloatVectorDot(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration (queries receive an arbitrary
-    * session from the driver, so they self-register rather than assume
-    * `spark.sql.extensions` was configured). Each function is probed and
-    * registered independently: a session where some other party already
-    * registered one name (say a user's own `vec_dot`) must still get the
-    * rest of the family, and re-invocation stays WARN-free because an
-    * existing name is never re-registered. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def ensure(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    ensure("vec_dot") { exprs =>
-      require(
-        exprs.length == 2,
-        s"vec_dot requires exactly 2 arguments (two ARRAY<FLOAT> columns), got ${exprs.length}")
-      FloatVectorDot(exprs(0), exprs(1))
-    }
-    ensure("simhash60") { exprs =>
-      require(
-        exprs.length == 1,
-        s"simhash60 requires exactly 1 argument (an ARRAY<BIGINT> column), got ${exprs.length}")
-      SimHash60(exprs.head)
-    }
-    ensure("sign_dots16") { exprs =>
-      require(
-        exprs.length == 1,
-        s"sign_dots16 requires exactly 1 argument (an ARRAY<FLOAT> column), got ${exprs.length}")
-      SignDots16(exprs.head)
-    }
-    ensure("minhash8") { exprs =>
-      require(
-        exprs.length == 1,
-        s"minhash8 requires exactly 1 argument (an ARRAY<STRING> column), got ${exprs.length}")
-      MinHash8(exprs.head)
-    }
-    ensure("pos_ngrams") { exprs =>
-      require(
-        exprs.length == 2,
-        s"pos_ngrams requires exactly 2 arguments (a STRING column, an INT width), got ${exprs.length}")
-      PosNgramExplode(exprs(0), exprs(1))
-    }
-    ensure("cms_estimate") { exprs =>
-      require(
-        exprs.length == 2,
-        s"cms_estimate requires exactly 2 arguments (a BINARY sketch, a BIGINT value), got ${exprs.length}")
-      CmsEstimate(exprs(0), exprs(1))
-    }
-  }
+  /** The six SQL functions of the engine, name → builder.
+    * `GraftSession.install` registers them on every session before a
+    * query is built; the column helpers below only name them. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    fn("vec_dot", "exactly 2 arguments (two ARRAY<FLOAT> columns)") {
+      case Seq(a, b) => FloatVectorDot(a, b) },
+    fn("simhash60", "exactly 1 argument (an ARRAY<BIGINT> column)") {
+      case Seq(hv) => SimHash60(hv) },
+    fn("sign_dots16", "exactly 1 argument (an ARRAY<FLOAT> column)") {
+      case Seq(e) => SignDots16(e) },
+    fn("minhash8", "exactly 1 argument (an ARRAY<STRING> column)") {
+      case Seq(sh) => MinHash8(sh) },
+    fn("pos_ngrams", "exactly 2 arguments (a STRING column, an INT width)") {
+      case Seq(text, n) => PosNgramExplode(text, n) },
+    fn("cms_estimate", "exactly 2 arguments (a BINARY sketch, a BIGINT value)") {
+      case Seq(sk, v) => CmsEstimate(sk, v) },
+  )
 
-  /** Column-level API over the registered function. */
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  private def fn(name: String, args: String)(
+      build: PartialFunction[Seq[Expression], Expression])
+      : (String, Seq[Expression] => Expression) =
+    name -> { exprs =>
+      require(build.isDefinedAt(exprs), s"$name requires $args, got ${exprs.length}")
+      build(exprs)
+    }
+
+  /** Column-level API: dot product of two ARRAY<FLOAT> columns. */
+  def vecDot(spark: SparkSession, a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
-  }
 
   /** Column-level API: 60-bit SimHash of an ARRAY<BIGINT> word-hash column. */
-  def simHash60(spark: SparkSession, hv: Column): Column = {
-    register(spark)
+  def simHash60(spark: SparkSession, hv: Column): Column =
     call_function("simhash60", hv)
-  }
 
   /** Column-level API: 16 sign-LSH raw dot products of an ARRAY<FLOAT>. */
-  def signDots16(spark: SparkSession, embedding: Column): Column = {
-    register(spark)
+  def signDots16(spark: SparkSession, embedding: Column): Column =
     call_function("sign_dots16", embedding)
-  }
 
   /** Column-level API: 8 MinHash quarter-minima of an ARRAY<STRING>. */
-  def minHash8(spark: SparkSession, shingles: Column): Column = {
-    register(spark)
+  def minHash8(spark: SparkSession, shingles: Column): Column =
     call_function("minhash8", shingles)
-  }
 
   /** Column-level API: point-query a serialized count-min sketch. */
-  def cmsEstimate(spark: SparkSession, sketch: Column, value: Column): Column = {
-    register(spark)
+  def cmsEstimate(spark: SparkSession, sketch: Column, value: Column): Column =
     call_function("cms_estimate", sketch, value)
-  }
 
   /** Column-level API: distinct word n-grams of a STRING in one pass.
     * (Built on Column.expr directly — the n parameter is a literal of the
@@ -157,37 +123,4 @@ object GraftFunctions {
   def wordNgrams(spark: SparkSession, text: Column, n: Int): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       spark, e => WordNgrams(e, n), text)
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` registration
-  * path for sessions configured up front: the vec_dot function plus the
-  * per-group top-k planner strategy (the runtime analogs are
-  * [[GraftFunctions.register]] and `spark.experimental.extraStrategies`,
-  * used by the query pack since the driver hands it unconfigured
-  * sessions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => FloatVectorDot(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (children: Seq[Expression]) => SimHash60(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("sign_dots16"),
-      new ExpressionInfo(classOf[SignDots16].getName, "sign_dots16"),
-      (children: Seq[Expression]) => SignDots16(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "minhash8"),
-      (children: Seq[Expression]) => MinHash8(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("pos_ngrams"),
-      new ExpressionInfo(classOf[PosNgramExplode].getName, "pos_ngrams"),
-      (children: Seq[Expression]) => PosNgramExplode(children.head, children(1))))
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-  }
 }

@@ -382,100 +382,62 @@ object Dedup {
     * the next round lands: without that, a long bench run accumulates one
     * label snapshot per round and the resulting storage/GC pressure taxes
     * every query that runs after this one (the round-3 regression). */
-  /** Final (doc_id, cluster_id) labels, memoized per (session, data dir)
-    * so every policy built on top of the fixpoint (d07's assignment
-    * report, d10's survivor selection) shares ONE checkpointed snapshot
-    * instead of re-running the propagation loop — the same computed-once
-    * posture as d08 riding d02's candidate stage. The cached frame is
-    * only a handle to in-memory checkpoint blocks, and the driver's
-    * Verify/Bench loops deliberately unpersist ALL blocks between
-    * queries, so a hit is only valid while the snapshot's RDD ids are
-    * still persisted — otherwise the entry is stale (its lineage was
-    * truncated by localCheckpoint and CANNOT be recomputed) and the
-    * fixpoint reruns. Reuse therefore kicks in within a query run and in
-    * shared-session test suites; driver runs stay self-contained. */
-  private val clusterCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (DataFrame, Set[Int])]
-
-  private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
-    clusterCache.synchronized {
-      // Evict entries for stopped sessions on every lookup: a stale
-      // entry strongly retains the dead session and its DataFrame
-      // forever — a leak in long-lived multi-session processes (test
-      // suites churn sessions constantly).
-      clusterCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped
-      }
-      val live = s.sparkContext.getPersistentRDDs.keySet.toSet
-      clusterCache.get((s, d)) match {
-        case Some((df, ids)) if ids.nonEmpty && ids.subsetOf(live) => df
-        case _ =>
-          val (df, ids) = computeClusterLabels(s, d)
-          clusterCache((s, d)) = (df, ids)
-          df
-      }
+  private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame = {
+    val sc = s.sparkContext
+    def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = df.localCheckpoint(true)
+      (out, sc.getPersistentRDDs.keySet.toSet -- before)
     }
-
-  /** The min-label-propagation fixpoint itself; returns the final labels
-    * frame plus the persisted-RDD ids of its one surviving snapshot (the
-    * cache's liveness token). */
-  private def computeClusterLabels(
-      s: SparkSession, d: String): (DataFrame, Set[Int]) = {
-      val sc = s.sparkContext
-      def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val out = df.localCheckpoint(true)
-        (out, sc.getPersistentRDDs.keySet.toSet -- before)
-      }
-      def unpersistIds(ids: Set[Int]): Unit =
-        for (id <- ids; rdd <- sc.getPersistentRDDs.get(id))
-          rdd.unpersist(blocking = false)
-      // lshPairs eagerly checkpoints its shingle + band subtrees while
-      // building the pair list; once the pairs themselves are
-      // checkpointed those inputs are dead weight for the whole
-      // iteration — drop them before the loop starts.
-      val beforeLsh = sc.getPersistentRDDs.keySet.toSet
-      val pairsSrc  = lshPairs(s, d).select(col("id1"), col("id2"))
-      val lshIds    = sc.getPersistentRDDs.keySet.toSet -- beforeLsh
-      val pairs = pairsSrc
-        .localCheckpoint(true) // computed once, not once per iteration
-      unpersistIds(lshIds)
-      val edges = pairs
-        .select(col("id1").as("src"), col("id2").as("dst"))
-        .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      var (labels, labelIds) = trackedCheckpoint(
-        T.documents(s, d).select(col("doc_id"), col("doc_id").as("lbl")))
-      var changed = 1L
-      var rounds  = 0
-      // Labels move one hop per round, so the loop must run to the
-      // fixpoint (diameter + 1 rounds), not a fixed count; the cap only
-      // guards against a pathological fixture (diameter ≥ doc count).
-      while (changed > 0 && rounds < 10000) {
-        val propagated = edges
-          .join(labels, col("src") === col("doc_id"))
-          .select(col("dst").as("doc_id"), col("lbl"), lit(false).as("own"))
-        // Tag each doc's current label through the aggregate: min(lbl) is
-        // the new label, min(lbl where own) is the unique previous label,
-        // and their inequality is the per-doc changed flag — summed from
-        // the checkpointed blocks without rejoining the previous snapshot.
-        val (next, nextIds) = trackedCheckpoint(
-          labels.select(col("doc_id"), col("lbl"), lit(true).as("own"))
-            .union(propagated)
-            .groupBy(col("doc_id"))
-            .agg(
-              min(col("lbl")).as("lbl"),
-              min(when(col("own"), col("lbl"))).as("prev"))
-            .select(
-              col("doc_id"), col("lbl"),
-              (col("lbl") =!= col("prev")).cast("long").as("chg")))
-        changed = next.agg(coalesce(sum(col("chg")), lit(0L)))
-          .first().getLong(0)
-        unpersistIds(labelIds)
-        labels = next.select(col("doc_id"), col("lbl"))
-        labelIds = nextIds
-        rounds += 1
-      }
-      (labels.select(col("doc_id"), col("lbl").as("cluster_id")), labelIds)
+    def unpersistIds(ids: Set[Int]): Unit =
+      for (id <- ids; rdd <- sc.getPersistentRDDs.get(id))
+        rdd.unpersist(blocking = false)
+    // lshPairs eagerly checkpoints its shingle + band subtrees while
+    // building the pair list; once the pairs themselves are
+    // checkpointed those inputs are dead weight for the whole
+    // iteration — drop them before the loop starts.
+    val beforeLsh = sc.getPersistentRDDs.keySet.toSet
+    val pairsSrc  = lshPairs(s, d).select(col("id1"), col("id2"))
+    val lshIds    = sc.getPersistentRDDs.keySet.toSet -- beforeLsh
+    val pairs = pairsSrc
+      .localCheckpoint(true) // computed once, not once per iteration
+    unpersistIds(lshIds)
+    val edges = pairs
+      .select(col("id1").as("src"), col("id2").as("dst"))
+      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
+    var (labels, labelIds) = trackedCheckpoint(
+      T.documents(s, d).select(col("doc_id"), col("doc_id").as("lbl")))
+    var changed = 1L
+    var rounds  = 0
+    // Labels move one hop per round, so the loop must run to the
+    // fixpoint (diameter + 1 rounds), not a fixed count; the cap only
+    // guards against a pathological fixture (diameter ≥ doc count).
+    while (changed > 0 && rounds < 10000) {
+      val propagated = edges
+        .join(labels, col("src") === col("doc_id"))
+        .select(col("dst").as("doc_id"), col("lbl"), lit(false).as("own"))
+      // Tag each doc's current label through the aggregate: min(lbl) is
+      // the new label, min(lbl where own) is the unique previous label,
+      // and their inequality is the per-doc changed flag — summed from
+      // the checkpointed blocks without rejoining the previous snapshot.
+      val (next, nextIds) = trackedCheckpoint(
+        labels.select(col("doc_id"), col("lbl"), lit(true).as("own"))
+          .union(propagated)
+          .groupBy(col("doc_id"))
+          .agg(
+            min(col("lbl")).as("lbl"),
+            min(when(col("own"), col("lbl"))).as("prev"))
+          .select(
+            col("doc_id"), col("lbl"),
+            (col("lbl") =!= col("prev")).cast("long").as("chg")))
+      changed = next.agg(coalesce(sum(col("chg")), lit(0L)))
+        .first().getLong(0)
+      unpersistIds(labelIds)
+      labels = next.select(col("doc_id"), col("lbl"))
+      labelIds = nextIds
+      rounds += 1
+    }
+    labels.select(col("doc_id"), col("lbl").as("cluster_id"))
   }
 
   private val d07 = Q(
@@ -524,8 +486,8 @@ object Dedup {
     * rollups are subtractions from total sums, so no second pass and no
     * per-member rank is ever materialized. */
   private[operators] def clusterSurvivors(
-      s: SparkSession, d: String): DataFrame =
-    clusterLabels(s, d)
+      s: SparkSession, d: String, labels: DataFrame): DataFrame =
+    labels
       .join(T.documents(s, d).select(col("doc_id"), col("n_chars")), "doc_id")
       .groupBy(col("cluster_id"))
       .agg(
@@ -546,15 +508,15 @@ object Dedup {
     * exact integer rollups (id/char sums) that pin the full dropped set
     * under the hash gate without emitting every member row.
     *
-    * Scale shape: reuses the memoized cluster labels (the fixpoint runs
-    * once per session), one doc_id equi-join to the documents table, and
+    * Scale shape: d07's cluster labels (one fixpoint run), one doc_id
+    * equi-join to the documents table, and
     * ONE partial-combining aggregate over cluster_id
     * ([[clusterSurvivors]] — no window: a viral duplicate page's cluster
     * must map-side combine, never buffer in a single task). */
   private val d10 = Q(
     "d10_dedup_survivors",
     (s, d) =>
-      clusterSurvivors(s, d)
+      clusterSurvivors(s, d, clusterLabels(s, d))
         .filter(col("cluster_size") >= 2)
         .select(
           col("cluster_id"),
@@ -611,8 +573,7 @@ object Dedup {
     * [[graft.functions.SimHash60]] expression in ONE pass over the
     * word-hash array — the built-in formulation was 60 separate
     * interpreted `aggregate()` folds (CodegenFallback), 13.8 s at sf0.1. */
-  private def simhashDf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  private def simhashDf(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .withColumn(
         "hv",
@@ -620,7 +581,6 @@ object Dedup {
           "transform(array_distinct(split(text, ' ')), " +
             "w -> CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT))"))
       .selectExpr("doc_id", "simhash60(hv) AS simhash")
-  }
 
   private def simhashSql: String = {
     val wv = wordValTerms(j =>
@@ -814,7 +774,6 @@ object Dedup {
     Q(
       "d06_dedup_cosine",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = T.embeddings(s, d)
         val sig = e
           .selectExpr("vec_id", "sign_dots16(embedding) AS dots")
@@ -1366,9 +1325,8 @@ object Dedup {
     * large clusters means boilerplate/templating the pipeline should
     * kill at the source; a flat all-singleton histogram means the
     * canopy found nothing (possibly a recall failure — cross-check
-    * d12's canopy audit). Rides d07's memoized connected-components
-    * fixpoint, so the histogram costs two k-row aggregates on top of
-    * labels that are already computed once per session.
+    * d12's canopy audit). Rides d07's connected-components fixpoint,
+    * so the histogram costs two k-row aggregates on top of the labels.
     *
     * Scale shape (100 TB): labels → (cluster_id, size) is one shuffle
     * on cluster_id; size → histogram is a second shuffle whose domain

@@ -49,10 +49,11 @@ object Pipeline {
     // join back on cluster_id and keep everything but the survivor.
     // The join's hot key (that same viral cluster) is a plain equi-join
     // AQE can skew-split — the campaign's standard join-back posture.
-    val survivors = Dedup.clusterSurvivors(s, d)
+    val labels = Dedup.clusterLabels(s, d)
+    val survivors = Dedup.clusterSurvivors(s, d, labels)
       .filter(col("cluster_size") >= 2)
       .select(col("cluster_id"), col("best.doc_id").as("survivor_id"))
-    val dupDropped = Dedup.clusterLabels(s, d)
+    val dupDropped = labels
       .join(survivors, Seq("cluster_id"))
       .filter(col("doc_id") =!= col("survivor_id"))
       .select(col("doc_id"), lit(true).as("dup_dropped"))
@@ -691,7 +692,6 @@ object Pipeline {
   private val p07 = Q(
     "p07_source_caps",
     (s, d) => {
-      graft.plans.TopK.registerRewrite(s)
       val docs = T.documents(s, d)
         .select(col("source"), col("doc_id"), col("n_chars"))
       val totals = docs.groupBy(col("source"))

@@ -1549,7 +1549,7 @@ object Relational {
     * hash gate without emitting 500 sampled rows.
     *
     * Scale shape: rank-by-hash is just top-k with a hash sort key, so
-    * the q64 optimizer rewrite applies verbatim: registering it turns
+    * the q64 optimizer rewrite applies verbatim: it turns
     * the textbook window formulation below into q33's bounded-heap
     * TopKPerGroup plan — no per-stratum WindowExec sort, the shuffle
     * carries ≤ partitions·strata·100 rows, and a 95%-click stratum
@@ -1559,7 +1559,6 @@ object Relational {
   private val q57 = Q(
     "q57_sample_stratified",
     (s, d) => {
-      graft.plans.TopK.registerRewrite(s)
       val w = Window.partitionBy(col("event_type"))
         .orderBy(md5(col("event_id").cast("string")), col("event_id"))
       T.events(s, d)
@@ -1940,7 +1939,6 @@ object Relational {
   private val q64 = Q(
     "q64_topk_rewrite",
     (s, d) => {
-      graft.plans.TopK.registerRewrite(s)
       val w = Window.partitionBy(col("l_returnflag"))
         .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
           col("l_linenumber"))

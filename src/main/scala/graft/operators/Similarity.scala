@@ -191,7 +191,6 @@ object Similarity {
   private def lsh10(s: SparkSession, d: String): DataFrame = {
     import graft.operators.SignBands.bandSpark
     val bandsS = (0 until 4).map(b => s"(${bandSpark(b, 4)}) AS band$b")
-    graft.functions.GraftFunctions.register(s)
     val e = T.embeddings(s, d)
     val sig = e
       .selectExpr(

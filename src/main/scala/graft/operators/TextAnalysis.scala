@@ -457,7 +457,6 @@ object TextAnalysis {
   private val t10 = Q(
     "t10_pos_ngrams",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       T.documents(s, d).createOrReplaceTempView("g_t10_docs")
       s.sql("""
         SELECT gram,

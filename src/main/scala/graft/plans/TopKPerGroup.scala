@@ -36,9 +36,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * partitions·groups·k rows instead of the full input (at 100 TB the
   * difference between shuffling k rows per group per map task and
   * shuffling the dataset).
-  * Registered per session via `spark.experimental.extraStrategies` (works
-  * on any session at runtime) or `spark.sql.extensions` +
-  * [[graft.functions.GraftExtensions]].
+  * `graft.GraftSession.install` adds the strategy to every session
+  * before a query is built.
   */
 final case class TopKPerGroup(
     groupExprs: Seq[Expression],
@@ -136,11 +135,11 @@ object TopKPerGroupStrategy extends SparkStrategy {
   * to `rk <= k` with the rank column then discarded — is exactly
   * [[TopKPerGroup]]'s semantics, but WindowExec pays a full per-group
   * sort for it. This rule recognizes the idiom POST-optimization (it
-  * runs in the User Provided Optimizers batch via
-  * `spark.experimental.extraOptimizations` or
-  * [[graft.functions.GraftExtensions]]) and swaps in the bounded-heap
-  * plan, so a user writing the textbook formulation gets the
-  * O(n log k) / shuffle-k-rows-per-group physical operator for free.
+  * runs in the User Provided Optimizers batch, where
+  * `graft.GraftSession.install` puts it on every session before a query
+  * is built) and swaps in the bounded-heap plan, so every query writing
+  * the textbook formulation gets the O(n log k) /
+  * shuffle-k-rows-per-group physical operator for free.
   *
   * The match is deliberately conservative — it fires only when:
   *  - the window computes a SINGLE row_number (rank()/dense_rank() keep
@@ -211,18 +210,6 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
 
 object TopK {
 
-  /** Runtime registration of the window-top-k rewrite + its planner
-    * strategy on a driver-handed session (the configured-session analog
-    * is `spark.sql.extensions` → [[graft.functions.GraftExtensions]]). */
-  def registerRewrite(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    if (!spark.experimental.extraOptimizations.contains(WindowTopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ WindowTopKRewrite
-  }
-
   /** Per-group top-k over `df`: for each distinct value of `groupCols`,
     * the `k` first rows under `orderCols` (include tie-breaker columns
     * for determinism, exactly as a window formulation would need). */
@@ -232,9 +219,6 @@ object TopK {
       groupCols: Seq[Column],
       orderCols: Seq[Column],
       k: Int): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
     val analyzed = df.queryExecution.analyzed
     val order = orderCols.map(Bridge.expr(spark, _)).map {
       case s: SortOrder => s

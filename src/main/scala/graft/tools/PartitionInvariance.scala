@@ -31,7 +31,6 @@ object PartitionInvariance {
   def run(spark: SparkSession, sf: String, settings: Seq[String]): Boolean = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     def sweep(parts: String): Map[String, (Long, Long)] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
       graft.SparkEntry.queries.map { case (name, fn) =>
         val out =
           try {
@@ -56,7 +55,10 @@ object PartitionInvariance {
       }
     }
 
-    val bySetting = settings.map(p => p -> sweep(p)).toMap
+    val bySetting = settings.map { p =>
+      p -> graft.GraftSession.withConf(
+        spark, "spark.sql.shuffle.partitions" -> p)(sweep(p))
+    }.toMap
     val base      = bySetting(settings.head)
     var divergent = List.empty[String]
     base.keys.toSeq.sorted.foreach { name =>

@@ -95,9 +95,9 @@ class FixtureSchemaSpec extends SparkSpec {
 
   test("fixture events.parquet: fixed columns pinned, ts in the " +
       "normalizable variant set") {
-    // Inference must match what Tables.events sees: nanosAsLong on.
-    if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Inference must match what Tables.events sees: nanosAsLong on,
+    // which GraftSession.install sets on the suite's session.
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     val observed = spark.read.parquet(s"$dir/events.parquet")
       .schema.fields.map(f => f.name -> f.dataType).toMap
     val d = diff(observed - "ts", eventsFixed)

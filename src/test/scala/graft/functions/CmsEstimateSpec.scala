@@ -34,7 +34,6 @@ class CmsEstimateSpec extends SparkSpec {
 
   test("usable from SQL after registration and never underestimates " +
     "(the CMS guarantee q83 gates)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1L to 200L).toDF("v").createOrReplaceTempView("g_cms_vals")
     val rows = spark.sql(

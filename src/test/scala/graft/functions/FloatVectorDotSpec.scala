@@ -53,7 +53,7 @@ class FloatVectorDotSpec extends SparkSpec {
   }
 
   test("usable from SQL after registration") {
-    GraftFunctions.register(spark)
+    // GraftSession.local installed the functions on the suite's session.
     val v = spark
       .sql("SELECT vec_dot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(2.0 AS FLOAT), CAST(0.5 AS FLOAT)))")
@@ -61,15 +61,14 @@ class FloatVectorDotSpec extends SparkSpec {
     assert(v == 4.0)
   }
 
-  test("usable via spark.sql.extensions (GraftExtensions)") {
-    // A separate session with the extensions wired at build time.
+  test("usable in a fresh session after GraftSession.install") {
+    // newSession() starts from the built-in registry: the function
+    // resolves only once the session is installed.
     val s2 = spark.newSession()
-    new GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions) // constructs cleanly
-    // newSession shares the function registry only after registration:
-    GraftFunctions.register(s2)
-    assert(s2.sql("SELECT vec_dot(array(CAST(1.0 AS FLOAT)), array(CAST(3.0 AS FLOAT)))")
-      .collect()(0).getDouble(0) == 3.0)
+    val q = "SELECT vec_dot(array(CAST(1.0 AS FLOAT)), array(CAST(3.0 AS FLOAT)))"
+    intercept[org.apache.spark.sql.AnalysisException](s2.sql(q))
+    graft.GraftSession.install(s2)
+    assert(s2.sql(q).collect()(0).getDouble(0) == 3.0)
   }
 
   test("stays inside whole-stage codegen") {

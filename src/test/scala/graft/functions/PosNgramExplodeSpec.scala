@@ -28,7 +28,6 @@ object PosNgramExplodeProps extends Properties("PosNgramExplode") {
 
   private def chainMatches(text: String, n: Int): Boolean = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(Tuple1(text)).toDF("text").createOrReplaceTempView("png_prop_t")
     val gram = n match {
       case 1 => "element_at(ws, i)"
@@ -61,7 +60,6 @@ object PosNgramExplodeProps extends Properties("PosNgramExplode") {
 class PosNgramExplodeSpec extends SparkSpec {
   test("null text and too-short text generate no rows (explode semantics)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(Tuple1(null: String), Tuple1("oneword"))
       .toDF("text").createOrReplaceTempView("png_edge_t")
     val n = spark.sql(
@@ -72,7 +70,6 @@ class PosNgramExplodeSpec extends SparkSpec {
 
   test("a non-foldable width is rejected at analysis") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq((1, "a b c")).toDF("n", "text").createOrReplaceTempView("png_bad_t")
     val e = intercept[Exception] {
       spark.sql(

@@ -155,17 +155,36 @@ class CheckpointCensusSpec extends AnyFunSuite {
     assert(sites("SparkSession.builder()") == Map("graft/GraftSession.scala" -> 1),
       "build sessions through GraftSession.local, not SparkSession.builder()")
     // One way to run a stream: Streaming's `replay` is the only reader,
-    // its `startDrain` the only AvailableNow start, and every operator's
-    // session-conf flip goes through GraftSession.withConf.
+    // its `startDrain` the only AvailableNow start, and every session-conf
+    // flip goes through GraftSession.withConf.
     assert(sites("readStream") == Map("graft/operators/Streaming.scala" -> 1),
       "read streams through Streaming.replay, not a hand-written readStream")
     assert(sites("Trigger.AvailableNow()") ==
       Map("graft/operators/Streaming.scala" -> 1),
       "start streams through Streaming.drain, not a hand-written trigger")
-    val flips = (sites(".conf.set(").keySet ++ sites(".conf.unset(").keySet)
-      .filter(_.startsWith("graft/operators/"))
+    val flips = (sites(".conf.set(").keySet ++ sites(".conf.unset(").keySet) -
+      "graft/GraftSession.scala"
     assert(flips.isEmpty,
       s"flip session confs through GraftSession.withConf, not by hand: $flips")
+    // One engine install: functions, planner strategies and optimizer
+    // rules reach a session only through GraftSession.install, which
+    // GraftSession.local and the SparkEntry.queries boundary call before
+    // any query is built; the per-call-site registration paths are gone.
+    for (token <- Seq(".experimental", "functionRegistry",
+        "createOrReplaceTempFunction"))
+      assert(sites(token).keySet.subsetOf(Set("graft/GraftSession.scala")),
+        s"$token outside GraftSession.install: ${sites(token)}")
+    // Its definition plus the call in `local`, and the boundary call.
+    assert(sites("install(") ==
+      Map("graft/GraftSession.scala" -> 2, "graft/SparkEntry.scala" -> 1),
+      s"install the engine only in GraftSession.local and at the " +
+        s"SparkEntry boundary: ${sites("install(")}")
+    val text = code.keys.map(f =>
+      f -> Files.readString(root.resolve(f))).toMap
+    for (token <- Seq("GraftExtensions", "registerRewrite",
+        "GraftFunctions.register"))
+      assert(text.forall(!_._2.contains(token)),
+        s"$token is back: ${text.filter(_._2.contains(token)).keySet}")
     // One derived-fixture store: its roots and its ready marker are
     // spelled only in Fixtures.scala, and Bench builds fixtures only
     // through the packs' declared prewarm lists (SparkEntry.fixtures).

@@ -197,6 +197,34 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"), s"WindowExec survived the rewrite:\n$p")
   }
 
+  test("q79 plans TopKPerGroup on a fresh session too: the SparkEntry " +
+    "boundary installs the engine before the query is built") {
+    // newSession() starts without the engine's functions, strategy and
+    // rule, so this plan cannot lean on an install an earlier query left
+    // behind: q79 alone plans what Bench bills after q64.
+    val fresh = spark.newSession()
+    val p = SparkEntry.queries("q79_topk_sketch_reagg")(fresh, sf)
+      .queryExecution.sparkPlan.toString
+    assert(p.contains("TopKPerGroup"), s"rewrite did not fire:\n$p")
+    assert(!p.contains("Window"), s"WindowExec survived the rewrite:\n$p")
+    // All six graft functions resolve in plain SQL on that session.
+    val r = fresh.sql("""
+      SELECT vec_dot(array(CAST(1.5 AS FLOAT)), array(CAST(2.0 AS FLOAT))) AS dot,
+             simhash60(array(CAST(5 AS BIGINT))) AS sh,
+             size(sign_dots16(array_repeat(CAST(1.0 AS FLOAT), 64))) AS n_dots,
+             size(minhash8(array('a b', 'b c'))) AS n_mins,
+             cms_estimate(sk, CAST(7 AS BIGINT)) AS est
+      FROM (SELECT count_min_sketch(CAST(7 AS BIGINT), CAST(0.001 AS DOUBLE),
+                     CAST(0.99 AS DOUBLE), 42) AS sk)""").collect()(0)
+    assert(r.getDouble(0) == 3.0 && !r.isNullAt(1), r)
+    assert(r.getInt(2) == 16 && r.getInt(3) == 8 && r.getLong(4) == 1L, r)
+    val grams = fresh.sql("""
+      SELECT pos, gram FROM (SELECT 'a b c' AS text)
+      LATERAL VIEW pos_ngrams(text, 2) g AS pos, gram""").collect()
+    assert(grams.map(_.getString(1)).toSeq == Seq("a b", "b c"),
+      grams.toSeq)
+  }
+
   test("q44: the distribution-rank family runs as the bucketed " +
     "count-scan closed forms — no per-nation WindowExec sorting a " +
     "nation's every customer; every row_number window partitions on " +

@@ -17,7 +17,6 @@ import graft.SparkSpec
 class WindowTopKRewriteSpec extends SparkSpec {
 
   private lazy val df: DataFrame = {
-    TopK.registerRewrite(spark)
     val sqlc = spark
     import sqlc.implicits._
     // Deliberate ties in v (mod 7) so rank()/dense_rank() semantics
