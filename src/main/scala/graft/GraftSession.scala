@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.plans.{TopKPerGroupStrategy, WindowTopKRewrite}
 
@@ -111,13 +112,52 @@ object GraftSession {
     }
   private val confScope = new Object
 
-  /** Between-query cleanup. Operators that localCheckpoint shared
-    * subtrees (the dedup pack) would otherwise leave their materialized
-    * blocks pinned until a driver GC lets ContextCleaner find them,
-    * taxing every later query's memory budget (round 3: d07's leftovers
-    * roughly doubled the whole post-d07 tail); consumed memory-sink
-    * tables hold a full streaming result in driver memory and
-    * `clearCache` does not touch them. */
+  /** The one way a query pins an intermediate: an eager local checkpoint
+    * of `df`, the only `.localCheckpoint(` in src/main. Plans built on the
+    * result read its blocks instead of re-running `df`, and lineage stops
+    * there. Each call takes one of three postures (CheckpointCensusSpec
+    * counts and classifies the calls per file):
+    *   - a multi-consumer build, read by several legs of ONE query's plan;
+    *   - iterative lineage truncation (d07, s15, q117): state re-fed into
+    *     itself, whose plan would otherwise embed every prior round's;
+    *   - a result that must run while a [[withConf]] scope is in force
+    *     (q59, q77): confs bind at action time, so a lazy plan would run
+    *     under the restored settings.
+    * Loss posture: the blocks live in executor storage with no recompute
+    * path, so losing an executor fails the query, which restarts from
+    * source. Nothing materialized here outlives its query; a table several
+    * queries read, or a job that must survive executor loss, is written
+    * once as parquet instead (`Fixtures.parquet`, Dedup's chunk pairs).
+    * The jobs and RDDs this creates carry the caller's `file:line` as
+    * their call site (`localCheckpoint at Dedup.scala:183`), so stage
+    * names and plan dumps name the operator, not this file. */
+  def materialize(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("callSite.short")
+    new Throwable().getStackTrace
+      .find(f => !Seq(getClass.getName, "org.apache.spark.", "scala.")
+        .exists(f.getClassName.startsWith))
+      .foreach(f => sc.setCallSite(
+        s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    try df.localCheckpoint(true)
+    finally sc.setLocalProperty("callSite.short", prev)
+  }
+
+  /** Unpersists every [[materialize]]d block under `df`'s plan once
+    * nothing reads them (a superseded fixpoint round, or the inputs of a
+    * frame that was itself materialized); a plan that still scans one
+    * fails. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd }.distinct
+      .foreach(_.unpersist(blocking = false))
+
+  /** Between-query cleanup, the one release rule between queries: every
+    * persisted block (a query's [[materialize]]d frames, which would
+    * otherwise stay pinned until a driver GC lets ContextCleaner find
+    * them and tax every later query's memory budget), the catalog cache,
+    * and consumed memory-sink tables (a full streaming result each, in
+    * driver memory, which `clearCache` does not touch). */
   def cleanup(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

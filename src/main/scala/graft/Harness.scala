@@ -20,8 +20,10 @@ import graft.tools.{PartitionInvariance, WindowCensus}
   *                                  stage names carry the operator's call
   *                                  site) and, for streaming queries, every
   *                                  microbatch's durationMs split
-  *   plans <out> <suffix> <q>...    formatted physical plans, no execution:
-  *                                  <out>/<q>_<suffix>.txt
+  *   plans <out> <suffix> <q>...    formatted physical plans,
+  *                                  <out>/<q>_<suffix>.txt; building a
+  *                                  query runs its materialize calls and
+  *                                  drains its streams
   *   census [sf] [mode]             WindowCensus listing; mode = windows
   *                                  (default) | broadcasts | text | col:<tok>
   *   invariance [sf] [settings]     PartitionInvariance sweep (default 1,64);
@@ -152,8 +154,9 @@ object Harness {
       suffix: String, names: Seq[String]): Unit = {
     outDir.mkdirs()
     for (n <- names) {
-      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      val plan = try SparkEntry.queries(n)(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode)
+      finally GraftSession.cleanup(spark)
       java.nio.file.Files.writeString(
         new java.io.File(outDir, s"${n}_$suffix.txt").toPath, plan)
       println(s"[plandump] wrote $n ($suffix): ${plan.linesIterator.size} lines")

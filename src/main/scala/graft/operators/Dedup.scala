@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Fixtures, Prewarm, Q, Tables => T}
+import graft.{Fixtures, GraftSession, Prewarm, Q, Tables => T}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash group-by), MinHash+LSH banded near-dup, SimHash with
@@ -69,10 +69,8 @@ object Dedup {
     * on demand (idempotent, deterministic) so d14/d15 stay
     * standalone-correct; Bench prewarms it so the one-time build is
     * fixture setup, not billed to whichever consumer runs first.
-    * Replaces the r13 `localCheckpoint(true)` posture: executor-local
-    * checkpoint blocks die with their executor, while a parquet fixture
-    * is re-readable under task retry — the property the stated
-    * write-once production posture actually has. */
+    * Stored rather than [[GraftSession.materialize]]d because several
+    * registered queries read it. */
   private[operators] def chunkPairsCached(
       s: SparkSession, d: String): DataFrame =
     Fixtures.parquet(s, chunkPairsPath(d))(chunkPairs(s, d))
@@ -120,8 +118,8 @@ object Dedup {
     * accepted cost here; what it avoids is only a ~24-byte/doc frame. A
     * production corpus would store (doc_id, content_hash) as a
     * write-once derived table at ingest (the p01 funnel posture) and
-    * both sides would read THAT, paying neither the re-scan nor an
-    * executor-lifetime localCheckpoint. */
+    * both sides would read THAT, paying neither the re-scan nor a
+    * materialized copy. */
   private val d01 = Q(
     "d01_dedup_exact",
     (s, d) => {
@@ -181,8 +179,8 @@ object Dedup {
 
   private def lshCandidates(sig: DataFrame): DataFrame = {
     // Tiny (4 short rows per doc) and read by both sides of the candidate
-    // self-join: checkpoint so the md5 minhash passes run exactly once.
-    val bands = lshBands(sig).localCheckpoint(true)
+    // self-join: materialize so the md5 minhash passes run exactly once.
+    val bands = lshBands(sig).transform(GraftSession.materialize)
     val b1 = bands.select(
       col("doc_id").as("id1"),
       col("band_idx"),
@@ -200,7 +198,7 @@ object Dedup {
       .distinct()
   }
 
-  /** Minhash signature frame (`doc_id, h0..h7`) over a checkpointed
+  /** Minhash signature frame (`doc_id, h0..h7`) over a materialized
     * shingle base — the input [[lshCandidates]] bands. */
   private def lshSignatures(s: SparkSession, base: DataFrame): DataFrame = {
     val sigInput = base.withColumn(
@@ -213,11 +211,9 @@ object Dedup {
 
   private def lshScored(s: SparkSession, d: String): DataFrame = {
     // The shingle arrays feed the signature derivation AND both sides of
-    // the verify join: materialize them ONCE (eager localCheckpoint, the
-    // d07 iterate-checkpoint pattern) instead of re-deriving the split +
-    // bigram transform up to 4× across the band/verify self-joins — at
-    // 100 TB you'd write signatures to storage once, never recompute.
-    val base = shingled(s, d).localCheckpoint(true)
+    // the verify join: materialize them ONCE instead of re-deriving the
+    // split + bigram transform up to 4× across the band/verify self-joins.
+    val base = shingled(s, d).transform(GraftSession.materialize)
     // All 8 minhashes in one fused pass over the shingles
     // ([[graft.functions.MinHash8]]): same values as the built-in
     // transform(md5)+substring+array_min chain the oracle mirrors, minus
@@ -371,42 +367,30 @@ object Dedup {
     * list), and iteration stops when a round lowers no label, so
     * correctness holds for any cluster diameter — matching the oracle's
     * exact recursive-CTE fixpoint. Each round is one equi-join + one
-    * aggregate, lineage truncated per round with an eager localCheckpoint
+    * aggregate, lineage truncated per round by materializing its labels
     * — exactly the iterate-checkpoint shape a 100 TB connected-components
     * job uses (without it the plan doubles per iteration). The changed
-    * count that drives termination rides along inside the checkpointed
+    * count that drives termination rides along inside the materialized
     * frame (own label tagged through the min-aggregate), so per round
     * there is exactly one shuffle job plus one cheap scan of the
     * just-materialized in-memory blocks — no extra join against the
-    * previous labels. Superseded checkpoints are unpersisted as soon as
-    * the next round lands: without that, a long bench run accumulates one
+    * previous labels. A superseded snapshot is released as soon as the
+    * next round lands: without that, a long bench run accumulates one
     * label snapshot per round and the resulting storage/GC pressure taxes
-    * every query that runs after this one (the round-3 regression). */
+    * every query that runs after this one. */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    val sc = s.sparkContext
-    def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(true)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def unpersistIds(ids: Set[Int]): Unit =
-      for (id <- ids; rdd <- sc.getPersistentRDDs.get(id))
-        rdd.unpersist(blocking = false)
-    // lshPairs eagerly checkpoints its shingle + band subtrees while
-    // building the pair list; once the pairs themselves are
-    // checkpointed those inputs are dead weight for the whole
-    // iteration — drop them before the loop starts.
-    val beforeLsh = sc.getPersistentRDDs.keySet.toSet
-    val pairsSrc  = lshPairs(s, d).select(col("id1"), col("id2"))
-    val lshIds    = sc.getPersistentRDDs.keySet.toSet -- beforeLsh
-    val pairs = pairsSrc
-      .localCheckpoint(true) // computed once, not once per iteration
-    unpersistIds(lshIds)
+    // lshPairs materializes its shingle and band frames while building
+    // the pair list; once the pairs themselves are materialized those
+    // inputs are dead weight for the whole iteration.
+    val pairsSrc = lshPairs(s, d).select(col("id1"), col("id2"))
+    val pairs = GraftSession.materialize(pairsSrc) // once, not per round
+    GraftSession.release(pairsSrc)
     val edges = pairs
       .select(col("id1").as("src"), col("id2").as("dst"))
       .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-    var (labels, labelIds) = trackedCheckpoint(
-      T.documents(s, d).select(col("doc_id"), col("doc_id").as("lbl")))
+    var labels = T.documents(s, d)
+      .select(col("doc_id"), col("doc_id").as("lbl"))
+      .transform(GraftSession.materialize)
     var changed = 1L
     var rounds  = 0
     // Labels move one hop per round, so the loop must run to the
@@ -419,22 +403,22 @@ object Dedup {
       // Tag each doc's current label through the aggregate: min(lbl) is
       // the new label, min(lbl where own) is the unique previous label,
       // and their inequality is the per-doc changed flag — summed from
-      // the checkpointed blocks without rejoining the previous snapshot.
-      val (next, nextIds) = trackedCheckpoint(
-        labels.select(col("doc_id"), col("lbl"), lit(true).as("own"))
-          .union(propagated)
-          .groupBy(col("doc_id"))
-          .agg(
-            min(col("lbl")).as("lbl"),
-            min(when(col("own"), col("lbl"))).as("prev"))
-          .select(
-            col("doc_id"), col("lbl"),
-            (col("lbl") =!= col("prev")).cast("long").as("chg")))
+      // the materialized blocks without rejoining the previous snapshot.
+      val next = labels
+        .select(col("doc_id"), col("lbl"), lit(true).as("own"))
+        .union(propagated)
+        .groupBy(col("doc_id"))
+        .agg(
+          min(col("lbl")).as("lbl"),
+          min(when(col("own"), col("lbl"))).as("prev"))
+        .select(
+          col("doc_id"), col("lbl"),
+          (col("lbl") =!= col("prev")).cast("long").as("chg"))
+        .transform(GraftSession.materialize)
       changed = next.agg(coalesce(sum(col("chg")), lit(0L)))
         .first().getLong(0)
-      unpersistIds(labelIds)
+      GraftSession.release(labels)
       labels = next.select(col("doc_id"), col("lbl"))
-      labelIds = nextIds
       rounds += 1
     }
     labels.select(col("doc_id"), col("lbl").as("cluster_id"))
@@ -624,14 +608,14 @@ object Dedup {
     (s, d) => {
       val sig = simhashDf(s, d)
       // Both sides of the pigeonhole self-join read the chunk table:
-      // checkpoint it so the signature pass runs once, not twice.
+      // materialize it so the signature pass runs once, not twice.
       val chunks = sig.select(
         col("doc_id"),
         col("simhash"),
         posexplode(array((0 until 4).map(i =>
           shiftright(col("simhash"), 15 * i).bitwiseAND(lit(32767L))): _*))
           .as(Seq("chunk_idx", "chunk_val")))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val c1 = chunks.select(
         col("doc_id").as("id1"),
         col("simhash").as("sig1"),
@@ -692,7 +676,7 @@ object Dedup {
           col("doc_id"),
           graft.functions.GraftFunctions.wordNgrams(s, col("text"), 3).as("tg"))
         .filter(size(col("tg")) >= 1)
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val a = tri
         .select(col("doc_id").as("id1"), col("tg").as("tg1"))
         .withColumn(
@@ -782,12 +766,12 @@ object Dedup {
             s"($band0S) AS band0",
             s"($band1S) AS band1")
         // Both sides of the candidate self-join read the band table:
-        // checkpoint so the signature pass runs once, not twice.
+        // materialize so the signature pass runs once, not twice.
         val bands = sig.select(
           col("vec_id"),
           posexplode(array(col("band0"), col("band1")))
             .as(Seq("band_idx", "band_val")))
-          .localCheckpoint(true)
+          .transform(GraftSession.materialize)
         val cand = bands
           .toDF("id1", "band_idx", "band_val")
           .join(
@@ -913,7 +897,7 @@ object Dedup {
   private val d11 = Q(
     "d11_dedup_editdistance",
     (s, d) => {
-      val base = shingled(s, d).localCheckpoint(true)
+      val base = shingled(s, d).transform(GraftSession.materialize)
       // Plan-pinned spread of the candidate frame (the d12 convention):
       // the levenshtein verify runs at whatever parallelism the distinct
       // exchange's AQE coalescing leaves — a few hundred KB of pairs
@@ -994,17 +978,17 @@ object Dedup {
     "d12_lsh_canopy_audit",
     (s, d) => {
       // K rows, read four times (truth self-join ×2 + the
-      // sample-restricted canopy + the n_docs count): checkpoint so the
+      // sample-restricted canopy + the n_docs count): materialize so the
       // top-K pass over the corpus runs once — and SPREAD the K rows
       // across the session's parallelism first, because TakeOrdered
       // emits ONE partition and a one-partition stream side turns the
       // K² truth join into a single 5 s task (r19 profile: stage wall
       // 5.28 s on 1 task, 31 cores idle) at any cluster size. The
       // shingled base itself is consumed only by this top-K pass now,
-      // so it no longer needs its own checkpoint.
+      // so it is no longer materialized on its own.
       val samp = truthSample(shingled(s, d))
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       // Length-ratio prefilter (lossless): jacc ≤ min/max, so jacc ≥ 1/5
       // REQUIRES 5·min(|A|,|B|) ≥ max(|A|,|B|) — the standard set-size
       // filter every similarity-join runs before paying the intersection.
@@ -1105,12 +1089,12 @@ object Dedup {
           col("n1").cast("long") + col("n2").cast("long") - col("inter").cast("long"))
         // Materialize the scored pair table ONCE: the four threshold
         // branches below otherwise each replay the canopy's
-        // signature+band+verify joins from the checkpointed shingle base
+        // signature+band+verify joins from the materialized shingle base
         // (4× the pack's dominant cost — the sf1 rehearsal billed the
         // recompute at ~4× d02's whole runtime). The pair table is
         // candidate-bounded and 5 numeric columns wide; at 100 TB you'd
         // write scores to storage once and sweep thresholds over THAT.
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       // Threshold points straddle the fixture's bimodal pair mass
       // (near-miss ≈0.9 vs verbatim-dup ≈1.0); 100% means IDENTICAL
       // shingle sets, the exact-dup tier d01 catches by content hash.
@@ -1262,7 +1246,7 @@ object Dedup {
     * keeps the hot hash partial-combined and lets AQE skew-split the
     * probe. Three consumers read the pair table (frequency agg, per-doc
     * rollup, boiler probe) — exactly why it is the stored fixture and
-    * not a per-query recompute or an executor-lifetime localCheckpoint.
+    * not a per-query recompute or a materialized frame.
     * Document text never leaves the map side — every shuffle row is
     * (doc_id, 128-bit hash, count). */
   private val d15 = Q(
@@ -1375,7 +1359,7 @@ object Dedup {
     * each), the corpus scan is map-only through both joins, and the only
     * corpus-keyed shuffle is the argmin groupBy(vec_id) (map-side
     * combined, ≤1 row per vector reaches the wire). The assigned frame
-    * is materialized ONCE (localCheckpoint — d07's discipline): the
+    * is materialized ONCE ([[GraftSession.materialize]]): the
     * exemplar selection and the pruning pass both read the same blocks,
     * never a second corpus scan, and the exemplar VECTOR rides the
     * argmin struct so no join back to the corpus is needed. The report
@@ -1400,7 +1384,7 @@ object Dedup {
         .agg(min(struct(col("dist"), col("cid"), col("embedding"))).as("m"))
         .select(col("vec_id"), col("m.cid").as("cid"),
           col("m.embedding").as("embedding"), col("m.dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val exv = assigned.groupBy(col("cid"))
         .agg(min(struct(col("dist"), col("vec_id"), col("embedding")))
           .as("x"))
@@ -1687,7 +1671,7 @@ object Dedup {
   private val d19 = Q(
     "d19_incremental_dedup",
     (s, d) => {
-      val base = sideTagged(s, d).localCheckpoint(true)
+      val base = sideTagged(s, d).transform(GraftSession.materialize)
       val corp  = base.filter(col("side") === 0).select(col("doc_id"), col("sh"))
       val delta = base.filter(col("side") === 1).select(col("doc_id"), col("sh"))
       val cand = lshBands(lshSignatures(s, delta))

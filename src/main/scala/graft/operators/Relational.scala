@@ -1693,18 +1693,15 @@ object Relational {
     * ≥ 10 GB), so the query plans and RUNS under
     * applicationSideScanSizeThreshold=0 with broadcast disabled — the
     * exact configuration a warehouse-scale deployment hits naturally —
-    * and materializes inside the conf scope (runtime confs bind at
-    * action time, not DataFrame construction, so the snapshot is what
-    * the oracle compares). The flip runs inside
-    * [[graft.GraftSession.withConf]], which serializes it and restores
-    * both keys. PlanAuditSpec asserts might_contain lands on the probe
+    * and is materialized inside that [[graft.GraftSession.withConf]]
+    * scope. PlanAuditSpec asserts might_contain lands on the probe
     * scan. */
   private val q59 = Q(
     "q59_bloom_semijoin",
     (s, d) => GraftSession.withConf(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0"
-    )(q59Inner(s, d).localCheckpoint(true)),
+    )(q59Inner(s, d).transform(GraftSession.materialize)),
     Some("""
       SELECT o_orderpriority,
              count(*) AS n_lines,
@@ -2443,7 +2440,7 @@ object Relational {
           sum(when(col("parsed.k").isNull, 1L).otherwise(0L)).as("n_bad"),
           sum(col("parsed.k")).cast("long").as("sum_k"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
+        .transform(GraftSession.materialize)
     },
     Some("""
       WITH mangled AS (
@@ -3846,7 +3843,7 @@ object Relational {
     * tables round 9 un-pinned). The corpus is read ONCE: the session
     * type-sets collapse to their power-set histogram (groupBy the sorted
     * set itself — at most 2^|event_types| rows), which is eagerly
-    * localCheckpoint'ed (d12's shared-stage convention) so the three
+    * materialized (d12's shared-stage convention) so the three
     * consumers — pairs, singles, total — derive from the tiny histogram
     * rather than re-running the sessionization pass each; plan-asserted:
     * the final plan scans no parquet at all. The histogram trick assumes
@@ -3884,7 +3881,7 @@ object Relational {
   private val q109 = Q(
     "q109_basket_lift",
     (s, d) => {
-      val tsets = basketTypeSets(s, d).localCheckpoint(true)
+      val tsets = basketTypeSets(s, d).transform(GraftSession.materialize)
       val pairs = tsets
         .select(col("n_sets"), explode(expr(
           """flatten(transform(tset, (x, i) ->
@@ -4414,7 +4411,7 @@ object Relational {
     * the rank vector is broadcast-sized by construction (the node
     * domain is the event taxonomy). For a graph whose NODES are
     * corpus-scaled (user→user), the same loop shuffles rank⊳edges on
-    * node id per iteration with a localCheckpoint per round — d07's
+    * node id per iteration, materialized per round — d07's
     * discipline; the per-round plan here is already that join. */
   private val q117 = Q(
     "q117_pagerank",
@@ -4422,8 +4419,8 @@ object Relational {
       val seqW = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val ev = T.events(s, d)
-      // The aggregated graph is |types|²-row tiny; one eager
-      // localCheckpoint (d07's iterate-checkpoint discipline) makes each
+      // The aggregated graph is |types|²-row tiny; materializing it
+      // (d07's iterate-checkpoint discipline) makes each
       // unrolled iteration a join against materialized blocks instead of
       // replaying the corpus-scale lag window 4× in one plan.
       val trans = ev
@@ -4432,12 +4429,12 @@ object Relational {
         .select(col("prev"), col("event_type").as("curr"))
         .groupBy(col("prev"), col("curr"))
         .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val edges = trans
         .withColumn("outw", sum(col("w")).over(Window.partitionBy(col("prev"))))
       val nodes = ev.select(col("event_type").as("node")).distinct()
         .withColumn("k", count(lit(1)).over(Window.partitionBy()))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       var ranks = nodes.select(col("node"), expr("1000000 div k").as("rank"))
       for (_ <- 1 to 4) {
         val contrib = edges

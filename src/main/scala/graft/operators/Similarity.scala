@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables => T}
+import graft.{GraftSession, Q, Tables => T}
 import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over the embedding column
@@ -436,17 +436,14 @@ object Similarity {
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val e = T.embeddings(s, d).select(col("vec_id"), col("embedding"))
     // Both centroid frames are k = 8 rows read by MANY consumers (the
-    // E-step broadcasts, the shift join, s09's quantizer): checkpointed
+    // E-step broadcasts, the shift join, s09's quantizer): materialized
     // (r19), or every consumer re-runs the seed TakeOrdered scan and —
-    // far worse — ncent's whole E0 cross-join + M-step subtree. Before
-    // the checkpoints s07's physical plan carried the Lloyd subtree
-    // 4× (670 formatted-plan lines; 2.9-4.3 s billed); after, the
-    // corpus is cross-joined once per E-step pass and the plan is
-    // ~1/3 the size.
+    // far worse — ncent's whole E0 cross-join + M-step subtree (s07's
+    // plan carried the Lloyd subtree 4×).
     val cent0 = e.orderBy(col("vec_id")).limit(8)
       .select(col("vec_id").as("cid"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
-      .localCheckpoint(true)
+      .transform(GraftSession.materialize)
     // E-step 0, keeping the vector for the M-step: min over a struct
     // whose (dist, cid) prefix decides before the rode-along embedding
     // is ever compared.
@@ -468,7 +465,7 @@ object Similarity {
       .groupBy(col("cid"))
       .agg(array_sort(collect_list(struct(col("i"), col("dm")))).as("ps"))
       .select(col("cid"), expr("transform(ps, q -> q.dm)").as("cvec"))
-      .localCheckpoint(true)
+      .transform(GraftSession.materialize)
     (cent0, ncent)
   }
 
@@ -482,7 +479,7 @@ object Similarity {
       val tagged = cent0.withColumn("rnd", lit(0))
         .unionByName(ncent.withColumn("rnd", lit(1)))
       // Per-vector movement frame, read by BOTH rollups (s0 by cid0 and
-      // s1 by cid1): checkpointed (r19) so the corpus × 16-centroid
+      // s1 by cid1): materialized (r19) so the corpus × 16-centroid
       // E-step aggregate runs once, not once per rollup.
       val mv = e.crossJoin(broadcast(tagged))
         .select(col("vec_id"), col("rnd"), col("cid"), dist2.as("dist"))
@@ -495,7 +492,7 @@ object Similarity {
         .select(
           col("m0.cid").as("cid0"), col("m0.dist").as("dist0"),
           col("m1.cid").as("cid1"), col("m1.dist").as("dist1"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val ppm0 = floor(col("dist0") * lit(1000000)).cast("long")
       val ppm1 = floor(col("dist1") * lit(1000000)).cast("long")
       val s0 = mv.groupBy(col("cid0").as("cid"))
@@ -1247,7 +1244,7 @@ object Similarity {
     *
     * Scale shape (100 TB): the corpus-sized work is exactly s01's
     * bounded-heap top-20 (broadcast query, TakeOrderedAndProject);
-    * everything after runs on the checkpointed 20-row candidate set —
+    * everything after runs on the materialized 20-row candidate set —
     * the 20×20 pair grid and each round's argmax are driver-free
     * constant-size jobs, the textbook two-stage retrieve-then-rerank
     * split. */
@@ -1262,7 +1259,7 @@ object Similarity {
           round(dot(s, col("embedding"), col("qv")), 6).as("rel"))
         .orderBy(col("rel").desc, col("vec_id"))
         .limit(20)
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val a = cands.select(col("vec_id").as("ai"),
         col("embedding").as("av"))
       val b = cands.select(col("vec_id").as("bi"),
@@ -1270,7 +1267,7 @@ object Similarity {
       val sims = a.join(broadcast(b), col("ai") =!= col("bi"))
         .select(col("ai"), col("bi"),
           round(dot(s, col("av"), col("bv")), 6).as("sim"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       var selected = cands
         .orderBy(col("rel").desc, col("vec_id"))
         .limit(1)
@@ -1289,7 +1286,7 @@ object Similarity {
             (col("rel") - col("maxsim")).as("score"))
           .orderBy(col("score").desc, col("vec_id"))
           .limit(1)
-        selected = selected.unionByName(pick).localCheckpoint(true)
+        selected = selected.unionByName(pick).transform(GraftSession.materialize)
       }
       selected
         .select(col("rank"), col("vec_id"), col("rel"),
@@ -1367,7 +1364,7 @@ object Similarity {
         .select(
           col("vec_id"), col("erank"),
           (lit(11) - col("erank")).as("rel"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val idcg = exact
         .agg(sum(col("rel").cast("double") / log2(col("erank") + 1))
           .as("idcg_raw"))
@@ -1519,27 +1516,15 @@ object Similarity {
         .groupBy(col("vec_id"), col("m"), col("code"))
         .agg(round(sum(col("diff") * col("diff")), 9).as("d2"))
       // n×M assignment rows read by BOTH the dims join and the
-      // dist_before rollup: checkpointed (r19), or each consumer re-runs
+      // dist_before rollup: materialized (r19), or each consumer re-runs
       // the n×M×k distance expansion + argmin chain (the query's
       // dominant cost) from scratch.
-      //
-      // Size/loss posture (r20, the census's largest eager cut): the
-      // frame is n×M SHORT rows (two longs, a byte-ranged code, a
-      // double — ~40 B ≈ n×M×40 bytes; 0.3 MB at sf0.1, ~3 GB per 10⁹
-      // vectors at M=4 — executor-storage-sized at any realistic n,
-      // never the raw vectors). localCheckpoint blocks have NO
-      // recompute path: an executor loss mid-query fails the query,
-      // which restarts from source — acceptable for a single query's
-      // internal build. A deployment training PQ codebooks as a
-      // long-running JOB should write this assignment table to
-      // reliable storage (the chunk-pair stored-parquet convention)
-      // instead, trading one parquet round-trip for restartability.
       val codes = dist
         .groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("d2"), col("code"))).as("best"))
         .select(col("vec_id"), col("m"),
           col("best.code").as("code"), col("best.d2").as("d2b"))
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val dims = corpus
         .join(codes.select(col("vec_id"), col("m"), col("code")),
           Seq("vec_id", "m"))

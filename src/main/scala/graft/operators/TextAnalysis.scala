@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables => T}
+import graft.{GraftSession, Q, Tables => T}
 
 /** Text-analysis operators over the documents table: language-ID
   * (stopword/n-gram heuristic), quality scoring, token counting
@@ -987,7 +987,7 @@ object TextAnalysis {
     * Scale shape (100 TB): the corpus collapses map-side to the
     * DISTINCT (source, word) grid — vocabulary-bounded, like t16's rank
     * shuffle, text never survives the explode — and the grid is
-    * materialized ONCE (eager localCheckpoint, d07's discipline) so its
+    * materialized ONCE ([[GraftSession.materialize]]) so its
     * three consumers (sizes, both join sides) never re-scan the corpus;
     * the pair join is an equi-join on word over that grid (k sources ⇒
     * ≤ k rows per word; never a corpus self-join), then a k²-row
@@ -998,7 +998,7 @@ object TextAnalysis {
       val grid = T.documents(s, d)
         .select(col("source"), explode(split(col("text"), " ")).as("word"))
         .distinct()
-        .localCheckpoint(true)
+        .transform(GraftSession.materialize)
       val sizes = grid.groupBy(col("source"))
         .agg(count(lit(1)).as("n_words"))
       val a = grid.toDF("src_a", "word")
@@ -1062,17 +1062,7 @@ object TextAnalysis {
     *
     * Scale shape (100 TB): the corpus pays ONE (source, term) explode +
     * rollup with map-side combine into the grid, materialized once
-    * (eager localCheckpoint — four consumers, one build). Failure
-    * posture, stated deliberately: localCheckpoint blocks die with
-    * their executor, so losing one mid-query fails THIS query, which
-    * then restarts from the corpus — acceptable here because the grid
-    * is consumed only within this one query's plan (all four consumers
-    * finish or the query does), unlike the cross-QUERY chunk-pair /
-    * band-index tables (Dedup.scala), which multiple registered queries
-    * read and which therefore use the write-once stored-parquet
-    * convention. A deployment that runs this report repeatedly should
-    * promote the grid to that stored convention; the query's own
-    * correctness never depends on block survival. The grid is
+    * (four consumers, one build). The grid is
     * vocabulary-SIZED, not vocabulary-"bounded-small": at 100 TB the
     * distinct-term count is billions (URLs, typos, code tokens), so
     * none of the rates may run as a window over it — `sum OVER
@@ -1095,7 +1085,7 @@ object TextAnalysis {
         .select(col("source"), explode(split(col("text"), " ")).as("term"))
         .groupBy(col("source"), col("term"))
         .agg(count(lit(1)).as("f"))
-        .localCheckpoint(true) // computed once, four consumers
+        .transform(GraftSession.materialize) // computed once, four consumers
       val srcTot  = grid.groupBy(col("source")).agg(sum(col("f")).as("t_src"))
       val termTot = grid.groupBy(col("term")).agg(sum(col("f")).as("f_term"))
       val allTot  = grid.agg(sum(col("f")).as("t_all"))

@@ -14,9 +14,9 @@ object WindowCensus {
 
   /** (query name, findings) for every non-streaming registered query
     * whose physical plan (`executed` = after AQE and codegen insertion,
-    * else the pre-AQE sparkPlan) `find` reports on. Unpersists between
+    * else the pre-AQE sparkPlan) `find` reports on. Cleans up between
     * queries so the enumeration doesn't pin the dedup pack's
-    * checkpointed subtrees into the shared session. */
+    * materialized subtrees into the shared session. */
   private def sweep(spark: SparkSession, sf: String, executed: Boolean)(
       find: String => Option[List[String]]): Seq[(String, List[String])] =
     graft.SparkEntry.queries.keys.toSeq.sorted
@@ -24,8 +24,7 @@ object WindowCensus {
       .flatMap { name =>
         val qe = graft.SparkEntry.queries(name)(spark, sf).queryExecution
         val p = (if (executed) qe.executedPlan else qe.sparkPlan).toString
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.cleanup(spark)
         find(p).map(name -> _)
       }
 

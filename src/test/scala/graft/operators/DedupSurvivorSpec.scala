@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Cross-query invariants between d07 (cluster assignment) and d10
   * (survivor selection) that the per-query DuckDB oracle cannot see,
@@ -52,6 +52,14 @@ class DedupSurvivorSpec extends SparkSpec {
     // The fixture must exercise a non-trivial distribution (singletons
     // AND at least one multi-member size), or the report is vacuous.
     assert(got.length >= 2, "degenerate all-one-size histogram")
+  }
+
+  test("building d07 leaves only its pair list and final labels " +
+    "persisted: every superseded materialized frame is released") {
+    GraftSession.cleanup(spark)
+    run("d07_dedup_clusters")
+    assert(spark.sparkContext.getPersistentRDDs.size === 2)
+    GraftSession.cleanup(spark)
   }
 
   test("a blanket unpersist between queries (the driver's Verify/Bench " +

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Automated plan-quality guards: the properties that make these
   * operators scale are asserted, not just observed once in a bench run —
@@ -1043,12 +1043,11 @@ class PlanAuditSpec extends SparkSpec {
       .flatMap { name =>
         val p = SparkEntry.queries(name)(spark, sf)
           .queryExecution.sparkPlan.toString
-        // The dedup builders eagerly checkpoint their shared subtrees at
-        // DataFrame-construction time; drop those blocks per query so
-        // this sweep doesn't inflate the shared session's storage for
-        // every suite that runs after it.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // The dedup builders materialize their shared subtrees at
+        // DataFrame-construction time; clean up per query so this sweep
+        // doesn't inflate the shared session's storage for every suite
+        // that runs after it.
+        GraftSession.cleanup(spark)
         if (p.contains("CartesianProduct") ||
           p.contains("BroadcastNestedLoopJoin")) Some(name)
         else None
