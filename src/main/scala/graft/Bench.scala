@@ -32,8 +32,7 @@ object Bench {
     // Every unbilled step (table touch, fixture prewarm, JIT warmup run)
     // records (name, wall seconds, error) here and rides the artifact as a
     // `warmups` map beside `queries`. Rationale: stderr does not survive
-    // into the driver's BENCH_rN.json (stdout tail only), so a
-    // driver-basis spike like r10's d02 at 19.9 s vs 3.4 s committed was
+    // into a bench artifact captured from stdout, so a billed spike is
     // unattributable from the artifact alone — with the warmup wall times
     // IN the artifact, either the warmup visibly ran (spike = machine
     // load/JIT landed in the billed run anyway) or the warmup itself was
@@ -181,9 +180,8 @@ object Bench {
       (name, first, again)
     }
     // 0.1 ms precision (plain decimal, no scientific notation): full
-    // double precision made the one-line JSON so long the driver's
-    // capture head-truncated it — BENCH_r06 recorded "parsed": null and
-    // the first 39 query timings were invisible to the judge.
+    // double precision makes the one-line JSON long enough that a capture
+    // of the output's head truncates it, and the record no longer parses.
     def fmt(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
     // A failed query is a MARKED failure, never a timing: the r9 driver
     // artifact billed 64 analysis failures at 0.06-0.43 s each and the

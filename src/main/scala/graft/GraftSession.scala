@@ -169,12 +169,18 @@ object GraftSession {
     * which materializes every result row (count() would let limit-only
     * plans short-circuit and hide result-production cost), then
     * [[cleanup]] — also when the query throws. Returns the wall seconds
-    * of the write alone. */
+    * of the write alone. The write's jobs carry `name` as their call
+    * site, which Spark copies to the threads that submit AQE query
+    * stages, so every stage of the write is named after the query. */
   def billed(spark: SparkSession, name: String, sfDir: String): Double = {
+    val sc = spark.sparkContext
     val t0 = System.nanoTime()
     try {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val prev = sc.getLocalProperty("callSite.short")
+      sc.setCallSite(name)
+      try df.write.format("noop").mode("overwrite").save()
+      finally sc.setLocalProperty("callSite.short", prev)
       (System.nanoTime() - t0) / 1e9
     } finally cleanup(spark)
   }

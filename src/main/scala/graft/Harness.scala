@@ -28,7 +28,6 @@ import graft.tools.{PartitionInvariance, WindowCensus}
   *                                  (default) | broadcasts | text | col:<tok>
   *   invariance [sf] [settings]     PartitionInvariance sweep (default 1,64);
   *                                  exits 1 on any divergence or failure
-  *   rehearse <src> <out> [factor]  ScaleRehearsal fixture build (default 10)
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_CPUS=<n> \
   *   sbt "runMain graft.Harness <subcommand> <args...>"
@@ -72,13 +71,10 @@ object Harness {
       case "invariance" :: _ => withSession { s =>
         PartitionInvariance.run(s, sf, args.lift(2).getOrElse("1,64")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq) }
-      case "rehearse" :: src :: out :: rest => withSession { s =>
-        ScaleRehearsal.build(s, src, out, rest.headOption.fold(10)(_.toInt))
-        true }
       case _ =>
         System.err.println("usage: graft.Harness profile <q>... | " +
           "plans <out> <suffix> <q>... | census [sf] [mode] | " +
-          "invariance [sf] [settings] | rehearse <src> <out> [factor]")
+          "invariance [sf] [settings]")
         sys.exit(2)
     }
     if (!ok) sys.exit(1)

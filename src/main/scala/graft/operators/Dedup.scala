@@ -95,6 +95,19 @@ object Dedup {
         graft.functions.GraftFunctions.wordNgrams(s, col("text"), 2).as("sh"))
       .filter(size(col("sh")) >= 1)
 
+  /** doc_id + distinct word-trigram array `tg` of `documents`, for the
+    * documents that have one (≥3 tokens ⇔ ≥1 trigram): d05's block join,
+    * d09's decontamination probe and the stage frame's contamination leg.
+    * One fused pass ([[graft.functions.WordNgrams]]), the same strings as
+    * the split → transform(concat_ws) → array_distinct chain the oracles
+    * mirror. */
+  private[operators] def trigrams(s: SparkSession, documents: DataFrame): DataFrame =
+    documents
+      .select(
+        col("doc_id"),
+        graft.functions.GraftFunctions.wordNgrams(s, col("text"), 3).as("tg"))
+      .filter(size(col("tg")) >= 1)
+
   private val shingledSql =
     """base AS (
       |  SELECT doc_id,
@@ -539,11 +552,11 @@ object Dedup {
     * (order-independent, so the engines' differing distinct-ordering
     * cannot matter).
     *
-    * Round 1 used a 16-bit signature, whose 4-bit pigeonhole chunks gave
-    * only 64 distinct blocking keys → d04 candidates grew ~n²/16
-    * (VERDICT.md). 60 bits / 4 chunks of 15 bits keeps the exact
-    * pigeonhole guarantee for Hamming ≤ 3 while giving 32 768 values per
-    * chunk — candidate growth stays near-linear until block sizes collide.
+    * A 16-bit signature's 4-bit pigeonhole chunks give only 64 distinct
+    * blocking keys, so d04's candidates would grow ~n²/16. 60 bits / 4
+    * chunks of 15 bits keeps the exact pigeonhole guarantee for
+    * Hamming ≤ 3 while giving 32 768 values per chunk — candidate growth
+    * stays near-linear until block sizes collide.
     */
   private def wordValTerms(posFn: Int => String): String =
     (0 until 15)
@@ -652,30 +665,22 @@ object Dedup {
     * pairs within 25 doc_ids are compared — the bounded O(k·n) variant
     * (LSH above is the unbounded-scale path).
     *
-    * Plan shape: round 1 expressed the window as a bare range predicate,
-    * which Spark can only plan as a BroadcastNestedLoopJoin over all n²
-    * pairs (543 s at sf0.1, VERDICT.md). Here the window is re-expressed
-    * as an EQUI-join on block = id div 25: the left side explodes each doc
-    * to its own block and the next one, the right side keeps its single
-    * block, and the original range predicate filters post-join. Every
-    * qualifying pair (id1 < id2 ≤ id1+25) spans at most one block
-    * boundary, so it matches on exactly one of the two exploded rows —
-    * identical result set, O(n) candidate pairs, shuffle-hash-joinable at
-    * any scale. */
+    * Plan shape: Spark can only plan the window as a bare range predicate
+    * with a BroadcastNestedLoopJoin over all n² pairs. Here the window is
+    * re-expressed as an EQUI-join on block = id div 25: the left side
+    * explodes each doc to its own block and the next one, the right side
+    * keeps its single block, and the original range predicate filters
+    * post-join. Every qualifying pair (id1 < id2 ≤ id1+25) spans at most
+    * one block boundary, so it matches on exactly one of the two exploded
+    * rows — identical result set, O(n) candidate pairs,
+    * shuffle-hash-joinable at any scale. */
   private val d05 = Q(
     "d05_dedup_ngram_jaccard",
     (s, d) => {
       // Both sides of the block self-join read the trigram table:
       // materialize it once instead of re-running the split + trigram
       // transform per side.
-      // Fused trigram pass (WordNgrams) — same strings as the split →
-      // transform(concat_ws) → array_distinct chain the oracle mirrors;
-      // ≥3 tokens ⇔ ≥1 trigram, so the size guard keeps the same docs.
-      val tri = docs(s, d)
-        .select(
-          col("doc_id"),
-          graft.functions.GraftFunctions.wordNgrams(s, col("text"), 3).as("tg"))
-        .filter(size(col("tg")) >= 1)
+      val tri = trigrams(s, docs(s, d))
         .transform(GraftSession.materialize)
       val a = tri
         .select(col("doc_id").as("id1"), col("tg").as("tg1"))
@@ -730,10 +735,9 @@ object Dedup {
     * 16-bit signature, banded 2×8 bits; pairs sharing a band are scored
     * with the exact dot product (vectors are L2-normalized, FIXTURES.md).
     *
-    * Round 1 brute-forced all n² pairs (90 s at 2 000 vectors — the
-    * textbook scale-killer, VERDICT.md). No exact-equivalent blocking
-    * exists for this data: the fixture embeddings are near-isotropic noise
-    * and `label` is uncorrelated with similarity (measured at sf0.01: 92
+    * Brute-forcing all n² pairs is the textbook scale-killer. No
+    * exact-equivalent blocking exists for this data: the fixture
+    * embeddings are near-isotropic noise and `label` is uncorrelated with similarity (measured at sf0.01: 92
     * of the brute-force top-100 pairs are cross-label), so ANY
     * sub-quadratic method — label cells, MinHash, sign-LSH — returns a
     * different (approximate) top-100. The honest scalable operator is
@@ -840,11 +844,7 @@ object Dedup {
   private val d09 = Q(
     "d09_decontamination",
     (s, d) => {
-      val tri = docs(s, d)
-        .select(
-          col("doc_id"),
-          graft.functions.GraftFunctions.wordNgrams(s, col("text"), 3).as("tg"))
-        .filter(size(col("tg")) >= 1)
+      val tri = trigrams(s, docs(s, d))
         .select(col("doc_id"), explode(col("tg")).as("gram"))
       val probe = tri.filter(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("probe_id"), col("gram"))
@@ -1409,22 +1409,14 @@ object Dedup {
             .as("sum_dropped_ids"))
         .orderBy(col("cid"))
     },
-    Some("""
+    Some(s"""
       WITH e AS (SELECT vec_id, embedding FROM embeddings),
       cent AS (
         SELECT vec_id AS cid, embedding AS cvec
         FROM e ORDER BY vec_id LIMIT 8),
       pairs AS (
         SELECT e.vec_id, c.cid, e.embedding,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> CAST(c.cvec[i] AS DOUBLE)
-                    * CAST(c.cvec[i] AS DOUBLE)))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(c.cvec[i] AS DOUBLE))) AS dist
+               ${Similarity.floatL2Sql}
         FROM e CROSS JOIN cent c),
       assigned AS (
         SELECT vec_id, cid, embedding, dist FROM (

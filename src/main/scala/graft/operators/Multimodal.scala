@@ -668,6 +668,23 @@ object Multimodal {
     "d_wide_16_9"      -> 1777777L,
     "e_tall_9_16"      -> 562500L)
 
+  /** Every video frame with its signature `jump` from the previous frame
+    * and its `scene_id`: a scene starts at each document's first frame
+    * and at every jump over 150 (m10, m11). */
+  private def scenes(
+      s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
+    videoFrames(s, d)
+      .withColumn("jump",
+        abs(col("frame_sig") - lag(col("frame_sig"), 1).over(w)))
+      .withColumn("boundary",
+        when(col("jump") > 150L, 1L).otherwise(0L))
+      .withColumn("scene_id",
+        sum(col("boundary")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
   /** Scene-change detection — shot-boundary segmentation over m03's
     * SHARED frame derivation: a cut is where consecutive frames
     * DIFFER sharply, measured as the absolute jump in the exact integer
@@ -686,15 +703,7 @@ object Multimodal {
   private val m10 = Q(
     "m10_scene_detect",
     (s, d) => {
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      videoFrames(s, d)
-        .withColumn("jump",
-          abs(col("frame_sig") - lag(col("frame_sig"), 1).over(w)))
-        .withColumn("boundary",
-          when(col("jump") > 150L, 1L).otherwise(0L))
-        .withColumn("scene_id",
-          sum(col("boundary")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      scenes(s, d)
         .groupBy(col("doc_id"), col("scene_id"))
         .agg(count(lit(1)).as("scene_len"), max(col("jump")).as("mj"))
         .groupBy(col("doc_id"))
@@ -749,15 +758,7 @@ object Multimodal {
   private val m11 = Q(
     "m11_keyframes",
     (s, d) => {
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      videoFrames(s, d)
-        .withColumn("jump",
-          abs(col("frame_sig") - lag(col("frame_sig"), 1).over(w)))
-        .withColumn("boundary",
-          when(col("jump") > 150L, 1L).otherwise(0L))
-        .withColumn("scene_id",
-          sum(col("boundary")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      scenes(s, d)
         .groupBy(col("doc_id"), col("scene_id"))
         .agg(
           min(struct(col("frame_idx"), col("frame_sig"))).as("kf"),

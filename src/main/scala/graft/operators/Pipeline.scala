@@ -59,11 +59,7 @@ object Pipeline {
       .select(col("doc_id"), lit(true).as("dup_dropped"))
     // d09's contaminated set: ≥ 3 distinct trigrams shared with the
     // held-out probe slice (doc_id % 100 = 7).
-    val tri = T.documents(s, d)
-      .select(
-        col("doc_id"),
-        graft.functions.GraftFunctions.wordNgrams(s, col("text"), 3).as("tg"))
-      .filter(size(col("tg")) >= 1)
+    val tri = Dedup.trigrams(s, T.documents(s, d))
       .select(col("doc_id"), explode(col("tg")).as("gram"))
     val probe = tri.filter(col("doc_id") % 100 === 7)
       .select(col("gram")).distinct()
@@ -104,6 +100,70 @@ object Pipeline {
       : org.apache.spark.sql.DataFrame =
     Fixtures.parquet(s, stageFramePath(d))(stageFrame(s, d))
 
+  /** [[stageFrame]]'s oracle CTEs in DuckDB SQL: d10's cluster ranks
+    * (`rankedq`), d09's probe-trigram contamination (`contamq`) and `mq`,
+    * each document's word stats carrying the `keep` columns (a
+    * comma-terminated list, or empty). */
+  private def stageCtes(keep: String): String = s"""
+      WITH RECURSIVE ${Dedup.clustersCteSql},
+      rankedq AS (
+        SELECT c.cluster_id, c.doc_id, d.n_chars,
+               row_number() OVER (PARTITION BY c.cluster_id
+                 ORDER BY d.n_chars DESC, c.doc_id) AS rk
+        FROM clusters c JOIN documents d USING (doc_id)),
+      triq AS (
+        SELECT doc_id,
+               unnest(list_distinct(list_transform(range(1, len(ws) - 1),
+                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS gram
+        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+              WHERE len(string_split(text, ' ')) >= 3)),
+      contamq AS (
+        SELECT c.doc_id
+        FROM (SELECT doc_id, gram FROM triq WHERE doc_id % 100 <> 7) c
+        JOIN (SELECT DISTINCT gram FROM triq WHERE doc_id % 100 = 7) p
+          USING (gram)
+        GROUP BY c.doc_id
+        HAVING count(DISTINCT c.gram) >= 3),
+      mq AS (
+        SELECT doc_id, ${keep}n_chars,
+               CAST(len(ws) AS BIGINT) AS nw,
+               CAST(n_chars - (len(ws) - 1) AS BIGINT) AS m,
+               CAST(len(list_filter(ws, w -> w IN ${TextAnalysis.inList(TextAnalysis.stopEn)})) AS BIGINT) AS nstop
+        FROM (SELECT doc_id, ${keep}n_chars, string_split(text, ' ') AS ws
+              FROM documents))"""
+
+  /** The t02 quality score and the dedup and contamination flags of an
+    * `mq` row, as select-list items over [[stageCtes]]. */
+  private val stageFlagsSql = """(2 * (8000 * least(nw, 50) * 8 * nw + 2400000 * nstop
+                     + 300000 * least(m, 8 * nw)) + 8 * nw)
+                 // (2 * 8 * nw) AS score,
+               doc_id IN (SELECT doc_id FROM rankedq WHERE rk > 1)
+                 AS dup_dropped,
+               doc_id IN (SELECT doc_id FROM contamq) AS contaminated"""
+
+  /** p02's and p04's packing CTEs over [[stageCtes]]: the stage-s5
+    * survivors (`sv`) and their per-language exclusive token prefix
+    * (`pk.prior`), carrying the `keep` columns. */
+  private def packedCtes(keep: String): String = s"""sv AS (
+        SELECT doc_id, lang, ${keep}nw AS toks
+        FROM (
+          SELECT doc_id, lang, ${keep}nw,
+                 $stageFlagsSql
+          FROM mq) f
+        WHERE score >= 400000 AND nw >= 30 AND NOT dup_dropped
+          AND NOT contaminated AND doc_id % 100 <> 7),
+      pk AS (
+        SELECT doc_id, lang, ${keep}toks,
+               COALESCE(sum(toks) OVER (PARTITION BY lang ORDER BY doc_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                 AS prior
+        FROM sv)"""
+
+  /** A document's p02 shard in DuckDB SQL: its id's first md5 nibble. */
+  private val shardSql = """CAST(strpos('0123456789abcdef',
+                           substr(md5(CAST(doc_id AS VARCHAR)), 1, 1))
+                    AS BIGINT) - 1"""
+
   private val p01 = Q(
     "p01_pipeline_funnel",
     (s, d) => {
@@ -133,40 +193,10 @@ object Pipeline {
         .orderBy(col("stage_id"))
     },
     Some(s"""
-      WITH RECURSIVE ${Dedup.clustersCteSql},
-      rankedq AS (
-        SELECT c.cluster_id, c.doc_id, d.n_chars,
-               row_number() OVER (PARTITION BY c.cluster_id
-                 ORDER BY d.n_chars DESC, c.doc_id) AS rk
-        FROM clusters c JOIN documents d USING (doc_id)),
-      triq AS (
-        SELECT doc_id,
-               unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS gram
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-              WHERE len(string_split(text, ' ')) >= 3)),
-      contamq AS (
-        SELECT c.doc_id
-        FROM (SELECT doc_id, gram FROM triq WHERE doc_id % 100 <> 7) c
-        JOIN (SELECT DISTINCT gram FROM triq WHERE doc_id % 100 = 7) p
-          USING (gram)
-        GROUP BY c.doc_id
-        HAVING count(DISTINCT c.gram) >= 3),
-      mq AS (
-        SELECT doc_id, n_chars,
-               CAST(len(ws) AS BIGINT) AS nw,
-               CAST(n_chars - (len(ws) - 1) AS BIGINT) AS m,
-               CAST(len(list_filter(ws, w -> w IN ${TextAnalysis.inList(TextAnalysis.stopEn)})) AS BIGINT) AS nstop
-        FROM (SELECT doc_id, n_chars, string_split(text, ' ') AS ws
-              FROM documents)),
+      ${stageCtes("")},
       flq AS (
         SELECT doc_id, n_chars, nw,
-               (2 * (8000 * least(nw, 50) * 8 * nw + 2400000 * nstop
-                     + 300000 * least(m, 8 * nw)) + 8 * nw)
-                 // (2 * 8 * nw) AS score,
-               doc_id IN (SELECT doc_id FROM rankedq WHERE rk > 1)
-                 AS dup_dropped,
-               doc_id IN (SELECT doc_id FROM contamq) AS contaminated
+               $stageFlagsSql
         FROM mq),
       stq AS (
         SELECT doc_id, n_chars,
@@ -267,58 +297,13 @@ object Pipeline {
         .orderBy(col("shard"))
     },
     Some(s"""
-      WITH RECURSIVE ${Dedup.clustersCteSql},
-      rankedq AS (
-        SELECT c.cluster_id, c.doc_id, d.n_chars,
-               row_number() OVER (PARTITION BY c.cluster_id
-                 ORDER BY d.n_chars DESC, c.doc_id) AS rk
-        FROM clusters c JOIN documents d USING (doc_id)),
-      triq AS (
-        SELECT doc_id,
-               unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS gram
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-              WHERE len(string_split(text, ' ')) >= 3)),
-      contamq AS (
-        SELECT c.doc_id
-        FROM (SELECT doc_id, gram FROM triq WHERE doc_id % 100 <> 7) c
-        JOIN (SELECT DISTINCT gram FROM triq WHERE doc_id % 100 = 7) p
-          USING (gram)
-        GROUP BY c.doc_id
-        HAVING count(DISTINCT c.gram) >= 3),
-      mq AS (
-        SELECT doc_id, lang, n_chars,
-               CAST(len(ws) AS BIGINT) AS nw,
-               CAST(n_chars - (len(ws) - 1) AS BIGINT) AS m,
-               CAST(len(list_filter(ws, w -> w IN ${TextAnalysis.inList(TextAnalysis.stopEn)})) AS BIGINT) AS nstop
-        FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS ws
-              FROM documents)),
-      sv AS (
-        SELECT doc_id, lang, n_chars, nw AS toks
-        FROM (
-          SELECT doc_id, lang, n_chars, nw,
-                 (2 * (8000 * least(nw, 50) * 8 * nw + 2400000 * nstop
-                       + 300000 * least(m, 8 * nw)) + 8 * nw)
-                   // (2 * 8 * nw) AS score,
-                 doc_id IN (SELECT doc_id FROM rankedq WHERE rk > 1)
-                   AS dup_dropped,
-                 doc_id IN (SELECT doc_id FROM contamq) AS contaminated
-          FROM mq) f
-        WHERE score >= 400000 AND nw >= 30 AND NOT dup_dropped
-          AND NOT contaminated AND doc_id % 100 <> 7),
-      pk AS (
-        SELECT doc_id, lang, n_chars, toks,
-               COALESCE(sum(toks) OVER (PARTITION BY lang ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS prior
-        FROM sv),
+      ${stageCtes("lang, ")},
+      ${packedCtes("n_chars, ")},
       shq AS (
         SELECT doc_id, lang, n_chars, toks,
                CAST(prior // 2048 AS BIGINT) AS bin,
                md5(CAST(doc_id AS VARCHAR)) AS h,
-               CAST(strpos('0123456789abcdef',
-                           substr(md5(CAST(doc_id AS VARCHAR)), 1, 1))
-                    AS BIGINT) - 1 AS shard
+               $shardSql AS shard
         FROM pk)
       SELECT shard,
              count(*) AS n_docs,
@@ -360,40 +345,10 @@ object Pipeline {
         .orderBy(col("source"))
     },
     Some(s"""
-      WITH RECURSIVE ${Dedup.clustersCteSql},
-      rankedq AS (
-        SELECT c.cluster_id, c.doc_id, d.n_chars,
-               row_number() OVER (PARTITION BY c.cluster_id
-                 ORDER BY d.n_chars DESC, c.doc_id) AS rk
-        FROM clusters c JOIN documents d USING (doc_id)),
-      triq AS (
-        SELECT doc_id,
-               unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS gram
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-              WHERE len(string_split(text, ' ')) >= 3)),
-      contamq AS (
-        SELECT c.doc_id
-        FROM (SELECT doc_id, gram FROM triq WHERE doc_id % 100 <> 7) c
-        JOIN (SELECT DISTINCT gram FROM triq WHERE doc_id % 100 = 7) p
-          USING (gram)
-        GROUP BY c.doc_id
-        HAVING count(DISTINCT c.gram) >= 3),
-      mq AS (
-        SELECT doc_id, source, n_chars,
-               CAST(len(ws) AS BIGINT) AS nw,
-               CAST(n_chars - (len(ws) - 1) AS BIGINT) AS m,
-               CAST(len(list_filter(ws, w -> w IN ${TextAnalysis.inList(TextAnalysis.stopEn)})) AS BIGINT) AS nstop
-        FROM (SELECT doc_id, source, n_chars, string_split(text, ' ') AS ws
-              FROM documents)),
+      ${stageCtes("source, ")},
       flq AS (
         SELECT doc_id, source, n_chars, nw,
-               (2 * (8000 * least(nw, 50) * 8 * nw + 2400000 * nstop
-                     + 300000 * least(m, 8 * nw)) + 8 * nw)
-                 // (2 * 8 * nw) AS score,
-               doc_id IN (SELECT doc_id FROM rankedq WHERE rk > 1)
-                 AS dup_dropped,
-               doc_id IN (SELECT doc_id FROM contamq) AS contaminated
+               $stageFlagsSql
         FROM mq),
       stq AS (
         SELECT doc_id, source, n_chars, score, dup_dropped, contaminated,
@@ -439,58 +394,13 @@ object Pipeline {
         .orderBy(col("h"))
     },
     Some(s"""
-      WITH RECURSIVE ${Dedup.clustersCteSql},
-      rankedq AS (
-        SELECT c.cluster_id, c.doc_id, d.n_chars,
-               row_number() OVER (PARTITION BY c.cluster_id
-                 ORDER BY d.n_chars DESC, c.doc_id) AS rk
-        FROM clusters c JOIN documents d USING (doc_id)),
-      triq AS (
-        SELECT doc_id,
-               unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS gram
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-              WHERE len(string_split(text, ' ')) >= 3)),
-      contamq AS (
-        SELECT c.doc_id
-        FROM (SELECT doc_id, gram FROM triq WHERE doc_id % 100 <> 7) c
-        JOIN (SELECT DISTINCT gram FROM triq WHERE doc_id % 100 = 7) p
-          USING (gram)
-        GROUP BY c.doc_id
-        HAVING count(DISTINCT c.gram) >= 3),
-      mq AS (
-        SELECT doc_id, lang, n_chars,
-               CAST(len(ws) AS BIGINT) AS nw,
-               CAST(n_chars - (len(ws) - 1) AS BIGINT) AS m,
-               CAST(len(list_filter(ws, w -> w IN ${TextAnalysis.inList(TextAnalysis.stopEn)})) AS BIGINT) AS nstop
-        FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS ws
-              FROM documents)),
-      sv AS (
-        SELECT doc_id, lang, nw AS toks
-        FROM (
-          SELECT doc_id, lang, nw,
-                 (2 * (8000 * least(nw, 50) * 8 * nw + 2400000 * nstop
-                       + 300000 * least(m, 8 * nw)) + 8 * nw)
-                   // (2 * 8 * nw) AS score,
-                 doc_id IN (SELECT doc_id FROM rankedq WHERE rk > 1)
-                   AS dup_dropped,
-                 doc_id IN (SELECT doc_id FROM contamq) AS contaminated
-          FROM mq) f
-        WHERE score >= 400000 AND nw >= 30 AND NOT dup_dropped
-          AND NOT contaminated AND doc_id % 100 <> 7),
-      pk AS (
-        SELECT doc_id, lang, toks,
-               COALESCE(sum(toks) OVER (PARTITION BY lang ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS prior
-        FROM sv)
+      ${stageCtes("lang, ")},
+      ${packedCtes("")}
       SELECT doc_id, lang,
              CAST(prior // 2048 AS BIGINT) AS bin,
              md5(CAST(doc_id AS VARCHAR)) AS h
       FROM pk
-      WHERE CAST(strpos('0123456789abcdef',
-                        substr(md5(CAST(doc_id AS VARCHAR)), 1, 1))
-                 AS BIGINT) - 1 = 7
+      WHERE $shardSql = 7
       ORDER BY h"""),
   )
 

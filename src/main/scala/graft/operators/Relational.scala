@@ -585,6 +585,16 @@ object Relational {
       ORDER BY doc_id"""),
   )
 
+  /** q23's hourly rollup in DuckDB SQL, and the oracle of its streaming
+    * twins q28, q56 and q130: a watermarked window('1 hour') drained in
+    * append mode equals the date_trunc group-by over the same events. */
+  private[operators] val HourlyWindowOracle = Some("""
+      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+             event_type, count(*) AS n, round(sum(value), 2) AS total_value
+      FROM events
+      GROUP BY 1, 2
+      ORDER BY window_start, event_type""")
+
   /** Tumbling 1-hour event-time window aggregate — the deterministic batch
     * formulation of the streaming windowed aggregation (date_trunc group-by
     * ≡ window('1 hour') in append mode once the watermark passes). */
@@ -600,47 +610,12 @@ object Relational {
           count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("total_value"))
         .orderBy(col("window_start"), col("event_type")),
-    Some("""
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-             event_type, count(*) AS n, round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY window_start, event_type"""),
+    HourlyWindowOracle,
   )
 
-  /** Sessionization with a 30-minute inactivity gap (batch equivalent of
-    * session_window): lag → new-session flag → running sum = session id →
-    * two-level aggregate. */
-  private val q24 = Q(
-    "q24_sessionize",
-    (s, d) => {
-      val wOrd = Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val withSess = T.events(s, d)
-        .withColumn(
-          "new_sess",
-          when(
-            lag(col("ts"), 1).over(wOrd).isNull ||
-              (unix_micros(col("ts")) -
-                unix_micros(lag(col("ts"), 1).over(wOrd))) > 1800000000L,
-            1L).otherwise(0L))
-        .withColumn(
-          "sess_id",
-          sum(col("new_sess")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      withSess
-        .groupBy(col("user_id"), col("sess_id"))
-        .agg(count(lit(1)).as("sess_len"))
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_sessions"),
-          max(col("sess_len")).as("max_sess_len"),
-          sum(col("sess_len")).as("n_events"),
-        )
-        .orderBy(col("user_id"))
-    },
-    Some("""
+  /** q24's 30-minute-gap sessionization in DuckDB SQL, and the oracle of
+    * its streaming twin q30 (session_window in append mode). */
+  private[operators] val SessionOracle = Some("""
       WITH flagged AS (
         SELECT user_id, ts, event_id,
                CASE WHEN lag(ts, 1) OVER w IS NULL
@@ -663,7 +638,47 @@ object Relational {
              CAST(sum(sess_len) AS BIGINT) AS n_events
       FROM per_sess
       GROUP BY user_id
-      ORDER BY user_id"""),
+      ORDER BY user_id""")
+
+  /** Every event with its user's session number `sess_id`: a session
+    * starts at the user's first event and after every gap over 30 minutes
+    * (q24, and the session baskets of [[basketTypeSets]]). */
+  private def sessionized(s: SparkSession, d: String): DataFrame = {
+    val wOrd = Window
+      .partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    T.events(s, d)
+      .withColumn(
+        "new_sess",
+        when(
+          lag(col("ts"), 1).over(wOrd).isNull ||
+            (unix_micros(col("ts")) -
+              unix_micros(lag(col("ts"), 1).over(wOrd))) > 1800000000L,
+          1L).otherwise(0L))
+      .withColumn(
+        "sess_id",
+        sum(col("new_sess")).over(
+          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** Sessionization with a 30-minute inactivity gap (batch equivalent of
+    * session_window): lag → new-session flag → running sum = session id →
+    * two-level aggregate. */
+  private val q24 = Q(
+    "q24_sessionize",
+    (s, d) => {
+      sessionized(s, d)
+        .groupBy(col("user_id"), col("sess_id"))
+        .agg(count(lit(1)).as("sess_len"))
+        .groupBy(col("user_id"))
+        .agg(
+          count(lit(1)).as("n_sessions"),
+          max(col("sess_len")).as("max_sess_len"),
+          sum(col("sess_len")).as("n_events"),
+        )
+        .orderBy(col("user_id"))
+    },
+    SessionOracle,
   )
 
   /** As-of join via a single ordered window pass (no join blowup): for each
@@ -2409,6 +2424,17 @@ object Relational {
       ORDER BY p_partkey"""),
   )
 
+  /** DuckDB's grading of the `mangled` props strings by Spark's
+    * schema-bind notion of corrupt (q77's rule, which q94 routes on): a
+    * row is ok iff it parses AND its k is an integer or absent. */
+  private[operators] val GradedSql = """graded AS (
+        SELECT event_type, raw,
+               CASE WHEN json_valid(raw)
+                    THEN coalesce(json_type(raw, '$.k'), 'NULL')
+                         IN ('UBIGINT', 'BIGINT', 'NULL')
+                    ELSE FALSE END AS ok
+        FROM mangled)"""
+
   /** Malformed-input robustness — the PERMISSIVE parse semantics every
     * 100 TB ingest relies on: a tenth of the JSON payloads are truncated
     * (deterministically, by event_id), and the pipeline must COUNT the
@@ -2442,7 +2468,7 @@ object Relational {
         .orderBy(col("event_type"))
         .transform(GraftSession.materialize)
     },
-    Some("""
+    Some(s"""
       WITH mangled AS (
         SELECT event_type,
                CASE WHEN event_id % 10 = 0
@@ -2455,13 +2481,7 @@ object Relational {
       -- under enablePartialResults=false, so the oracle must grade it
       -- bad too. CASE keeps json_type off malformed rows (it throws
       -- where json_valid is merely false).
-      graded AS (
-        SELECT event_type, raw,
-               CASE WHEN json_valid(raw)
-                    THEN coalesce(json_type(raw, '$.k'), 'NULL')
-                         IN ('UBIGINT', 'BIGINT', 'NULL')
-                    ELSE FALSE END AS ok
-        FROM mangled)
+      $GradedSql
       SELECT event_type, count(*) AS n,
              CAST(sum(CASE WHEN ok THEN 0 ELSE 1 END) AS BIGINT) AS n_bad,
              CAST(sum(CASE WHEN ok
@@ -3655,6 +3675,26 @@ object Relational {
       ORDER BY segment, month"""),
   )
 
+  /** Each event's predecessor type `prev` in its user's (ts, event_id)
+    * order, as (prev, curr) pairs for the events that have one: the
+    * transition edges of q106's Markov chain and q117's PageRank graph. */
+  private def transitions(events: DataFrame): DataFrame = {
+    val seqW = Window
+      .partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    events
+      .withColumn("prev", lag(col("event_type"), 1).over(seqW))
+      .filter(col("prev").isNotNull)
+      .select(col("prev"), col("event_type").as("curr"))
+  }
+
+  /** [[transitions]] in DuckDB SQL, before the non-null filter. */
+  private val transitionSeqSql = """seq AS (
+        SELECT user_id, event_type,
+               lag(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS prev
+        FROM events)"""
+
   /** First-order Markov transition matrix over the event stream — the
     * sequence-model view of user behavior (what follows what, and with
     * what probability) that funnels (q88) and sessionization (q24) only
@@ -3673,13 +3713,7 @@ object Relational {
   private val q106 = Q(
     "q106_markov_transitions",
     (s, d) => {
-      val seqW = Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      T.events(s, d)
-        .withColumn("prev", lag(col("event_type"), 1).over(seqW))
-        .filter(col("prev").isNotNull)
-        .select(col("prev"), col("event_type").as("curr"))
+      transitions(T.events(s, d))
         .groupBy(col("prev"), col("curr"))
         .agg(count(lit(1)).as("n_transitions"))
         .withColumn(
@@ -3689,12 +3723,8 @@ object Relational {
               "sum(n_transitions) OVER (PARTITION BY prev)"))
         .orderBy(col("prev"), col("curr"))
     },
-    Some("""
-      WITH seq AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM events),
+    Some(s"""
+      WITH $transitionSeqSql,
       trans AS (
         SELECT prev, event_type AS curr, count(*) AS n
         FROM seq WHERE prev IS NOT NULL GROUP BY prev, curr)
@@ -3857,21 +3887,7 @@ object Relational {
     * double — bound documented loud, s06's convention. */
   private[graft] def basketTypeSets(
       s: SparkSession, d: String): DataFrame = {
-    val wOrd = Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    T.events(s, d)
-      .withColumn(
-        "new_sess",
-        when(
-          lag(col("ts"), 1).over(wOrd).isNull ||
-            (unix_micros(col("ts")) -
-              unix_micros(lag(col("ts"), 1).over(wOrd))) > 1800000000L,
-          1L).otherwise(0L))
-      .withColumn(
-        "sess_id",
-        sum(col("new_sess")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    sessionized(s, d)
       .groupBy(col("user_id"), col("sess_id"))
       .agg(sort_array(collect_set(col("event_type"))).as("tset"))
       .groupBy(col("tset"))
@@ -4130,6 +4146,31 @@ object Relational {
       GROUP BY day ORDER BY day"""),
   )
 
+  /** q112's point-in-time versioned join in DuckDB SQL, and the oracle of
+    * its streaming twin q114: the microbatch union of purchases is the
+    * purchase set. */
+  private[operators] val PitEnrichOracle = Some("""
+      WITH ev AS (
+        SELECT user_id, event_id, event_type, value, epoch_us(ts) AS tsu
+        FROM events),
+      dim AS (
+        SELECT user_id AS d_user, tsu AS from_tsu,
+               lead(tsu) OVER (PARTITION BY user_id
+                               ORDER BY tsu, event_id) AS to_tsu,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY tsu, event_id) AS version
+        FROM ev WHERE event_type = 'signup'),
+      f AS (SELECT user_id, tsu, value FROM ev
+            WHERE event_type = 'purchase')
+      SELECT CAST(coalesce(d.version, 0) AS INT) AS version,
+             CAST(count(*) AS BIGINT) AS n_purchases,
+             CAST(count(DISTINCT f.user_id) AS BIGINT) AS n_users,
+             round(sum(f.value), 2) AS revenue
+      FROM f LEFT JOIN dim d
+        ON d.d_user = f.user_id AND f.tsu >= d.from_tsu
+           AND (d.to_tsu IS NULL OR f.tsu < d.to_tsu)
+      GROUP BY 1 ORDER BY 1""")
+
   /** Point-in-time (PIT) join of facts to a versioned dimension — the
     * lakehouse lookup q85's SCD2 build exists to serve: each fact row is
     * matched to the dimension version whose half-open validity tile
@@ -4181,27 +4222,7 @@ object Relational {
           round(sum(col("value")), 2).as("revenue"))
         .orderBy(col("version"))
     },
-    Some("""
-      WITH ev AS (
-        SELECT user_id, event_id, event_type, value, epoch_us(ts) AS tsu
-        FROM events),
-      dim AS (
-        SELECT user_id AS d_user, tsu AS from_tsu,
-               lead(tsu) OVER (PARTITION BY user_id
-                               ORDER BY tsu, event_id) AS to_tsu,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY tsu, event_id) AS version
-        FROM ev WHERE event_type = 'signup'),
-      f AS (SELECT user_id, tsu, value FROM ev
-            WHERE event_type = 'purchase')
-      SELECT CAST(coalesce(d.version, 0) AS INT) AS version,
-             CAST(count(*) AS BIGINT) AS n_purchases,
-             CAST(count(DISTINCT f.user_id) AS BIGINT) AS n_users,
-             round(sum(f.value), 2) AS revenue
-      FROM f LEFT JOIN dim d
-        ON d.d_user = f.user_id AND f.tsu >= d.from_tsu
-           AND (d.to_tsu IS NULL OR f.tsu < d.to_tsu)
-      GROUP BY 1 ORDER BY 1"""),
+    PitEnrichOracle,
   )
 
   /** Semi-structured extraction through Spark 4's VARIANT type — the
@@ -4416,17 +4437,12 @@ object Relational {
   private val q117 = Q(
     "q117_pagerank",
     (s, d) => {
-      val seqW = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val ev = T.events(s, d)
       // The aggregated graph is |types|²-row tiny; materializing it
       // (d07's iterate-checkpoint discipline) makes each
       // unrolled iteration a join against materialized blocks instead of
       // replaying the corpus-scale lag window 4× in one plan.
-      val trans = ev
-        .withColumn("prev", lag(col("event_type"), 1).over(seqW))
-        .filter(col("prev").isNotNull)
-        .select(col("prev"), col("event_type").as("curr"))
+      val trans = transitions(ev)
         .groupBy(col("prev"), col("curr"))
         .agg(count(lit(1)).as("w"))
         .transform(GraftSession.materialize)
@@ -4475,11 +4491,7 @@ object Relational {
                ON c.node = n.node)"""
       }.mkString(",\n      ")
       s"""
-      WITH seq AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM events),
+      WITH $transitionSeqSql,
       trans AS (
         SELECT prev, event_type AS curr, CAST(count(*) AS BIGINT) AS w
         FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2),

@@ -33,15 +33,20 @@ object Similarity {
   private def brute10(s: SparkSession, d: String): DataFrame = {
     val e = T.embeddings(s, d)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
+    top10(s, e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q)))
+  }
+
+  /** The top 10 of `cands` by rounded cosine to their query vector `qv`,
+    * ties to the lower vec_id: the ranking step of [[brute10]],
+    * [[ivfProbe]], [[lsh10]] and s09. */
+  private def top10(s: SparkSession, cands: DataFrame): DataFrame =
+    cands
       .select(
         col("vec_id"),
         col("label"),
         round(dot(s, col("embedding"), col("qv")), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
-  }
 
   /** Exact brute-force cosine top-k for the query vector vec_id=0. */
   private val s01 = Q(
@@ -82,37 +87,36 @@ object Similarity {
       .orderBy(col("cd").desc, col("label"))
       .limit(nprobe)
       .select(col("label"))
-    rest
-      .join(broadcast(cellRank), "label")
-      .crossJoin(broadcast(qRow))
-      .select(
-        col("vec_id"),
-        col("label"),
-        round(dot(s, col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(10)
+    top10(s, rest.join(broadcast(cellRank), "label").crossJoin(broadcast(qRow)))
   }
 
   /** IVF nprobe=2 top-10 — the s02/s08 probe. */
   private def ivf10(s: SparkSession, d: String): DataFrame =
     ivfProbe(s, d, 2)
 
-  private val s02 = Q(
-    "s02_ann_ivf",
-    (s, d) => ivf10(s, d),
-    Some("""
-      WITH cent AS (
+  /** s02's IVF cells in DuckDB SQL: each label cell's per-dimension mean
+    * over the non-query vectors (s02, s08, s12, s16). */
+  private val centSql = """cent AS (
         SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS c
         FROM embeddings, range(1, 65) t(i)
         WHERE vec_id <> 0
-        GROUP BY label, i),
-      q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      cellrank AS (
+        GROUP BY label, i)"""
+
+  /** s02's nprobe=2 cell rank over [[centSql]] and the query `q`. */
+  private val cellRankSql = """cellrank AS (
         SELECT label, round(sum(c * CAST(qv[i] AS DOUBLE)), 9) AS cd
         FROM cent, q
         GROUP BY label
         ORDER BY cd DESC, label
-        LIMIT 2)
+        LIMIT 2)"""
+
+  private val s02 = Q(
+    "s02_ann_ivf",
+    (s, d) => ivf10(s, d),
+    Some(s"""
+      WITH $centSql,
+      q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+      $cellRankSql
       SELECT e.vec_id, e.label,
              round(list_sum(list_transform(range(1, 65),
                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))),
@@ -203,29 +207,27 @@ object Similarity {
         col("embedding").as("qv"),
         col("band0").as("qb0"), col("band1").as("qb1"),
         col("band2").as("qb2"), col("band3").as("qb3"))
-    sig.filter(col("vec_id") =!= 0)
+    top10(s, sig.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .filter(
         col("band0") === col("qb0") || col("band1") === col("qb1") ||
-          col("band2") === col("qb2") || col("band3") === col("qb3"))
-      .select(
-        col("vec_id"),
-        col("label"),
-        round(dot(s, col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(10)
+          col("band2") === col("qb2") || col("band3") === col("qb3")))
   }
 
-  private val s04 = {
-    import graft.operators.SignBands.bandDuck
-    val bandsD = (0 until 4).map(b => s"(${bandDuck(b, 4)}) AS band$b")
-    Q(
-      "s04_ann_lsh",
-      (s, d) => lsh10(s, d),
-      Some(s"""
-      WITH sig AS (
-        SELECT vec_id, label, embedding, ${bandsD.mkString(", ")}
-        FROM embeddings),
+  /** [[lsh10]]'s band signature table in DuckDB SQL: the four 4-bit
+    * sign-LSH bands of every vector (s04, s08, s16). */
+  private def sigSql: String = {
+    val bands = (0 until 4).map(b => s"(${SignBands.bandDuck(b, 4)}) AS band$b")
+    s"""sig AS (
+        SELECT vec_id, label, embedding, ${bands.mkString(", ")}
+        FROM embeddings)"""
+  }
+
+  private val s04 = Q(
+    "s04_ann_lsh",
+    (s, d) => lsh10(s, d),
+    Some(s"""
+      WITH $sigSql,
       q AS (
         SELECT embedding AS qv, band0 AS qb0, band1 AS qb1,
                band2 AS qb2, band3 AS qb3
@@ -240,8 +242,7 @@ object Similarity {
              e.band2 = q.qb2 OR e.band3 = q.qb3)
       ORDER BY cosine DESC, vec_id
       LIMIT 10"""),
-    )
-  }
+  )
 
   /** Int8 embedding quantization with a reconstruction-error audit — the
     * storage tier of ANN at scale: per-vector absmax scaling to [-127,
@@ -299,6 +300,19 @@ object Similarity {
       ORDER BY vec_id"""),
   )
 
+  /** Squared L2 between the float vectors `e.embedding` and `c.cvec` in
+    * DuckDB SQL, aliased `dist`: e·e + c·c − 2·(e·c) as three left-to-right
+    * folds, the order s06's Spark side sums in (shared by d17). */
+  private[operators] val floatL2Sql = """list_sum(list_transform(range(1, 65),
+                 i -> CAST(e.embedding[i] AS DOUBLE)
+                    * CAST(e.embedding[i] AS DOUBLE)))
+             + list_sum(list_transform(range(1, 65),
+                 i -> CAST(c.cvec[i] AS DOUBLE)
+                    * CAST(c.cvec[i] AS DOUBLE)))
+             - 2 * list_sum(list_transform(range(1, 65),
+                 i -> CAST(e.embedding[i] AS DOUBLE)
+                    * CAST(c.cvec[i] AS DOUBLE))) AS dist"""
+
   /** k-means E-step — centroid assignment, the workhorse of embedding
     * clustering for data-mixture curation (cluster-then-balance) and IVF
     * index builds (s02's cells come from exactly this step at scale).
@@ -351,21 +365,13 @@ object Similarity {
             .as("sum_dist_ppm"))
         .orderBy(col("cid"))
     },
-    Some("""
+    Some(s"""
       WITH cent AS (
         SELECT vec_id AS cid, embedding AS cvec
         FROM embeddings ORDER BY vec_id LIMIT 8),
       pairs AS (
         SELECT e.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> CAST(c.cvec[i] AS DOUBLE)
-                    * CAST(c.cvec[i] AS DOUBLE)))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(c.cvec[i] AS DOUBLE))) AS dist
+               $floatL2Sql
         FROM embeddings e CROSS JOIN cent c),
       assigned AS (
         SELECT vec_id, cid, dist,
@@ -469,6 +475,50 @@ object Similarity {
     (cent0, ncent)
   }
 
+  /** CTE `name` minus its closing parenthesis: every vector's squared L2
+    * (`dist`) to each centroid `cid` of `cent`, in [[dist2]]'s fold order. */
+  private def l2Sql(name: String, cent: String): String = s"""$name AS (
+        SELECT e.vec_id, c.cid,
+               list_sum(list_transform(range(1, 65),
+                 i -> CAST(e.embedding[i] AS DOUBLE)
+                    * CAST(e.embedding[i] AS DOUBLE)))
+             + list_sum(list_transform(range(1, 65),
+                 i -> c.cvec[i] * c.cvec[i]))
+             - 2 * list_sum(list_transform(range(1, 65),
+                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])) AS dist
+        FROM embeddings e CROSS JOIN $cent c"""
+
+  /** CTE `name`: each vector's nearest centroid in `from`, ties to the
+    * lowest cid, keeping `cols`. */
+  private def argminSql(name: String, from: String, cols: String): String =
+    s"""$name AS (
+        SELECT $cols FROM (
+          SELECT $cols,
+                 row_number() OVER (PARTITION BY vec_id
+                   ORDER BY dist, cid) AS rk
+          FROM $from) r WHERE rk = 1)"""
+
+  /** [[lloydCentroids]] in DuckDB SQL (s07, s09): the seed centroids
+    * `cent0`, E-step 0 (`p0`, then `a0` keeping `a0Cols`) and the
+    * integer-ppm M-step's updated centroids `ncent`. */
+  private def lloydSql(a0Cols: String): String = s"""cent0 AS (
+        SELECT vec_id AS cid,
+               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+        FROM embeddings ORDER BY vec_id LIMIT 8),
+      ${l2Sql("p0", "cent0")}),
+      ${argminSql("a0", "p0", a0Cols)},
+      nsum AS (
+        SELECT a.cid, i,
+               CAST(sum(CAST(floor(CAST(e.embedding[i] AS DOUBLE) * 1000000)
+                 AS BIGINT)) AS BIGINT) AS sv,
+               count(*) AS n
+        FROM a0 a JOIN embeddings e USING (vec_id),
+             unnest(range(1, 65)) AS t(i)
+        GROUP BY a.cid, i),
+      ncent AS (
+        SELECT cid, list(CAST(sv AS DOUBLE) / 1000000 / n ORDER BY i) AS cvec
+        FROM nsum GROUP BY cid)"""
+
   private val s07 = Q(
     "s07_kmeans_mstep",
     (s, d) => {
@@ -526,54 +576,10 @@ object Similarity {
           col("shift_ppm"))
         .orderBy(col("cid"))
     },
-    Some("""
-      WITH cent0 AS (
-        SELECT vec_id AS cid,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings ORDER BY vec_id LIMIT 8),
-      p0 AS (
-        SELECT e.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> c.cvec[i] * c.cvec[i]))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])) AS dist
-        FROM embeddings e CROSS JOIN cent0 c),
-      a0 AS (
-        SELECT vec_id, cid, dist FROM (
-          SELECT vec_id, cid, dist,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dist, cid) AS rk
-          FROM p0) r WHERE rk = 1),
-      nsum AS (
-        SELECT a.cid, i,
-               CAST(sum(CAST(floor(CAST(e.embedding[i] AS DOUBLE) * 1000000)
-                 AS BIGINT)) AS BIGINT) AS sv,
-               count(*) AS n
-        FROM a0 a JOIN embeddings e USING (vec_id),
-             unnest(range(1, 65)) AS t(i)
-        GROUP BY a.cid, i),
-      ncent AS (
-        SELECT cid, list(CAST(sv AS DOUBLE) / 1000000 / n ORDER BY i) AS cvec
-        FROM nsum GROUP BY cid),
-      p1 AS (
-        SELECT e.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> c.cvec[i] * c.cvec[i]))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])) AS dist
-        FROM embeddings e CROSS JOIN ncent c),
-      a1 AS (
-        SELECT vec_id, cid, dist FROM (
-          SELECT vec_id, cid, dist,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dist, cid) AS rk
-          FROM p1) r WHERE rk = 1),
+    Some(s"""
+      WITH ${lloydSql("vec_id, cid, dist")},
+      ${l2Sql("p1", "ncent")}),
+      ${argminSql("a1", "p1", "vec_id, cid, dist")},
       mv AS (
         SELECT a0.vec_id, a0.cid AS cid0, a0.dist AS dist0,
                a1.cid AS cid1, a1.dist AS dist1
@@ -608,6 +614,44 @@ object Similarity {
       ORDER BY sh.cid"""),
   )
 
+  /** The recall audits' common oracle CTEs (s08, s12): the exact top-10
+    * (`exact`), the IVF cells and the query vector `q`. */
+  private val recallBaseSql = s"""exact AS (
+        SELECT e.vec_id
+        FROM embeddings e,
+             (SELECT embedding FROM embeddings WHERE vec_id = 0) qe
+        WHERE e.vec_id <> 0
+        ORDER BY round(list_sum(list_transform(range(1, 65),
+            i -> CAST(e.embedding[i] AS DOUBLE)
+               * CAST(qe.embedding[i] AS DOUBLE))), 6) DESC, e.vec_id
+        LIMIT 10),
+      $centSql,
+      q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),"""
+
+  /** CTE `name`: the top-10 vec_ids inside the cells `cellrank` keeps. */
+  private def ivfTop10Sql(name: String, cellrank: String): String = s"""$name AS (
+        SELECT e.vec_id
+        FROM embeddings e JOIN $cellrank USING (label), q
+        WHERE e.vec_id <> 0
+        ORDER BY round(list_sum(list_transform(range(1, 65),
+            i -> CAST(e.embedding[i] AS DOUBLE)
+               * CAST(q.qv[i] AS DOUBLE))), 6) DESC, e.vec_id
+        LIMIT 10)"""
+
+  /** [[recall10]]'s row in DuckDB SQL for the top-10 CTE `probe`. */
+  private def recallRowSql(tag: String, probe: String): String =
+    s"""SELECT $tag, 10 AS k, count(*) AS n_hits,
+               count(*) * 10 AS recall_pct
+        FROM $probe JOIN exact USING (vec_id)"""
+
+  /** One recall@10 row: how many of `approx`'s top-10 vec_ids are in the
+    * `exact` top-10, labelled by the `tag` column (s08, s12). */
+  private def recall10(approx: DataFrame, exact: DataFrame, tag: Column): DataFrame =
+    approx.select(col("vec_id")).join(exact, "vec_id")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(tag, lit(10L).as("k"), col("n_hits"),
+        (col("n_hits") * 10).as("recall_pct"))
+
   /** ANN recall audit — recall@10 of the two approximate probes (s02's
     * IVF at nprobe=2, s04's banded LSH) against s01's exact brute-force
     * ground truth: the first number any ANN deployment publishes, and
@@ -627,51 +671,15 @@ object Similarity {
     "s08_ann_recall",
     (s, d) => {
       val exact = brute10(s, d).select(col("vec_id"))
-      def row(m: String, approx: DataFrame): DataFrame =
-        approx.select(col("vec_id")).join(exact, "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(
-            lit(m).as("method"), lit(10L).as("k"), col("n_hits"),
-            (col("n_hits") * 10).as("recall_pct"))
-      row("ivf", ivf10(s, d))
-        .unionByName(row("lsh", lsh10(s, d)))
+      recall10(ivf10(s, d), exact, lit("ivf").as("method"))
+        .unionByName(recall10(lsh10(s, d), exact, lit("lsh").as("method")))
         .orderBy(col("method"))
-    }, {
-      import graft.operators.SignBands.bandDuck
-      val bandsD = (0 until 4).map(b => s"(${bandDuck(b, 4)}) AS band$b")
-      Some(s"""
-      WITH exact AS (
-        SELECT e.vec_id
-        FROM embeddings e,
-             (SELECT embedding FROM embeddings WHERE vec_id = 0) qe
-        WHERE e.vec_id <> 0
-        ORDER BY round(list_sum(list_transform(range(1, 65),
-            i -> CAST(e.embedding[i] AS DOUBLE)
-               * CAST(qe.embedding[i] AS DOUBLE))), 6) DESC, e.vec_id
-        LIMIT 10),
-      cent AS (
-        SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS c
-        FROM embeddings, range(1, 65) t(i)
-        WHERE vec_id <> 0
-        GROUP BY label, i),
-      q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      cellrank AS (
-        SELECT label, round(sum(c * CAST(qv[i] AS DOUBLE)), 9) AS cd
-        FROM cent, q
-        GROUP BY label
-        ORDER BY cd DESC, label
-        LIMIT 2),
-      ivf AS (
-        SELECT e.vec_id
-        FROM embeddings e JOIN cellrank USING (label), q
-        WHERE e.vec_id <> 0
-        ORDER BY round(list_sum(list_transform(range(1, 65),
-            i -> CAST(e.embedding[i] AS DOUBLE)
-               * CAST(q.qv[i] AS DOUBLE))), 6) DESC, e.vec_id
-        LIMIT 10),
-      sig AS (
-        SELECT vec_id, label, embedding, ${bandsD.mkString(", ")}
-        FROM embeddings),
+    },
+    Some(s"""
+      WITH $recallBaseSql
+      $cellRankSql,
+      ${ivfTop10Sql("ivf", "cellrank")},
+      $sigSql,
       qs AS (
         SELECT embedding AS qv, band0 AS qb0, band1 AS qb1,
                band2 AS qb2, band3 AS qb3
@@ -687,15 +695,10 @@ object Similarity {
                * CAST(qs.qv[i] AS DOUBLE))), 6) DESC, e.vec_id
         LIMIT 10)
       SELECT method, k, n_hits, recall_pct FROM (
-        SELECT 'ivf' AS method, 10 AS k, count(*) AS n_hits,
-               count(*) * 10 AS recall_pct
-        FROM ivf JOIN exact USING (vec_id)
+        ${recallRowSql("'ivf' AS method", "ivf")}
         UNION ALL
-        SELECT 'lsh' AS method, 10 AS k, count(*) AS n_hits,
-               count(*) * 10 AS recall_pct
-        FROM lsh JOIN exact USING (vec_id)) u
-      ORDER BY method""")
-    },
+        ${recallRowSql("'lsh' AS method", "lsh")}) u
+      ORDER BY method"""),
   )
 
   /** IVF probe over a LEARNED coarse quantizer — the end-to-end index
@@ -740,65 +743,13 @@ object Similarity {
         .orderBy(col("cd").desc, col("cid"))
         .limit(2)
         .select(col("cid"))
-      cells
-        .join(broadcast(crank), "cid")
-        .crossJoin(broadcast(qRow))
-        .select(
-          col("vec_id"),
-          col("label"),
-          round(dot(s, col("embedding"), col("qv")), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-        .limit(10)
+      top10(s, cells.join(broadcast(crank), "cid").crossJoin(broadcast(qRow)))
     },
-    Some("""
-      WITH cent0 AS (
-        SELECT vec_id AS cid,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings ORDER BY vec_id LIMIT 8),
-      p0 AS (
-        SELECT e.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> c.cvec[i] * c.cvec[i]))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])) AS dist
-        FROM embeddings e CROSS JOIN cent0 c),
-      a0 AS (
-        SELECT vec_id, cid FROM (
-          SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dist, cid) AS rk
-          FROM p0) r WHERE rk = 1),
-      nsum AS (
-        SELECT a.cid, i,
-               CAST(sum(CAST(floor(CAST(e.embedding[i] AS DOUBLE) * 1000000)
-                 AS BIGINT)) AS BIGINT) AS sv,
-               count(*) AS n
-        FROM a0 a JOIN embeddings e USING (vec_id),
-             unnest(range(1, 65)) AS t(i)
-        GROUP BY a.cid, i),
-      ncent AS (
-        SELECT cid, list(CAST(sv AS DOUBLE) / 1000000 / n ORDER BY i) AS cvec
-        FROM nsum GROUP BY cid),
-      p1 AS (
-        SELECT e.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(e.embedding[i] AS DOUBLE)))
-             + list_sum(list_transform(range(1, 65),
-                 i -> c.cvec[i] * c.cvec[i]))
-             - 2 * list_sum(list_transform(range(1, 65),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])) AS dist
-        FROM embeddings e CROSS JOIN ncent c
+    Some(s"""
+      WITH ${lloydSql("vec_id, cid")},
+      ${l2Sql("p1", "ncent")}
         WHERE e.vec_id <> 0),
-      cells AS (
-        SELECT vec_id, cid FROM (
-          SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dist, cid) AS rk
-          FROM p1) r WHERE rk = 1),
+      ${argminSql("cells", "p1", "vec_id, cid")},
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
       crank AS (
         SELECT c.cid,
@@ -892,6 +843,23 @@ object Similarity {
       LIMIT 10"""),
   )
 
+  /** s11's PQ codebook in DuckDB SQL (shared by s17's training): M=4
+    * subspaces of 16 codewords seeded from vec_ids 1–16. */
+  private val codebookSql = """cb AS (
+        SELECT CAST(c.vec_id AS INT) AS code, m.m, j.j,
+               CAST(c.embedding[(m.m - 1) * 16 + j.j] AS DOUBLE) AS cval
+        FROM embeddings c, range(1, 5) m(m), range(1, 17) j(j)
+        WHERE c.vec_id BETWEEN 1 AND 16)"""
+
+  /** Each corpus subvector's 9-dp squared distance `d2` to each codeword,
+    * as a select-list item and FROM clause over [[codebookSql]]. */
+  private val subDistSql = """round(sum(
+                 (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)
+                 * (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)),
+                 9) AS d2
+        FROM embeddings e, cb
+        WHERE e.vec_id <> 0"""
+
   /** Product quantization (PQ) with an ADC scan — the codebook
     * compression tier of the ANN stack (s05 is scalar int8 at 4×; PQ here
     * is 64 floats → 4 byte-codes, 64×): split each vector into M=4
@@ -962,20 +930,11 @@ object Similarity {
           round(dot(s, col("embedding"), col("qv")), 6).as("exact_ip"))
         .orderBy(col("approx_ip").desc, col("vec_id"))
     },
-    Some("""
-      WITH cb AS (
-        SELECT CAST(c.vec_id AS INT) AS code, m.m, j.j,
-               CAST(c.embedding[(m.m - 1) * 16 + j.j] AS DOUBLE) AS cval
-        FROM embeddings c, range(1, 5) m(m), range(1, 17) j(j)
-        WHERE c.vec_id BETWEEN 1 AND 16),
+    Some(s"""
+      WITH $codebookSql,
       dist AS (
         SELECT e.vec_id, e.label, cb.m, cb.code,
-               round(sum(
-                 (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)
-                 * (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)),
-                 9) AS d2
-        FROM embeddings e, cb
-        WHERE e.vec_id <> 0
+               $subDistSql
         GROUP BY 1, 2, 3, 4),
       codes AS (
         SELECT vec_id, label, m, code
@@ -1023,50 +982,21 @@ object Similarity {
     "s12_ann_nprobe_curve",
     (s, d) => {
       val exact = brute10(s, d).select(col("vec_id"))
-      (1 to 4).map { np =>
-        ivfProbe(s, d, np).select(col("vec_id"))
-          .join(exact, "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(
-            lit(np).as("nprobe"), lit(10L).as("k"), col("n_hits"),
-            (col("n_hits") * 10).as("recall_pct"))
-      }.reduce(_.unionByName(_))
+      (1 to 4).map(np =>
+        recall10(ivfProbe(s, d, np), exact, lit(np).as("nprobe")))
+        .reduce(_.unionByName(_))
         .orderBy(col("nprobe"))
     }, {
       val probes = (1 to 4).map { np =>
         s"""cellrank$np AS (
         SELECT label, round(sum(c * CAST(qv[i] AS DOUBLE)), 9) AS cd
         FROM cent, q GROUP BY label ORDER BY cd DESC, label LIMIT $np),
-      ivf$np AS (
-        SELECT e.vec_id
-        FROM embeddings e JOIN cellrank$np USING (label), q
-        WHERE e.vec_id <> 0
-        ORDER BY round(list_sum(list_transform(range(1, 65),
-            i -> CAST(e.embedding[i] AS DOUBLE)
-               * CAST(q.qv[i] AS DOUBLE))), 6) DESC, e.vec_id
-        LIMIT 10)"""
+      ${ivfTop10Sql(s"ivf$np", s"cellrank$np")}"""
       }.mkString(",\n      ")
-      val rows = (1 to 4).map { np =>
-        s"""SELECT $np AS nprobe, 10 AS k, count(*) AS n_hits,
-               count(*) * 10 AS recall_pct
-        FROM ivf$np JOIN exact USING (vec_id)"""
-      }.mkString("\n        UNION ALL\n        ")
+      val rows = (1 to 4).map(np => recallRowSql(s"$np AS nprobe", s"ivf$np"))
+        .mkString("\n        UNION ALL\n        ")
       Some(s"""
-      WITH exact AS (
-        SELECT e.vec_id
-        FROM embeddings e,
-             (SELECT embedding FROM embeddings WHERE vec_id = 0) qe
-        WHERE e.vec_id <> 0
-        ORDER BY round(list_sum(list_transform(range(1, 65),
-            i -> CAST(e.embedding[i] AS DOUBLE)
-               * CAST(qe.embedding[i] AS DOUBLE))), 6) DESC, e.vec_id
-        LIMIT 10),
-      cent AS (
-        SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS c
-        FROM embeddings, range(1, 65) t(i)
-        WHERE vec_id <> 0
-        GROUP BY label, i),
-      q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+      WITH $recallBaseSql
       $probes
       SELECT nprobe, k, n_hits, recall_pct FROM (
         $rows) u
@@ -1393,10 +1323,8 @@ object Similarity {
       row("ivf", ivf10(s, d))
         .unionByName(row("lsh", lsh10(s, d)))
         .orderBy(col("method"))
-    }, {
-      import graft.operators.SignBands.bandDuck
-      val bandsD = (0 until 4).map(b => s"(${bandDuck(b, 4)}) AS band$b")
-      Some(s"""
+    },
+    Some(s"""
       WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
       scored AS (
         SELECT e.vec_id, e.label, e.embedding,
@@ -1414,26 +1342,15 @@ object Similarity {
       idcg AS (
         SELECT sum(CAST(rel AS DOUBLE) / log2(erank + 1)) AS idcg_raw
         FROM exact),
-      cent AS (
-        SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS c
-        FROM embeddings, range(1, 65) t(i)
-        WHERE vec_id <> 0
-        GROUP BY label, i),
-      cellrank AS (
-        SELECT label, round(sum(c * CAST(qv[i] AS DOUBLE)), 9) AS cd
-        FROM cent, q
-        GROUP BY label
-        ORDER BY cd DESC, label
-        LIMIT 2),
+      $centSql,
+      $cellRankSql,
       ivfr AS (
         SELECT vec_id,
                row_number() OVER (ORDER BY cosine DESC, vec_id) AS mrank
         FROM (SELECT s.vec_id, s.cosine
               FROM scored s JOIN cellrank USING (label)
               ORDER BY s.cosine DESC, s.vec_id LIMIT 10)),
-      sig AS (
-        SELECT vec_id, label, embedding, ${bandsD.mkString(", ")}
-        FROM embeddings),
+      $sigSql,
       qs AS (
         SELECT band0 AS qb0, band1 AS qb1, band2 AS qb2, band3 AS qb3
         FROM sig WHERE vec_id = 0),
@@ -1467,8 +1384,7 @@ object Similarity {
              round(coalesce(a.dcg_raw, 0), 6) AS dcg,
              round(coalesce(a.dcg_raw, 0) / i.idcg_raw, 6) AS ndcg
       FROM methods m LEFT JOIN agg a USING (method), idcg i
-      ORDER BY m.method""")
-    },
+      ORDER BY m.method"""),
   )
 
   /** PQ codebook TRAINING — the per-subspace Lloyd step (Jégou et al.
@@ -1554,20 +1470,11 @@ object Similarity {
             .as("centroid_l2"))
         .orderBy(col("m"), col("code"))
     },
-    Some("""
-      WITH cb AS (
-        SELECT CAST(c.vec_id AS INT) AS code, m.m, j.j,
-               CAST(c.embedding[(m.m - 1) * 16 + j.j] AS DOUBLE) AS cval
-        FROM embeddings c, range(1, 5) m(m), range(1, 17) j(j)
-        WHERE c.vec_id BETWEEN 1 AND 16),
+    Some(s"""
+      WITH $codebookSql,
       dist AS (
         SELECT e.vec_id, cb.m, cb.code,
-               round(sum(
-                 (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)
-                 * (CAST(e.embedding[(cb.m - 1) * 16 + cb.j] AS DOUBLE) - cb.cval)),
-                 9) AS d2
-        FROM embeddings e, cb
-        WHERE e.vec_id <> 0
+               $subDistSql
         GROUP BY 1, 2, 3),
       codes AS (
         SELECT vec_id, m, code, d2

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -303,6 +303,36 @@ object Streaming {
       .select(from_json(col("data").cast("string"), eventSchema).as("e"))
       .select(col("e.*"))
 
+  /** The pack's windowed rollup: per-(`w`, event_type) row count and 2-dp
+    * value sum over `events` watermarked 1 hour behind `ts` — q28/q130's
+    * hourly tumbling window, q56's across a restart, q37's sliding one. */
+  private def windowAgg(events: DataFrame, w: Column): DataFrame =
+    events
+      .withWatermark("ts", "1 hour")
+      .groupBy(w, col("event_type"))
+      .agg(
+        count(lit(1)).as("n"),
+        round(sum(col("value")), 2).as("total_value"))
+
+  /** [[windowAgg]]'s emitted windows as the batch oracle reads them: the
+    * sentinel's never-closing window dropped, each window keyed by its
+    * formatted start. */
+  private def windowRows(emitted: DataFrame): DataFrame =
+    emitted
+      .filter(col("event_type") =!= "sentinel")
+      .select(
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
+          .as("window_start"),
+        col("event_type"),
+        col("n"),
+        col("total_value"))
+      .orderBy(col("window_start"), col("event_type"))
+
+  /** The hourly tumbling window drained from `log`: q28 and its
+    * one-record-per-event twin q130. */
+  private def hourlyWindow(s: SparkSession, log: String): DataFrame =
+    windowRows(runToMemory(s, windowAgg(replay(s, log), window(col("ts"), "1 hour"))))
+
   /** Streaming tumbling-window aggregate: watermarked event-time window()
     * over the replayed log, in APPEND output mode — the scale-safe mode:
     * each window is emitted exactly once when the watermark passes its
@@ -323,31 +353,9 @@ object Streaming {
     * at one record per event. */
   private val q28 = Q(
     "q28_stream_window",
-    (s, d) => {
-      val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val agg = replay(s, log)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg)
-        .filter(col("event_type") =!= "sentinel")
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"),
-          col("n"),
-          col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))
-    },
-    // Same oracle shape as q23: streaming window() ≡ date_trunc group-by.
-    Some("""
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-             event_type, count(*) AS n, round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY window_start, event_type"""),
+    (s, d) => hourlyWindow(s, ensureLog(s, d, copies = 1, sentinel = true)),
+    // q23's oracle: streaming window() ≡ date_trunc group-by.
+    Relational.HourlyWindowOracle,
   )
 
   /** Streaming dedup: the log is written with every record duplicated
@@ -406,41 +414,25 @@ object Streaming {
           session_window(col("ts"), "1800000001 microseconds"),
           col("user_id"))
         .agg(count(lit(1)).as("sess_len"))
-      runToMemory(s, sessions)
-        .filter(col("user_id") =!= SentinelUserId)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_sessions"),
-          max(col("sess_len")).as("max_sess_len"),
-          sum(col("sess_len")).as("n_events"))
-        .orderBy(col("user_id"))
+      sessionRollup(runToMemory(s, sessions))
     },
-    // Identical oracle to q24's batch sessionization.
-    Some("""
-      WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts, 1) OVER w IS NULL
-                      OR epoch_us(ts) - epoch_us(lag(ts, 1) OVER w) > 1800000000
-                    THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ), sessions AS (
-        SELECT user_id,
-               sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
-        FROM flagged
-      ), per_sess AS (
-        SELECT user_id, sess_id, count(*) AS sess_len
-        FROM sessions GROUP BY user_id, sess_id
-      )
-      SELECT user_id,
-             count(*) AS n_sessions,
-             max(sess_len) AS max_sess_len,
-             CAST(sum(sess_len) AS BIGINT) AS n_events
-      FROM per_sess
-      GROUP BY user_id
-      ORDER BY user_id"""),
+    Relational.SessionOracle,
   )
+
+  /** Per-user rollup of drained sessions, the sentinel user dropped:
+    * session count, longest session and event total (q24's columns),
+    * then any `extra` aggregates — q30's, and q92's with the dynamic
+    * gap's session durations. */
+  private def sessionRollup(sessions: DataFrame, extra: Column*): DataFrame =
+    sessions
+      .filter(col("user_id") =!= SentinelUserId)
+      .groupBy(col("user_id"))
+      .agg(
+        count(lit(1)).as("n_sessions"),
+        Seq(
+          max(col("sess_len")).as("max_sess_len"),
+          sum(col("sess_len")).as("n_events")) ++ extra: _*)
+      .orderBy(col("user_id"))
 
   /** (row count, max event_id) of the events table per sf dir, computed
     * once in one job and cached: the sizing inputs of the streaming pack
@@ -508,6 +500,28 @@ object Streaming {
   private def joinStep(s: SparkSession, d: String): Long =
     math.max(50000L, eventCount(s, d) / 6L)
 
+  /** One side of the stream-join family: `log` replayed under
+    * [[joinStep]]'s admission, the rows `keep` admits, user and time
+    * renamed with the side's `prefix` (`p` purchases, `c` clicks), the
+    * event id as `id`, then the side's `extra` columns, watermarked
+    * 1 hour behind its time. */
+  private def joinSide(s: SparkSession, d: String, log: String, keep: Column,
+      prefix: String, id: String, extra: Column*): DataFrame =
+    replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
+      .filter(keep)
+      .select(Seq(
+        col("user_id").as(s"${prefix}_user"),
+        col("event_id").as(id),
+        col("ts").as(s"${prefix}_ts")) ++ extra: _*)
+      .withWatermark(s"${prefix}_ts", "1 hour")
+
+  /** The family's interval condition: the same user's click at most one
+    * hour before the purchase. */
+  private def clickWithinHour: Column =
+    col("p_user") === col("c_user") &&
+      col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+      col("c_ts") <= col("p_ts")
+
   /** Stream-stream interval join: purchases ⋈ clicks per user, the click
     * at most one hour before the purchase — both sides watermarked, equi
     * key (user_id) + event-time range constraint, the canonical
@@ -518,27 +532,11 @@ object Streaming {
     "q36_stream_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      def side(): DataFrame =
-        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
-      val purchases = side()
-        .filter(col("event_type") === "purchase")
-        .select(
-          col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = side()
-        .filter(col("event_type") === "click")
-        .select(
-          col("user_id").as("c_user"),
-          col("event_id").as("click_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(
-        clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"))
+      val purchases = joinSide(s, d, log,
+        col("event_type") === "purchase", "p", "purchase_id")
+      val clicks = joinSide(s, d, log,
+        col("event_type") === "click", "c", "click_id")
+      val joined = purchases.join(clicks, clickWithinHour)
       runToMemory(s, joined, parts = joinStateParts(s, d))
         .select(col("purchase_id"), col("click_id"))
         .orderBy(col("purchase_id"), col("click_id"))
@@ -569,29 +567,12 @@ object Streaming {
     "q61_stream_outer_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      def side(): DataFrame =
-        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
-      val purchases = side()
-        .filter(col("event_type").isin("purchase", "sentinel"))
-        .select(
-          col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"),
-          col("event_type").as("p_type"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = side()
-        .filter(col("event_type").isin("click", "sentinel"))
-        .select(
-          col("user_id").as("c_user"),
-          col("event_id").as("click_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(
-        clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "leftOuter")
+      val purchases = joinSide(s, d, log,
+        col("event_type").isin("purchase", "sentinel"), "p", "purchase_id",
+        col("event_type").as("p_type"))
+      val clicks = joinSide(s, d, log,
+        col("event_type").isin("click", "sentinel"), "c", "click_id")
+      val joined = purchases.join(clicks, clickWithinHour, "leftOuter")
       runToMemory(s, joined, parts = joinStateParts(s, d))
         .filter(col("p_type") === "purchase")
         .select(
@@ -622,21 +603,8 @@ object Streaming {
     "q37_stream_sliding",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      val agg = replay(s, log)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg)
-        .filter(col("event_type") =!= "sentinel")
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"),
-          col("n"),
-          col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))
+      windowRows(runToMemory(s,
+        windowAgg(replay(s, log), window(col("ts"), "2 hours", "1 hour"))))
     },
     Some("""
       WITH w AS (
@@ -784,6 +752,28 @@ object Streaming {
       ORDER BY event_type"""),
   )
 
+  /** Per-type row count, event-id range and 2-dp value sum of the rows a
+    * sink store holds: q46's and q66's delivered-data rollup. */
+  private def storeRollup(rows: DataFrame): DataFrame =
+    rows
+      .groupBy(col("event_type"))
+      .agg(
+        count(lit(1)).as("n"),
+        min(col("event_id")).as("min_event"),
+        max(col("event_id")).as("max_event"),
+        round(sum(col("value")), 2).as("total_value"))
+      .orderBy(col("event_type"))
+
+  /** [[storeRollup]] over the clean events table: a store that lost,
+    * duplicated or partially committed a batch differs from it. */
+  private val StoreRollupOracle = Some("""
+      SELECT event_type, count(*) AS n,
+             min(event_id) AS min_event, max(event_id) AS max_event,
+             round(sum(value), 2) AS total_value
+      FROM events
+      GROUP BY event_type
+      ORDER BY event_type""")
+
   /** Exactly-once delivery to an EXTERNAL store through `foreachBatch` +
     * [[graft.streaming.IdempotentSink]] — the sink tier of the surface
     * (Spark's own sinks keep internal commit logs; an external table or
@@ -806,22 +796,9 @@ object Streaming {
       drain(s, rows)(_.foreachBatch(sink(_, _)))
       // `batch=<id>` reads back as a partition column; drop it — the
       // store's content, not its batch layout, is the delivered data.
-      s.read.parquet(store)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          min(col("event_id")).as("min_event"),
-          max(col("event_id")).as("max_event"),
-          round(sum(col("value")), 2).as("total_value"))
-        .orderBy(col("event_type"))
+      storeRollup(s.read.parquet(store))
     },
-    Some("""
-      SELECT event_type, count(*) AS n,
-             min(event_id) AS min_event, max(event_id) AS max_event,
-             round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY event_type
-      ORDER BY event_type"""),
+    StoreRollupOracle,
   )
 
   /** The store-maintenance tier on top of q46: stream the log into the
@@ -858,24 +835,11 @@ object Streaming {
       require(segments == 1, s"compaction did not engage: $segments segments")
       require(sink.committedBatchIds == before,
         "compaction lost part of the batchId commit record")
-      sink.readAll(s)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          min(col("event_id")).as("min_event"),
-          max(col("event_id")).as("max_event"),
-          round(sum(col("value")), 2).as("total_value"))
-        .orderBy(col("event_type"))
+      storeRollup(sink.readAll(s))
     },
     // Same contract as q46: the (now compacted) store must hold exactly
     // the clean events table.
-    Some("""
-      SELECT event_type, count(*) AS n,
-             min(event_id) AS min_event, max(event_id) AS max_event,
-             round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY event_type
-      ORDER BY event_type"""),
+    StoreRollupOracle,
   )
 
   /** Live incremental rollup maintenance — q95's algebraic base⊕delta
@@ -954,14 +918,11 @@ object Streaming {
     * the limit bounds per-shard SEQUENCE advance, and sequence numbers
     * are global event ids, so a whole-log seq range split by 2 gives ~2
     * batches — the FEWEST that still prove MULTI-batch cursor commits;
-    * r8 billed ~6 batches and r16 ~3, and every batch beyond the second
-    * was pure bench cost, not extra proof: both lifecycles already run
-    * Trigger.AvailableNow, so the line's billed time is per-batch and
-    * per-start fixed work, which driver-load waves amplify — VERDICT
-    * r16 measured 8× on this line while the surface inflated 1.3×),
-    * each batch committing per-shard cursors
-    * + the running
-    * watermark to the checkpoint and its closed windows to the
+    * every batch beyond the second is bench cost, not extra proof: both
+    * lifecycles run Trigger.AvailableNow, so the line's billed time is
+    * per-batch and per-start fixed work, which driver load amplifies),
+    * each batch committing per-shard cursors + the running watermark to
+    * the checkpoint and its closed windows to the
     * [[graft.streaming.IdempotentSink]] store. Run 2 then starts FRESH
     * from that checkpoint against the sentinel-extended log — the same
     * shard files with one record appended past every committed cursor,
@@ -988,12 +949,8 @@ object Streaming {
       val nEvents = eventCount(s, d)
       val seqStep = math.max(1L, nEvents / 2L)
       def agg(log: String, limit: Option[Long]): DataFrame =
-        replay(s, log, maxRecordsPerBatch = limit)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            count(lit(1)).as("n"),
-            round(sum(col("value")), 2).as("total_value"))
+        windowAgg(replay(s, log, maxRecordsPerBatch = limit),
+          window(col("ts"), "1 hour"))
       drain(s, agg(base, Some(seqStep)), ckpt)(_.foreachBatch(sink(_, _)))
       drain(s, agg(full, None), ckpt)(_.foreachBatch(sink(_, _)))
       // The proof's shape, enforced IN the gated query: run 1's cursor
@@ -1008,30 +965,31 @@ object Streaming {
         s"restart proof must span multiple microbatches across two " +
           s"lifecycles ($nEvents events => expected >= $wantBatches), " +
           s"got batches ${sink.committedBatchIds}")
-      s.read.parquet(store)
-        .filter(col("event_type") =!= "sentinel")
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"),
-          col("n"),
-          col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))
+      windowRows(s.read.parquet(store))
     },
     // q28's oracle: a lossless resume makes the two-lifetime run
     // indistinguishable from the single-start stream.
-    Some("""
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-             event_type, count(*) AS n, round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY window_start, event_type"""),
+    Relational.HourlyWindowOracle,
   )
 
   /** The RocksDB state store — the only provider that serves
     * transformWithState (q73, q80). */
   private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Replace a processor's one live flush timer with one 1 h of event
+    * time past `last` (ms), never at or behind the current watermark —
+    * Spark accepts only future expirations. */
+  private def rearm(
+      handle: org.apache.spark.sql.streaming.StatefulProcessorHandle,
+      timerMs: org.apache.spark.sql.streaming.ValueState[Long],
+      last: Long,
+      timers: org.apache.spark.sql.streaming.TimerValues): Unit = {
+    val next = math.max(last + 3600L * 1000L, timers.getCurrentWatermarkInMs() + 1)
+    if (timerMs.exists()) handle.deleteTimer(timerMs.get())
+    handle.registerTimer(next)
+    timerMs.update(next)
+  }
 
   /** Per-user per-type stats processor for q73 — the Spark 4
     * transformWithState API (the arbitrary-state tier ABOVE q39's
@@ -1082,10 +1040,7 @@ object Streaming {
       // (user, type) (see q73's post-sink rollup), so multi-flush keys
       // still reconcile exactly; "one flush per key" is the common case,
       // not a correctness precondition.
-      val next = math.max(last + 3600L * 1000L, timers.getCurrentWatermarkInMs() + 1)
-      if (timerMs.exists()) getHandle.deleteTimer(timerMs.get())
-      getHandle.registerTimer(next)
-      timerMs.update(next)
+      rearm(getHandle, timerMs, last, timers)
       Iterator.empty
     }
 
@@ -1194,10 +1149,7 @@ object Streaming {
       lastMs.update(last)
       // Same lateness bound as UserTypeStatsProcessor: >1h gaps can
       // multi-flush a key; q80's sink sum-merges so that stays exact.
-      val next = math.max(last + 3600L * 1000L, timers.getCurrentWatermarkInMs() + 1)
-      if (timerMs.exists()) getHandle.deleteTimer(timerMs.get())
-      getHandle.registerTimer(next)
-      timerMs.update(next)
+      rearm(getHandle, timerMs, last, timers)
       Iterator.empty
     }
 
@@ -1315,30 +1267,13 @@ object Streaming {
     "q82_stream_full_outer_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1, sentinel = true)
-      def side(): DataFrame =
-        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
-      val purchases = side()
-        .filter(col("event_type").isin("purchase", "sentinel"))
-        .select(
-          col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"),
-          col("event_type").as("p_type"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = side()
-        .filter(col("event_type").isin("click", "sentinel"))
-        .select(
-          col("user_id").as("c_user"),
-          col("event_id").as("click_id"),
-          col("ts").as("c_ts"),
-          col("event_type").as("c_type"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(
-        clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "fullOuter")
+      val purchases = joinSide(s, d, log,
+        col("event_type").isin("purchase", "sentinel"), "p", "purchase_id",
+        col("event_type").as("p_type"))
+      val clicks = joinSide(s, d, log,
+        col("event_type").isin("click", "sentinel"), "c", "click_id",
+        col("event_type").as("c_type"))
+      val joined = purchases.join(clicks, clickWithinHour, "fullOuter")
       runToMemory(s, joined, parts = joinStateParts(s, d))
         .filter(
           col("p_type") === "purchase" ||
@@ -1389,28 +1324,11 @@ object Streaming {
     "q84_stream_semi_join",
     (s, d) => {
       val log = ensureLog(s, d, copies = 1)
-      def side(): DataFrame =
-        replay(s, log, maxRecordsPerBatch = Some(joinStep(s, d)))
-      val purchases = side()
-        .filter(col("event_type") === "purchase")
-        .select(
-          col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = side()
-        .filter(col("event_type") === "click")
-        .select(
-          col("user_id").as("c_user"),
-          col("event_id").as("click_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(
-        clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "leftSemi")
+      val purchases = joinSide(s, d, log,
+        col("event_type") === "purchase", "p", "purchase_id")
+      val clicks = joinSide(s, d, log,
+        col("event_type") === "click", "c", "click_id")
+      val joined = purchases.join(clicks, clickWithinHour, "leftSemi")
       runToMemory(s, joined, parts = joinStateParts(s, d))
         .select(col("purchase_id"), col("p_user").as("user_id"))
         .orderBy(col("purchase_id"))
@@ -1456,16 +1374,9 @@ object Streaming {
               .otherwise("1 hour")),
           col("user_id"))
         .agg(count(lit(1)).as("sess_len"))
-      runToMemory(s, sessions)
-        .filter(col("user_id") =!= SentinelUserId)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_sessions"),
-          max(col("sess_len")).as("max_sess_len"),
-          sum(col("sess_len")).as("n_events"),
-          sum(unix_micros(col("session_window.end"))
-            - unix_micros(col("session_window.start"))).as("total_sess_us"))
-        .orderBy(col("user_id"))
+      sessionRollup(runToMemory(s, sessions),
+        sum(unix_micros(col("session_window.end"))
+          - unix_micros(col("session_window.start"))).as("total_sess_us"))
     },
     Some("""
       WITH e AS (
@@ -1558,7 +1469,7 @@ object Streaming {
           lit(0L).as("sum_k"))
       good.unionByName(bad).orderBy(col("store"), col("event_type"))
     },
-    Some("""
+    Some(s"""
       WITH mangled AS (
         SELECT event_id, event_type,
                CASE WHEN event_id % 10 = 0
@@ -1568,13 +1479,7 @@ object Streaming {
       -- Route on Spark's SCHEMA-BIND corruption (q77's rule): a record
       -- whose k is valid JSON but not an integer is corrupt to
       -- from_json('k INT') and belongs in the dead-letter store.
-      graded AS (
-        SELECT event_type, raw,
-               CASE WHEN json_valid(raw)
-                    THEN coalesce(json_type(raw, '$.k'), 'NULL')
-                         IN ('UBIGINT', 'BIGINT', 'NULL')
-                    ELSE FALSE END AS ok
-        FROM mangled)
+      ${Relational.GradedSql}
       SELECT 'dlq' AS store, event_type, count(*) AS n,
              CAST(0 AS BIGINT) AS sum_k
       FROM graded WHERE NOT ok
@@ -1734,27 +1639,7 @@ object Streaming {
     },
     // Batch-equivalent oracle: identical semantics to q112 (the
     // microbatch union of purchases is the purchase set).
-    Some("""
-      WITH ev AS (
-        SELECT user_id, event_id, event_type, value, epoch_us(ts) AS tsu
-        FROM events),
-      dim AS (
-        SELECT user_id AS d_user, tsu AS from_tsu,
-               lead(tsu) OVER (PARTITION BY user_id
-                               ORDER BY tsu, event_id) AS to_tsu,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY tsu, event_id) AS version
-        FROM ev WHERE event_type = 'signup'),
-      f AS (SELECT user_id, tsu, value FROM ev
-            WHERE event_type = 'purchase')
-      SELECT CAST(coalesce(d.version, 0) AS INT) AS version,
-             CAST(count(*) AS BIGINT) AS n_purchases,
-             CAST(count(DISTINCT f.user_id) AS BIGINT) AS n_users,
-             round(sum(f.value), 2) AS revenue
-      FROM f LEFT JOIN dim d
-        ON d.d_user = f.user_id AND f.tsu >= d.from_tsu
-           AND (d.to_tsu IS NULL OR f.tsu < d.to_tsu)
-      GROUP BY 1 ORDER BY 1"""),
+    Relational.PitEnrichOracle,
   )
 
   /** STREAMING backfill seam — the lambda-architecture handoff done
@@ -1784,37 +1669,11 @@ object Streaming {
       // The cut point: a bounded driver-side scalar (the q94 seqStep
       // precedent), NOT corpus data on the driver.
       val k = maxEventId(s, d) / 2
-      val cents = expr("CAST(round(value * 100) AS BIGINT)")
-      val hist = T.events(s, d)
-        .filter(col("event_id") <= k)
-        .groupBy(date_trunc("hour", col("ts")).as("ws"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val liveAgg = replay(s, log, start = s"after_sequence_number:$k")
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val live = runToMemory(s, liveAgg)
-        .filter(col("event_type") =!= "sentinel")
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n"), col("cents"))
-      hist.unionByName(live)
-        .groupBy(col("ws"), col("event_type"))
-        .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
-        .select(
-          date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n"), col("cents"))
-        .orderBy(col("window_start"), col("event_type"))
+      seamRollup(s, log, s"after_sequence_number:$k",
+        T.events(s, d).filter(col("event_id") <= k),
+        "hour", "window_start", "yyyy-MM-dd HH:mm:ss")
     },
-    Some("""
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
-               AS window_start,
-             event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY window_start, event_type"""),
+    seamOracle("hour", "window_start", "%Y-%m-%d %H:%M:%S"),
   )
 
   /** STREAMING point-in-time replay — q125's seam with the cut
@@ -1847,37 +1706,52 @@ object Streaming {
         .select(unix_micros(col("ts"))).head().getLong(0)
       val tIso = java.time.Instant.EPOCH
         .plus(tu, java.time.temporal.ChronoUnit.MICROS).toString
-      val cents = expr("CAST(round(value * 100) AS BIGINT)")
-      val hist = T.events(s, d)
-        .filter(unix_micros(col("ts")) < tu)
-        .groupBy(date_trunc("day", col("ts")).as("ws"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val liveAgg = replay(s, log, start = s"at_timestamp:$tIso")
-        .withWatermark("ts", "1 day")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
-      val live = runToMemory(s, liveAgg)
-        .filter(col("event_type") =!= "sentinel")
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n"), col("cents"))
-      hist.unionByName(live)
-        .groupBy(col("ws"), col("event_type"))
-        .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
-        .select(
-          date_format(col("ws"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n"), col("cents"))
-        .orderBy(col("day"), col("event_type"))
+      seamRollup(s, log, s"at_timestamp:$tIso",
+        T.events(s, d).filter(unix_micros(col("ts")) < tu),
+        "day", "day", "yyyy-MM-dd")
     },
-    Some("""
-      SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+    seamOracle("day", "day", "%Y-%m-%d"),
+  )
+
+  /** The backfill seam's merge (q125, q126): the history leg's `hist`
+    * events and the live leg's replay of `log` from `start` each roll up
+    * to per-(`unit` window, type) row counts and integer cents, the live
+    * one under a 1-`unit` watermark; the partials add up per window,
+    * labelled `label` in Spark's `format`. */
+  private def seamRollup(s: SparkSession, log: String, start: String,
+      hist: DataFrame, unit: String, label: String, format: String): DataFrame = {
+    val cents = expr("CAST(round(value * 100) AS BIGINT)")
+    val histAgg = hist
+      .groupBy(date_trunc(unit, col("ts")).as("ws"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
+    val liveAgg = replay(s, log, start = start)
+      .withWatermark("ts", s"1 $unit")
+      .groupBy(window(col("ts"), s"1 $unit"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
+    val live = runToMemory(s, liveAgg)
+      .filter(col("event_type") =!= "sentinel")
+      .select(col("window.start").as("ws"), col("event_type"),
+        col("n"), col("cents"))
+    histAgg.unionByName(live)
+      .groupBy(col("ws"), col("event_type"))
+      .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
+      .select(
+        date_format(col("ws"), format).as(label),
+        col("event_type"), col("n"), col("cents"))
+      .orderBy(col(label), col("event_type"))
+  }
+
+  /** [[seamRollup]]'s oracle: the plain whole-corpus rollup, the window
+    * labelled `label` in DuckDB's `format`. */
+  private def seamOracle(unit: String, label: String, format: String) = Some(s"""
+      SELECT strftime(date_trunc('$unit', ts), '$format') AS $label,
              event_type,
              CAST(count(*) AS BIGINT) AS n,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                AS cents
       FROM events
       GROUP BY 1, 2
-      ORDER BY day, event_type"""),
-  )
+      ORDER BY $label, event_type""")
 
   /** STREAMING `latest`-position gap — the LAST S13 variant under the
     * oracle gate, and the reference's DEFAULT starting position
@@ -2089,30 +1963,10 @@ object Streaming {
   private val q130 = Q(
     "q130_stream_window_textlog",
     (s, d) => {
-      val log = oneRecordPerEventLog(s, d)
-      val agg = replay(s, log)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"))
-      runToMemory(s, agg)
-        .filter(col("event_type") =!= "sentinel")
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"),
-          col("n"),
-          col("total_value"))
-        .orderBy(col("window_start"), col("event_type"))
+      hourlyWindow(s, oneRecordPerEventLog(s, d))
     },
     // q28's oracle: same plan, different event grouping, same hash.
-    Some("""
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-             event_type, count(*) AS n, round(sum(value), 2) AS total_value
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY window_start, event_type"""),
+    Relational.HourlyWindowOracle,
   )
 
   /** The MONITOR-DELEGATION arm of the producer's retry loop under the

@@ -73,7 +73,7 @@ object KinesisLikeLog {
     new EventStreamFraming.FramedEventSource(f)
 
   /** Visit every event of a shard file in wire order without
-    * materializing it — the one walk behind the at_timestamp index and
+    * materializing it — the one walk behind at_timestamp resolution and
     * every fixture derivation; a missing file has no events. */
   private def foreachEvent(f: File)(op: ShardEvent => Unit): Unit =
     if (f.exists()) {
@@ -264,7 +264,6 @@ object KinesisLikeLog {
   def invalidateMeta(logDir: String): Unit = {
     val prefix = new File(logDir).getAbsolutePath + File.separator
     shardMeta.invalidate(prefix)
-    tsIndex.invalidate(prefix)
   }
 
   /** Warm [[shardMeta]] for every shard of `logDir` with the per-shard
@@ -277,38 +276,6 @@ object KinesisLikeLog {
     import scala.jdk.CollectionConverters._
     shardFiles(logDir).asJava.parallelStream().forEach(f => { maxSeq(f); () })
   }
-
-  /** Number of full at_timestamp index builds. */
-  private[sources] val tsIndexScans = new java.util.concurrent.atomic.AtomicLong
-
-  /** Per-shard `at_timestamp` index, cached by (mtime, length) exactly
-    * like [[shardMeta]], so repeated timestamp starts cost an O(log n)
-    * binary search instead of an O(shard) driver-side rescan per query
-    * start — the same "driver-side work is metadata-only" posture maxSeq
-    * enjoys. The index is the INCREASING-ARRIVAL ENVELOPE of the shard:
-    * scanning records in file order (= ascending sequence, the log
-    * format contract), keep a record iff its arrival strictly exceeds
-    * the running max. Any dropped record r is dominated by an earlier
-    * kept record k with seq(k) < seq(r) and arrival(k) ≥ arrival(r), so
-    * whenever r qualifies for a cut T (arrival ≥ T), k qualifies with a
-    * smaller sequence — the envelope answers min{seq : arrival ≥ T}
-    * exactly, for MONOTONE and non-monotone arrivals alike. Envelope
-    * entries are ascending in both coordinates, so the lookup is a
-    * binary search on arrivals. Yields (arrivals, seqs). */
-  private val tsIndex = new StampCache[(Array[Long], Array[Long])](
-      tsIndexScans, (Array.empty, Array.empty))({ f =>
-    val arrivals = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val seqs     = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var runMax   = Long.MinValue
-    foreachRecord(f) { r =>
-      if (r.arrivalMicros > runMax) {
-        arrivals += r.arrivalMicros
-        seqs += r.seq
-        runMax = r.arrivalMicros
-      }
-    }
-    (arrivals.toArray, seqs.toArray)
-  })
 
   /** (highest sequence number — -1 for an empty shard —, closed) from
     * one cached metadata read; closed ⇔ the nil-continuation marker has
@@ -331,16 +298,15 @@ object KinesisLikeLog {
     case StartingPosition.AfterSequenceNumber(n) => n
     case StartingPosition.AtTimestamp(ts) =>
       val micros = ts.getEpochSecond * 1000000L + ts.getNano / 1000L
-      // First envelope entry with arrival ≥ the instant (see [[tsIndex]]);
-      // past-the-end behaves like latest.
-      val (arrivals, seqs) = tsIndex(f)
-      var lo = 0
-      var hi = arrivals.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (arrivals(mid) >= micros) hi = mid else lo = mid + 1
+      // The first record in file (= ascending sequence) order whose own
+      // arrival is at or after the instant, so non-monotone arrivals
+      // resolve to min{seq : arrival ≥ instant}; past-the-end behaves
+      // like latest. One driver-side fold per shard per stream start.
+      var first: Option[Long] = None
+      foreachRecord(f) { r =>
+        if (first.isEmpty && r.arrivalMicros >= micros) first = Some(r.seq)
       }
-      if (lo == arrivals.length) maxSeq(f) else seqs(lo) - 1
+      first.fold(maxSeq(f))(_ - 1)
   }
 
   /** Build a shard log directory from the driver-generated events table —

@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -10,7 +11,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * a query pins and unpins a materialized intermediate. The jobs
   * materialize runs are named after its caller, so stage names point at
   * the operator that asked; release drops exactly the blocks under the
-  * plan it is given. */
+  * plan it is given. [[GraftSession.billed]] names the stages of its
+  * write after the query, AQE's query stages included. */
 class MaterializeSpec extends SparkSpec {
 
   private def grouped = spark.range(0, 1000, 1, 4)
@@ -50,5 +52,39 @@ class MaterializeSpec extends SparkSpec {
     assert(b.count() === 5)
     GraftSession.release(b)
     assert(sc.getPersistentRDDs.isEmpty)
+  }
+
+  test("a billed query's AQE stages are named after the query, not the " +
+    "thread pool that submits them") {
+    val sc = spark.sparkContext
+    // q01 over a small lineitem table of its own: a grouped aggregate,
+    // whose shuffle runs as an AQE query stage.
+    val sf = java.nio.file.Files.createTempDirectory("billed_callsite").toString
+    spark.range(0, 1000, 1, 4)
+      .selectExpr("DATE'1998-01-01' AS l_shipdate",
+        "CAST(id % 3 AS STRING) AS l_returnflag",
+        "CAST(id % 2 AS STRING) AS l_linestatus",
+        "CAST(id AS DOUBLE) AS l_quantity",
+        "CAST(id AS DOUBLE) AS l_extendedprice",
+        "0.05D AS l_discount")
+      .write.parquet(s"$sf/lineitem.parquet")
+    val stages = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.synchronized(stages += e.stageInfo.name)
+    }
+    Bridge.drainListeners(spark)
+    sc.addSparkListener(listener)
+    GraftSession.billed(spark, "q01_agg_pricing", sf)
+    Bridge.drainListeners(spark)
+    sc.removeSparkListener(listener)
+    assert(stages.forall(!_.contains("withThreadLocalCaptured")),
+      s"stages named after the submitting thread pool: $stages")
+    // The write's shuffle and result stages (building the query may read
+    // parquet footers under the reader's own call site first).
+    assert(stages.count(_ == "q01_agg_pricing") >= 2,
+      s"expected the write's stages named after the query: $stages")
+    assert(sc.getLocalProperty("callSite.short") === null,
+      "billed left its call site set on the thread")
   }
 }
