@@ -3413,8 +3413,10 @@ object Relational {
         .withColumn(
           "label",
           coalesce(concat(lit("class_"), col("pk")), lit("unclassified")))
-      facts
-        .join(broadcast(dim), facts("pk") <=> dim("pk"))
+      // Aliased sides: dim derives from facts, so the two `pk`s would
+      // otherwise name one attribute.
+      facts.as("f")
+        .join(broadcast(dim.as("d")), col("f.pk") <=> col("d.pk"))
         .groupBy(col("label"))
         .agg(
           count(lit(1)).as("n"),

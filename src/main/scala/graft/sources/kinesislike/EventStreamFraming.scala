@@ -339,9 +339,9 @@ object EventStreamFraming {
   private val TimesRe = """"times"\s*:\s*(\d+)""".r
 
   /** Metadata-only demux of one decoded message — what the driver's
-    * per-stream-start shard scan ([[KinesisLikeLog.shardState]])
-    * needs and nothing more: the continuation sequence number (or the
-    * null-continuation closed signal). [[decodeToEvent]] builds every
+    * shard index scan ([[KinesisLikeLog.index]]) needs and nothing more:
+    * the continuation sequence number (or the null-continuation closed
+    * signal). [[decodeToEvent]] builds every
     * Record (Jackson tree, base64 strings, arrival decimals) just so the
     * fold can take a max over seqs; since the wire writes the
     * continuation as the LAST record's sequence number and per-shard
@@ -433,51 +433,106 @@ object EventStreamFraming {
     def isMidFrame: Boolean = bytesLeft >= 0 || pending.size > 0
   }
 
-  /** The one frame-reading loop over a framed shard file: reads in
-    * [[ChunkBytes]] chunks (never materializing the file), reassembles
-    * messages with a [[FrameDecoder]] and yields each one's CRC-verified
-    * (headers, payload) ([[decodeMessage]]) in wire order. Reaching EOF
-    * mid-frame fails: a truncated shard file is refused, never read as
-    * a shorter one. */
-  private[kinesislike] final class MessageReader(f: File)
+  /** The one frame-reading loop over a framed shard file: reads the byte
+    * range [`start`, `end`) in [[ChunkBytes]] chunks (never materializing
+    * the file), reassembles messages with a [[FrameDecoder]] and yields
+    * each one's CRC-verified (headers, payload) ([[decodeMessage]]) in
+    * wire order. `start` must be a frame boundary; `end` =
+    * `Long.MaxValue` reads to EOF.
+    *
+    * A truncated shard is refused, never read as a shorter one: EOF
+    * before a finite `end`, EOF mid-frame and a frame cut by `end` all
+    * fail. The one exception is `partialTail`, the metadata scan of a
+    * shard a writer may be appending to: there a frame half written at
+    * EOF is "not yet written" and ends the read at the last complete
+    * frame, the way the reference's parser keeps a partial frame
+    * buffered until the rest arrives (subscribe_to_shard.ex:303-310). */
+  private[kinesislike] final class MessageReader(
+      f: File,
+      start: Long = 0L,
+      end: Long = Long.MaxValue,
+      partialTail: Boolean = false)
       extends Iterator[(Map[String, String], Array[Byte])] with AutoCloseable {
     private val in      = new FileInputStream(f)
+    private val channel = in.getChannel
+    channel.position(start)
     private val decoder = new FrameDecoder
     private val chunk   = new Array[Byte](ChunkBytes)
     private var ready: Iterator[Array[Byte]] = Iterator.empty
+    private var fed     = start
+    private var last    = start
+    private var crc     = 0
+
+    /** Bytes read from the file so far. */
+    def bytesRead: Long = fed - start
+
+    /** End byte of the last message [[next]] returned (`start` before
+      * the first). */
+    def position: Long = last
+
+    /** Message CRC (last 4 bytes) of the last message [[next]] returned. */
+    def lastCrc: Int = crc
+
+    /** Whether the 4 bytes just before `start` are `expected`: a
+      * positional read that checks a resumed scan still continues the
+      * file it indexed, whose last frame's message CRC was `expected`. */
+    def precededBy(expected: Int): Boolean = {
+      val b = java.nio.ByteBuffer.allocate(4)
+      while (b.hasRemaining && channel.read(b, start - 4 + b.position()) > 0) {}
+      !b.hasRemaining && b.getInt(0) == expected
+    }
 
     override def hasNext: Boolean = {
       while (!ready.hasNext) {
-        val n = in.read(chunk)
-        if (n < 0) {
+        if (fed >= end) {
           require(!decoder.isMidFrame,
-            s"truncated event-stream frame at EOF in $f")
+            s"truncated event-stream frame: byte $end of $f cuts a frame")
           return false
         }
+        val n = in.read(chunk, 0, math.min(ChunkBytes.toLong, end - fed).toInt)
+        if (n < 0) {
+          if (partialTail) return false
+          require(!decoder.isMidFrame,
+            s"truncated event-stream frame at EOF in $f")
+          require(end == Long.MaxValue,
+            s"truncated shard file: EOF at byte $fed of $f, before the " +
+              s"read's end byte $end")
+          return false
+        }
+        fed += n
         ready = decoder.feed(chunk, 0, n).iterator
       }
       true
     }
 
     override def next(): (Map[String, String], Array[Byte]) =
-      if (hasNext) decodeMessage(ready.next())
-      else throw new NoSuchElementException(s"no message left in $f")
+      if (hasNext) {
+        val msg = ready.next()
+        val decoded = decodeMessage(msg)
+        last += msg.length
+        crc = be32(msg, msg.length - 4)
+        decoded
+      } else throw new NoSuchElementException(s"no message left in $f")
 
     override def close(): Unit = in.close()
   }
 
-  /** Streaming EVENT source over a framed shard file: demuxes each
+  /** Streaming EVENT source over the byte range [`start`, `end`) of a
+    * framed shard file (the whole file by default): demuxes each
     * [[MessageReader]] message's headers, decodes its Records envelope
     * (S12), and yields events in wire order (initial-response skipped).
     * This is the reader's input — cursor logic operates per EVENT,
     * mirroring handle_event's one resume-position advance per message. */
-  final class FramedEventSource(f: File) {
-    private val messages = new MessageReader(f)
+  final class FramedEventSource(f: File, start: Long = 0L, end: Long = Long.MaxValue) {
+    private val messages = new MessageReader(f, start, end)
     private val events   = messages.flatMap { case (h, p) => decodeToEvent(h, p) }
 
-    /** Next event, or null at end of shard. */
+    /** Next event, or null at end of the range. */
     def readEvent(): KinesisLikeLog.ShardEvent =
       if (events.hasNext) events.next() else null
+
+    /** Bytes of the messages decoded so far. */
+    def decodedBytes: Long = messages.position - start
 
     def close(): Unit = messages.close()
   }

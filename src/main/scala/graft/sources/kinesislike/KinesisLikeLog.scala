@@ -2,7 +2,8 @@ package graft.sources.kinesislike
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -66,9 +67,9 @@ object KinesisLikeLog {
   case object Closed extends ShardEvent
   final case class ErrorEvent(spec: String, times: Int) extends ShardEvent
 
-  /** Open a shard file as EVENTS, in wire order — what the executor
-    * reader and [[foreachEvent]] read (per-event cursor semantics, S12
-    * envelope decode). */
+  /** Open a whole shard file as EVENTS, in wire order — what
+    * [[foreachEvent]] reads (S12 envelope decode); the executor reader
+    * opens a byte range of it the same way. */
   def openEvents(f: File): EventStreamFraming.FramedEventSource =
     new EventStreamFraming.FramedEventSource(f)
 
@@ -189,98 +190,164 @@ object KinesisLikeLog {
 
   def shardId(f: File): String = f.getName.stripSuffix(FramedExtension)
 
-  /** A value derived from one shard file, cached by the file's (mtime,
-    * length) so an unchanged shard costs three file-stat calls per
-    * lookup — the analog of Kafka's O(1) listOffsets metadata — instead
-    * of a full driver-side rescan per latestOffset() call. The log is
-    * append-only, so any append changes the length and invalidates the
-    * entry; `scans` counts the rescans (test observability: an
-    * unchanged file must not re-scan). */
-  private final case class Stamped[V](mtime: Long, length: Long, value: V)
-  private final class StampCache[V](
-      scans: java.util.concurrent.atomic.AtomicLong, missing: V)(
-      scan: File => V) {
-    private val entries =
-      new java.util.concurrent.ConcurrentHashMap[String, Stamped[V]]()
-    def apply(f: File): V = {
-      if (!f.exists()) return missing
-      val key    = f.getAbsolutePath
-      val mtime  = f.lastModified()
-      val length = f.length()
-      val cached = entries.get(key)
-      if (cached != null && cached.mtime == mtime && cached.length == length)
-        cached.value
-      else {
-        scans.incrementAndGet()
-        val fresh = scan(f)
-        entries.put(key, Stamped(mtime, length, fresh))
-        fresh
+  /** Sparse index mark: a records event with continuation `continuation`
+    * ends at byte `end`, so every record at or before `end` has a
+    * sequence number ≤ `continuation` (per-shard sequence ascends). */
+  final case class Mark(continuation: Long, end: Long)
+
+  /** Bytes of complete frames between two marks: one [[EventStreamFraming
+    * .ChunkBytes]] read, so a read that starts at a mark decodes at most
+    * that many bytes of events its cursor has already passed. */
+  val MarkBytes: Long = EventStreamFraming.ChunkBytes
+
+  /** One shard file's incremental byte index — the driver's answer to
+    * "what is in this shard", the analog of Kafka's offset index. It holds
+    * the `size`/`mtime` stat it answers for, the bytes of complete frames
+    * scanned (`scanned`) and the message CRC of the last one, the highest
+    * continuation and the closed marker seen in them, and a [[Mark]] at
+    * the end of the first records event at least [[MarkBytes]] past the
+    * previous mark. A frame half written at EOF is not yet written: the
+    * scan stops before it and resumes from `scanned` once it is complete. */
+  final case class ShardIndex(
+      size: Long,
+      mtime: Long,
+      scanned: Long,
+      tailCrc: Int,
+      maxSeq: Long,
+      closed: Boolean,
+      marks: Vector[Mark]) {
+
+    /** Index of the first mark whose continuation is past `seq`. */
+    private def firstMarkAfter(seq: Long): Int = {
+      var lo = 0
+      var hi = marks.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (marks(mid).continuation <= seq) lo = mid + 1 else hi = mid
       }
+      lo
     }
-    def invalidate(prefix: String): Unit =
-      entries.keySet().removeIf(k => k.startsWith(prefix))
+
+    /** Byte range [start, end) holding every event a read of the records
+      * in (after, until] must see: from the end of the last mark whose
+      * continuation ≤ `after` (so exception and closed messages after it
+      * are still read), to the end of the first mark whose continuation
+      * is past `until` (the reader stops at the first event past `until`,
+      * which that mark's event bounds), else to `scanned`. */
+    def range(after: Long, until: Long): (Long, Long) = {
+      val from = firstMarkAfter(after)
+      val to   = firstMarkAfter(until)
+      (if (from == 0) 0L else marks(from - 1).end,
+        if (to == marks.length) scanned else marks(to).end)
+    }
   }
 
-  /** Number of full metadata scans performed. */
+  private val Unscanned = ShardIndex(-1L, 0L, 0L, 0, -1L, closed = false, Vector.empty)
+
+  /** Full metadata scans (from byte 0) performed. */
   private[sources] val metaScans = new java.util.concurrent.atomic.AtomicLong
 
-  /** Driver-side (maxSeq, closed) per shard file. */
-  private val shardMeta =
-    new StampCache[(Long, Boolean)](metaScans, (-1L, false))(metaScan)
+  /** Bytes the metadata scans read, full and incremental. */
+  private[sources] val metaScanBytes = new java.util.concurrent.atomic.AtomicLong
 
-  /** The (maxSeq, closed) fold itself — metadata-ONLY decode, because
-    * this scan runs on the DRIVER once per stream start per shard file
-    * (stream construction invalidates the cache; see [[invalidateMeta]])
-    * and the full event decode (Jackson tree, base64 strings, Record
-    * allocation) measured 250–600 ms per 16-shard scan at sf0.1, billed
-    * to every streaming lifecycle. The wire writes each envelope's
-    * continuation as its LAST record's sequence number and per-shard
-    * sequence is ascending, so max(record seq) == max(continuation):
-    * the scan parses only the envelope's continuation field
-    * ([[EventStreamFraming.decodeToMeta]]; CRCs still verified).
-    * Equality with the full-decode fold is pinned by
-    * KinesisLikeSourceSpec. */
-  private def metaScan(f: File): (Long, Boolean) = {
-    val messages = new EventStreamFraming.MessageReader(f)
-    var mx       = -1L
-    var cl       = false
-    try messages.foreach { case (headers, payload) =>
-      EventStreamFraming.decodeToMeta(headers, payload) match {
-        case Some(Right(cont)) => if (cont > mx) mx = cont
-        case Some(Left(_))     => cl = true
-        case None              =>
+  private val indexes =
+    new java.util.concurrent.ConcurrentHashMap[String, ShardIndex]()
+
+  /** The shard's index, brought up to date with one stat call: unchanged
+    * (size, mtime) answers from the entry; a grown file that still holds
+    * the indexed frames (the CRC before `scanned` matches) is scanned
+    * from `scanned` only; a shrunk or replaced one from byte 0. A missing
+    * file has an empty index. */
+  def index(f: File): ShardIndex = {
+    val attrs =
+      try Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
+      catch { case _: NoSuchFileException => return Unscanned }
+    val size   = attrs.size()
+    val mtime  = attrs.lastModifiedTime().toMillis
+    val key    = f.getAbsolutePath
+    val cached = indexes.get(key)
+    if (cached != null && cached.size == size && cached.mtime == mtime) cached
+    else {
+      val grown = Option(cached).filter(_.scanned <= size)
+        .flatMap(c => scanFrom(f, c, size, mtime))
+      val fresh = grown.getOrElse {
+        metaScans.incrementAndGet()
+        scanFrom(f, Unscanned, size, mtime).get
+      }
+      indexes.put(key, fresh)
+      fresh
+    }
+  }
+
+  /** Extend `base` with the frames from `base.scanned` on — a
+    * metadata-ONLY decode, because this scan runs on the DRIVER at every
+    * poll. The wire writes each envelope's continuation as its LAST
+    * record's sequence number and per-shard sequence is ascending, so
+    * max(record seq) == max(continuation): the scan parses only the
+    * envelope's continuation field ([[EventStreamFraming.decodeToMeta]];
+    * CRCs still verified). Equality with the full-decode fold is pinned
+    * by KinesisLikeSourceSpec. None when the bytes before `base.scanned`
+    * are no longer the indexed frame's CRC (the file was replaced). */
+  private def scanFrom(
+      f: File, base: ShardIndex, size: Long, mtime: Long): Option[ShardIndex] = {
+    val messages = new EventStreamFraming.MessageReader(
+      f, base.scanned, partialTail = true)
+    try {
+      if (base.scanned > 0 && !messages.precededBy(base.tailCrc)) None
+      else {
+        var mx       = base.maxSeq
+        var cl       = base.closed
+        var marks    = base.marks
+        var lastMark = marks.lastOption.fold(0L)(_.end)
+        messages.foreach { case (headers, payload) =>
+          EventStreamFraming.decodeToMeta(headers, payload) match {
+            case Some(Right(cont)) =>
+              if (cont > mx) mx = cont
+              if (messages.position - lastMark >= MarkBytes) {
+                marks :+= Mark(cont, messages.position)
+                lastMark = messages.position
+              }
+            case Some(Left(_)) => cl = true
+            case None          =>
+          }
+        }
+        metaScanBytes.addAndGet(messages.bytesRead)
+        val crc = if (messages.position > base.scanned) messages.lastCrc else base.tailCrc
+        Some(ShardIndex(size, mtime, messages.position, crc, mx, cl, marks))
       }
     } finally messages.close()
-    (mx, cl)
   }
 
-  /** Drop cached shard metadata for every file under `logDir`. The
-    * (mtime, length) cache key cannot see a shard file replaced with
-    * different content of identical length within the filesystem's mtime
-    * granularity — exactly the recycled-log-path scenario that
-    * `KinesisLikeStatus.reset` exists for — so stream construction
-    * invalidates here alongside that reset and each new stream lifetime
-    * re-scans once. */
+  /** Drop the index of every shard file under `logDir`. The (size, mtime)
+    * stat cannot see a shard file replaced with different content of
+    * identical length within the filesystem's mtime granularity — exactly
+    * the recycled-log-path scenario that `KinesisLikeStatus.reset` exists
+    * for — so stream construction invalidates here alongside that reset
+    * and each new stream lifetime re-scans once. */
   def invalidateMeta(logDir: String): Unit = {
     val prefix = new File(logDir).getAbsolutePath + File.separator
-    shardMeta.invalidate(prefix)
+    indexes.keySet().removeIf(k => k.startsWith(prefix))
   }
 
-  /** Warm [[shardMeta]] for every shard of `logDir` with the per-shard
-    * scans running in parallel (ForkJoin common pool): the folds are
-    * independent file reads feeding a concurrent cache, and the driver
+  /** Build the [[index]] of every shard of `logDir` with the per-shard
+    * scans running in parallel (ForkJoin common pool): the scans are
+    * independent file reads feeding a concurrent map, and the driver
     * otherwise walks them serially at every stream start. Exceptions
     * (e.g. a corrupt frame) propagate to the caller like the serial
     * walk's would. */
   def prefetchMeta(logDir: String): Unit = {
     import scala.jdk.CollectionConverters._
-    shardFiles(logDir).asJava.parallelStream().forEach(f => { maxSeq(f); () })
+    shardFiles(logDir).asJava.parallelStream().forEach(f => { index(f); () })
   }
 
-  /** (highest sequence number — -1 for an empty shard —, closed) from
-    * one cached metadata read; closed ⇔ the nil-continuation marker has
-    * been written (subscribe_to_shard.ex:356-363). */
-  def shardState(f: File): (Long, Boolean) = shardMeta(f)
+  /** (highest sequence number — -1 for an empty shard —, closed) of the
+    * shard's complete frames, from its [[index]]; closed ⇔ the
+    * nil-continuation marker has been written
+    * (subscribe_to_shard.ex:356-363). */
+  def shardState(f: File): (Long, Boolean) = {
+    val i = index(f)
+    (i.maxSeq, i.closed)
+  }
 
   def maxSeq(f: File): Long = shardState(f)._1
 

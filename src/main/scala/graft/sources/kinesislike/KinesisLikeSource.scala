@@ -6,12 +6,14 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -118,9 +120,10 @@ object KinesisLikeStatus {
   *    resolved from it once and persisted;
   *  - shard closed = nil continuation (subscribe_to_shard.ex:356-363): a
   *    `#CLOSED` log marker; the shard simply stops contributing offsets;
-  *  - one shard = one partition (producer.ex:172 supports exactly one
-  *    shard; we generalize to N files but each remains an ordered,
-  *    independently-consumed unit);
+  *  - one ordered slice per shard, packed by bytes (producer.ex:172
+  *    supports exactly one shard; we generalize to N files, each read as
+  *    one ordered slice per batch, and small slices share a read task by
+  *    Spark's file-source packing rule — [[ShardSlice.pack]]);
   *  - rate control as a source option (maxRecordsPerBatch, per shard) —
   *    the pull-based analog of the reference's ignored GenStage demand
   *    (producer.ex:155-157);
@@ -133,9 +136,11 @@ object KinesisLikeStatus {
   * shardId, sequenceNumber, approximateArrivalTimestamp, partitionKey,
   * data(binary, base64-decoded payload per subscribe_to_shard.ex:365-366).
   *
-  * Scale posture: readers stream their shard file executor-side (no
-  * driver materialization); driver-side work is metadata-only offset
-  * resolution per microbatch, like Kafka's listOffsets.
+  * Scale posture: readers stream their slice's byte range executor-side
+  * (no driver materialization); driver-side work is an incremental
+  * metadata scan of the bytes appended since the last poll
+  * ([[KinesisLikeLog.index]]), and each slice starts at the index mark
+  * nearest its cursor, so a batch costs what it delivers.
   */
 class KinesisLikeProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kinesislike"
@@ -167,12 +172,77 @@ final case class KinesisLikeConfig(
     failAtOpenTimes: Int = 1,
     faultRunId: Option[String] = None,
 ) {
-  /** Every read partition is made here: shard file `f`, records in (after,
-    * until], carrying the read's fault-injection options. */
-  def partition(f: File, after: Long, until: Long): KinesisLikePartition =
-    KinesisLikePartition(KinesisLikeLog.shardId(f), f.getAbsolutePath,
-      after, until, ReadFaults(logDir, failOnceAfter, failAtOpen,
-        failAtOpenTimes, faultRunId.getOrElse("")))
+  /** Every read partition is made here: the slices packed by bytes
+    * ([[ShardSlice.pack]]), each partition carrying the read's
+    * fault-injection options. */
+  def partitions(slices: Seq[ShardSlice]): Array[InputPartition] = {
+    val faults = ReadFaults(logDir, failOnceAfter, failAtOpen,
+      failAtOpenTimes, faultRunId.getOrElse(""))
+    ShardSlice.pack(slices).map(KinesisLikePartition(_, faults)).toArray
+  }
+}
+
+/** One shard's share of a read: records in (after, until] of shard file
+  * `path`, all of them in its byte range [start, end). */
+final case class ShardSlice(
+    shardId: String,
+    path: String,
+    after: Long,
+    until: Long,
+    start: Long,
+    end: Long,
+) {
+  def bytes: Long = end - start
+}
+
+object ShardSlice {
+
+  /** Records in (after, until] of `f`, over the byte range its
+    * [[KinesisLikeLog.index]] gives them. */
+  def of(f: File, after: Long, until: Long): ShardSlice = {
+    val (start, end) = KinesisLikeLog.index(f).range(after, until)
+    ShardSlice(KinesisLikeLog.shardId(f), f.getAbsolutePath, after, until, start, end)
+  }
+
+  /** Pack slices into read partitions by Spark's file-source rule
+    * (`FilePartition.maxSplitBytes` and `getFilePartitions`), read from
+    * the session's own confs: every slice is charged
+    * `spark.sql.files.openCostInBytes`, and partitions are filled,
+    * largest slice first, up to `min(maxPartitionBytes, max(openCost,
+    * total / minPartitionNum))`, where `minPartitionNum` defaults to the
+    * default parallelism. Many small slices share a task; a large one
+    * stays alone. */
+  def pack(slices: Seq[ShardSlice]): Seq[Seq[ShardSlice]] = {
+    val conf = SQLConf.get
+    val minPartitions = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(SparkSession.active.sparkContext.defaultParallelism))
+    pack(slices, conf.filesOpenCostInBytes, conf.filesMaxPartitionBytes, minPartitions)
+  }
+
+  /** [[pack]] with its three settings given. */
+  def pack(
+      slices: Seq[ShardSlice],
+      openCost: Long,
+      maxPartitionBytes: Long,
+      minPartitions: Int): Seq[Seq[ShardSlice]] = {
+    val total    = slices.map(_.bytes + openCost).sum
+    val maxSplit = math.min(maxPartitionBytes, math.max(openCost, total / minPartitions))
+    val parts    = Seq.newBuilder[Seq[ShardSlice]]
+    var current  = Vector.empty[ShardSlice]
+    var size     = 0L
+    slices.sortBy(-_.bytes).foreach { s =>
+      if (current.nonEmpty && size + s.bytes > maxSplit) {
+        parts += current
+        current = Vector.empty
+        size = 0L
+      }
+      current :+= s
+      size += s.bytes + openCost
+    }
+    if (current.nonEmpty) parts += current
+    parts.result()
+  }
 }
 
 /** The fault-injection options of one read ([[KinesisLikeConfig]]). */
@@ -288,8 +358,10 @@ class KinesisLikeBatch(cfg: KinesisLikeConfig) extends Batch {
   override def planInputPartitions(): Array[InputPartition] =
     // Fault-injection options apply to batch reads too — an option the
     // config layer accepted must not be silently inert on this path.
-    KinesisLikeLog.requireShardFiles(cfg.logDir)
-      .map(f => cfg.partition(f, after = -1L, until = Long.MaxValue)).toArray
+    cfg.partitions(KinesisLikeLog.requireShardFiles(cfg.logDir).map { f =>
+      ShardSlice(KinesisLikeLog.shardId(f), f.getAbsolutePath,
+        after = -1L, until = Long.MaxValue, start = 0L, end = f.length())
+    })
   override def createReaderFactory(): PartitionReaderFactory =
     KinesisLikeReaderFactory
 }
@@ -321,18 +393,18 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
 
   // A new stream = a new lifetime for this log dir: drop any Closed mark
   // a previous log at the same path earned, so recycled paths start Open,
-  // and drop cached shard metadata so a replaced same-length file within
+  // and drop the shard indexes so a replaced same-length file within
   // mtime granularity cannot serve a stale maxSeq/closed.
   KinesisLikeStatus.reset(cfg.logDir)
   KinesisLikeLog.invalidateMeta(cfg.logDir)
-  // Re-warm the just-invalidated metadata cache with the shard scans run
-  // IN PARALLEL: the per-shard (maxSeq, closed) folds are independent
-  // file reads, but the first consumer (prepareForTriggerAvailableNow /
-  // initialOffset) walks shards sequentially on the driver — a 16-shard
-  // serial rescan per stream START billed to every streaming lifecycle.
-  // Scans populate the concurrent cache, so the sequential walk then
-  // hits O(1) entries. Failures are NOT swallowed to a later read: the
-  // scan that throws here (e.g. a corrupt frame) rethrows on the caller.
+  // Rebuild the just-dropped shard indexes with the shard scans run IN
+  // PARALLEL: the per-shard scans are independent file reads, but the
+  // first consumer (prepareForTriggerAvailableNow / initialOffset) walks
+  // shards sequentially on the driver — a 16-shard serial rescan per
+  // stream START billed to every streaming lifecycle. The sequential
+  // walk then finds every index current. Failures are NOT swallowed to a
+  // later read: the scan that throws here (e.g. a corrupt frame)
+  // rethrows on the caller.
   KinesisLikeLog.prefetchMeta(cfg.logDir)
 
   // Shard set is fixed at stream start, matching the reference's
@@ -347,8 +419,8 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
   // watermark advancement and state flushing — still happens).
   @volatile private var availableNowBound: Option[Map[String, Long]] = None
 
-  /** One cached metadata read per shard — (shardId, maxSeq, closed) —
-    * so everything one poll decides sees one snapshot. */
+  /** One index read per shard — (shardId, maxSeq, closed) — so
+    * everything one poll decides sees one snapshot. */
   private def shardStates(): Seq[(String, Long, Boolean)] = shards.map { f =>
     val (maxSeq, closed) = KinesisLikeLog.shardState(f)
     (KinesisLikeLog.shardId(f), maxSeq, closed)
@@ -382,8 +454,8 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
     // stream is CLOSED — surface the reference's distinct `:closed` result
     // (subscribe_to_shard.ex:356-363) instead of presenting as idle. The
     // engine polls here after the final batch (observed: AvailableNow runs
-    // one drained poll before stopping), and the shard-metadata cache
-    // makes the check O(1) per poll.
+    // one drained poll before stopping), and the incremental shard index
+    // makes the check cost only the bytes appended since the last poll.
     val states = shardStates()
     val closedAndDrained = states.forall { case (sh, maxSeq, closed) =>
       closed && from.getOrElse(sh, -1L) >= maxSeq
@@ -413,12 +485,12 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[KinesisLikeOffset].positions
     val e = end.asInstanceOf[KinesisLikeOffset].positions
-    shards.flatMap { f =>
+    cfg.partitions(shards.flatMap { f =>
       val sh    = KinesisLikeLog.shardId(f)
       val after = s.getOrElse(sh, -1L)
       val until = e.getOrElse(sh, after)
-      if (until <= after) None else Some(cfg.partition(f, after, until))
-    }.toArray
+      if (until <= after) None else Some(ShardSlice.of(f, after, until))
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -436,11 +508,9 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
   override def stop(): Unit = ()
 }
 
+/** One read task: its shard slices, read one after another in order. */
 final case class KinesisLikePartition(
-    shardId: String,
-    path: String,
-    after: Long,
-    until: Long,
+    slices: Seq[ShardSlice],
     faults: ReadFaults,
 ) extends InputPartition
 
@@ -449,47 +519,77 @@ object KinesisLikeReaderFactory extends PartitionReaderFactory {
     new KinesisLikeReader(p.asInstanceOf[KinesisLikePartition])
 }
 
-/** Executor-side shard reader: streams the ordered log file EVENT by
-  * event — the RecordReader analog of the reference's frame parser +
-  * decoder (S9 subscribe_to_shard.ex:277-327, S10 329-341, S12
-  * 343-366). Cursor logic runs at the reference's per-EVENT granularity
-  * (handle_event advances the resume position once per
-  * SubscribeToShardEvent, covering ALL its records): a whole event
-  * whose continuation is ≤ the committed cursor is skipped without
-  * touching its records — the resubscribe-from-continuation fast path —
-  * and an event whose continuation passes the batch end is the last
-  * that can matter (per-shard order). The one engine-side seam: an
-  * admission cap (maxRecordsPerBatch) is sequence-space arithmetic and
-  * can land MID-event; the in-event (after, until] record filter then
-  * defers the remainder to the next microbatch, preserving exactly-once
-  * (spec-pinned) — a wire subscription never cuts mid-event, and
-  * neither does an uncapped replay. Record payloads decode from the
-  * envelope's base64 `Data` (S12); order within a shard is event order
-  * then in-event record order, preserving the reference's event-order
-  * guarantee (subscribe_to_shard.ex:157). */
+/** Executor-side reader of one packed partition: its shard slices, one
+  * after another, each through its own [[SliceReader]]. */
 class KinesisLikeReader(p: KinesisLikePartition)
     extends PartitionReader[InternalRow] {
+  private val slices = p.slices.iterator
+  private var current: SliceReader = _
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      if (current != null) current.close()
+      current = null
+      if (!slices.hasNext) return false
+      current = new SliceReader(slices.next(), p.faults)
+    }
+    true
+  }
+
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = if (current != null) current.close()
+}
+
+object SliceReader {
+
+  /** Bytes of the messages the slice readers decoded. */
+  private[sources] val decodedBytes = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** Reader of one shard slice: streams its byte range of the ordered log
+  * file EVENT by event — the RecordReader analog of the reference's
+  * frame parser + decoder (S9 subscribe_to_shard.ex:277-327, S10
+  * 329-341, S12 343-366). It opens at the slice's start byte, the end of
+  * an index mark at or before the committed cursor — the
+  * resubscribe-at-`AFTER_SEQUENCE_NUMBER` analog — and never reads past
+  * its end byte. Cursor logic runs at the reference's per-EVENT
+  * granularity (handle_event advances the resume position once per
+  * SubscribeToShardEvent, covering ALL its records): a whole event
+  * whose continuation is ≤ the committed cursor is skipped without
+  * touching its records, and an event whose continuation passes the
+  * batch end is the last that can matter (per-shard order). The one
+  * engine-side seam: an admission cap (maxRecordsPerBatch) is
+  * sequence-space arithmetic and can land MID-event; the in-event
+  * (after, until] record filter then defers the remainder to the next
+  * microbatch, preserving exactly-once (spec-pinned) — a wire
+  * subscription never cuts mid-event, and neither does an uncapped
+  * replay. Record payloads decode from the envelope's base64 `Data`
+  * (S12); order within a shard is event order then in-event record
+  * order, preserving the reference's event-order guarantee
+  * (subscribe_to_shard.ex:157). Fault budgets are per slice. */
+private[kinesislike] final class SliceReader(p: ShardSlice, faults: ReadFaults) {
 
   // Initial-response fault injection: raising here is the analog of a
   // 3xx/4xx/5xx on the subscribe call itself, before any event arrives
   // (subscribe_to_shard_test.exs:249-281).
-  p.faults.failAtOpen.foreach { spec =>
-    if (Faults.shouldRaise(p.faults.marker(s"_FAILED_OPEN_${p.shardId}"),
-        p.faults.failAtOpenTimes))
+  faults.failAtOpen.foreach { spec =>
+    if (Faults.shouldRaise(faults.marker(s"_FAILED_OPEN_${p.shardId}"),
+        faults.failAtOpenTimes))
       throw KinesisLikeErrors.make(spec)
   }
 
-  // The shard streams through the event-stream frame reassembler (16 KB
+  // The slice streams through the event-stream frame reassembler (16 KB
   // chunks, partial frames buffered — the S9 byte tier) and the
   // Records-envelope decode (S12).
-  private val in = KinesisLikeLog.openEvents(new File(p.path))
+  private val in = new EventStreamFraming.FramedEventSource(
+    new File(p.path), p.start, p.end)
   private var row: InternalRow = _
   private var delivered        = 0L
   private var exhausted        = false
   private val pending = scala.collection.mutable.Queue.empty[InternalRow]
   private val shardUtf         = UTF8String.fromString(p.shardId)
 
-  override def next(): Boolean = {
+  def next(): Boolean = {
     while (pending.isEmpty && !exhausted) {
       in.readEvent() match {
         case null => exhausted = true
@@ -534,8 +634,8 @@ class KinesisLikeReader(p: KinesisLikePartition)
     * task retry then succeeds — exercising partial-delivery-then-error
     * (producer.ex:159-168) without wedging the query. */
   private def maybeFail(): Unit =
-    if (p.faults.failOnceAfter.contains(delivered) &&
-        Faults.shouldRaise(p.faults.marker("_FAILED_ONCE"), 1))
+    if (faults.failOnceAfter.contains(delivered) &&
+        Faults.shouldRaise(faults.marker("_FAILED_ONCE"), 1))
       throw new KinesisLikeErrors.TransportClosedException(
         s"simulated transport close after $delivered records on ${p.shardId}")
 
@@ -546,9 +646,13 @@ class KinesisLikeReader(p: KinesisLikePartition)
     * (q129 plants the session's task-attempt budget so the QUERY-level
     * failure survives task retries under any local master). */
   private def maybeRaiseInstream(spec: String, times: Int): Unit =
-    if (Faults.shouldRaise(p.faults.marker(s"_INSTREAM_RAISED_${p.shardId}"), times))
+    if (Faults.shouldRaise(faults.marker(s"_INSTREAM_RAISED_${p.shardId}"), times))
       throw KinesisLikeErrors.make(spec)
 
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
+  def get(): InternalRow = row
+
+  def close(): Unit = {
+    SliceReader.decodedBytes.addAndGet(in.decodedBytes)
+    in.close()
+  }
 }

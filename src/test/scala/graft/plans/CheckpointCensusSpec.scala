@@ -185,4 +185,21 @@ class CheckpointCensusSpec extends AnyFunSuite {
     assert(tabSplits == Map("graft/sources/kinesislike/KinesisLikeLog.scala" -> 1),
       s"parse shard lines with KinesisLikeLog.parseLine only: $tabSplits")
   }
+
+  test("every kinesislike shard-file read opens in EventStreamFraming's " +
+    "ranged MessageReader loop") {
+    // One read path: the reader's byte-range slices, the metadata
+    // index's incremental scan and every whole-file walk all seek and
+    // stop in MessageReader, so none can read a shard from byte 0 by hand.
+    val opens = sites("new FileInputStream(")
+      .filter(_._1.startsWith("graft/sources/kinesislike/"))
+    assert(opens == Map("graft/sources/kinesislike/EventStreamFraming.scala" -> 1),
+      s"read shard files through EventStreamFraming.MessageReader: $opens")
+    val framing = code("graft/sources/kinesislike/EventStreamFraming.scala")
+    val reader  = framing.indexWhere(_.contains("class MessageReader("))
+    val open    = framing.indexWhere(_.contains("new FileInputStream("))
+    val after   = framing.indexWhere(_.contains("class "), reader + 1)
+    assert(reader >= 0 && open > reader && (after < 0 || open < after),
+      "the one FileInputStream must be opened by MessageReader")
+  }
 }

@@ -213,15 +213,35 @@ class EventStreamFramingSpec extends SparkSpec {
     dec.feed(full, 0, full.length - 2)
     assert(dec.isMidFrame)
 
+    // A shard of one complete records event (continuation 3) and the
+    // next one (continuation 6) cut two bytes short.
     val dir = tmpDir("graft_framing_trunc")
-    val f   = dir.resolve("shard-00000.elog")
-    Files.write(f, full.dropRight(2))
-    val src = KinesisLikeLog.openEvents(f.toFile)
-    try intercept[IllegalArgumentException] {
-      while (src.readEvent() != null) {}
-    } finally src.close()
-    // The metadata scan behind maxSeq reads through the same frame loop.
-    intercept[IllegalArgumentException](KinesisLikeLog.maxSeq(f.toFile))
+    val f   = dir.resolve("shard-00000.elog").toFile
+    def event(seqs: Seq[Long]) =
+      encodeRecordsEvent(seqs.map(s => recordOf(record(s, s"p$s"))))
+    val complete = initialResponseMessage ++ event(1L to 3L)
+    val torn     = event(4L to 6L)
+    Files.write(f.toPath, complete ++ torn.dropRight(2))
+    def drain(src: FramedEventSource): Int =
+      try Iterator.continually(src.readEvent()).takeWhile(_ != null).size
+      finally src.close()
+    // The reader refuses it: EOF mid-frame, a range end that cuts the
+    // frame, and a range end past EOF all fail; a range that ends at the
+    // last complete frame reads it.
+    intercept[IllegalArgumentException](drain(KinesisLikeLog.openEvents(f)))
+    intercept[IllegalArgumentException](
+      drain(new FramedEventSource(f, 0L, f.length())))
+    assert(drain(new FramedEventSource(f, 0L, complete.length)) === 1)
+    intercept[IllegalArgumentException](
+      drain(new FramedEventSource(f, 0L, complete.length + torn.length)))
+    // The metadata scan reads the torn frame as not yet written: the
+    // complete prefix's state, and an index that ends before the frame.
+    assert(KinesisLikeLog.shardState(f) === ((3L, false)))
+    assert(KinesisLikeLog.index(f).scanned === complete.length.toLong)
+    // Once the rest is written, the next scan sees the frame.
+    Files.write(f.toPath, torn.takeRight(2), java.nio.file.StandardOpenOption.APPEND)
+    assert(KinesisLikeLog.maxSeq(f) === 6L)
+    assert(drain(KinesisLikeLog.openEvents(f)) === 2)
   }
 
   test("a 1 MB record framed into a shard file streams through the " +

@@ -289,8 +289,8 @@ class KinesisLikeSourceSpec extends SparkSpec {
     // already-committed prefix of that event.
     val reader = new graft.sources.kinesislike.KinesisLikeReader(
       graft.sources.kinesislike.KinesisLikePartition(
-        "shard-00000", f.getAbsolutePath, after = 5L,
-        until = Long.MaxValue,
+        Seq(graft.sources.kinesislike.ShardSlice.of(f, after = 5L,
+          until = Long.MaxValue)),
         faults = graft.sources.kinesislike.ReadFaults(dir.toString)))
     val tail = scala.collection.mutable.ArrayBuffer.empty[Long]
     try while (reader.next())
@@ -327,9 +327,9 @@ class KinesisLikeSourceSpec extends SparkSpec {
       .writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         batches += 1
-        // collect() concatenates partitions in partition order, and each
-        // scan partition is one shard slice read sequentially — so rows
-        // of one shard appear in file (= sequence) order within a batch.
+        // collect() concatenates partitions in partition order, and a
+        // scan partition reads each of its shard slices sequentially — so
+        // rows of one shard appear in file (= sequence) order in a batch.
         delivered ++= b
           .select(col("shardId"), col("sequenceNumber").cast("long"))
           .collect()
@@ -685,9 +685,123 @@ class KinesisLikeSourceSpec extends SparkSpec {
     assert(KinesisLikeLog.maxSeq(f) == 4L)
     assert(KinesisLikeLog.metaScans.get() == scansAfterFirst,
       "repeated metadata reads of an unchanged shard must hit the cache")
-    // An append invalidates (length changes) and the new record is seen.
+    // An append extends the index from its scanned end — the new record
+    // is seen without a full re-scan.
     appendShard(dir, 0, Seq((5L, 5L, "k", "p5")))
     assert(KinesisLikeLog.maxSeq(f) == 5L)
+    assert(KinesisLikeLog.metaScans.get() == scansAfterFirst,
+      "an append must extend the index, not re-scan the shard from byte 0")
+  }
+
+  test("across appends and polls the metadata scan reads each shard byte " +
+    "once: its bytes equal the file length, from one full scan") {
+    val dir = tmpDir("kl_meta_bytes")
+    writeShard(dir, 0, (0L until 4L).map(i => (i, i, "k", s"p$i")), closed = false)
+    val f = dir.resolve("shard-00000.elog").toFile
+    val bytes0 = KinesisLikeLog.metaScanBytes.get()
+    val scans0 = KinesisLikeLog.metaScans.get()
+    (0 until 6).foreach { k =>
+      val last = 3L + 2 * k
+      assert(KinesisLikeLog.maxSeq(f) == last) // the poll after an append
+      assert(KinesisLikeLog.maxSeq(f) == last) // and one with nothing new
+      appendShard(dir, 0, Seq(last + 1, last + 2).map(i => (i, i, "k", s"p$i")))
+    }
+    assert(KinesisLikeLog.maxSeq(f) == 15L)
+    assert(KinesisLikeLog.metaScanBytes.get() - bytes0 == f.length())
+    assert(KinesisLikeLog.metaScans.get() - scans0 == 1)
+  }
+
+  test("a slice deep in a 10,000-record shard decodes at most its own " +
+    "events plus one mark interval") {
+    val dir = tmpDir("kl_deep_slice")
+    // Fixed-width records, so every three-record event has one size.
+    def rec(i: Long) = (10000L + i, 1000000000L + i, "k", f"p$i%05d")
+    writeShard(dir, 0, (0L until 10000L).map(rec), closed = false)
+    val f = dir.resolve("shard-00000.elog").toFile
+    val eventBytes = graft.sources.kinesislike.EventStreamFraming.encodeRecordsEvent(
+      (0L until 3L).map(rec).map { case (seq, us, k, p) =>
+        KinesisLikeLog.Record(seq, us, k,
+          java.util.Base64.getEncoder.encodeToString(p.getBytes(UTF_8)))
+      }).length
+    val (after, until) = (17000L, 17030L)
+    val slice = graft.sources.kinesislike.ShardSlice.of(f, after, until)
+    assert(KinesisLikeLog.index(f).marks.size > 10)
+    val before = graft.sources.kinesislike.SliceReader.decodedBytes.get()
+    val reader = new graft.sources.kinesislike.KinesisLikeReader(
+      graft.sources.kinesislike.KinesisLikePartition(Seq(slice),
+        graft.sources.kinesislike.ReadFaults(dir.toString)))
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try while (reader.next())
+      got += reader.get().getUTF8String(1).toString.toLong
+    finally reader.close()
+    assert(got.toSeq == (after + 1 to until))
+    val decoded = graft.sources.kinesislike.SliceReader.decodedBytes.get() - before
+    // Its 30 records straddle at most 12 events, plus the first event
+    // past `until` that ends the read, plus the skipped events of one
+    // mark interval.
+    val bound = 13L * eventBytes + KinesisLikeLog.MarkBytes
+    assert(decoded <= bound, s"decoded $decoded bytes, bound $bound")
+    assert(slice.end - slice.start <= bound + KinesisLikeLog.MarkBytes)
+  }
+
+  test("16 small shard slices pack into at most default-parallelism read " +
+    "partitions, each shard's rows in sequence order; a large slice stays " +
+    "alone") {
+    import graft.sources.kinesislike._
+    val dir = tmpDir("kl_pack")
+    (0 until 16).foreach { sh =>
+      writeShard(dir, sh, (0L until 25L).map(i => (i, i, s"k$sh", s"s$sh-p$i")),
+        closed = false)
+    }
+    val stream = new KinesisLikeMicroBatchStream(
+      KinesisLikeConfig(dir.toString, StartingPosition.TrimHorizon, None, None))
+    val start = stream.initialOffset()
+    val end   = stream.latestOffset(start, stream.getDefaultReadLimit)
+    val parts = stream.planInputPartitions(start, end)
+    assert(parts.length <= spark.sparkContext.defaultParallelism)
+    assert(parts.flatMap(_.asInstanceOf[KinesisLikePartition].slices)
+      .map(_.shardId).sorted.toSeq ==
+      KinesisLikeLog.shardFiles(dir.toString).map(KinesisLikeLog.shardId))
+    val rows = parts.toSeq.flatMap { p =>
+      val r = stream.createReaderFactory().createReader(p)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      try while (r.next()) out += ((r.get().getUTF8String(0).toString,
+        r.get().getUTF8String(1).toString.toLong))
+      finally r.close()
+      out
+    }
+    rows.groupBy(_._1).foreach { case (sh, rs) =>
+      assert(rs.map(_._2) == (0L until 25L), s"shard $sh order/content")
+    }
+    assert(rows.map(_._1).distinct.size == 16)
+    // The batch read plans through the same packing.
+    assert(readBatch(dir).rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    // Spark's default confs (4 MiB open cost, 128 MiB cap) on 4 cores:
+    // a 64 MiB slice fills its own partition and the 1 KiB ones share.
+    def slice(sh: Int, bytes: Long) = ShardSlice(s"shard-$sh", "", -1L, 0L, 0L, bytes)
+    val packed = ShardSlice.pack(
+      slice(0, 64L << 20) +: (1 to 15).map(slice(_, 1024L)),
+      openCost = 4L << 20, maxPartitionBytes = 128L << 20, minPartitions = 4)
+    assert(packed.head.map(_.shardId) == Seq("shard-0"))
+    assert(packed.size == 3 && packed.tail.forall(_.size <= 8))
+  }
+
+  test("a half-written trailing frame is not offered: the complete frames " +
+    "are delivered, and once the rest of the frame is appended its " +
+    "records are delivered exactly once") {
+    val dir  = tmpDir("kl_torn")
+    val ckpt = tmpDir("kl_torn_ck")
+    val out  = tmpDir("kl_torn_out")
+    writeShard(dir, 0, (0L until 5L).map(i => (i, i, "k", s"p$i")), closed = false)
+    val f = dir.resolve("shard-00000.elog")
+    val frame = graft.sources.kinesislike.EventStreamFraming.encodeRecordsEvent(
+      (5L until 8L).map(i => KinesisLikeLog.Record(i, i, "k",
+        java.util.Base64.getEncoder.encodeToString(s"p$i".getBytes(UTF_8)))))
+    val cut = frame.length / 2
+    Files.write(f, frame.take(cut), java.nio.file.StandardOpenOption.APPEND)
+    assert(runStreamToFiles(dir, "trim_horizon", ckpt, out) == (0L until 5L))
+    Files.write(f, frame.drop(cut), java.nio.file.StandardOpenOption.APPEND)
+    assert(runStreamToFiles(dir, "trim_horizon", ckpt, out) == (0L until 8L))
   }
 
   test("repeated at_timestamp starts do not re-scan the shard: the " +
