@@ -37,7 +37,7 @@ object PartitionInvariance {
             val df   = fn(spark, sf)
             val cols = df.columns.sorted.map(col)
             val r = df
-              .select(xxhash64(to_json(struct(cols: _*))).as("h"))
+              .select(xxhash64(to_json(struct(cols.toIndexedSeq: _*))).as("h"))
               .agg(count(lit(1)), expr("bit_xor(h)")).head()
             (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
           } catch {

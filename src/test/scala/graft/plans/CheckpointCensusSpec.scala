@@ -162,6 +162,11 @@ class CheckpointCensusSpec extends AnyFunSuite {
         "GraftFunctions.register"))
       assert(text.forall(!_._2.contains(token)),
         s"$token is back: ${text.filter(_._2.contains(token)).keySet}")
+    // One local filesystem: `file:` is bound to the fork-free classes in
+    // GraftSession.tuned, the confs every session takes.
+    for (token <- Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl"))
+      assert(sites(token) == Map("graft/GraftSession.scala" -> 1),
+        s"bind file: only in GraftSession.tuned: ${sites(token)}")
     // One derived-fixture store: its roots and its ready marker are
     // spelled only in Fixtures.scala, and Bench builds fixtures only
     // through the packs' declared prewarm lists (SparkEntry.fixtures).

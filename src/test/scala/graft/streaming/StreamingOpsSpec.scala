@@ -147,7 +147,7 @@ class StreamingOpsSpec extends SparkSpec {
             }
             state.update((n, mx, lastMs))
             state.setTimeoutTimestamp(
-              math.max(lastMs + 3600L * 1000L, state.getCurrentWatermarkMs + 1))
+              math.max(lastMs + 3600L * 1000L, state.getCurrentWatermarkMs() + 1))
             Iterator.empty
           }
       }
@@ -185,7 +185,7 @@ class StreamingOpsSpec extends SparkSpec {
         if (ts.getTime > last) last = ts.getTime
       }
       n.update(cnt); mx.update(m); lastMs.update(last)
-      val next = math.max(last + 3600L * 1000L, tv.getCurrentWatermarkInMs + 1)
+      val next = math.max(last + 3600L * 1000L, tv.getCurrentWatermarkInMs() + 1)
       if (timer.exists()) getHandle.deleteTimer(timer.get())
       getHandle.registerTimer(next)
       timer.update(next)
